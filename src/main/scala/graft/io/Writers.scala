@@ -1,6 +1,11 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.{ExecutionException, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import scala.util.{Failure, Success, Try}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.SQLExecution
 
 /** Sinks — the L of the ETL jobs (SURVEY.md §2.2). */
 object Writers {
@@ -11,9 +16,69 @@ object Writers {
     * through one task because the downstream consumer reads exactly
     * one file — a deliberate bottleneck on final outputs only, never
     * on intermediate data (SURVEY.md §7.4 risk 6).
+    *
+    * A job's outputs are independent, so [[singleFileJsonAll]] writes
+    * them concurrently on up to `defaultParallelism` threads: each
+    * output keeps its plan and its one part file, the single-task
+    * funnels just overlap. Nothing about it is configurable.
     */
   def singleFileJson(df: DataFrame, dir: String): Unit =
     df.coalesce(1).write.mode("overwrite").json(dir)
+
+  /** K1 for a whole job: every `(dir, output)` is built and written
+    * with [[singleFileJson]], concurrently (see [[concurrently]]).
+    * Builders run on the pool too, so eager work inside one (a model
+    * fit, a parquet round-trip) overlaps the other outputs' writes.
+    */
+  def singleFileJsonAll(spark: SparkSession,
+    outputs: Seq[(String, () => DataFrame)]): Unit =
+    concurrently(spark, outputs.map { case (dir, output) =>
+      dir -> (() => singleFileJson(output(), dir))
+    })
+
+  /** Name prefix of [[concurrently]]'s pool threads. */
+  val PoolThreadPrefix = "graft-concurrent-"
+  private val threadIds = new AtomicInteger()
+
+  /** Runs independent `(label, task)` pairs concurrently and returns
+    * their results in declared order.
+    *
+    * The pool is created per call, sized `min(tasks, defaultParallelism)`
+    * and shut down before the call returns, so nested calls each get
+    * their own threads and cannot starve one another. Each task runs
+    * under `SQLExecution.withThreadLocalCaptured`: it sees the caller's
+    * active session and local properties, so its Spark jobs carry the
+    * caller's job group and description (`cancelJobGroup` reaches
+    * them). The call waits for every task, then rethrows the first
+    * failure in declared order, naming that task's label.
+    */
+  def concurrently[T](spark: SparkSession, tasks: Seq[(String, () => T)]): Seq[T] = {
+    if (tasks.isEmpty) return Seq.empty
+    val size = math.min(tasks.size, spark.sparkContext.defaultParallelism)
+    val pool = Executors.newFixedThreadPool(size, new ThreadFactory {
+      def newThread(r: Runnable): Thread = {
+        val t = new Thread(r, PoolThreadPrefix + threadIds.incrementAndGet())
+        t.setDaemon(true)
+        t
+      }
+    })
+    try {
+      val futures = tasks.map { case (_, task) =>
+        SQLExecution.withThreadLocalCaptured(castToImpl(spark), pool)(task())
+      }
+      val outcomes = futures.map(f => Try(f.get()).recoverWith {
+        case e: ExecutionException => Failure(e.getCause)
+      })
+      outcomes.zip(tasks).map {
+        case (Success(v), _) => v
+        case (Failure(e), (label, _)) =>
+          throw new RuntimeException(s"$label failed: ${e.getMessage}", e)
+      }
+    } finally {
+      pool.shutdownNow()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
 
   /** K2 — parquet materialization (cases_clinical_spectrum_analysis
     * .py:115-116).

@@ -195,26 +195,25 @@ object CasesTimeAnalysis {
     run(spark, config.requireInput("cases_time"), config.requireOutput("cases_time"))
   }
 
-  /** Full job: extract → transform → 14 named sinks (:15-83, :309-314). */
+  /** Full job: extract → transform → 14 named sinks (:15-83, :309-314),
+    * written concurrently.
+    */
   def run(spark: SparkSession, inputCsv: String, outDir: String): Unit = {
     val df = transform(extract(spark, inputCsv))
-    val outputs: Seq[(String, DataFrame)] = Seq(
-      "confirmed_cases_and_deaths_globally" -> confirmedCasesAndDeathsGlobally(df),
-      "confirmed_cases_serbia" -> confirmedCasesByCountry(df, "Serbia"),
-      "confirmed_cases_norway" -> confirmedCasesByCountry(df, "Norway"),
-      "confirmed_cases_italy" -> confirmedCasesByCountry(df, "Italy"),
-      "confirmed_cases_china" -> confirmedCasesByCountry(df, "China"),
-      "confirmed_cases_europe" -> confirmedCasesEurope(df),
-      "confirmed_cases_comparison" -> confirmedCasesComparison(df),
-      "confirmed_cases_mortality_rates" -> mortalityRates(df),
-      "confirmed_cases_recovery_rates" -> recoveryRates(df),
-      "time_series" -> timeSeries(df),
-      "time_series_by_countries" -> timeSeriesByCountries(df),
-      "time_series_test_data" -> timeSeriesTestData(df),
-      "future_predictions" -> futurePredictions(df),
-      "future_forecasting" -> futureForecasting(df))
-    outputs.foreach { case (name, out) =>
-      Writers.singleFileJson(out, s"$outDir/$name")
-    }
+    Writers.singleFileJsonAll(spark, Seq(
+      s"$outDir/confirmed_cases_and_deaths_globally" -> (() => confirmedCasesAndDeathsGlobally(df)),
+      s"$outDir/confirmed_cases_serbia" -> (() => confirmedCasesByCountry(df, "Serbia")),
+      s"$outDir/confirmed_cases_norway" -> (() => confirmedCasesByCountry(df, "Norway")),
+      s"$outDir/confirmed_cases_italy" -> (() => confirmedCasesByCountry(df, "Italy")),
+      s"$outDir/confirmed_cases_china" -> (() => confirmedCasesByCountry(df, "China")),
+      s"$outDir/confirmed_cases_europe" -> (() => confirmedCasesEurope(df)),
+      s"$outDir/confirmed_cases_comparison" -> (() => confirmedCasesComparison(df)),
+      s"$outDir/confirmed_cases_mortality_rates" -> (() => mortalityRates(df)),
+      s"$outDir/confirmed_cases_recovery_rates" -> (() => recoveryRates(df)),
+      s"$outDir/time_series" -> (() => timeSeries(df)),
+      s"$outDir/time_series_by_countries" -> (() => timeSeriesByCountries(df)),
+      s"$outDir/time_series_test_data" -> (() => timeSeriesTestData(df)),
+      s"$outDir/future_predictions" -> (() => futurePredictions(df)),
+      s"$outDir/future_forecasting" -> (() => futureForecasting(df))))
   }
 }

@@ -1,5 +1,6 @@
 package graft.jobs
 
+import org.apache.spark.ml.Transformer
 import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, LogisticRegression, RandomForestClassifier}
 import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
@@ -111,35 +112,48 @@ object ClinicalAnalysis {
         lit("Positive test result")).otherwise(lit("Negative test result")))
       .groupBy("result").count()
 
-  /** M1-M6 — the four-classifier accuracy comparison (:160-216):
-    * assemble 9 features, seeded 80/20 split (seed=2020, :173), fit
-    * RF/DT/LR/GBT, evaluate accuracy. Returns 4 rows (value).
+  /** M1 — the classifiers' input: the 9 feature columns as doubles
+    * (unparseable → 0.0) assembled into `features`, with a 0/1 `label`
+    * from the remapped exam result.
     */
-  def predictions(df: DataFrame): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
+  def features(df: DataFrame): DataFrame = {
     val labeled = valueDistribution(df)
       .withColumn("label",
         when(col("SARS-Cov-2 exam result") === "1", 1.0).otherwise(0.0))
     val numeric = featureCols.foldLeft(labeled) { (d, c) =>
       d.withColumn(c, coalesce(col(c).cast("double"), lit(0.0)))
     }
-    val assembled = new VectorAssembler()
+    new VectorAssembler()
       .setInputCols(featureCols.toArray)
       .setOutputCol("features")
       .transform(numeric)
       .select("features", "label")
-      .cache()
-    val Array(train, test) = assembled.randomSplit(Array(0.8, 0.2), seed = 2020)
-    val evaluator = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy")
-    val models = Seq(
-      new RandomForestClassifier().setMaxDepth(5).fit(train),
-      new DecisionTreeClassifier().setMaxDepth(3).fit(train),
-      new LogisticRegression().setMaxIter(10).fit(train),
-      new GBTClassifier().fit(train))
-    val accs = models.map(m => evaluator.evaluate(m.transform(test)))
-    accs.toDF("value")
+  }
+
+  /** M1-M6 — the four-classifier accuracy comparison (:160-216):
+    * assemble 9 features, seeded 80/20 split (seed=2020, :173), fit
+    * RF/DT/LR/GBT concurrently, evaluate accuracy. Returns 4 rows
+    * (value) in RF, DT, LR, GBT order. The assembled features are
+    * cached for the fits and released before returning.
+    */
+  def predictions(df: DataFrame): DataFrame = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val assembled = features(df).cache()
+    try {
+      val Array(train, test) = assembled.randomSplit(Array(0.8, 0.2), seed = 2020)
+      val evaluator = new MulticlassClassificationEvaluator()
+        .setMetricName("accuracy")
+      val fits: Seq[(String, () => Transformer)] = Seq(
+        "RandomForestClassifier" -> (() => new RandomForestClassifier().setMaxDepth(5).fit(train)),
+        "DecisionTreeClassifier" -> (() => new DecisionTreeClassifier().setMaxDepth(3).fit(train)),
+        "LogisticRegression" -> (() => new LogisticRegression().setMaxIter(10).fit(train)),
+        "GBTClassifier" -> (() => new GBTClassifier().fit(train)))
+      val accs = Writers.concurrently(spark, fits.map { case (name, fit) =>
+        name -> (() => evaluator.evaluate(fit().transform(test)))
+      })
+      accs.toDF("value")
+    } finally assembled.unpersist()
   }
 
   /** Config-file bootstrap — the reference's one-JSON-per-job submit
@@ -152,17 +166,15 @@ object ClinicalAnalysis {
 
   def run(spark: SparkSession, inputCsv: String, outDir: String): Unit = {
     val df = transform(extract(spark, inputCsv))
-    Writers.singleFileJson(hemoglobinValues(df), s"$outDir/hemoglobin_values")
-    Writers.singleFileJson(redBloodCellsValues(df), s"$outDir/red_blood_cells_values")
-    Writers.singleFileJson(aggregateAgeResult(df), s"$outDir/aggregate_age_result")
-    Writers.singleFileJson(ageRelations(df), s"$outDir/age_relations")
-    Writers.singleFileJson(careRelations(df, s"$outDir/temporary.parquet"),
-      s"$outDir/care_relations")
-    Writers.singleFileJson(missingValues(df), s"$outDir/predictions_missing_values")
-    Writers.singleFileJson(valueDistribution(df),
-      s"$outDir/predictions_value_distribution")
-    Writers.singleFileJson(testResultDistribution(df),
-      s"$outDir/predictions_test_result_distribution")
-    Writers.singleFileJson(predictions(df), s"$outDir/predictions")
+    Writers.singleFileJsonAll(spark, Seq(
+      s"$outDir/hemoglobin_values" -> (() => hemoglobinValues(df)),
+      s"$outDir/red_blood_cells_values" -> (() => redBloodCellsValues(df)),
+      s"$outDir/aggregate_age_result" -> (() => aggregateAgeResult(df)),
+      s"$outDir/age_relations" -> (() => ageRelations(df)),
+      s"$outDir/care_relations" -> (() => careRelations(df, s"$outDir/temporary.parquet")),
+      s"$outDir/predictions_missing_values" -> (() => missingValues(df)),
+      s"$outDir/predictions_value_distribution" -> (() => valueDistribution(df)),
+      s"$outDir/predictions_test_result_distribution" -> (() => testResultDistribution(df)),
+      s"$outDir/predictions" -> (() => predictions(df))))
   }
 }

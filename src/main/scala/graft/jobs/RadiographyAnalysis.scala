@@ -5,6 +5,7 @@ import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.mllib.evaluation.MulticlassMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.functions.BinKernels
@@ -101,7 +102,8 @@ object RadiographyAnalysis {
 
   /** M1+M2+M6+M7+S5 — RF on the 4 byte-stat features, seeded split,
     * accuracy + confusion matrix lifted back to a 1-row frame
-    * (py:165-223).
+    * (py:165-223). Its feature and score caches are released before
+    * returning.
     */
   def mlClassification(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
@@ -118,23 +120,28 @@ object RadiographyAnalysis {
       .setOutputCol("features")
       .transform(feats)
       .cache()
-    // reference split is unseeded (py:192); pinned for determinism
-    val Array(train, test) = assembled.randomSplit(Array(0.9, 0.1), seed = 2020)
-    val model = new RandomForestClassifier().setMaxDepth(10).fit(train)
-    val scored = model.transform(test).cache()
-    val accuracy = new MulticlassClassificationEvaluator()
-      .setMetricName("accuracy").evaluate(scored)
-    val metrics = new MulticlassMetrics(
-      scored.select("prediction", "label").rdd
-        .map(r => (r.getDouble(0), r.getDouble(1))))
-    val matrix = metrics.confusionMatrix.rowIter
-      .map(_.toArray.toSeq).toSeq
-    Seq((accuracy, matrix)).toDF("accuracy", "matrix")
+    try {
+      // reference split is unseeded (py:192); pinned for determinism
+      val Array(train, test) = assembled.randomSplit(Array(0.9, 0.1), seed = 2020)
+      val model = new RandomForestClassifier().setMaxDepth(10).fit(train)
+      val scored = model.transform(test).cache()
+      try {
+        val accuracy = new MulticlassClassificationEvaluator()
+          .setMetricName("accuracy").evaluate(scored)
+        val metrics = new MulticlassMetrics(
+          scored.select("prediction", "label").rdd
+            .map(r => (r.getDouble(0), r.getDouble(1))))
+        val matrix = metrics.confusionMatrix.rowIter
+          .map(_.toArray.toSeq).toSeq
+        Seq((accuracy, matrix)).toDF("accuracy", "matrix")
+      } finally scored.unpersist()
+    } finally assembled.unpersist()
   }
 
   /** D12 — bounded inference sample through the load-once-per-
     * partition batched scorer (py:293-326; stub model, SURVEY.md
-    * §7.3).
+    * §7.3). The sample stays cached, as a cache built on `df`; [[run]]
+    * releases it together with `df`'s.
     */
   def dlInference(df: DataFrame, sample: Int = 100, batchSize: Int = 64): DataFrame =
     BatchInference.inferBinary(
@@ -195,12 +202,23 @@ object RadiographyAnalysis {
     run(spark, config.requireInput("radiography"), config.requireOutput("radiography"))
   }
 
+  /** Full job: the input is cached for its five outputs, which are
+    * written concurrently; every cache the run made is released at
+    * the end, so a later run in the session re-reads its images.
+    */
   def run(spark: SparkSession, baseDir: String, outDir: String): Unit = {
     val df = transform(extract(spark, baseDir)).cache()
-    Writers.singleFileJson(percentageOfSamples(df), s"$outDir/percentage_of_samples")
-    Writers.singleFileJson(takeSamples(df), s"$outDir/take_samples")
-    Writers.singleFileJson(colourDistribution(df), s"$outDir/colour_distribution")
-    Writers.singleFileJson(mlClassification(df), s"$outDir/ml_classification")
-    Writers.singleFileJson(dlInference(df), s"$outDir/dl_inference")
+    try Writers.singleFileJsonAll(spark, Seq(
+      s"$outDir/percentage_of_samples" -> (() => percentageOfSamples(df)),
+      s"$outDir/take_samples" -> (() => takeSamples(df)),
+      s"$outDir/colour_distribution" -> (() => colourDistribution(df)),
+      s"$outDir/ml_classification" -> (() => mlClassification(df)),
+      s"$outDir/dl_inference" -> (() => dlInference(df))))
+    finally {
+      // cascade: also drops the caches built on df (dlInference's sample)
+      val cached = castToImpl(df)
+      cached.sparkSession.sharedState.cacheManager
+        .uncacheQuery(cached, cascade = true, blocking = true)
+    }
   }
 }

@@ -139,7 +139,8 @@ object ResearchChallengeAnalysis {
 
   def run(spark: SparkSession, inputDirs: Seq[(String, String)], outDir: String): Unit = {
     val df = transform(extract(spark, inputDirs))
-    Writers.singleFileJson(paperAuthors(df), s"$outDir/paper_authors")
-    Writers.singleFileJson(paperAbstracts(df), s"$outDir/paper_abstracts")
+    Writers.singleFileJsonAll(spark, Seq(
+      s"$outDir/paper_authors" -> (() => paperAuthors(df)),
+      s"$outDir/paper_abstracts" -> (() => paperAbstracts(df))))
   }
 }

@@ -65,4 +65,32 @@ class ClinicalJobSpec extends SparkTestBase {
     assert(c.count() == 6) // positive rows
     assert(!c.columns.contains(admissionCols.head))
   }
+
+  test("predictions: RF, DT, LR, GBT rows equal models fitted one after another") {
+    import org.apache.spark.ml.classification._
+    import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+    val assembled = features(df).cache()
+    val sequential = try {
+      val Array(train, test) = assembled.randomSplit(Array(0.8, 0.2), seed = 2020)
+      val evaluator = new MulticlassClassificationEvaluator().setMetricName("accuracy")
+      val rf = evaluator.evaluate(new RandomForestClassifier().setMaxDepth(5).fit(train).transform(test))
+      val dt = evaluator.evaluate(new DecisionTreeClassifier().setMaxDepth(3).fit(train).transform(test))
+      val lr = evaluator.evaluate(new LogisticRegression().setMaxIter(10).fit(train).transform(test))
+      val gbt = evaluator.evaluate(new GBTClassifier().fit(train).transform(test))
+      Seq(rf, dt, lr, gbt)
+    } finally assembled.unpersist()
+    assert(predictions(df).collect().map(_.getDouble(0)).toSeq == sequential)
+  }
+
+  test("run: exact output set, one JSON part per output, byte-identical reruns") {
+    val outputs = Set("hemoglobin_values", "red_blood_cells_values", "aggregate_age_result",
+      "age_relations", "care_relations", "predictions_missing_values",
+      "predictions_value_distribution", "predictions_test_result_distribution", "predictions")
+    val (a, b) = JobFixtures.runTwice("clinical")(ClinicalAnalysis.run(spark, fixture, _))
+    // temporary.parquet is careRelations' K2 round-trip, not a JSON output
+    assert(JobFixtures.outputDirs(a) == outputs + "temporary.parquet")
+    val parts = JobFixtures.jsonParts(a)
+    assert(parts.keySet == outputs && parts.values.forall(_.size == 1))
+    assert(JobFixtures.differingOutputs(a, b).isEmpty)
+  }
 }

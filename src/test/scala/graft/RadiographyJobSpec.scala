@@ -1,38 +1,12 @@
 package graft
 
-import java.awt.image.BufferedImage
-import java.io.File
-import javax.imageio.ImageIO
 import org.apache.spark.sql.functions._
 import graft.jobs.RadiographyAnalysis
 import graft.jobs.RadiographyAnalysis._
 
 class RadiographyJobSpec extends SparkTestBase {
 
-  /** Deterministic 299×299 constant-value RGB PNGs, 12 per class,
-    * plus one off-size image (must be filtered) and one corrupt file
-    * (must be dropped by dropInvalid).
-    */
-  private lazy val imgDir: String = {
-    val base = java.nio.file.Files.createTempDirectory("radiography").toFile
-    def writePng(f: File, size: Int, value: Int): Unit = {
-      val img = new BufferedImage(size, size, BufferedImage.TYPE_3BYTE_BGR)
-      val rgb = (value << 16) | (value << 8) | value
-      for (x <- 0 until size; y <- 0 until size) img.setRGB(x, y, rgb)
-      ImageIO.write(img, "png", f)
-    }
-    classNames.zipWithIndex.foreach { case (name, k) =>
-      val dir = new File(base, name); dir.mkdirs()
-      (0 until 12).foreach { i =>
-        writePng(new File(dir, s"img_$i.png"), 299, k * 60 + i)
-      }
-    }
-    writePng(new File(base, s"${classNames.head}/offsize.png"), 100, 10)
-    java.nio.file.Files.write(
-      new File(base, s"${classNames.head}/corrupt.png").toPath,
-      "not a png".getBytes)
-    base.toString
-  }
+  private lazy val imgDir: String = JobFixtures.radiographyImages()
 
   private lazy val df = RadiographyAnalysis.transform(RadiographyAnalysis.extract(spark, imgDir)).cache()
 
@@ -121,5 +95,17 @@ class RadiographyJobSpec extends SparkTestBase {
       assert(p.length == 4)
       assert(math.abs(p.sum - 1.0f) < 1e-5)
     }
+  }
+
+  // last: run releases its cache of the input, which has the same plan
+  // as this suite's cached `df`
+  test("run: exact output set, one JSON part per output, byte-identical reruns") {
+    val (a, b) = JobFixtures.runTwice("radiography")(RadiographyAnalysis.run(spark, imgDir, _))
+    val outputs = Set("percentage_of_samples", "take_samples", "colour_distribution",
+      "ml_classification", "dl_inference")
+    assert(JobFixtures.outputDirs(a) == outputs)
+    val parts = JobFixtures.jsonParts(a)
+    assert(parts.keySet == outputs && parts.values.forall(_.size == 1))
+    assert(JobFixtures.differingOutputs(a, b).isEmpty)
   }
 }

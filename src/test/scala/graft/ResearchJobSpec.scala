@@ -46,4 +46,13 @@ class ResearchJobSpec extends SparkTestBase {
     assert(p2.getAs[Double]("sentiment_abstract") == -0.5) // 'small'
     assert(p2.getAs[Int]("words") == 4)
   }
+
+  test("run: exact output set, one JSON part per output, byte-identical reruns") {
+    val (a, b) = JobFixtures.runTwice("research")(ResearchChallengeAnalysis.run(spark, fixture, _))
+    val outputs = Set("paper_authors", "paper_abstracts")
+    assert(JobFixtures.outputDirs(a) == outputs)
+    val parts = JobFixtures.jsonParts(a)
+    assert(parts.keySet == outputs && parts.values.forall(_.size == 1))
+    assert(JobFixtures.differingOutputs(a, b).isEmpty)
+  }
 }
