@@ -1,76 +1,80 @@
 package graft
 
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.{CompletableFuture, ConcurrentHashMap, ExecutionException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Session-lifecycle eviction for session-scoped caches.
+/** The one home of session-scoped state: table scan nodes,
+  * checkpointed frames, trained codebooks and BPE merges, streamed
+  * tables, fixture corpora, warehouse provision modes.
   *
-  * Several operators keep per-(session, dir) materialisations —
-  * Dedup's localCheckpoint'd LSH base frame, Bucketed's bucketed
-  * table layouts. Keyed by session identity they can never be hit by
-  * a *different* session, but without eviction a long-lived process
-  * that starts and stops many sessions accumulates dead checkpointed
-  * RDD references and orphaned warehouse directories.
+  * One map, keyed by (the session REFERENCE, an owner key). Every
+  * owner key starts with the owner's name (`"tables.scan"`,
+  * `"kmeans.codebook"`…), so owners never collide. `SparkSession`
+  * does not override `equals`, so two sessions — even two from one
+  * context — never share an entry, which a hash-code key could not
+  * promise.
   *
-  * Cache owners register an eviction hook (idempotent, keyed by
-  * name); [[GraftSession]] attaches a [[GraftEvictionListener]] to
-  * every session it builds, which fires all hooks for that session's
-  * identity when the underlying context shuts down
-  * (`SparkSession.stop` stops the context, so application end IS
-  * session end in every deployment shape we run).
+  * Builds are SINGLE-FLIGHT: the first caller of a key installs a
+  * pending entry and builds with no lock held; concurrent callers of
+  * the same key wait for that one build and share its value (the
+  * Bench setup pool reads tables and builds frames from several
+  * threads at once — `TrieMap.getOrElseUpdate` would run each such
+  * build once per racing caller). A build that throws removes its
+  * entry, so the next call builds again. Builds of different keys may
+  * nest; a build must not ask for its own key.
+  *
+  * [[GraftSession]] attaches a [[GraftEvictionListener]] to every
+  * session it builds, which drops that session's entries when the
+  * context ends (`SparkSession.stop` stops the context, so
+  * application end IS session end in every deployment shape we run).
   */
 object CacheRegistry {
 
-  private val hooks = TrieMap.empty[String, Int => Unit]
+  private val entries = new ConcurrentHashMap[(SparkSession, Any), CompletableFuture[Any]]()
 
-  /** Identity key used by all session-scoped caches. */
-  def sessionKey(spark: SparkSession): Int = System.identityHashCode(spark)
-
-  /** Register (or replace) a named eviction hook. The hook receives a
-    * session identity and must drop only that session's entries.
-    */
-  def register(name: String)(evict: Int => Unit): Unit = hooks.put(name, evict)
-
-  /** Fire every hook for one session's identity. */
-  def evict(sessionIdentity: Int): Unit = hooks.values.foreach(_(sessionIdentity))
-}
-
-/** The one session-scoped DataFrame memoizer: build once per
-  * (name, session, dir), localCheckpoint so every reader shares the
-  * materialization instead of replaying corpus-sized lineage, and
-  * evict with the session. Replaces the previously hand-rolled
-  * TrieMap-per-owner copies (Dedup's LSH base + scored pairs,
-  * CorpusOps' trigram base); non-DataFrame caches (Bucketed layouts,
-  * KMeansCodebook state) keep their own typed maps but share
-  * [[CacheRegistry]] eviction.
-  */
-object FrameCache {
-
-  private val frames =
-    TrieMap.empty[(String, Int, String), org.apache.spark.sql.DataFrame]
-
-  CacheRegistry.register("framecache") { sid =>
-    frames.keys.filter(_._2 == sid).foreach(frames.remove)
+  /** Build-or-reuse the value of `key` for `spark`. */
+  def memo[T](spark: SparkSession, key: Any)(build: => T): T = {
+    val k = (spark, key)
+    val mine = new CompletableFuture[Any]()
+    entries.putIfAbsent(k, mine) match {
+      case null =>
+        try {
+          val v = build
+          mine.complete(v)
+          v
+        } catch { case t: Throwable =>
+          entries.remove(k, mine)
+          mine.completeExceptionally(t)
+          throw t
+        }
+      case pending =>
+        try pending.get().asInstanceOf[T]
+        catch { case e: ExecutionException => throw e.getCause }
+    }
   }
 
-  /** Build-or-reuse the named frame for (session, dir). The build is
-    * localCheckpoint'd: eager, lineage-truncated, executor-resident.
+  /** [[memo]] for a DataFrame named `name` over `dir`, localCheckpoint'd
+    * so every reader shares the materialization (eager, lineage-
+    * truncated, executor-resident) instead of replaying corpus-sized
+    * lineage.
     */
-  def memoize(name: String, spark: SparkSession, dir: String)(
-    build: => org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    frames.getOrElseUpdate((name, CacheRegistry.sessionKey(spark), dir),
-      build.localCheckpoint())
+  def frame(name: String, spark: SparkSession, dir: String)(build: => DataFrame): DataFrame =
+    memo(spark, (name, dir))(build.localCheckpoint())
 
-  /** Test/introspection hook: is the named frame cached? */
-  private[graft] def cached(name: String, spark: SparkSession, dir: String): Boolean =
-    frames.contains((name, CacheRegistry.sessionKey(spark), dir))
+  /** Test/introspection hook: is (or is being) `key` built for `spark`? */
+  private[graft] def contains(spark: SparkSession, key: Any): Boolean =
+    entries.containsKey((spark, key))
+
+  /** Drop every entry of one session. */
+  def evict(spark: SparkSession): Unit =
+    entries.keySet.removeIf(_._1 eq spark)
 }
 
-/** Spark listener bound to one session's identity: evicts that
-  * session's cache entries when the context ends.
+/** Spark listener bound to one session: evicts that session's
+  * registry entries when the context ends.
   */
-class GraftEvictionListener(sessionIdentity: Int) extends SparkListener {
+class GraftEvictionListener(spark: SparkSession) extends SparkListener {
   override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit =
-    CacheRegistry.evict(sessionIdentity)
+    CacheRegistry.evict(spark)
 }

@@ -44,13 +44,16 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
 
   /** Local session sized from env (driver harness passes SPARK_GRAFT_CPUS). */
-  def local(appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = builder(appName, cpus).getOrCreate()
+  def local(appName: String = "graft"): SparkSession =
+    create(builder(appName, sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")))
+
+  /** Build the session and wire it: WARN logging, and eviction of its
+    * [[CacheRegistry]] entries when the context ends.
+    */
+  def create(b: SparkSession.Builder): SparkSession = {
+    val spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // evict this session's cached frames/layouts when the context ends
-    spark.sparkContext.addSparkListener(
-      new GraftEvictionListener(CacheRegistry.sessionKey(spark)))
+    spark.sparkContext.addSparkListener(new GraftEvictionListener(spark))
     spark
   }
 }

@@ -23,18 +23,24 @@ object Warehouse {
 
   /** How this session last provided each table: "catalog" (already
     * registered), "files" (re-registered surviving warehouse files),
-    * or "written" (paid the build). Introspection for specs and the
-    * Bench setup report.
+    * "written" (paid the build) or "created" (started empty).
+    * Introspection for specs and the Bench setup report.
     */
-  private val provisioned =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-
-  graft.CacheRegistry.register("warehouse.provisioned") { sid =>
-    provisioned.keys.filter(_._1 == sid).foreach(provisioned.remove)
-  }
+  private def provisioned(spark: SparkSession) =
+    graft.CacheRegistry.memo(spark, "warehouse.provisioned")(
+      new java.util.concurrent.ConcurrentHashMap[String, String]())
 
   private[graft] def lastProvision(spark: SparkSession, table: String): Option[String] =
-    provisioned.get((System.identityHashCode(spark), table))
+    Option(provisioned(spark).get(table))
+
+  /** Serve `table` from the session catalog when it is registered
+    * there, else run `provide`; record and return the mode.
+    */
+  private def provision(spark: SparkSession, table: String)(provide: => String): String = {
+    val mode = if (spark.catalog.tableExists(table)) "catalog" else provide
+    provisioned(spark).put(table, mode)
+    mode
+  }
 
   /** (name, length, mtime) of every data file under the source path. */
   private[graft] def sourceFingerprint(spark: SparkSession, src: String): String = {
@@ -112,17 +118,11 @@ object Warehouse {
     */
   def ensureBucketedTable(spark: SparkSession, table: String, srcPath: String,
                           bucketCol: String, numBuckets: Int)
-                         (build: => DataFrame): String = {
-    val skey = (System.identityHashCode(spark), table)
-    if (spark.catalog.tableExists(table)) {
-      provisioned.put(skey, "catalog")
-      return "catalog"
-    }
-    val (loc, fs) = locFs(spark, table)
-    val fp = sourceFingerprint(spark, srcPath)
-    val surviving = survivingFingerprint(fs, loc, fp)
-    val mode =
-      if (surviving) {
+                         (build: => DataFrame): String =
+    provision(spark, table) {
+      val (loc, fs) = locFs(spark, table)
+      val fp = sourceFingerprint(spark, srcPath)
+      if (survivingFingerprint(fs, loc, fp)) {
         // one DDL re-registers the surviving layout: external bucketed
         // table over the files a previous JVM wrote (bucket ids are
         // encoded in the file names, so bucketed-join/pruning
@@ -142,9 +142,7 @@ object Warehouse {
         writeFingerprintRaw(fs, loc, fp)
         "written"
       }
-    provisioned.put(skey, mode)
-    mode
-  }
+    }
 
   /** Provide `table` as a plain (unbucketed, unpartitioned) external
     * parquet artifact with the same fingerprinted cross-session
@@ -157,17 +155,11 @@ object Warehouse {
     * artifact the build IS the training).
     */
   def ensureTable(spark: SparkSession, table: String, srcPath: String,
-                  schemaDdl: String)(build: => DataFrame): String = {
-    val skey = (System.identityHashCode(spark), table)
-    if (spark.catalog.tableExists(table)) {
-      provisioned.put(skey, "catalog")
-      return "catalog"
-    }
-    val (loc, fs) = locFs(spark, table)
-    val fp = sourceFingerprint(spark, srcPath)
-    val surviving = survivingFingerprint(fs, loc, fp)
-    val mode =
-      if (surviving) {
+                  schemaDdl: String)(build: => DataFrame): String =
+    provision(spark, table) {
+      val (loc, fs) = locFs(spark, table)
+      val fp = sourceFingerprint(spark, srcPath)
+      if (survivingFingerprint(fs, loc, fp)) {
         spark.sql(s"CREATE TABLE $table ($schemaDdl) USING parquet " +
           s"LOCATION '${loc.toString}'")
         "files"
@@ -178,9 +170,7 @@ object Warehouse {
         writeFingerprintRaw(fs, loc, fp)
         "written"
       }
-    provisioned.put(skey, mode)
-    mode
-  }
+    }
 
   /** Upsert a batch into a partitioned table via DYNAMIC partition
     * overwrite: only the partitions present IN THE BATCH are
@@ -446,17 +436,11 @@ object Warehouse {
     */
   def ensureMaintainedPartitionedTable(spark: SparkSession, table: String,
                                        srcPath: String, schemaDdl: String,
-                                       partCol: String): String = {
-    val skey = (System.identityHashCode(spark), table)
-    if (spark.catalog.tableExists(table)) {
-      provisioned.put(skey, "catalog")
-      return "catalog"
-    }
-    val (loc, fs) = locFs(spark, table)
-    val fp = sourceFingerprint(spark, srcPath)
-    val surviving = survivingFingerprint(fs, loc, fp)
-    val mode =
-      if (surviving) {
+                                       partCol: String): String =
+    provision(spark, table) {
+      val (loc, fs) = locFs(spark, table)
+      val fp = sourceFingerprint(spark, srcPath)
+      if (survivingFingerprint(fs, loc, fp)) {
         spark.sql(
           s"""CREATE TABLE $table ($schemaDdl)
              |USING parquet
@@ -474,9 +458,7 @@ object Warehouse {
         writeFingerprintRaw(fs, loc, fp)
         "created"
       }
-    provisioned.put(skey, mode)
-    mode
-  }
+    }
 
   /** Fixture-table name patterns SUPERSEDED by a format-version bump
     * (the memory-note discipline: a persisted artifact whose FORMAT
@@ -536,17 +518,11 @@ object Warehouse {
     */
   def ensurePartitionedTable(spark: SparkSession, table: String,
                              srcPath: String, partCol: String)
-                            (build: => DataFrame): String = {
-    val skey = (System.identityHashCode(spark), table)
-    if (spark.catalog.tableExists(table)) {
-      provisioned.put(skey, "catalog")
-      return "catalog"
-    }
-    val (loc, fs) = locFs(spark, table)
-    val fp = sourceFingerprint(spark, srcPath)
-    val surviving = survivingFingerprint(fs, loc, fp)
-    val mode =
-      if (surviving) {
+                            (build: => DataFrame): String =
+    provision(spark, table) {
+      val (loc, fs) = locFs(spark, table)
+      val fp = sourceFingerprint(spark, srcPath)
+      if (survivingFingerprint(fs, loc, fp)) {
         spark.sql(
           s"""CREATE TABLE $table (${build.schema.toDDL})
              |USING parquet
@@ -564,7 +540,5 @@ object Warehouse {
         writeFingerprintRaw(fs, loc, fp)
         "written"
       }
-    provisioned.put(skey, mode)
-    mode
-  }
+    }
 }

@@ -89,10 +89,6 @@ object JobConfig {
   def session(appName: String, config: JobConfig, cpus: String = "4"): SparkSession = {
     val b = graft.GraftSession.builder(appName, cpus)
     config.sparkConf.foreach { case (k, v) => b.config(k, v) }
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.addSparkListener(
-      new graft.GraftEvictionListener(graft.CacheRegistry.sessionKey(spark)))
-    spark
+    graft.GraftSession.create(b)
   }
 }

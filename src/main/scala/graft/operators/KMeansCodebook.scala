@@ -1,7 +1,5 @@
 package graft.operators
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -91,15 +89,9 @@ object KMeansCodebook {
   }
 
   // trained codebooks are deterministic per (session, dir, k, iters);
-  // cache them so bench passes don't retrain, and evict on session stop
-  private val cache = TrieMap.empty[(Int, String, Int, Int), Array[Array[Double]]]
-
-  graft.CacheRegistry.register("kmeans.codebook") { sid =>
-    cache.keys.filter(_._1 == sid).foreach(cache.remove)
-  }
-
+  // memoize them so bench passes don't retrain
   def trained(spark: SparkSession, dir: String, k: Int, iters: Int): Array[Array[Double]] =
-    cache.getOrElseUpdate((System.identityHashCode(spark), dir, k, iters),
+    graft.CacheRegistry.memo(spark, ("kmeans.codebook", dir, k, iters))(
       train(spark, dir, k, iters))
 
   /** Warehouse table name of the persisted codebook — the ONE place

@@ -1,7 +1,6 @@
 package graft.queries
 
 import java.nio.charset.StandardCharsets
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -32,8 +31,6 @@ object BinaryFiles {
     */
   final val Stride = 5
 
-  private val corpusDirs = TrieMap[String, String]()
-
   /** Materialise the sampled corpus once per sf dir, executor-side
     * (foreachPartition — at scale this is exactly how a corpus lands
     * on shared storage: each task writes its partition's files; no
@@ -48,7 +45,7 @@ object BinaryFiles {
     * shape); nothing else changes.
     */
   def corpusDir(spark: SparkSession, dir: String): String =
-    corpusDirs.getOrElseUpdate(dir, {
+    graft.CacheRegistry.memo(spark, ("binaryfiles.corpus", dir)) {
       val target = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"),
         "graft_binfiles_" + java.lang.Integer.toHexString(dir.hashCode))
@@ -69,7 +66,7 @@ object BinaryFiles {
         java.nio.file.Files.write(marker, Array.emptyByteArray)
       }
       target.toString
-    })
+    }
 
   private def scan(spark: SparkSession, dir: String): DataFrame =
     spark.read
@@ -146,8 +143,6 @@ object BinaryFiles {
   final val PngCount = 384
   final val PngSide = 96
 
-  private val pngDirs = TrieMap[String, String]()
-
   /** Fixture PNGs, written executor-side once per sf dir. Same
     * LOCAL-MODE ASSUMPTION as [[corpusDir]]: `java.io.tmpdir` stands
     * in for shared storage — on a multi-node cluster the target must
@@ -156,7 +151,7 @@ object BinaryFiles {
     * readiness.
     */
   def pngDir(spark: SparkSession, dir: String): String =
-    pngDirs.getOrElseUpdate(dir, {
+    graft.CacheRegistry.memo(spark, ("binaryfiles.png", dir)) {
       val target = java.nio.file.Paths.get(
         sys.props("java.io.tmpdir"),
         "graft_png_" + java.lang.Integer.toHexString(dir.hashCode))
@@ -192,7 +187,7 @@ object BinaryFiles {
         java.nio.file.Files.write(marker, Array.emptyByteArray)
       }
       target.toString
-    })
+    }
 
   def q151(spark: SparkSession, dir: String): DataFrame = {
     val pngs = spark.read.format("binaryFile")

@@ -32,22 +32,6 @@ object Bucketed {
     * a stale layout can never serve a new corpus generation (the
     * round-5 events-encoding lesson, applied to derived data).
     */
-  private val createdLayouts =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), Seq[String]]
-
-  graft.CacheRegistry.register("bucketed.layouts") { sid =>
-    // session end clears BOOKKEEPING only — the layout files are a
-    // shared warehouse artifact that outlives every session by design
-    createdLayouts.keys.filter(_._1 == sid).foreach(createdLayouts.remove)
-  }
-
-  /** Test/introspection hooks. */
-  private[graft] def layoutsTracked(spark: SparkSession): Seq[String] =
-    createdLayouts.toSeq
-      .filter(_._1._1 == System.identityHashCode(spark)).flatMap(_._2)
-  private[graft] def lastProvision(spark: SparkSession, table: String): Option[String] =
-    graft.io.Warehouse.lastProvision(spark, table)
-
   def ensureBucketed(spark: SparkSession, dir: String): (String, String) = {
     val tag = java.lang.Integer.toHexString(dir.hashCode)
     val li = s"graft_li_bkt_$tag"
@@ -58,9 +42,6 @@ object Bucketed {
     graft.io.Warehouse.ensureBucketedTable(spark, ord,
       s"$dir/orders.parquet", "o_orderkey", NumBuckets)(
       Tables.orders(spark, dir).select("o_orderkey", "o_orderpriority"))
-    createdLayouts.putIfAbsent(
-      (System.identityHashCode(spark), dir),
-      Seq(li, ord).map(graft.io.Warehouse.tableLocation(spark, _)))
     (li, ord)
   }
 

@@ -39,7 +39,7 @@ object CorpusOps {
     * both consume.
     */
   private[graft] def triBase(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("corpus.triBase", spark, dir)(
+    graft.CacheRegistry.frame("corpus.triBase", spark, dir)(
       Tables.documents(spark, dir)
         .select(col("doc_id"), trigramSet(col("text")).as("sh"))
         .transform(d => Tables.fanOut(d, col("doc_id"))))
@@ -572,9 +572,6 @@ object CorpusOps {
   // plan as a chain of N codegen'd folds (a tokenizer's merge table
   // is plan-side constant data, exactly like a broadcast dim).
   // ---------------------------------------------------------------
-  private val trainedMerges =
-    scala.collection.concurrent.TrieMap
-      .empty[(Int, String), Seq[(Int, String, String, String, Long)]]
 
   /** The (seg, cnt) character-segmented vocabulary frame q150 trains
     * on — also the entry point for the ScaleStress 256-merge run.
@@ -591,8 +588,7 @@ object CorpusOps {
 
   private[graft] def mergesFor(spark: SparkSession, dir: String)
       : Seq[(Int, String, String, String, Long)] =
-    trainedMerges.getOrElseUpdate(
-      (graft.CacheRegistry.sessionKey(spark), dir),
+    graft.CacheRegistry.memo(spark, ("corpus.bpeMerges", dir))(
       bpeTrain(vocabSegFrame(spark, dir), BpeTrainMerges))
 
   /** The per-(doc, source, word) count frame both appliers start

@@ -106,10 +106,10 @@ object Dedup {
     */
   /** Test/introspection hook: is a base frame cached for (session, dir)? */
   private[graft] def lshBaseCached(spark: SparkSession, dir: String): Boolean =
-    graft.FrameCache.cached("dedup.lshBase", spark, dir)
+    graft.CacheRegistry.contains(spark, ("dedup.lshBase", dir))
 
   private def lshBase(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("dedup.lshBase", spark, dir)(
+    graft.CacheRegistry.frame("dedup.lshBase", spark, dir)(
       Tables.documents(spark, dir)
         .select(col("doc_id"), col("text"))
         .transform(d => Tables.fanOut(d, col("doc_id")))
@@ -126,7 +126,7 @@ object Dedup {
     * downstream dedup job reads.
     */
   private[graft] def lshScoredPairs(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("dedup.scoredPairs", spark, dir)(
+    graft.CacheRegistry.frame("dedup.scoredPairs", spark, dir)(
       lshScoredPairsUncached(spark, dir))
 
   /** The scored-pair set as a PERSISTED warehouse table — the
@@ -594,7 +594,7 @@ object Dedup {
     * the ScaleStress candidate audit share.
     */
   private[graft] def ssDocs(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("dedup.ssDocs", spark, dir)(
+    graft.CacheRegistry.frame("dedup.ssDocs", spark, dir)(
       // fanOut BEFORE the checkpoint: the shingle kernel ran as one
       // task over the single-file scan, and — more important — the
       // checkpointed layout's partition count is what every verify
@@ -620,7 +620,7 @@ object Dedup {
     * 27 s → ~2 s at sf0.1). Exposed for the Bench setup phase.
     */
   private[graft] def ssPrefix(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("dedup.ssPrefix", spark, dir) {
+    graft.CacheRegistry.frame("dedup.ssPrefix", spark, dir) {
       import org.apache.spark.sql.expressions.Window
       val docs = ssDocs(spark, dir)
       val tok = docs.select(col("doc_id"), col("n"), explode(col("sh")).as("t"))

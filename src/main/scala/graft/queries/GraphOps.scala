@@ -172,7 +172,7 @@ object GraphOps {
     * bounded by items-per-order, then a combinable support count.
     */
   private[graft] def prunedEdges(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("graph.copurchaseEdges", spark, dir) {
+    graft.CacheRegistry.frame("graph.copurchaseEdges", spark, dir) {
       Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
         .groupBy(col("ok")).agg(sort_array(collect_set(col("pk"))).as("ps"))

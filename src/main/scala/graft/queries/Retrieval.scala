@@ -283,7 +283,7 @@ object Retrieval {
     * phase.
     */
   private[graft] def lmScored(spark: SparkSession, dir: String): DataFrame =
-    graft.FrameCache.memoize("retrieval.lmScored", spark, dir) {
+    graft.CacheRegistry.frame("retrieval.lmScored", spark, dir) {
       val toks = Tables.documents(spark, dir)
         .select(col("doc_id"), posexplode(TextFns.tokens(col("text"))).as(Seq("pos", "w")))
       val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
@@ -375,12 +375,9 @@ object Retrieval {
   // ---------------------------------------------------------------
   final val PhraseTopK = 40
 
-  private val phrases = scala.collection.concurrent.TrieMap
-    .empty[(Int, String), (String, String, String)]
-
   private[graft] def phraseFor(spark: SparkSession, dir: String)
       : (String, String, String) =
-    phrases.getOrElseUpdate((graft.CacheRegistry.sessionKey(spark), dir), {
+    graft.CacheRegistry.memo(spark, ("retrieval.phrase", dir)) {
       val g = Tables.documents(spark, dir)
         .select(explode(TextFns.shingles(TextFns.tokens(col("text")), 3)).as("g"))
         .groupBy(col("g")).agg(count(lit(1)).as("cnt"))
@@ -391,7 +388,7 @@ object Retrieval {
       // can produce them) would destructure to <3 elements and throw
       val Array(a, b, c) = g.split(" ", -1)
       (a, b, c)
-    })
+    }
 
   /** The positional index — one (doc_id, pos, w) row per token
     * occurrence. PERSISTED like [[tfIndex]]: a fingerprinted external

@@ -22,15 +22,11 @@ object Tables {
     * a fixed ~0.1 s tax per query that dominates small-SF benchmarks
     * and re-reads object-store metadata at scale. One scan node per
     * (session, dir, table) is safe to share: DataFrames are immutable
-    * plans. Keyed by session identity so stopped test sessions don't
-    * leak stale plans into new ones.
+    * plans. Session-scoped so stopped sessions don't leak stale plans
+    * into new ones.
     */
-  private val scanCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String), DataFrame]
-
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    scanCache.getOrElseUpdate(
-      (System.identityHashCode(spark), dir, name),
+    graft.CacheRegistry.memo(spark, ("tables.scan", dir, name))(
       spark.read.parquet(s"$dir/$name.parquet"))
 
   /** Spread an UNSPLITTABLE scan across the cluster before heavy

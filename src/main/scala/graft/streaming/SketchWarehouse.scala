@@ -106,16 +106,9 @@ object SketchWarehouse {
     * (q183 itself keeps calling [[streamHourlyRegs]] directly: the
     * stream lifecycle IS what that query measures and certifies.)
     */
-  private val streamedOnce =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-
-  graft.CacheRegistry.register("sketchwarehouse.streamed") { sid =>
-    streamedOnce.keys.filter(_._1 == sid).foreach(streamedOnce.remove)
-  }
-
   def ensureStreamedHourlyRegs(spark: SparkSession, dir: String): String =
-    streamedOnce.getOrElseUpdate(
-      (System.identityHashCode(spark), dir), streamHourlyRegs(spark, dir))
+    graft.CacheRegistry.memo(spark, ("sketchwarehouse.streamed", dir))(
+      streamHourlyRegs(spark, dir))
 
   /** Run the events backlog through the seam: hash map-side (the
     * same codegen'd hash60 the batch and q177 paths use), reduce each

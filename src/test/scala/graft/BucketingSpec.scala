@@ -34,9 +34,9 @@ class BucketingSpec extends SparkTestBase {
     val t0 = System.nanoTime()
     Bucketed.ensureBucketed(spark, Sf)
     val reRegisterSec = (System.nanoTime() - t0) / 1e9
-    assert(Bucketed.lastProvision(spark, li).contains("files"),
-      s"expected files-reuse, got ${Bucketed.lastProvision(spark, li)}")
-    assert(Bucketed.lastProvision(spark, ord).contains("files"))
+    assert(graft.io.Warehouse.lastProvision(spark, li).contains("files"),
+      s"expected files-reuse, got ${graft.io.Warehouse.lastProvision(spark, li)}")
+    assert(graft.io.Warehouse.lastProvision(spark, ord).contains("files"))
     // the recovered registration must keep the zero-exchange property
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -57,7 +57,7 @@ class BucketingSpec extends SparkTestBase {
     try out.write("stale-corpus-generation".getBytes("UTF-8")) finally out.close()
     spark.sql(s"DROP TABLE $li")
     Bucketed.ensureBucketed(spark, Sf)
-    assert(Bucketed.lastProvision(spark, li).contains("written"),
+    assert(graft.io.Warehouse.lastProvision(spark, li).contains("written"),
       "a fingerprint mismatch must force the layout rewrite")
   }
 
@@ -106,8 +106,8 @@ class BucketingSpec extends SparkTestBase {
     val t = Bucketed.ensurePartitionedEvents(spark, Sf)
     spark.sql(s"DROP TABLE $t")
     Bucketed.ensurePartitionedEvents(spark, Sf)
-    assert(Bucketed.lastProvision(spark, t).contains("files"),
-      s"expected files-reuse, got ${Bucketed.lastProvision(spark, t)}")
+    assert(graft.io.Warehouse.lastProvision(spark, t).contains("files"),
+      s"expected files-reuse, got ${graft.io.Warehouse.lastProvision(spark, t)}")
     // the rediscovered partitions must serve the full corpus
     val viaTable = spark.table(t).count()
     val flat = graft.sources.Tables.events(spark, Sf).count()

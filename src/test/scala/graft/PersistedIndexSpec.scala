@@ -6,7 +6,7 @@ import graft.queries.Dedup
   * evidence: a derived frame (q34's near-dup pair set) persisted once
   * as a fingerprinted warehouse table is served to a fresh catalog
   * from its surviving files, with identical content and no recompute.
-  * The in-session FrameCache covers reuse WITHIN a session; this is
+  * The in-session CacheRegistry.frame covers reuse WITHIN a session; this is
   * the shape a multi-JOB pipeline runs on, where every downstream
   * dedup job opens the pair table instead of re-hashing the corpus.
   */
