@@ -1,13 +1,47 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps `explain("formatted")` for the headline queries → PLANS.md.
-  * Run: `sbt "runMain graft.Plans"` (regenerates the committed file).
+/** Dumps `explain("formatted")` plans. Two modes:
+  *   sbt "runMain graft.Plans"
+  *     regenerates the committed PLANS.md (headline queries at sf0.01);
+  *   sbt "runMain graft.Plans <sfDir> plans/r17 _before q52_ngram_jaccard,q175_hll_growth"
+  *     writes `<outDir>/<query><suffix>.txt` per named query — the
+  *     before/after plan evidence under plans/.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
+    val run: SparkSession => Unit = args match {
+      case Array() => writeDoc
+      case Array(sfDir, outDir, suffix, list) =>
+        dump(_, sfDir, outDir, suffix, list.split(',').toSeq)
+      case _ =>
+        System.err.println(
+          "usage: Plans                                  (regenerate PLANS.md)\n" +
+            "       Plans <sfDir> <outDir> <suffix> <q1,q2,...>")
+        sys.exit(2)
+    }
     val spark = GraftSession.local("graft-plans")
+    run(spark)
+    spark.stop()
+  }
+
+  private def formatted(df: DataFrame): String =
+    df.queryExecution.explainString(FormattedMode)
+
+  private def dump(spark: SparkSession, sfDir: String, outDir: String,
+      suffix: String, names: Seq[String]): Unit = {
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      val plan = formatted(SparkEntry.queries(name)(spark, sfDir))
+      Files.writeString(Paths.get(outDir, s"$name$suffix.txt"), plan)
+      println(s"[plans] wrote $outDir/$name$suffix.txt")
+    }
+  }
+
+  private def writeDoc(spark: SparkSession): Unit = {
     val dir = "/root/testdata/sf0.01"
     val headline = Seq(
       "q01_pricing_summary" -> "partial+final agg, decimal sums, scan-pushed filter",
@@ -174,8 +208,7 @@ object Plans {
     sb.append("time actually went, not just the shape we hoped for.\n")
     headline.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, dir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = formatted(df)
       // collect(), not count(): count() wraps the frame in a NEW
       // aggregate plan, so the metrics of THIS queryExecution would
       // never accumulate. Second run after warmup so the measured
@@ -235,6 +268,5 @@ object Plans {
       sb.append(s"\n## $name\n\n```\n$plan```\n")
     }
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
-    spark.stop()
   }
 }

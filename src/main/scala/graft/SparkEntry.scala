@@ -3,14 +3,15 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The query contract — see SURVEY.md §7.
   *
-  * `queries` is the full declared-operator inventory (one entry per
+  * `declared` is the full declared-operator inventory (one entry per
   * implemented operator family from SURVEY.md §2 plus the
-  * LLM-pipeline additions); `oracleSql` carries the DuckDB-equivalent
-  * SQL for every hash-checkable query. Column names are aligned
-  * between the two on purpose — the driver sorts columns by name
-  * before hashing.
+  * LLM-pipeline additions), each a [[Query]] pairing its Spark build
+  * function with the DuckDB-equivalent SQL. `queries` and `oracleSql`
+  * are both derived from it, so every query has an oracle. Column
+  * names are aligned between the two on purpose — the result
+  * comparison sorts columns by name before hashing.
   */
 object SparkEntry {
 
@@ -18,29 +19,25 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q01(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every module's queries, each module named once. */
+  def declared: Seq[Query] = Seq(
+    Relational.declared, TextAnalysis.declared, Dedup.declared,
+    Similarity.declared, EventsOps.declared, StreamingQueries.declared,
+    Advanced.declared, MultimodalQueries.declared, SketchQueries.declared,
+    Extended.declared, Bucketed.declared, BinaryFiles.declared,
+    AnnTrained.declared, PqQueries.declared, Reshape.declared,
+    RangeJoin.declared, Layout.declared, JobCores.declared,
+    PipelineOps.declared, CorpusOps.declared, GraphOps.declared,
+    Retrieval.declared, CurationOps.declared, SkewQueries.declared,
+    TemporalOps.declared, AnalyzeOps.declared, TimeTravel.declared).flatten
+
+  /** One entry per declared query: name → Spark build function. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    Relational.queries ++ TextAnalysis.queries ++ Dedup.queries ++
-      Similarity.queries ++ EventsOps.queries ++ StreamingQueries.queries ++
-      Advanced.queries ++ MultimodalQueries.queries ++ SketchQueries.queries ++
-      Extended.queries ++ Bucketed.queries ++ BinaryFiles.queries ++ AnnTrained.queries ++ PqQueries.queries ++
-      Reshape.queries ++ RangeJoin.queries ++ Layout.queries ++ // q85 rides in PqQueries.queries
-      JobCores.queries ++ PipelineOps.queries ++ CorpusOps.queries ++
-      GraphOps.queries ++ Retrieval.queries ++ CurationOps.queries ++
-      SkewQueries.queries ++ TemporalOps.queries ++ AnalyzeOps.queries ++
-      TimeTravel.queries
+    declared.map(q => q.name -> q.build).toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted keys get a weaker rows-only check.
+    * the same parquet tables; the key sets are equal by construction.
     */
   def oracleSql: Map[String, String] =
-    Relational.oracles ++ TextAnalysis.oracles ++ Dedup.oracles ++
-      Similarity.oracles ++ EventsOps.oracles ++ StreamingQueries.oracles ++
-      Advanced.oracles ++ MultimodalQueries.oracles ++ SketchQueries.oracles ++
-      Extended.oracles ++ Bucketed.oracles ++ BinaryFiles.oracles ++ AnnTrained.oracles ++ PqQueries.oracles ++
-      Reshape.oracles ++ RangeJoin.oracles ++ Layout.oracles ++
-      JobCores.oracles ++ PipelineOps.oracles ++ CorpusOps.oracles ++
-      GraphOps.oracles ++ Retrieval.oracles ++ CurationOps.oracles ++
-      SkewQueries.oracles ++ TemporalOps.oracles ++ AnalyzeOps.oracles ++
-      TimeTravel.oracles
+    declared.map(q => q.name -> q.oracleSql).toMap
 }

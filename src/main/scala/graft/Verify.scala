@@ -1,7 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Correctness dump: each declared query's result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -10,19 +9,21 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(',').toSeq))
+      case _ =>
+        System.err.println("usage: Verify <sfDir> <outDir> [name1,name2,...]")
+        sys.exit(2)
     }
     val spark = GraftSession.local("graft-verify")
     // sweep fixture dirs superseded by format-version bumps before
     // anything fingerprint-matches against them
     graft.io.Warehouse.dropSuperseded(spark)
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.contains)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    val selected = SparkEntry.declared.filter(d => only.forall(_.exists(d.name.contains)))
+    selected.foreach { d =>
+      try d.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${d.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${d.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -37,9 +38,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected.contains(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = selected.map(d => s"${q(d.name)}: ${q(d.oracleSql)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -13,8 +13,6 @@ import graft.sources.Tables
   */
 object Advanced {
 
-  type Q = (SparkSession, String) => DataFrame
-
   final val Horizon = 3
   private final val UsPerDay = 86400000000L
 
@@ -157,13 +155,8 @@ object Advanced {
        |ORDER BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q44_forecast_trend" -> (q44 _),
-    "q45_byte_stats" -> (q45 _),
-    "q93_forecast_seasonal" -> (q93 _))
-
-  def oracles: Map[String, String] = Map(
-    "q44_forecast_trend" -> q44Sql,
-    "q45_byte_stats" -> q45Sql,
-    "q93_forecast_seasonal" -> q93Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q44_forecast_trend", q44, q44Sql),
+    Query("q45_byte_stats", q45, q45Sql),
+    Query("q93_forecast_seasonal", q93, q93Sql))
 }

@@ -22,8 +22,6 @@ import graft.functions.TextFns.{rnd, rndSql}
   */
 object AnalyzeOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** The five-point quantile set the stats table carries (q181 ships
     * p50/p90/p99; p25/p75 add the IQR the bin-width heuristics want).
     */
@@ -434,17 +432,10 @@ object AnalyzeOps {
       |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q184_analyze_decisions" -> (q184 _),
-    "q186_analyze_incremental" -> (q186 _),
-    "q188_stats_banded_join" -> (q188 _),
-    "q189_stats_dict_join" -> (q189 _),
-    "q198_stats_skew_agg" -> (q198 _))
-
-  def oracles: Map[String, String] = Map(
-    "q184_analyze_decisions" -> q184Sql,
-    "q186_analyze_incremental" -> q186Sql,
-    "q188_stats_banded_join" -> q188Sql,
-    "q189_stats_dict_join" -> q189Sql,
-    "q198_stats_skew_agg" -> q198Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q184_analyze_decisions", q184, q184Sql),
+    Query("q186_analyze_incremental", q186, q186Sql),
+    Query("q188_stats_banded_join", q188, q188Sql),
+    Query("q189_stats_dict_join", q189, q189Sql),
+    Query("q198_stats_skew_agg", q198, q198Sql))
 }

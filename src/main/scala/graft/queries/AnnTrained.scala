@@ -18,8 +18,6 @@ import graft.sources.Tables
   */
 object AnnTrained {
 
-  type Q = (SparkSession, String) => DataFrame
-
   final val Cells = 16
   final val Iters = 2
   final val Probe = 2
@@ -464,31 +462,21 @@ object AnnTrained {
 
   val q216Sql: String = ivfSql(StoreProbeFilter, iters = ItersEvolved)
 
-  def queries: Map[String, Q] = Map(
-    "q70_ann_ivf_kmeans" -> (q70 _),
-    "q182_ann_partition_pruned" -> (q182 _),
-    "q190_ann_store_incremental" -> (q190 _),
-    "q197_stream_vector_ingest" -> (q197 _),
-    "q200_store_optimize" -> (q200 _),
-    "q213_store_tombstones" -> (q213 _),
-    "q215_codebook_asof" -> (q215 _),
-    "q216_codebook_evolved" -> (q216 _))
-
-  def oracles: Map[String, String] = Map(
-    "q70_ann_ivf_kmeans" -> q70Sql,
-    "q182_ann_partition_pruned" -> q182Sql,
+  def declared: Seq[Query] = Seq(
+    Query("q70_ann_ivf_kmeans", q70, q70Sql),
+    Query("q182_ann_partition_pruned", q182, q182Sql),
     // q190 shares q182's oracle: the maintained store's content equals
     // the rebuild's, and the hash-compare is what certifies it
-    "q190_ann_store_incremental" -> q182Sql,
+    Query("q190_ann_store_incremental", q190, q182Sql),
     // q197 likewise: streamed-in content == one-shot build
-    "q197_stream_vector_ingest" -> q182Sql,
+    Query("q197_stream_vector_ingest", q197, q182Sql),
     // q200: compaction changes layout, never answers
-    "q200_store_optimize" -> q182Sql,
+    Query("q200_store_optimize", q200, q182Sql),
     // q213: the store minus the tombstoned keys, frozen codebook
-    "q213_store_tombstones" -> q213Sql,
+    Query("q213_store_tombstones", q213, q213Sql),
     // q215: AS-OF the pre-retrain generation — q182's oracle verbatim
     // certifies the retrain left history bit-identical
-    "q215_codebook_asof" -> q182Sql,
+    Query("q215_codebook_asof", q215, q182Sql),
     // q216: the evolved generation under the retrained codebook
-    "q216_codebook_evolved" -> q216Sql)
+    Query("q216_codebook_evolved", q216, q216Sql))
 }

@@ -24,8 +24,6 @@ import graft.sources.Tables
   */
 object BinaryFiles {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Every Stride-th doc is materialised (bounds file count at bench
     * scale while keeping an oracle-expressible predicate).
     */
@@ -236,13 +234,8 @@ object BinaryFiles {
        |FROM m ORDER BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q68_binaryfile_stats" -> (q68 _),
-    "q69_binaryfile_meta" -> (q69 _),
-    "q151_image_decode" -> (q151 _))
-
-  def oracles: Map[String, String] = Map(
-    "q68_binaryfile_stats" -> q68Sql,
-    "q69_binaryfile_meta" -> q69Sql,
-    "q151_image_decode" -> q151Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q68_binaryfile_stats", q68, q68Sql),
+    Query("q69_binaryfile_meta", q69, q69Sql),
+    Query("q151_image_decode", q151, q151Sql))
 }

@@ -14,8 +14,6 @@ import graft.sources.Tables
   */
 object Bucketed {
 
-  type Q = (SparkSession, String) => DataFrame
-
   final val NumBuckets = 8
 
   /** Bucketed copies of orders/lineitem for `dir` as EXTERNAL tables
@@ -122,11 +120,7 @@ object Bucketed {
        |WHERE CAST(ts AS DATE) BETWEEN DATE '$WeekLo' AND DATE '$WeekHi'
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q57_bucketed_join" -> (q57 _),
-    "q146_partition_pruned" -> (q146 _))
-
-  def oracles: Map[String, String] = Map(
-    "q57_bucketed_join" -> q57Sql,
-    "q146_partition_pruned" -> q146Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q57_bucketed_join", q57, q57Sql),
+    Query("q146_partition_pruned", q146, q146Sql))
 }

@@ -16,8 +16,6 @@ import graft.sources.Tables
   */
 object CorpusOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val trigramSetSql: String =
     s"list_distinct(${shinglesSql("string_split(text, ' ')", 3)})"
 
@@ -699,27 +697,15 @@ object CorpusOps {
        |GROUP BY 1, 2 ORDER BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q105_boilerplate_ngrams" -> (q105 _),
-    "q106_hash_split" -> (q106 _),
-    "q107_domain_cap" -> (q107 _),
-    "q108_quality_funnel" -> (q108 _),
-    "q109_bpe_pairs" -> (q109 _),
-    "q110_epoch_weighting" -> (q110 _),
-    "q114_boilerplate_scrub" -> (q114 _),
-    "q150_bpe_train" -> (q150 _),
-    "q152_bpe_apply" -> (q152 _),
-    "q162_bpe_encode_kernel" -> (q162 _))
-
-  def oracles: Map[String, String] = Map(
-    "q105_boilerplate_ngrams" -> q105Sql,
-    "q106_hash_split" -> q106Sql,
-    "q107_domain_cap" -> q107Sql,
-    "q108_quality_funnel" -> q108Sql,
-    "q109_bpe_pairs" -> q109Sql,
-    "q110_epoch_weighting" -> q110Sql,
-    "q114_boilerplate_scrub" -> q114Sql,
-    "q150_bpe_train" -> q150Sql,
-    "q152_bpe_apply" -> q152Sql,
-    "q162_bpe_encode_kernel" -> q152Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q105_boilerplate_ngrams", q105, q105Sql),
+    Query("q106_hash_split", q106, q106Sql),
+    Query("q107_domain_cap", q107, q107Sql),
+    Query("q108_quality_funnel", q108, q108Sql),
+    Query("q109_bpe_pairs", q109, q109Sql),
+    Query("q110_epoch_weighting", q110, q110Sql),
+    Query("q114_boilerplate_scrub", q114, q114Sql),
+    Query("q150_bpe_train", q150, q150Sql),
+    Query("q152_bpe_apply", q152, q152Sql),
+    Query("q162_bpe_encode_kernel", q162, q152Sql))
 }

@@ -16,8 +16,6 @@ import graft.sources.Tables
   */
 object CurationOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q126_repetition_suite — the Gopher repetition filters (Rae et
   // al. 2021, "Scaling Language Models: ... Gopher", §A1.1) as
@@ -886,29 +884,16 @@ object CurationOps {
        |  tvd > $DriftTvdMax AS drifted
        |FROM agg ORDER BY source""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q176_cdc_incremental" -> (q176 _),
-    "q170_dist_drift" -> (q170 _),
-    "q169_pii_redact" -> (q169 _),
-    "q164_cdc_chunks" -> (q164 _),
-    "q156_paragraph_dedup" -> (q156 _),
-    "q126_repetition_suite" -> (q126 _),
-    "q127_window_dedup" -> (q127 _),
-    "q128_priority_sample" -> (q128 _),
-    "q129_source_calibration" -> (q129 _),
-    "q130_span_trim" -> (q130 _),
-    "q131_source_overlap" -> (q131 _))
-
-  def oracles: Map[String, String] = Map(
-    "q176_cdc_incremental" -> q176Sql,
-    "q170_dist_drift" -> q170Sql,
-    "q169_pii_redact" -> q169Sql,
-    "q164_cdc_chunks" -> q164Sql,
-    "q156_paragraph_dedup" -> q156Sql,
-    "q126_repetition_suite" -> q126Sql,
-    "q127_window_dedup" -> q127Sql,
-    "q128_priority_sample" -> q128Sql,
-    "q129_source_calibration" -> q129Sql,
-    "q130_span_trim" -> q130Sql,
-    "q131_source_overlap" -> q131Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q176_cdc_incremental", q176, q176Sql),
+    Query("q170_dist_drift", q170, q170Sql),
+    Query("q169_pii_redact", q169, q169Sql),
+    Query("q164_cdc_chunks", q164, q164Sql),
+    Query("q156_paragraph_dedup", q156, q156Sql),
+    Query("q126_repetition_suite", q126, q126Sql),
+    Query("q127_window_dedup", q127, q127Sql),
+    Query("q128_priority_sample", q128, q128Sql),
+    Query("q129_source_calibration", q129, q129Sql),
+    Query("q130_span_trim", q130, q130Sql),
+    Query("q131_source_overlap", q131, q131Sql))
 }

@@ -22,8 +22,6 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** DuckDB twin of the distinct word-bigram shingle basis (the Spark
     * side computes it natively — TextKernels.bigramSetCol; parity is
     * pinned by KernelSpec).
@@ -1006,35 +1004,20 @@ object Dedup {
       .orderBy(col("jaccard").desc, col("id_a"), col("id_b"))
       .limit(30)
 
-  def queries: Map[String, Q] = Map(
-    "q196_lsh_index_incremental" -> (q196 _),
-    "q166_editdist_join" -> (q166 _),
-    "q147_neardup_prune" -> (q147 _),
-    "q121_ssjoin_exact" -> (q121 _),
-    "q32_dedup_exact_docs" -> (q32 _),
-    "q33_minhash_sig" -> (q33 _),
-    "q34_lsh_neardup" -> (q34 _),
-    "q35_embedding_neardup" -> (q35 _),
-    "q52_ngram_jaccard" -> (q52 _),
-    "q58_simhash_neardup" -> (q58 _),
-    "q61_dedup_clusters" -> (q61 _),
-    "q71_dedup_clusters_star" -> (q71 _),
-    "q87_incremental_dedup" -> (q87 _))
-
-  def oracles: Map[String, String] = Map(
+  def declared: Seq[Query] = Seq(
     // maintained == rebuild: the incremental pair table must produce
     // q34's exact answer (same contract as q190/q191/q192)
-    "q196_lsh_index_incremental" -> q34Sql,
-    "q166_editdist_join" -> q166Sql,
-    "q147_neardup_prune" -> q147Sql,
-    "q121_ssjoin_exact" -> q121Sql,
-    "q32_dedup_exact_docs" -> q32Sql,
-    "q33_minhash_sig" -> q33Sql,
-    "q34_lsh_neardup" -> q34Sql,
-    "q35_embedding_neardup" -> q35Sql,
-    "q52_ngram_jaccard" -> q52Sql,
-    "q58_simhash_neardup" -> q58Sql,
-    "q61_dedup_clusters" -> q61Sql,
-    "q71_dedup_clusters_star" -> q61Sql,
-    "q87_incremental_dedup" -> q87Sql)
+    Query("q196_lsh_index_incremental", q196, q34Sql),
+    Query("q166_editdist_join", q166, q166Sql),
+    Query("q147_neardup_prune", q147, q147Sql),
+    Query("q121_ssjoin_exact", q121, q121Sql),
+    Query("q32_dedup_exact_docs", q32, q32Sql),
+    Query("q33_minhash_sig", q33, q33Sql),
+    Query("q34_lsh_neardup", q34, q34Sql),
+    Query("q35_embedding_neardup", q35, q35Sql),
+    Query("q52_ngram_jaccard", q52, q52Sql),
+    Query("q58_simhash_neardup", q58, q58Sql),
+    Query("q61_dedup_clusters", q61, q61Sql),
+    Query("q71_dedup_clusters_star", q71, q61Sql),
+    Query("q87_incremental_dedup", q87, q87Sql))
 }

@@ -18,8 +18,6 @@ import graft.sources.Tables
   */
 object EventsOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Session gap: a new session starts after >2h of inactivity. */
   final val GapUs: Long = 2L * 3600 * 1000000
 
@@ -461,27 +459,15 @@ object EventsOps {
        |FROM p GROUP BY path
        |ORDER BY n_sessions DESC, path LIMIT $PathTopK""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q148_top_paths" -> (q148 _),
-    "q38_json_extract" -> (q38 _),
-    "q39_sessionize" -> (q39 _),
-    "q40_tumbling_hourly" -> (q40 _),
-    "q41_fill_replace" -> (q41 _),
-    "q67_session_window" -> (q67 _),
-    "q133_funnel" -> (q133 _),
-    "q134_cohort_retention" -> (q134 _),
-    "q135_event_transitions" -> (q135 _),
-    "q136_hourly_anomaly" -> (q136 _))
-
-  def oracles: Map[String, String] = Map(
-    "q148_top_paths" -> q148Sql,
-    "q38_json_extract" -> q38Sql,
-    "q39_sessionize" -> q39Sql,
-    "q40_tumbling_hourly" -> q40Sql,
-    "q41_fill_replace" -> q41Sql,
-    "q67_session_window" -> q67Sql,
-    "q133_funnel" -> q133Sql,
-    "q134_cohort_retention" -> q134Sql,
-    "q135_event_transitions" -> q135Sql,
-    "q136_hourly_anomaly" -> q136Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q148_top_paths", q148, q148Sql),
+    Query("q38_json_extract", q38, q38Sql),
+    Query("q39_sessionize", q39, q39Sql),
+    Query("q40_tumbling_hourly", q40, q40Sql),
+    Query("q41_fill_replace", q41, q41Sql),
+    Query("q67_session_window", q67, q67Sql),
+    Query("q133_funnel", q133, q133Sql),
+    Query("q134_cohort_retention", q134, q134Sql),
+    Query("q135_event_transitions", q135, q135Sql),
+    Query("q136_hourly_anomaly", q136, q136Sql))
 }

@@ -13,8 +13,6 @@ import graft.sources.Tables
   */
 object Extended {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q53_correlated_subquery — orders above their customer's average:
   // a correlated scalar subquery through the SQL surface. Catalyst
@@ -248,21 +246,12 @@ object Extended {
       |JOIN nation n ON n.n_nationkey = COALESCE(c.nk, s.snk)
       |ORDER BY n.n_name""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q154_full_outer_reconcile" -> (q154 _),
-    "q53_correlated_subquery" -> (q53 _),
-    "q54_map_functions" -> (q54 _),
-    "q55_sliding_windows" -> (q55 _),
-    "q56_tf_embedding" -> (q56 _),
-    "q64_stratified_sample" -> (q64 _),
-    "q83_topk_heap" -> (q83 _))
-
-  def oracles: Map[String, String] = Map(
-    "q154_full_outer_reconcile" -> q154Sql,
-    "q53_correlated_subquery" -> q53Sql,
-    "q54_map_functions" -> q54Sql,
-    "q55_sliding_windows" -> q55Sql,
-    "q56_tf_embedding" -> q56Sql,
-    "q64_stratified_sample" -> q64Sql,
-    "q83_topk_heap" -> q83Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q154_full_outer_reconcile", q154, q154Sql),
+    Query("q53_correlated_subquery", q53, q53Sql),
+    Query("q54_map_functions", q54, q54Sql),
+    Query("q55_sliding_windows", q55, q55Sql),
+    Query("q56_tf_embedding", q56, q56Sql),
+    Query("q64_stratified_sample", q64, q64Sql),
+    Query("q83_topk_heap", q83, q83Sql))
 }

@@ -11,8 +11,6 @@ import graft.sources.Tables
   */
 object GraphOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q112_trade_pagerank — weighted PageRank over the nation-level
   // trade graph (customer's nation → supplier's nation, weight =
@@ -348,13 +346,8 @@ object GraphOps {
        |ORDER BY round""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q112_trade_pagerank" -> (q112 _),
-    "q139_triangle_count" -> (q139 _),
-    "q153_kcore" -> (q153 _))
-
-  def oracles: Map[String, String] = Map(
-    "q112_trade_pagerank" -> q112Sql,
-    "q139_triangle_count" -> q139Sql,
-    "q153_kcore" -> q153Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q112_trade_pagerank", q112, q112Sql),
+    Query("q139_triangle_count", q139, q139Sql),
+    Query("q153_kcore", q153, q153Sql))
 }

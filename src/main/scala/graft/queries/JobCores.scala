@@ -25,8 +25,6 @@ import graft.sources.Tables
   */
 object JobCores {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // cases-time shape: events → the reference's daily-cases header
   // (cases_time_analysis.py:86-119 regime — all-string columns with
@@ -480,29 +478,16 @@ object JobCores {
        |  SUM(deaths)::BIGINT AS sum_deaths, SUM(active)::BIGINT AS sum_active
        |FROM norm GROUP BY d ORDER BY d""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q94_job_mortality_topk" -> (q94 _),
-    "q95_job_missing_profile" -> (q95 _),
-    "q96_job_value_distribution" -> (q96 _),
-    "q97_job_age_relations" -> (q97 _),
-    "q98_job_test_result_dist" -> (q98 _),
-    "q115_job_europe_snapshot" -> (q115 _),
-    "q116_job_recovery_topk" -> (q116 _),
-    "q117_job_sample_percentages" -> (q117 _),
-    "q118_job_global_daily" -> (q118 _),
-    "q119_job_country_series" -> (q119 _),
-    "q120_job_comparison_daily" -> (q120 _))
-
-  def oracles: Map[String, String] = Map(
-    "q94_job_mortality_topk" -> q94Sql,
-    "q95_job_missing_profile" -> q95Sql,
-    "q96_job_value_distribution" -> q96Sql,
-    "q97_job_age_relations" -> q97Sql,
-    "q98_job_test_result_dist" -> q98Sql,
-    "q115_job_europe_snapshot" -> q115Sql,
-    "q116_job_recovery_topk" -> q116Sql,
-    "q117_job_sample_percentages" -> q117Sql,
-    "q118_job_global_daily" -> q118Sql,
-    "q119_job_country_series" -> q119Sql,
-    "q120_job_comparison_daily" -> q120Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q94_job_mortality_topk", q94, q94Sql),
+    Query("q95_job_missing_profile", q95, q95Sql),
+    Query("q96_job_value_distribution", q96, q96Sql),
+    Query("q97_job_age_relations", q97, q97Sql),
+    Query("q98_job_test_result_dist", q98, q98Sql),
+    Query("q115_job_europe_snapshot", q115, q115Sql),
+    Query("q116_job_recovery_topk", q116, q116Sql),
+    Query("q117_job_sample_percentages", q117, q117Sql),
+    Query("q118_job_global_daily", q118, q118Sql),
+    Query("q119_job_country_series", q119, q119Sql),
+    Query("q120_job_comparison_daily", q120, q120Sql))
 }

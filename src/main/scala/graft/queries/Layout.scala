@@ -14,8 +14,6 @@ import graft.sources.Tables
   */
 object Layout {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Aligned z-block size: 2^18 codes = a 512 × 512 key rectangle. */
   final val BucketBits = 18
 
@@ -802,45 +800,30 @@ object Layout {
       .orderBy(col("l_orderkey"))
   }
 
-  def queries: Map[String, Q] = Map(
-    "q86_zorder_layout" -> (q86 _),
-    "q194_zonemap_pruned" -> (q194 _),
-    "q195_zonemap_zorder" -> (q195 _),
-    "q199_zonemap_incremental" -> (q199 _),
-    "q201_bloom_skipping" -> (q201 _),
-    "q202_compound_skipping" -> (q202 _),
-    "q208_stats_access_path" -> (q208 _),
-    "q212_cost_access_path" -> (q212 _),
-    "q214_adaptive_relayout" -> (q214 _),
-    "q223_partial_relayout" -> (q223 _),
-    "q228_zoned2d_relayout" -> (q228 _),
-    "q229_zoned2d_partial" -> (q229 _),
-    "q236_bloom_logged" -> (q236 _))
-
-  def oracles: Map[String, String] = Map(
-    "q86_zorder_layout" -> q86Sql,
-    "q194_zonemap_pruned" -> q194Sql,
-    "q195_zonemap_zorder" -> q195Sql,
+  def declared: Seq[Query] = Seq(
+    Query("q86_zorder_layout", q86, q86Sql),
+    Query("q194_zonemap_pruned", q194, q194Sql),
+    Query("q195_zonemap_zorder", q195, q195Sql),
     // base + wave = the full corpus: the maintained skipping layer
     // must produce q194's exact answer
-    "q199_zonemap_incremental" -> q194Sql,
-    "q201_bloom_skipping" -> q201Sql,
-    "q202_compound_skipping" -> q202Sql,
-    "q208_stats_access_path" -> q208Sql,
+    Query("q199_zonemap_incremental", q199, q194Sql),
+    Query("q201_bloom_skipping", q201, q201Sql),
+    Query("q202_compound_skipping", q202, q202Sql),
+    Query("q208_stats_access_path", q208, q208Sql),
     // q212 shares q202's oracle: access-path choice is answer-neutral
-    "q212_cost_access_path" -> q202Sql,
+    Query("q212_cost_access_path", q212, q202Sql),
     // q214: base + waves + re-layout = the full corpus; re-layout
     // timing changes cost, never answers — q194's oracle verbatim
-    "q214_adaptive_relayout" -> q194Sql,
+    Query("q214_adaptive_relayout", q214, q194Sql),
     // q223: the partial re-layout answers identically
-    "q223_partial_relayout" -> q194Sql,
+    Query("q223_partial_relayout", q223, q194Sql),
     // q228: base + waves + z-order re-layout = the full corpus; the
     // maintained 2-D layout answers the 2-D box — q195's oracle
     // verbatim
-    "q228_zoned2d_relayout" -> q195Sql,
+    Query("q228_zoned2d_relayout", q228, q195Sql),
     // q229: the 2-D partial re-layout answers identically
-    "q229_zoned2d_partial" -> q195Sql,
+    Query("q229_zoned2d_partial", q229, q195Sql),
     // q236: Bloom pruning on the logged table is answer-neutral —
     // q201's flat-scan oracle verbatim
-    "q236_bloom_logged" -> q201Sql)
+    Query("q236_bloom_logged", q236, q201Sql))
 }

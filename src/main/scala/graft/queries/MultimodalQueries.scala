@@ -14,8 +14,6 @@ import graft.sources.Tables
   */
 object MultimodalQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q46_multimodal_meta — per-kind metadata rollup. Only doc_id and
   // the meta struct leave the scan (payload pruned away — the
@@ -176,15 +174,9 @@ object MultimodalQueries {
        |ORDER BY doc_id""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q46_multimodal_meta" -> (q46 _),
-    "q47_multimodal_features" -> (q47 _),
-    "q90_resize_grid" -> (q90 _),
-    "q91_frame_sample" -> (q91 _))
-
-  def oracles: Map[String, String] = Map(
-    "q46_multimodal_meta" -> q46Sql,
-    "q47_multimodal_features" -> q47Sql,
-    "q90_resize_grid" -> q90Sql,
-    "q91_frame_sample" -> q91Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q46_multimodal_meta", q46, q46Sql),
+    Query("q47_multimodal_features", q47, q47Sql),
+    Query("q90_resize_grid", q90, q90Sql),
+    Query("q91_frame_sample", q91, q91Sql))
 }

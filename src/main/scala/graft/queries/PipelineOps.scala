@@ -15,8 +15,6 @@ import graft.sources.Tables
   */
 object PipelineOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** DuckDB twin of the distinct word-bigram shingle basis (same as
     * Dedup's; parity with TextKernels.bigramSetCol pinned by
     * KernelSpec).
@@ -742,27 +740,15 @@ object PipelineOps {
        |ORDER BY score_raw DESC, doc_id LIMIT $DsirTopK""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q155_dsir_weights" -> (q155 _),
-    "q124_semantic_decontamination" -> (q124 _),
-    "q125_decontamination_ann" -> (q125 _),
-    "q104_mixture_rebalance" -> (q104 _),
-    "q100_decontamination" -> (q100 _),
-    "q101_repetition_score" -> (q101 _),
-    "q102_sequence_packing" -> (q102 _),
-    "q103_semantic_dedup" -> (q103 _),
-    "q113_temperature_mixture" -> (q113 _),
-    "q167_token_waterfill" -> (q167 _))
-
-  def oracles: Map[String, String] = Map(
-    "q155_dsir_weights" -> q155Sql,
-    "q124_semantic_decontamination" -> q124Sql,
-    "q125_decontamination_ann" -> q125Sql,
-    "q104_mixture_rebalance" -> q104Sql,
-    "q100_decontamination" -> q100Sql,
-    "q101_repetition_score" -> q101Sql,
-    "q102_sequence_packing" -> q102Sql,
-    "q103_semantic_dedup" -> q103Sql,
-    "q113_temperature_mixture" -> q113Sql,
-    "q167_token_waterfill" -> q167Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q155_dsir_weights", q155, q155Sql),
+    Query("q124_semantic_decontamination", q124, q124Sql),
+    Query("q125_decontamination_ann", q125, q125Sql),
+    Query("q104_mixture_rebalance", q104, q104Sql),
+    Query("q100_decontamination", q100, q100Sql),
+    Query("q101_repetition_score", q101, q101Sql),
+    Query("q102_sequence_packing", q102, q102Sql),
+    Query("q103_semantic_dedup", q103, q103Sql),
+    Query("q113_temperature_mixture", q113, q113Sql),
+    Query("q167_token_waterfill", q167, q167Sql))
 }

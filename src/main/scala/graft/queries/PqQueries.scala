@@ -24,8 +24,6 @@ import graft.sources.Tables
   */
 object PqQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   final val Dim = 64
   final val NumBlocks = 4
   final val BlockDim = Dim / NumBlocks
@@ -774,22 +772,13 @@ object PqQueries {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q75_pq_encode" -> (q75 _),
-    "q76_pq_adc" -> (q76 _),
-    "q85_ivfpq_search" -> (q85 _),
-    "q171_sq8_quantize" -> (q171 _),
-    "q173_rand_proj" -> (q173 _),
-    "q187_pq_store_search" -> (q187 _),
-    "q191_pq_store_incremental" -> (q191 _))
-
-  def oracles: Map[String, String] = Map(
-    "q75_pq_encode" -> q75Sql,
-    "q76_pq_adc" -> q76Sql,
-    "q85_ivfpq_search" -> q85Sql,
-    "q171_sq8_quantize" -> q171Sql,
-    "q173_rand_proj" -> q173Sql,
-    "q187_pq_store_search" -> q187Sql,
+  def declared: Seq[Query] = Seq(
+    Query("q75_pq_encode", q75, q75Sql),
+    Query("q76_pq_adc", q76, q76Sql),
+    Query("q85_ivfpq_search", q85, q85Sql),
+    Query("q171_sq8_quantize", q171, q171Sql),
+    Query("q173_rand_proj", q173, q173Sql),
+    Query("q187_pq_store_search", q187, q187Sql),
     // q191 shares q187's oracle: maintained store content == rebuild
-    "q191_pq_store_incremental" -> q187Sql)
+    Query("q191_pq_store_incremental", q191, q187Sql))
 }

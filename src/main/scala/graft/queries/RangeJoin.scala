@@ -26,8 +26,6 @@ import graft.sources.Tables
   */
 object RangeJoin {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Window width = bin width, in days. Bins wider than the widest
     * interval keep per-interval replication ≤ 2.
     */
@@ -211,15 +209,9 @@ object RangeJoin {
       .orderBy(col("rect_id"))
   }
 
-  def queries: Map[String, Q] = Map(
-    "q82_range_join_binned" -> (q82 _),
-    "q88_range_join_auto" -> (q88 _),
-    "q92_spatial_join" -> (q92 _),
-    "q99_spatial_join_auto" -> (q99 _))
-
-  def oracles: Map[String, String] = Map(
-    "q82_range_join_binned" -> q82Sql,
-    "q88_range_join_auto" -> q82Sql,
-    "q92_spatial_join" -> q92Sql,
-    "q99_spatial_join_auto" -> q92Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q82_range_join_binned", q82, q82Sql),
+    Query("q88_range_join_auto", q88, q82Sql),
+    Query("q92_spatial_join", q92, q92Sql),
+    Query("q99_spatial_join_auto", q99, q92Sql))
 }

@@ -32,8 +32,6 @@ object Relational {
   private def dsum(c: Column, scale: Int = 2): Column =
     graft.functions.ScaledSum.scaledDsum(c, scale)
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q01_pricing_summary — §2.6 A1 (groupBy + multi-sum), §2.4 F1
   // (scan-pushed predicate), §2.8 O1. TPC-H Q1 shape.
@@ -591,59 +589,30 @@ object Relational {
       |SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
       |ORDER BY o_custkey""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q01_pricing_summary" -> (q01 _),
-    "q02_group_count" -> (q02 _),
-    "q03_multi_agg" -> (q03 _),
-    "q04_missing_profile" -> (q04 _),
-    "q05_filter_project" -> (q05 _),
-    "q06_topk_resort" -> (q06 _),
-    "q07_window_latest" -> (q07 _),
-    "q08_ordered_collect" -> (q08 _),
-    "q09_union" -> (q09 _),
-    "q10_dedup_exact" -> (q10 _),
-    "q11_join_revenue" -> (q11 _),
-    "q12_join_semi" -> (q12 _),
-    "q13_join_anti" -> (q13 _),
-    "q14_outer_join" -> (q14 _),
-    "q15_rollup" -> (q15 _),
-    "q16_cube" -> (q16 _),
-    "q17_rank_windows" -> (q17 _),
-    "q18_running_sum" -> (q18 _),
-    "q19_distinct_agg" -> (q19 _),
-    "q20_pct_of_total" -> (q20 _),
-    "q21_date_buckets" -> (q21 _),
-    "q22_case_when" -> (q22 _),
-    "q23_dedup_keyed" -> (q23 _),
-    "q24_multi_join_dims" -> (q24 _),
-    "q25_intersect_except" -> (q25 _)
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> q01Sql,
-    "q02_group_count" -> q02Sql,
-    "q03_multi_agg" -> q03Sql,
-    "q04_missing_profile" -> q04Sql,
-    "q05_filter_project" -> q05Sql,
-    "q06_topk_resort" -> q06Sql,
-    "q07_window_latest" -> q07Sql,
-    "q08_ordered_collect" -> q08Sql,
-    "q09_union" -> q09Sql,
-    "q10_dedup_exact" -> q10Sql,
-    "q11_join_revenue" -> q11Sql,
-    "q12_join_semi" -> q12Sql,
-    "q13_join_anti" -> q13Sql,
-    "q14_outer_join" -> q14Sql,
-    "q15_rollup" -> q15Sql,
-    "q16_cube" -> q16Sql,
-    "q17_rank_windows" -> q17Sql,
-    "q18_running_sum" -> q18Sql,
-    "q19_distinct_agg" -> q19Sql,
-    "q20_pct_of_total" -> q20Sql,
-    "q21_date_buckets" -> q21Sql,
-    "q22_case_when" -> q22Sql,
-    "q23_dedup_keyed" -> q23Sql,
-    "q24_multi_join_dims" -> q24Sql,
-    "q25_intersect_except" -> q25Sql
-  )
+  def declared: Seq[Query] = Seq(
+    Query("q01_pricing_summary", q01, q01Sql),
+    Query("q02_group_count", q02, q02Sql),
+    Query("q03_multi_agg", q03, q03Sql),
+    Query("q04_missing_profile", q04, q04Sql),
+    Query("q05_filter_project", q05, q05Sql),
+    Query("q06_topk_resort", q06, q06Sql),
+    Query("q07_window_latest", q07, q07Sql),
+    Query("q08_ordered_collect", q08, q08Sql),
+    Query("q09_union", q09, q09Sql),
+    Query("q10_dedup_exact", q10, q10Sql),
+    Query("q11_join_revenue", q11, q11Sql),
+    Query("q12_join_semi", q12, q12Sql),
+    Query("q13_join_anti", q13, q13Sql),
+    Query("q14_outer_join", q14, q14Sql),
+    Query("q15_rollup", q15, q15Sql),
+    Query("q16_cube", q16, q16Sql),
+    Query("q17_rank_windows", q17, q17Sql),
+    Query("q18_running_sum", q18, q18Sql),
+    Query("q19_distinct_agg", q19, q19Sql),
+    Query("q20_pct_of_total", q20, q20Sql),
+    Query("q21_date_buckets", q21, q21Sql),
+    Query("q22_case_when", q22, q22Sql),
+    Query("q23_dedup_keyed", q23, q23Sql),
+    Query("q24_multi_join_dims", q24, q24Sql),
+    Query("q25_intersect_except", q25, q25Sql))
 }

@@ -29,8 +29,6 @@ import graft.sources.Tables
   */
 object Reshape {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic money-sum: decimal partial/final merge is exact
     * (associative), cast back to double only at the end — the same
     * dsum discipline as Relational (double partial sums would make
@@ -169,15 +167,9 @@ object Reshape {
        |FROM daily WINDOW w AS (PARTITION BY user_id ORDER BY day)
        |ORDER BY user_id, day""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q78_pivot" -> (q78 _),
-    "q79_unpivot" -> (q79 _),
-    "q80_grouping_sets" -> (q80 _),
-    "q81_window_shift" -> (q81 _))
-
-  def oracles: Map[String, String] = Map(
-    "q78_pivot" -> q78Sql,
-    "q79_unpivot" -> q79Sql,
-    "q80_grouping_sets" -> q80Sql,
-    "q81_window_shift" -> q81Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q78_pivot", q78, q78Sql),
+    Query("q79_unpivot", q79, q79Sql),
+    Query("q80_grouping_sets", q80, q80Sql),
+    Query("q81_window_shift", q81, q81Sql))
 }

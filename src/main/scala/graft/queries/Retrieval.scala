@@ -22,8 +22,6 @@ import graft.sources.Tables
   */
 object Retrieval {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q122_bm25_topk — BM25 ranked retrieval: four fixed probe queries
   // against the token inverted index; per query the top-K documents
@@ -514,8 +512,8 @@ object Retrieval {
     * candidate set is the whole corpus and the output EQUALS q163
     * (RetrievalSpec pins the bit-equality — the q59 "full-probe ==
     * brute force" anchor); at production nprobe ≪ cells the dense
-    * leg touches ~nprobe/cells of the corpus per probe. Not in the
-    * oracle map (approximate below full probe); measured beside
+    * leg touches ~nprobe/cells of the corpus per probe. Not a declared
+    * query (approximate below full probe); measured beside
     * q163 in the 10× ScaleStress.
     */
   def q163Ivf(spark: SparkSession, dir: String,
@@ -721,18 +719,11 @@ object Retrieval {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q122_bm25_topk" -> (q122 _),
-    "q123_lm_quality" -> (q123 _),
-    "q157_phrase_match" -> (q157 _),
-    "q163_hybrid_rrf" -> (q163 _),
-    "q192_bm25_incremental" -> (q192 _))
-
-  def oracles: Map[String, String] = Map(
-    "q122_bm25_topk" -> q122Sql,
-    "q123_lm_quality" -> q123Sql,
-    "q157_phrase_match" -> q157Sql,
-    "q163_hybrid_rrf" -> q163Sql,
+  def declared: Seq[Query] = Seq(
+    Query("q122_bm25_topk", q122, q122Sql),
+    Query("q123_lm_quality", q123, q123Sql),
+    Query("q157_phrase_match", q157, q157Sql),
+    Query("q163_hybrid_rrf", q163, q163Sql),
     // q192 shares q122's oracle: maintained index == rebuilt index
-    "q192_bm25_incremental" -> q122Sql)
+    Query("q192_bm25_incremental", q192, q122Sql))
 }

@@ -19,8 +19,6 @@ import graft.sources.Tables
   */
 object Similarity {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Deterministic probe set: every 50th vector. */
   private val QueryFilter = "vec_id % 50 = 0"
 
@@ -263,15 +261,9 @@ object Similarity {
        |LEFT JOIN ivf i ON t.query_id = i.query_id AND t.vec_id = i.vec_id
        |GROUP BY t.query_id ORDER BY t.query_id""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q36_ann_bruteforce" -> (q36 _),
-    "q37_ann_lsh" -> (q37 _),
-    "q59_ann_ivf" -> (q59 _),
-    "q111_ann_recall" -> (q111 _))
-
-  def oracles: Map[String, String] = Map(
-    "q36_ann_bruteforce" -> q36Sql,
-    "q37_ann_lsh" -> q37Sql,
-    "q59_ann_ivf" -> q59Sql,
-    "q111_ann_recall" -> q111Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q36_ann_bruteforce", q36, q36Sql),
+    Query("q37_ann_lsh", q37, q37Sql),
+    Query("q59_ann_ivf", q59, q59Sql),
+    Query("q111_ann_recall", q111, q111Sql))
 }

@@ -14,8 +14,6 @@ import graft.sources.Tables
   */
 object SketchQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q48_corpus_sketch — per-source merged MinHash signature via the
   // custom aggregate: each source's sketch is the signature of the
@@ -1400,51 +1398,28 @@ object SketchQueries {
        |ORDER BY srcs.source""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q185_hll_incremental" -> (q185 _),
-    "q181_profile_quantiles" -> (q181 _),
-    "q183_stream_hll_warehouse" -> (q183 _),
-    "q193_week_sketch_rollup" -> (q193 _),
-    "q180_hll_overlap" -> (q180 _),
-    "q179_profile_hll" -> (q179 _),
-    "q178_hll_rollup" -> (q178 _),
-    "q175_hll_growth" -> (q175 _),
-    "q172_hll_distinct" -> (q172 _),
-    "q161_heavy_hitters" -> (q161 _),
-    "q145_column_profile" -> (q145 _),
-    "q48_corpus_sketch" -> (q48 _),
-    "q49_skew_salted" -> (q49 _),
-    "q50_asof_join" -> (q50 _),
-    "q51_percentiles" -> (q51 _),
-    "q62_kmv_distinct" -> (q62 _),
-    "q65_countmin_freq" -> (q65 _),
-    "q66_asof_native" -> (q66 _),
-    "q73_histogram_quantiles" -> (q73 _),
-    "q165_exact_quantiles" -> (q165 _),
-    "q77_bloom_prune" -> (q77 _))
-
-  def oracles: Map[String, String] = Map(
-    "q185_hll_incremental" -> q185Sql,
-    "q181_profile_quantiles" -> q181Sql,
+  def declared: Seq[Query] = Seq(
+    Query("q185_hll_incremental", q185, q185Sql),
+    Query("q181_profile_quantiles", q181, q181Sql),
     // q183 shares q178's day-direct oracle: the hash-compare is what
     // certifies stream→store→merge→rollup == one direct batch pass
-    "q183_stream_hll_warehouse" -> q178Sql,
-    "q193_week_sketch_rollup" -> q193Sql,
-    "q180_hll_overlap" -> q180Sql,
-    "q179_profile_hll" -> q179Sql,
-    "q178_hll_rollup" -> q178Sql,
-    "q175_hll_growth" -> q175Sql,
-    "q172_hll_distinct" -> q172Sql,
-    "q161_heavy_hitters" -> q161Sql,
-    "q145_column_profile" -> q145Sql,
-    "q48_corpus_sketch" -> q48Sql,
-    "q49_skew_salted" -> q49Sql,
-    "q50_asof_join" -> q50Sql,
-    "q51_percentiles" -> q51Sql,
-    "q62_kmv_distinct" -> q62Sql,
-    "q65_countmin_freq" -> q65Sql,
-    "q66_asof_native" -> q50Sql,
-    "q73_histogram_quantiles" -> q73Sql,
-    "q165_exact_quantiles" -> q165Sql,
-    "q77_bloom_prune" -> q77Sql)
+    Query("q183_stream_hll_warehouse", q183, q178Sql),
+    Query("q193_week_sketch_rollup", q193, q193Sql),
+    Query("q180_hll_overlap", q180, q180Sql),
+    Query("q179_profile_hll", q179, q179Sql),
+    Query("q178_hll_rollup", q178, q178Sql),
+    Query("q175_hll_growth", q175, q175Sql),
+    Query("q172_hll_distinct", q172, q172Sql),
+    Query("q161_heavy_hitters", q161, q161Sql),
+    Query("q145_column_profile", q145, q145Sql),
+    Query("q48_corpus_sketch", q48, q48Sql),
+    Query("q49_skew_salted", q49, q49Sql),
+    Query("q50_asof_join", q50, q50Sql),
+    Query("q51_percentiles", q51, q51Sql),
+    Query("q62_kmv_distinct", q62, q62Sql),
+    Query("q65_countmin_freq", q65, q65Sql),
+    Query("q66_asof_native", q66, q50Sql),
+    Query("q73_histogram_quantiles", q73, q73Sql),
+    Query("q165_exact_quantiles", q165, q165Sql),
+    Query("q77_bloom_prune", q77, q77Sql))
 }

@@ -19,8 +19,6 @@ import graft.sources.Tables
   */
 object SkewQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Salt fan-out. 16 subkeys per hot key caps any reducer at ~1/16th
     * of a hot key's rows; at real scale this is sized to
     * rows(hot_key) / target_partition_rows.
@@ -135,11 +133,7 @@ object SkewQueries {
        |ORDER BY e.event_type""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q137_salted_agg" -> (q137 _),
-    "q138_salted_join" -> (q138 _))
-
-  def oracles: Map[String, String] = Map(
-    "q137_salted_agg" -> q137Sql,
-    "q138_salted_join" -> q138Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q137_salted_agg", q137, q137Sql),
+    Query("q138_salted_join", q138, q138Sql))
 }

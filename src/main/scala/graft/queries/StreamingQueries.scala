@@ -14,8 +14,6 @@ import graft.streaming.EventStreams
   */
 object StreamingQueries {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private val runId = new AtomicLong(0)
 
   /** State partitions for the backlog-replay twins: each state store
@@ -633,39 +631,21 @@ object StreamingQueries {
        |ORDER BY agg.win_start""".stripMargin
   }
 
-  def queries: Map[String, Q] = Map(
-    "q177_stream_hll" -> (q177 _),
-    "q174_stream_drift" -> (q174 _),
-    "q168_stream_trending" -> (q168 _),
-    "q160_stream_attribution_tws" -> (q160 _),
-    "q159_stream_multitouch" -> (q159 _),
-    "q158_stream_sessions_tws" -> (q158 _),
-    "q149_stream_anomaly" -> (q149 _),
-    "q143_stream_attribution" -> (q143 _),
-    "q132_stream_span_trim" -> (q132 _),
-    "q42_stream_tumbling" -> (q42 _),
-    "q43_stream_sessions" -> (q43 _),
-    "q60_stream_dedup" -> (q60 _),
-    "q63_stream_interval_join" -> (q63 _),
-    "q72_stream_static_join" -> (q72 _),
-    "q74_stream_kmv" -> (q74 _),
-    "q84_stream_outer_join" -> (q84 _))
-
-  def oracles: Map[String, String] = Map(
-    "q177_stream_hll" -> q177Sql,
-    "q174_stream_drift" -> q174Sql,
-    "q168_stream_trending" -> q168Sql,
-    "q160_stream_attribution_tws" -> q143Sql,
-    "q159_stream_multitouch" -> q159Sql,
-    "q158_stream_sessions_tws" -> EventsOps.q39Sql,
-    "q149_stream_anomaly" -> EventsOps.q136Sql,
-    "q143_stream_attribution" -> q143Sql,
-    "q132_stream_span_trim" -> q132Sql,
-    "q42_stream_tumbling" -> EventsOps.q40Sql,
-    "q43_stream_sessions" -> EventsOps.q39Sql,
-    "q60_stream_dedup" -> q60Sql,
-    "q63_stream_interval_join" -> q63Sql,
-    "q72_stream_static_join" -> q72Sql,
-    "q74_stream_kmv" -> q74Sql,
-    "q84_stream_outer_join" -> q84Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q177_stream_hll", q177, q177Sql),
+    Query("q174_stream_drift", q174, q174Sql),
+    Query("q168_stream_trending", q168, q168Sql),
+    Query("q160_stream_attribution_tws", q160, q143Sql),
+    Query("q159_stream_multitouch", q159, q159Sql),
+    Query("q158_stream_sessions_tws", q158, EventsOps.q39Sql),
+    Query("q149_stream_anomaly", q149, EventsOps.q136Sql),
+    Query("q143_stream_attribution", q143, q143Sql),
+    Query("q132_stream_span_trim", q132, q132Sql),
+    Query("q42_stream_tumbling", q42, EventsOps.q40Sql),
+    Query("q43_stream_sessions", q43, EventsOps.q39Sql),
+    Query("q60_stream_dedup", q60, q60Sql),
+    Query("q63_stream_interval_join", q63, q63Sql),
+    Query("q72_stream_static_join", q72, q72Sql),
+    Query("q74_stream_kmv", q74, q74Sql),
+    Query("q84_stream_outer_join", q84, q84Sql))
 }

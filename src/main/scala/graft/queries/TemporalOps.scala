@@ -18,8 +18,6 @@ import graft.sources.Tables
   */
 object TemporalOps {
 
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------
   // q140_scd2_intervals — build a type-2 slowly-changing dimension
   // from an ordered change log: per customer, consecutive runs of
@@ -245,15 +243,9 @@ object TemporalOps {
       |             RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
       |ORDER BY day, event_type""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q144_trailing_window" -> (q144 _),
-    "q140_scd2_intervals" -> (q140 _),
-    "q141_cumulative_uniques" -> (q141 _),
-    "q142_last_touch_attribution" -> (q142 _))
-
-  def oracles: Map[String, String] = Map(
-    "q144_trailing_window" -> q144Sql,
-    "q140_scd2_intervals" -> q140Sql,
-    "q141_cumulative_uniques" -> q141Sql,
-    "q142_last_touch_attribution" -> q142Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q144_trailing_window", q144, q144Sql),
+    Query("q140_scd2_intervals", q140, q140Sql),
+    Query("q141_cumulative_uniques", q141, q141Sql),
+    Query("q142_last_touch_attribution", q142, q142Sql))
 }

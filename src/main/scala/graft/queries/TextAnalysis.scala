@@ -21,8 +21,6 @@ import graft.sources.Tables
   */
 object TextAnalysis {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private def toks: Column = tokens(col("text"))
 
   // ---------------------------------------------------------------
@@ -271,21 +269,12 @@ object TextAnalysis {
        |  array_to_string(tok[start + 1 : start + $ChunkSize], ' ') AS chunk_text
        |FROM starts ORDER BY doc_id, chunk_id""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q89_doc_chunking" -> (q89 _),
-    "q26_lang_id" -> (q26 _),
-    "q27_quality_score" -> (q27 _),
-    "q28_token_stats" -> (q28 _),
-    "q29_top_tokens" -> (q29 _),
-    "q30_fingerprint" -> (q30 _),
-    "q31_clean_sentiment" -> (q31 _))
-
-  def oracles: Map[String, String] = Map(
-    "q89_doc_chunking" -> q89Sql,
-    "q26_lang_id" -> q26Sql,
-    "q27_quality_score" -> q27Sql,
-    "q28_token_stats" -> q28Sql,
-    "q29_top_tokens" -> q29Sql,
-    "q30_fingerprint" -> q30Sql,
-    "q31_clean_sentiment" -> q31Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q89_doc_chunking", q89, q89Sql),
+    Query("q26_lang_id", q26, q26Sql),
+    Query("q27_quality_score", q27, q27Sql),
+    Query("q28_token_stats", q28, q28Sql),
+    Query("q29_top_tokens", q29, q29Sql),
+    Query("q30_fingerprint", q30, q30Sql),
+    Query("q31_clean_sentiment", q31, q31Sql))
 }

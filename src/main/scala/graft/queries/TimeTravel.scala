@@ -25,8 +25,6 @@ import graft.sources.Tables
   */
 object TimeTravel {
 
-  type Q = (SparkSession, String) => DataFrame
-
   final val Cut1 = "2024-01-10 12:00:00"
   final val Cut2 = "2024-01-20 12:00:00"
   final val Day1 = "2024-01-10"
@@ -1139,57 +1137,30 @@ object TimeTravel {
        |WHERE ts <= TIMESTAMP '$MergeCut' OR CAST(ts AS DATE) >= DATE '$Day2'
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin
 
-  def queries: Map[String, Q] = Map(
-    "q203_snapshot_read" -> (q203 _),
-    "q204_travel_overwritten" -> (q204 _),
-    "q205_change_feed" -> (q205 _),
-    "q206_schema_evolution" -> (q206 _),
-    "q207_stream_generations" -> (q207 _),
-    "q209_partition_evolution" -> (q209 _),
-    "q210_delete_through_log" -> (q210 _),
-    "q211_change_feed_delete" -> (q211 _),
-    "q217_merge_through_log" -> (q217 _),
-    "q218_insert_compact" -> (q218 _),
-    "q219_incremental_consume" -> (q219 _),
-    "q220_shallow_clone" -> (q220 _),
-    "q221_feed_apply" -> (q221 _),
-    "q222_stream_insert_log" -> (q222 _),
-    "q224_restore_generation" -> (q224 _),
-    "q225_delete_mor" -> (q225 _),
-    "q226_dv_materialize" -> (q226 _),
-    "q227_dv_debt_settlement" -> (q227 _),
-    "q230_restore_feed" -> (q230 _),
-    "q231_stream_cdc" -> (q231 _),
-    "q232_stream_source" -> (q232 _),
-    "q233_stream_source_adds" -> (q233 _),
-    "q234_asof_timestamp" -> (q234 _),
-    "q235_multipart_restate" -> (q235 _),
-    "q237_column_rename" -> (q237 _))
-
-  def oracles: Map[String, String] = Map(
-    "q203_snapshot_read" -> q203Sql,
-    "q204_travel_overwritten" -> q204Sql,
-    "q205_change_feed" -> q205Sql,
-    "q206_schema_evolution" -> q206Sql,
-    "q207_stream_generations" -> q207Sql,
-    "q209_partition_evolution" -> q209Sql,
-    "q210_delete_through_log" -> q210Sql,
-    "q211_change_feed_delete" -> q211Sql,
-    "q217_merge_through_log" -> q217Sql,
-    "q218_insert_compact" -> q218Sql,
-    "q219_incremental_consume" -> q219Sql,
-    "q220_shallow_clone" -> q220Sql,
-    "q221_feed_apply" -> q221Sql,
-    "q222_stream_insert_log" -> q222Sql,
-    "q224_restore_generation" -> q224Sql,
-    "q225_delete_mor" -> q225Sql,
-    "q226_dv_materialize" -> q226Sql,
-    "q227_dv_debt_settlement" -> q227Sql,
-    "q230_restore_feed" -> q230Sql,
-    "q231_stream_cdc" -> q231Sql,
-    "q232_stream_source" -> q232Sql,
-    "q233_stream_source_adds" -> q233Sql,
-    "q234_asof_timestamp" -> q234Sql,
-    "q235_multipart_restate" -> q235Sql,
-    "q237_column_rename" -> q237Sql)
+  def declared: Seq[Query] = Seq(
+    Query("q203_snapshot_read", q203, q203Sql),
+    Query("q204_travel_overwritten", q204, q204Sql),
+    Query("q205_change_feed", q205, q205Sql),
+    Query("q206_schema_evolution", q206, q206Sql),
+    Query("q207_stream_generations", q207, q207Sql),
+    Query("q209_partition_evolution", q209, q209Sql),
+    Query("q210_delete_through_log", q210, q210Sql),
+    Query("q211_change_feed_delete", q211, q211Sql),
+    Query("q217_merge_through_log", q217, q217Sql),
+    Query("q218_insert_compact", q218, q218Sql),
+    Query("q219_incremental_consume", q219, q219Sql),
+    Query("q220_shallow_clone", q220, q220Sql),
+    Query("q221_feed_apply", q221, q221Sql),
+    Query("q222_stream_insert_log", q222, q222Sql),
+    Query("q224_restore_generation", q224, q224Sql),
+    Query("q225_delete_mor", q225, q225Sql),
+    Query("q226_dv_materialize", q226, q226Sql),
+    Query("q227_dv_debt_settlement", q227, q227Sql),
+    Query("q230_restore_feed", q230, q230Sql),
+    Query("q231_stream_cdc", q231, q231Sql),
+    Query("q232_stream_source", q232, q232Sql),
+    Query("q233_stream_source_adds", q233, q233Sql),
+    Query("q234_asof_timestamp", q234, q234Sql),
+    Query("q235_multipart_restate", q235, q235Sql),
+    Query("q237_column_rename", q237, q237Sql))
 }

@@ -6,6 +6,19 @@ class EntrySpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("declared queries have unique, well-formed names and non-blank oracles") {
+    val declared = SparkEntry.declared
+    // a name declared twice would collapse silently in the derived maps
+    val dup = declared.groupBy(_.name).collect { case (n, ds) if ds.size > 1 => n }
+    assert(dup.isEmpty, s"names declared more than once: ${dup.toSeq.sorted.mkString(", ")}")
+    // CoverageDocSpec and PlansCoverageSpec key on the qNNN_ prefix
+    val badName = declared.map(_.name).filterNot(_.matches("q\\d+_[a-z0-9_]+"))
+    assert(badName.isEmpty, s"names not of the form qNNN_name: ${badName.mkString(", ")}")
+    // a module `val` declared above its SQL vals captures nulls
+    val blank = declared.filter(d => d.oracleSql == null || d.oracleSql.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"declared queries with a null or blank oracle: ${blank.mkString(", ")}")
+  }
+
   test("every query key with an oracle exists in queries") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(missing.isEmpty, s"oracleSql keys without a query: $missing")

@@ -4,28 +4,42 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One lifecycle for session state: session-scoped caches live in
-  * [[CacheRegistry]] only. A hash-code session key or a private
+/** Source scans for two single-mechanism rules. Session-scoped caches
+  * live in [[CacheRegistry]] only: a hash-code session key or a private
   * `TrieMap` anywhere else in main code brings back an unevicted,
-  * double-building cache, so this scan fails on either.
+  * double-building cache. Each query is one `Query(name, build,
+  * oracleSql)` record: a module keeping name-keyed twin maps again
+  * could pair a name with no oracle.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
   private val Forbidden = Seq("System.identityHashCode(", "concurrent.TrieMap")
   private val Registry = Paths.get("graft", "CacheRegistry.scala")
 
-  test("no file under src/main/scala but the registry keys or maps session state") {
-    val root = Paths.get("src", "main", "scala")
+  /** `path:line: text` for every line of the Scala sources under
+    * `root` (bar `skip`) that contains one of `needles`. */
+  private def scan(root: Path, minFiles: Int, needles: Seq[String],
+      skip: Path => Boolean = _ => false): List[String] = {
     val walk = Files.walk(root)
     val files = try walk.iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Registry)).toList
+      .filter(p => p.toString.endsWith(".scala") && !skip(p)).toList
     finally walk.close()
-    assert(files.size > 50, s"scan found only ${files.size} sources under $root")
-    val hits = files.flatMap { p: Path =>
+    assert(files.size > minFiles, s"scan found only ${files.size} sources under $root")
+    files.flatMap { p =>
       Files.readAllLines(p).asScala.zipWithIndex.collect {
-        case (line, i) if Forbidden.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+        case (line, i) if needles.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
       }
     }
+  }
+
+  test("no file under src/main/scala but the registry keys or maps session state") {
+    val hits = scan(Paths.get("src", "main", "scala"), 50, Forbidden, _.endsWith(Registry))
     assert(hits.isEmpty, s"session state outside CacheRegistry:\n${hits.mkString("\n")}")
+  }
+
+  test("no query module declares twin queries/oracles maps") {
+    val hits = scan(Paths.get("src", "main", "scala", "graft", "queries"), 20,
+      Seq("def oracles", "type Q ="))
+    assert(hits.isEmpty, s"twin query maps in query modules:\n${hits.mkString("\n")}")
   }
 }
