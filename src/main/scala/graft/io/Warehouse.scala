@@ -89,16 +89,6 @@ object Warehouse {
     try out.write(fp.getBytes("UTF-8")) finally out.close()
   }
 
-  /** Does `table`'s stored fingerprint match the CURRENT state of
-    * `srcPath`? The registration-time staleness check, exposed for
-    * artifacts that are not catalog tables (the GenLog directories).
-    */
-  private[graft] def fingerprintMatches(spark: SparkSession, table: String,
-                                        srcPath: String): Boolean = {
-    val (loc, fs) = locFs(spark, table)
-    survivingFingerprint(fs, loc, sourceFingerprint(spark, srcPath))
-  }
-
   /** Re-record the source state `table`'s rows now correspond to.
     * For MAINTENANCE writers whose rewrite deletes the table
     * directory first (overwrite insertInto does): they must restore
@@ -111,6 +101,64 @@ object Warehouse {
     writeFingerprintRaw(fs, loc, sourceFingerprint(spark, srcPath))
   }
 
+  /** The one stale-check / delete / rebuild / mark step behind every
+    * persisted artifact. When the fingerprint stored under `table`'s
+    * location matches the CURRENT state of `srcPath`, `reuse` serves
+    * the surviving files. Otherwise the directory is deleted, `build`
+    * runs, and only then is the fingerprint written: it doubles as the
+    * COMMIT MARKER, so a build that throws leaves none and the next
+    * call rebuilds from empty. Returns the mode `reuse` or `build`
+    * reports.
+    */
+  private def guarded(spark: SparkSession, table: String, srcPath: String)
+      (reuse: org.apache.hadoop.fs.Path => String)
+      (build: org.apache.hadoop.fs.Path => String): String = {
+    val (loc, fs) = locFs(spark, table)
+    val fp = sourceFingerprint(spark, srcPath)
+    if (survivingFingerprint(fs, loc, fp)) reuse(loc)
+    else {
+      if (fs.exists(loc)) fs.delete(loc, true)
+      val mode = build(loc)
+      writeFingerprintRaw(fs, loc, fp)
+      mode
+    }
+  }
+
+  /** Provide `table`'s directory as a fingerprint-guarded artifact
+    * that is not a catalog table (a generation log): `build(loc)`
+    * runs only when the surviving directory does not correspond to
+    * the current state of `srcPath`. Records "files" or "written"
+    * for [[lastProvision]] and returns the location.
+    */
+  def ensureDir(spark: SparkSession, table: String, srcPath: String)
+               (build: String => Unit): String = {
+    val loc = tableLocation(spark, table)
+    provisioned(spark).put(table,
+      guarded(spark, table, srcPath)(_ => "files") { _ => build(loc); "written" })
+    loc
+  }
+
+  /** DDL column list of the surviving parquet files under `loc`, read
+    * from their footers and partition directories, so re-registering
+    * never evaluates the by-name `build` (for a trained or hashed
+    * artifact the build IS the expensive part). A layout with no data
+    * files to read falls back to the build's own schema.
+    */
+  private def survivingDdl(spark: SparkSession, loc: org.apache.hadoop.fs.Path,
+                           build: => DataFrame): String =
+    scala.util.Try(spark.read.parquet(loc.toString).schema)
+      .getOrElse(build.schema).toDDL
+
+  private def createPartitioned(spark: SparkSession, table: String,
+      schemaDdl: String, partCol: String, loc: org.apache.hadoop.fs.Path): Unit = {
+    spark.sql(
+      s"""CREATE TABLE $table ($schemaDdl)
+         |USING parquet
+         |PARTITIONED BY ($partCol)
+         |LOCATION '${loc.toString}'""".stripMargin)
+    ()
+  }
+
   /** Provide `table` in the session catalog as an external bucketed
     * layout derived from the data under `srcPath`; `build` runs only
     * when neither the catalog nor valid surviving files can serve it.
@@ -120,26 +168,22 @@ object Warehouse {
                           bucketCol: String, numBuckets: Int)
                          (build: => DataFrame): String =
     provision(spark, table) {
-      val (loc, fs) = locFs(spark, table)
-      val fp = sourceFingerprint(spark, srcPath)
-      if (survivingFingerprint(fs, loc, fp)) {
+      guarded(spark, table, srcPath) { loc =>
         // one DDL re-registers the surviving layout: external bucketed
         // table over the files a previous JVM wrote (bucket ids are
         // encoded in the file names, so bucketed-join/pruning
         // properties are fully recovered from disk + catalog metadata)
         spark.sql(
-          s"""CREATE TABLE $table (${build.schema.toDDL})
+          s"""CREATE TABLE $table (${survivingDdl(spark, loc, build)})
              |USING parquet
              |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $numBuckets BUCKETS
              |LOCATION '${loc.toString}'""".stripMargin)
         "files"
-      } else {
-        if (fs.exists(loc)) fs.delete(loc, true)
+      } { loc =>
         build.write
           .option("path", loc.toString) // external: DROP TABLE keeps files
           .bucketBy(numBuckets, bucketCol).sortBy(bucketCol)
           .mode("overwrite").saveAsTable(table)
-        writeFingerprintRaw(fs, loc, fp)
         "written"
       }
     }
@@ -157,17 +201,13 @@ object Warehouse {
   def ensureTable(spark: SparkSession, table: String, srcPath: String,
                   schemaDdl: String)(build: => DataFrame): String =
     provision(spark, table) {
-      val (loc, fs) = locFs(spark, table)
-      val fp = sourceFingerprint(spark, srcPath)
-      if (survivingFingerprint(fs, loc, fp)) {
+      guarded(spark, table, srcPath) { loc =>
         spark.sql(s"CREATE TABLE $table ($schemaDdl) USING parquet " +
           s"LOCATION '${loc.toString}'")
         "files"
-      } else {
-        if (fs.exists(loc)) fs.delete(loc, true)
+      } { loc =>
         build.write.option("path", loc.toString)
           .mode("overwrite").saveAsTable(table)
-        writeFingerprintRaw(fs, loc, fp)
         "written"
       }
     }
@@ -438,24 +478,12 @@ object Warehouse {
                                        srcPath: String, schemaDdl: String,
                                        partCol: String): String =
     provision(spark, table) {
-      val (loc, fs) = locFs(spark, table)
-      val fp = sourceFingerprint(spark, srcPath)
-      if (survivingFingerprint(fs, loc, fp)) {
-        spark.sql(
-          s"""CREATE TABLE $table ($schemaDdl)
-             |USING parquet
-             |PARTITIONED BY ($partCol)
-             |LOCATION '${loc.toString}'""".stripMargin)
+      guarded(spark, table, srcPath) { loc =>
+        createPartitioned(spark, table, schemaDdl, partCol, loc)
         spark.sql(s"MSCK REPAIR TABLE $table")
         "files"
-      } else {
-        if (fs.exists(loc)) fs.delete(loc, true)
-        spark.sql(
-          s"""CREATE TABLE $table ($schemaDdl)
-             |USING parquet
-             |PARTITIONED BY ($partCol)
-             |LOCATION '${loc.toString}'""".stripMargin)
-        writeFingerprintRaw(fs, loc, fp)
+      } { loc =>
+        createPartitioned(spark, table, schemaDdl, partCol, loc)
         "created"
       }
     }
@@ -520,24 +548,17 @@ object Warehouse {
                              srcPath: String, partCol: String)
                             (build: => DataFrame): String =
     provision(spark, table) {
-      val (loc, fs) = locFs(spark, table)
-      val fp = sourceFingerprint(spark, srcPath)
-      if (survivingFingerprint(fs, loc, fp)) {
-        spark.sql(
-          s"""CREATE TABLE $table (${build.schema.toDDL})
-             |USING parquet
-             |PARTITIONED BY ($partCol)
-             |LOCATION '${loc.toString}'""".stripMargin)
+      guarded(spark, table, srcPath) { loc =>
+        createPartitioned(spark, table, survivingDdl(spark, loc, build),
+          partCol, loc)
         // rediscover the partition directories a previous JVM wrote
         spark.sql(s"MSCK REPAIR TABLE $table")
         "files"
-      } else {
-        if (fs.exists(loc)) fs.delete(loc, true)
+      } { loc =>
         build.write
           .option("path", loc.toString) // external: DROP TABLE keeps files
           .partitionBy(partCol)
           .mode("overwrite").saveAsTable(table)
-        writeFingerprintRaw(fs, loc, fp)
         "written"
       }
     }

@@ -418,20 +418,13 @@ object AnnTrained {
   }
 
   def ensureEvolvedCellStore(spark: SparkSession, dir: String): String = {
-    val tbl = evolvedStoreTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/embeddings.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, evolvedStoreTable(dir),
+        s"$dir/embeddings.parquet") { loc =>
       graft.io.GenLog.appendBatch(spark, loc, s"cb_i$Iters",
         genStoreRows(spark, dir, Iters), "cell_k")
       graft.io.GenLog.recluster(spark, loc, s"cb_i$ItersEvolved",
         genStoreRows(spark, dir, ItersEvolved), "cell_k")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   /** Probe a generation-pinned store under its own codebook: the

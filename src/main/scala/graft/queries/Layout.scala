@@ -110,16 +110,9 @@ object Layout {
     * can never drift from the oracle it shares with q194.
     */
   private def shipdateWindowAgg(spark: SparkSession, t: String,
-                                st: String): DataFrame = {
-    val (lo, hi) = (lit(ShipLo).cast("timestamp"), lit(ShipHi).cast("timestamp"))
-    ZoneMaps.prunedRead(spark, t, st, Seq(("l_shipdate", s"$ShipLo 00:00:00", s"$ShipHi 00:00:00")))
-      .where(col("l_shipdate").between(lo, hi))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 6).as("revenue"))
-      .orderBy(col("l_returnflag"))
-  }
+                                st: String): DataFrame =
+    windowRevenue(spark, ZoneMaps.prunedRead(spark, t, st,
+      Seq(("l_shipdate", s"$ShipLo 00:00:00", s"$ShipHi 00:00:00"))), ShipLo, ShipHi)
 
   def q194(spark: SparkSession, dir: String): DataFrame = {
     val (t, st) = ensureShipdateZoned(spark, dir)
@@ -526,12 +519,7 @@ object Layout {
   private[graft] def ensureAdaptiveZoned(spark: SparkSession, dir: String): String = {
     import graft.io.{GenLog, GenZoned}
     val tbl = s"graft_li_genzone_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/lineitem.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_shipdate"))
       GenLog.appendBatch(spark, loc, "base",
         adaptiveSlice(spark, dir, "l_orderkey % 8 != 0")
@@ -545,9 +533,7 @@ object Layout {
             "l_shipdate")
           ()
         }
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   private[graft] def micros(day: String): Long =
@@ -569,12 +555,7 @@ object Layout {
   private[graft] def ensurePartialZoned(spark: SparkSession, dir: String): String = {
     import graft.io.{GenLog, GenZoned}
     val tbl = s"graft_li_genzonep_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/lineitem.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_shipdate"))
       GenLog.appendBatch(spark, loc, "base",
         adaptiveSlice(spark, dir, "l_orderkey % 8 != 0")
@@ -588,36 +569,24 @@ object Layout {
             "l_shipdate")
           ()
         }
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
-  def q223(spark: SparkSession, dir: String): DataFrame = {
-    val loc = ensurePartialZoned(spark, dir)
-    val (lo, hi) = (lit(ShipLo).cast("timestamp"), lit(ShipHi).cast("timestamp"))
-    graft.io.GenZoned.prunedRead(spark, loc, "l_shipdate",
-        micros(ShipLo), micros(ShipHi))
-      .where(col("l_shipdate").between(lo, hi))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 6).as("revenue"))
-      .orderBy(col("l_returnflag"))
-  }
+  /** The shared q214/q223 body: pruned read of the 3-month window
+    * over a generation-logged month-zoned layout, exact predicate
+    * re-applied, revenue rollup. ONE definition so the partial
+    * re-layout (q223) can never drift from the oracle it shares with
+    * the full rewrite (q214).
+    */
+  private def genZonedWindowAgg(spark: SparkSession, loc: String): DataFrame =
+    windowRevenue(spark, graft.io.GenZoned.prunedRead(spark, loc, "l_shipdate",
+      micros(ShipLo), micros(ShipHi)), ShipLo, ShipHi)
 
-  def q214(spark: SparkSession, dir: String): DataFrame = {
-    val loc = ensureAdaptiveZoned(spark, dir)
-    val (lo, hi) = (lit(ShipLo).cast("timestamp"), lit(ShipHi).cast("timestamp"))
-    graft.io.GenZoned.prunedRead(spark, loc, "l_shipdate",
-        micros(ShipLo), micros(ShipHi))
-      .where(col("l_shipdate").between(lo, hi))
-      .groupBy(col("l_returnflag"))
-      .agg(count(lit(1)).as("n_items"),
-        dsum(col("l_quantity")).as("sum_qty"),
-        dsum(col("l_extendedprice") * (lit(1) - col("l_discount")), 6).as("revenue"))
-      .orderBy(col("l_returnflag"))
-  }
+  def q223(spark: SparkSession, dir: String): DataFrame =
+    genZonedWindowAgg(spark, ensurePartialZoned(spark, dir))
+
+  def q214(spark: SparkSession, dir: String): DataFrame =
+    genZonedWindowAgg(spark, ensureAdaptiveZoned(spark, dir))
 
   // ---------------------------------------------------------------
   // q228_zoned2d_relayout — q214's maintenance loop in TWO
@@ -646,12 +615,7 @@ object Layout {
   private[graft] def ensureZoned2(spark: SparkSession, dir: String): String = {
     import graft.io.{GenLog, GenZoned2}
     val tbl = s"graft_li_genzone2_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/lineitem.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_partkey", "l_suppkey"))
       val base = zoned2Slice(spark, dir, "l_orderkey % 8 != 0")
       val m = base.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
@@ -670,9 +634,7 @@ object Layout {
             "l_partkey", "l_suppkey")
           ()
         }
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   // ---------------------------------------------------------------
@@ -690,12 +652,7 @@ object Layout {
   private[graft] def ensureZoned2Partial(spark: SparkSession, dir: String): String = {
     import graft.io.{GenLog, GenZoned2}
     val tbl = s"graft_li_genzone2p_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/lineitem.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_partkey", "l_suppkey"))
       val base = zoned2Slice(spark, dir, "l_orderkey % 8 != 0")
       val m = base.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
@@ -714,9 +671,7 @@ object Layout {
             "l_partkey", "l_suppkey")
           ()
         }
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   private def zoned2BoxAgg(spark: SparkSession, loc: String): DataFrame = {
@@ -765,12 +720,7 @@ object Layout {
   private[graft] def ensureBloomLogged(spark: SparkSession, dir: String): String = {
     import graft.io.GenLog
     val tbl = s"graft_li_genbloom_${java.lang.Integer.toHexString(dir.hashCode)}"
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/lineitem.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_shipdate"),
         bloomCol = Some("l_orderkey"))
       GenLog.appendBatch(spark, loc, "base",
@@ -778,9 +728,7 @@ object Layout {
           .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
           .withColumn(graft.io.GenZoned.PartCol, monthKey),
         graft.io.GenZoned.PartCol)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q236(spark: SparkSession, dir: String): DataFrame = {

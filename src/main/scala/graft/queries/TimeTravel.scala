@@ -68,13 +68,7 @@ object TimeTravel {
     * guard makes the per-batch commits idempotent inside one build.
     */
   private[graft] def ensureEventGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = gensTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, gensTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, Some(Cut1), None, Some(Day1)), "day_k", cdf = true)
       GenLog.appendBatch(spark, loc, "g2",
@@ -90,9 +84,7 @@ object TimeTravel {
       GenLog.appendBatch(spark, loc, "g4",
         widenedBatch(spark, dir, Some(Day2)), "day_k",
         evolve = true, cdf = true)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   /** The widened batch: daily counts PLUS distinct users — the
@@ -251,13 +243,7 @@ object TimeTravel {
     s"graft_ev_evolve_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureEvolvedGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = evolveTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, evolveTable(dir), s"$dir/events.parquet") { loc =>
       val daily = batch(spark, dir, None, None, None)
       GenLog.appendBatch(spark, loc, "g1_daily", daily, "day_k")
       // same rows, coarser clustering: week-of-year partition key
@@ -266,9 +252,7 @@ object TimeTravel {
           .withColumn("week_k",
             date_format(date_trunc("week", col("day")), "yyyy-MM-dd")),
         "week_k")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q209(spark: SparkSession, dir: String): DataFrame =
@@ -307,19 +291,11 @@ object TimeTravel {
       col("day") <= lit(DelHi).cast("date")
 
   private[graft] def ensureDeleteGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = delTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, delTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, None, None, None), "day_k")
       GenLog.deleteWhere(spark, loc, "g2_del", delPred, "day_k", cdf = true)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q210(spark: SparkSession, dir: String): DataFrame =
@@ -406,22 +382,14 @@ object TimeTravel {
     s"graft_ev_merge_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureMergeGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = mergeTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, mergeTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, Some(MergeCut), None, None), "day_k")
       GenLog.mergeByKey(spark, loc, "g2_merge",
         batch(spark, dir, None, Some(MergeLo), None)
           .where(col("event_type") === lit(MergeType)),
         Seq("day", "event_type"), "day_k")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q217(spark: SparkSession, dir: String): DataFrame =
@@ -462,22 +430,14 @@ object TimeTravel {
     s"graft_ev_insopt_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureInsertGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = insertTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, insertTable(dir), s"$dir/events.parquet") { loc =>
       InsertSlices.foreach { case (gen, types) =>
         GenLog.appendInsert(spark, loc, gen,
           batch(spark, dir, None, None, None)
             .where(col("event_type").isin(types: _*)), "day_k")
       }
       GenLog.compactPartitionThroughLog(spark, loc, "opt_hot", "day_k", HotDay)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q218(spark: SparkSession, dir: String): DataFrame =
@@ -547,16 +507,9 @@ object TimeTravel {
 
   private[graft] def ensureClonedSnapshot(spark: SparkSession, dir: String): String = {
     val src = ensureEventGenerations(spark, dir)
-    val tbl = cloneTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, cloneTable(dir), src) { loc =>
       GenLog.cloneSnapshot(spark, src, "g2", loc)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q220(spark: SparkSession, dir: String): DataFrame =
@@ -671,20 +624,12 @@ object TimeTravel {
     s"graft_ev_restore_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureRestoredGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = restoreTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, restoreTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, None, None, None), "day_k", cdf = true)
       GenLog.deleteWhere(spark, loc, "g2_del", delPred, "day_k", cdf = true)
       GenLog.restore(spark, loc, "g3_restore", "g1", cdf = true)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q224(spark: SparkSession, dir: String): DataFrame =
@@ -720,20 +665,12 @@ object TimeTravel {
     s"graft_ev_mor_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureMorGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = morTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, morTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, None, None, None), "day_k")
       GenLog.deleteWhereMoR(spark, loc, "g2_dv", delPred, "day_k")
       GenLog.materializeDeletes(spark, loc, "g3_mat", "day_k")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q225(spark: SparkSession, dir: String): DataFrame =
@@ -783,13 +720,7 @@ object TimeTravel {
     s"graft_ev_dvdebt_${java.lang.Integer.toHexString(dir.hashCode)}"
 
   private[graft] def ensureDvDebtGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = dvDebtTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, dvDebtTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, None, None, None), "day_k")
       def wave(gen: String, dayLo: String, dayHi: String): Unit = {
@@ -807,9 +738,7 @@ object TimeTravel {
       wave("w3", "2024-01-09", DelHi) // debt ~0.067: settlement fires
       require(graft.io.GenLog.dvDebt(spark, loc) == 0.0,
         "the third wave must have crossed the bound and settled")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q227(spark: SparkSession, dir: String): DataFrame =
@@ -1053,13 +982,7 @@ object TimeTravel {
 
   private[graft] def ensureMultipartGenerations(spark: SparkSession,
                                                 dir: String): String = {
-    val tbl = multiTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, multiTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         tupleBatch(spark, dir, Some(MergeCut), None, None),
         Seq("day_k", "etype_k"), evolve = false, cdf = false)
@@ -1067,9 +990,7 @@ object TimeTravel {
         tupleBatch(spark, dir, None, Some(MpDay), Some(MpDay))
           .where(col("event_type") === lit(MpType)),
         Seq("day_k", "etype_k"), evolve = false, cdf = false)
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q235(spark: SparkSession, dir: String): DataFrame =
@@ -1105,22 +1026,14 @@ object TimeTravel {
 
   private[graft] def ensureRenamedGenerations(spark: SparkSession,
                                               dir: String): String = {
-    val tbl = renameTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (!graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) {
-      val p = new org.apache.hadoop.fs.Path(loc)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
+    graft.io.Warehouse.ensureDir(spark, renameTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
         batch(spark, dir, Some(MergeCut), None, None), "day_k")
       GenLog.renameColumn(spark, loc, "ren_nev", "n_events", "n_ev")
       GenLog.appendBatch(spark, loc, "g2",
         batch(spark, dir, None, Some(Day2), None)
           .withColumnRenamed("n_events", "n_ev"), "day_k")
-      graft.io.Warehouse.writeFingerprint(spark, tbl, src)
     }
-    loc
   }
 
   def q237(spark: SparkSession, dir: String): DataFrame =

@@ -425,6 +425,28 @@ object EventStreams {
       }
   }
 
+  /** Base directory of every streaming checkpoint here: tmpfs when
+    * available, because offset/commit/state files are fsync'd per
+    * micro-batch per state partition, and that I/O — not plan work —
+    * dominates a short AvailableNow run on local disk. A production
+    * run points this at durable storage instead.
+    */
+  private[graft] def checkpointBase: String =
+    if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
+    else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
+
+  /** Run `body` with a fresh `<tag>-<uuid>` checkpoint directory under
+    * [[checkpointBase]] and delete the directory when `body` ends,
+    * however it ends. Every replay here runs to completion and starts
+    * fresh (durability lives in the sink), so no checkpoint outlives
+    * its run.
+    */
+  private[graft] def withCheckpoint[A](tag: String)(body: String => A): A = {
+    val ckpt = new java.io.File(checkpointBase, s"$tag-${java.util.UUID.randomUUID()}")
+    try body(ckpt.getPath)
+    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(ckpt)
+  }
+
   def runToMemory(df: DataFrame, name: String,
     mode: OutputMode = OutputMode.Complete(),
     stateParts: Option[Int] = None): DataFrame =
@@ -446,19 +468,9 @@ object EventStreams {
     stateParts: Option[Int] = None)
     : (DataFrame, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     val spark = df.sparkSession
-    // Checkpoint on tmpfs when available: offset/commit/state files are
-    // fsync'd per micro-batch per state partition, and that I/O — not
-    // plan work — dominates a short AvailableNow run on local disk. A
-    // production run points this at durable storage instead.
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
-      else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
-    val ckpt = s"$ckptBase/$name-${java.util.UUID.randomUUID()}"
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(new java.io.File(ckpt))))
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     stateParts.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
+    try withCheckpoint(name) { ckpt =>
       val q = df.writeStream
         .option("checkpointLocation", ckpt)
         .format("memory")
@@ -467,7 +479,7 @@ object EventStreams {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      // the replay is done and its checkpoint is never revisited —
+      // the replay is done and its checkpoint is about to go —
       // drop the loaded state-store providers (and their in-memory
       // state maps) instead of letting every completed query leak its
       // state into the session (see StreamingBridge)

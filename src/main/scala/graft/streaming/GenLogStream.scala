@@ -75,39 +75,28 @@ object GenLogStream {
     * per corpus state; the fingerprint (written after the stream
     * completes) is the whole-table commit marker.
     */
-  def ensureStreamedGenerations(spark: SparkSession, dir: String): String = {
-    val tbl = streamGensTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) return loc
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    val staged = ensureStagedWindows(spark, dir)
-    val stagedLoc = graft.io.Warehouse.tableLocation(spark, staged)
-    val srcStream = spark.readStream
-      .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
-        "event_type STRING, value DOUBLE, props STRING, win INT")
-      .option("maxFilesPerTrigger", "1") // one window per batch, mtime order
-      .parquet(stagedLoc)
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
-      else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
-    val ckpt = s"$ckptBase/genlog-stream-${java.util.UUID.randomUUID()}"
-    val lastWin = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = srcStream.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        commitBatch(batch, loc, lastWin)
+  def ensureStreamedGenerations(spark: SparkSession, dir: String): String =
+    graft.io.Warehouse.ensureDir(spark, streamGensTable(dir),
+        s"$dir/events.parquet") { loc =>
+      val staged = ensureStagedWindows(spark, dir)
+      val stagedLoc = graft.io.Warehouse.tableLocation(spark, staged)
+      val srcStream = spark.readStream
+        .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
+          "event_type STRING, value DOUBLE, props STRING, win INT")
+        .option("maxFilesPerTrigger", "1") // one window per batch, mtime order
+        .parquet(stagedLoc)
+      val lastWin = new java.util.concurrent.atomic.AtomicInteger(0)
+      EventStreams.withCheckpoint("genlog-stream") { ckpt =>
+        srcStream.writeStream
+          .foreachBatch { (batch: Dataset[Row], _: Long) =>
+            commitBatch(batch, loc, lastWin)
+          }
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+          .start()
+          .awaitTermination()
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(ckpt))
-    graft.io.Warehouse.writeFingerprint(spark, tbl, src)
-    loc
-  }
+    }
 
   // -----------------------------------------------------------------
   // the INSERT-mode streaming writer (q222): raw rows, not rollups
@@ -128,18 +117,9 @@ object GenLogStream {
     * restatement of an aggregate); this is the BRONZE path, and
     * downstream consumers tail it with [[GenLog.readAppendedSince]].
     */
-  def ensureStreamedInserts(spark: SparkSession, dir: String): String = {
-    val tbl = rawInsertsTable(dir)
-    val loc = graft.io.Warehouse.tableLocation(spark, tbl)
-    val src = s"$dir/events.parquet"
-    if (graft.io.Warehouse.fingerprintMatches(spark, tbl, src)) return loc
-    val p = new org.apache.hadoop.fs.Path(loc)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) fs.delete(p, true)
-    streamInsertsInto(spark, dir, loc)
-    graft.io.Warehouse.writeFingerprint(spark, tbl, src)
-    loc
-  }
+  def ensureStreamedInserts(spark: SparkSession, dir: String): String =
+    graft.io.Warehouse.ensureDir(spark, rawInsertsTable(dir),
+        s"$dir/events.parquet")(streamInsertsInto(spark, dir, _))
 
   /** One full backlog replay through the insert committer, with a
     * FRESH checkpoint — exposed so the spec can replay it twice and
@@ -155,29 +135,25 @@ object GenLogStream {
         "event_type STRING, value DOUBLE, props STRING, win INT")
       .option("maxFilesPerTrigger", "1") // one window per batch, mtime order
       .parquet(stagedLoc)
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
-      else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
-    val ckpt = s"$ckptBase/genlog-ins-${java.util.UUID.randomUUID()}"
-    val q = srcStream.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val ss = batch.sparkSession
-        val wins = batch.agg(min(col("win")), max(col("win"))).collect()
-        if (!(wins.isEmpty || wins(0).isNullAt(0))) {
-          val (wLo, wHi) = (wins(0).getInt(0), wins(0).getInt(1))
-          require(wLo == wHi,
-            s"one window per batch expected (maxFilesPerTrigger=1), got $wLo..$wHi")
-          GenLog.appendInsert(ss, loc, s"w$wLo",
-            batch.drop("win").withColumn("etype_k", col("event_type")),
-            "etype_k")
+    EventStreams.withCheckpoint("genlog-ins") { ckpt =>
+      srcStream.writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          val ss = batch.sparkSession
+          val wins = batch.agg(min(col("win")), max(col("win"))).collect()
+          if (!(wins.isEmpty || wins(0).isNullAt(0))) {
+            val (wLo, wHi) = (wins(0).getInt(0), wins(0).getInt(1))
+            require(wLo == wHi,
+              s"one window per batch expected (maxFilesPerTrigger=1), got $wLo..$wHi")
+            GenLog.appendInsert(ss, loc, s"w$wLo",
+              batch.drop("win").withColumn("etype_k", col("event_type")),
+              "etype_k")
+          }
         }
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(ckpt))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
   }
 
   // -----------------------------------------------------------------

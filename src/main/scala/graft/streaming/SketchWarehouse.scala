@@ -121,28 +121,21 @@ object SketchWarehouse {
       .select(
         expr("unix_micros(ts) DIV 3600000000 * 3600000000").as("win_us"),
         graft.functions.TextKernels.hash60LongCol(col("user_id")).as("h"))
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
-      else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
-    val ckpt = s"$ckptBase/sketch-seam-${java.util.UUID.randomUUID()}"
-    val q = src.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val regs = batch.groupBy(col("win_us"))
-          .agg(HllSketch.hllRegisters(col("h")).as("regs"))
-        mergeUpsert(batch.sparkSession, t, regs)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally
-      // the replay is complete and the checkpoint is never revisited
-      // (each invocation starts fresh; durability lives in the TABLE,
-      // whose merge absorbs replays) — delete it NOW rather than
-      // leaking one RAM-backed directory + one JVM shutdown hook per
-      // invocation across bench/sweep/stress passes
-      org.apache.spark.network.util.JavaUtils.deleteRecursively(
-        new java.io.File(ckpt))
+    // the replay is complete when the scope ends and the checkpoint is
+    // never revisited (each invocation starts fresh; durability lives
+    // in the TABLE, whose merge absorbs replays)
+    EventStreams.withCheckpoint("sketch-seam") { ckpt =>
+      src.writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          val regs = batch.groupBy(col("win_us"))
+            .agg(HllSketch.hllRegisters(col("h")).as("regs"))
+          mergeUpsert(batch.sparkSession, t, regs)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
     // the merges ran under the micro-batch's session clone;
     // upsertPartitions refreshed THAT session's relation cache, not
     // this one's — refresh here or a second pass in the same session

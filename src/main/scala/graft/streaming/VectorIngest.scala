@@ -91,20 +91,16 @@ object VectorIngest {
       .schema("vec_id BIGINT, embedding ARRAY<FLOAT>, wave INT")
       .option("maxFilesPerTrigger", "1") // one wave file per batch — the guard's atomicity unit
       .parquet(waveLoc)
-    val ckptBase =
-      if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
-      else s"${System.getProperty("java.io.tmpdir")}/graft-ckpt"
-    val ckpt = s"$ckptBase/vec-ingest-${java.util.UUID.randomUUID()}"
-    val q = src.writeStream
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        absorbBatch(batch, cents, t)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination()
-    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(ckpt))
+    EventStreams.withCheckpoint("vec-ingest") { ckpt =>
+      src.writeStream
+        .foreachBatch { (batch: Dataset[Row], _: Long) =>
+          absorbBatch(batch, cents, t)
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .start()
+        .awaitTermination()
+    }
     // appends ran under micro-batch session clones; refresh the
     // caller's relation cache (q183's cross-session cache trap)
     spark.catalog.refreshTable(t)

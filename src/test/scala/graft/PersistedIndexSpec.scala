@@ -185,4 +185,29 @@ class PersistedIndexSpec extends SparkTestBase {
       "files-reread codebook must be bit-identical to the trained one")
     info(f"codebook train+persist $buildSec%.2f s vs files reread $rereadSec%.2f s")
   }
+
+  test("files reuse re-registers the pair table without evaluating its build") {
+    // the build (band join over a checkpointed MinHash of the whole
+    // corpus) must not run on the files path — not even to read its
+    // schema, which comes from the surviving files instead
+    val table = s"graft_neardup_pairs_${Integer.toHexString(Sf.hashCode)}"
+    spark.sql(s"DROP TABLE IF EXISTS $table")
+    org.apache.spark.network.util.JavaUtils.deleteRecursively(
+      new java.io.File(graft.io.Warehouse.tableLocation(spark, table)))
+    Dedup.persistedScoredPairs(spark, Sf)
+    assert(graft.io.Warehouse.lastProvision(spark, table).contains("written"))
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.map(f => (f.name, f.dataType)).toSeq
+    val written = shape(spark.table(table))
+    // the next JVM: a fresh session, catalog entry gone, files intact
+    val fresh = spark.newSession()
+    fresh.sql(s"DROP TABLE $table")
+    val reread = Dedup.persistedScoredPairs(fresh, Sf)
+    assert(graft.io.Warehouse.lastProvision(fresh, table).contains("files"),
+      s"expected files-reuse, got ${graft.io.Warehouse.lastProvision(fresh, table)}")
+    assert(!Dedup.lshBaseCached(fresh, Sf),
+      "files reuse must not hash the corpus")
+    assert(shape(reread) == written,
+      "re-registered columns must match the written table's names, types and order")
+  }
 }

@@ -4,17 +4,20 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scans for two single-mechanism rules. Session-scoped caches
+/** Source scans for three single-mechanism rules. Session-scoped caches
   * live in [[CacheRegistry]] only: a hash-code session key or a private
   * `TrieMap` anywhere else in main code brings back an unevicted,
   * double-building cache. Each query is one `Query(name, build,
   * oracleSql)` record: a module keeping name-keyed twin maps again
-  * could pair a name with no oracle.
+  * could pair a name with no oracle. Stream checkpoints come from
+  * `EventStreams.withCheckpoint` only: a hand-placed checkpoint
+  * directory, or one left to a shutdown hook, outlives its run.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
   private val Forbidden = Seq("System.identityHashCode(", "concurrent.TrieMap")
   private val Registry = Paths.get("graft", "CacheRegistry.scala")
+  private val CheckpointHelper = Paths.get("graft", "streaming", "EventStreams.scala")
 
   /** `path:line: text` for every line of the Scala sources under
     * `root` (bar `skip`) that contains one of `needles`. */
@@ -41,5 +44,13 @@ class RegistryLintSpec extends AnyFunSuite {
     val hits = scan(Paths.get("src", "main", "scala", "graft", "queries"), 20,
       Seq("def oracles", "type Q ="))
     assert(hits.isEmpty, s"twin query maps in query modules:\n${hits.mkString("\n")}")
+  }
+
+  test("stream checkpoints are placed and removed by the one scoped helper") {
+    val main = Paths.get("src", "main", "scala")
+    val placed = scan(main, 50, Seq("graft-ckpt"), _.endsWith(CheckpointHelper))
+    assert(placed.isEmpty, s"checkpoint base outside the helper:\n${placed.mkString("\n")}")
+    val hooks = scan(main, 50, Seq("addShutdownHook"))
+    assert(hooks.isEmpty, s"shutdown hooks in main:\n${hooks.mkString("\n")}")
   }
 }

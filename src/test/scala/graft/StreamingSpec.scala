@@ -1058,4 +1058,15 @@ class StreamingSpec extends SparkTestBase {
     assert(stateRows.max <= 5L * 16L && stateRows.max < nEvents / 10,
       s"state must be bin-bounded (got ${stateRows.max} of $nEvents events)")
   }
+
+  test("runToMemory deletes its checkpoint when the replay ends") {
+    val name = s"ckpt_scope_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val out = EventStreams.runToMemory(
+      EventStreams.tumblingHourly(EventStreams.readEvents(spark, Sf)), name,
+      OutputMode.Complete(), Some(4))
+    assert(out.count() > 0)
+    val left = Option(new java.io.File(EventStreams.checkpointBase).listFiles())
+      .toSeq.flatten.map(_.getName).filter(_.startsWith(name))
+    assert(left.isEmpty, s"checkpoint directories outlived the run: $left")
+  }
 }

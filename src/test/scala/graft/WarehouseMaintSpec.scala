@@ -303,4 +303,71 @@ class WarehouseMaintSpec extends SparkTestBase {
     current.listFiles().foreach(_.delete()); current.delete()
     ()
   }
+
+  /** A scratch source directory with one data file, and a counting
+    * `ensureDir` over a spec-local artifact keyed to it. */
+  private object DirFixture {
+    val src: java.nio.file.Path = java.nio.file.Files.createTempDirectory("graft-ensuredir-src")
+    val dirTable = "graft_maint_spec_dir"
+    var builds = 0
+    def loc: java.io.File = new java.io.File(Warehouse.tableLocation(spark, dirTable))
+    def fingerprint: java.io.File = new java.io.File(loc, Warehouse.FingerprintFile)
+    def writeSource(name: String, body: String): Unit = {
+      java.nio.file.Files.writeString(src.resolve(name), body); ()
+    }
+    def ensure(fail: Boolean = false): String =
+      Warehouse.ensureDir(spark, dirTable, src.toString) { l =>
+        builds += 1
+        new java.io.File(l).mkdirs()
+        java.nio.file.Files.writeString(
+          java.nio.file.Paths.get(l, s"gen$builds.txt"), "data")
+        if (fail) throw new IllegalStateException("build failed")
+      }
+    def reset(): Unit = {
+      org.apache.spark.network.util.JavaUtils.deleteRecursively(loc)
+      builds = 0
+    }
+  }
+
+  test("ensureDir builds once, then serves the surviving directory without building") {
+    import DirFixture._
+    reset()
+    writeSource("a.parquet", "v1")
+    assert(ensure() == loc.getPath)
+    assert(builds == 1 && fingerprint.exists())
+    assert(Warehouse.lastProvision(spark, dirTable).contains("written"))
+    assert(ensure() == loc.getPath)
+    assert(builds == 1, "a current fingerprint must not run the build")
+    assert(Warehouse.lastProvision(spark, dirTable).contains("files"))
+  }
+
+  test("ensureDir deletes and rebuilds the directory when the source changes") {
+    import DirFixture._
+    reset()
+    writeSource("a.parquet", "v1")
+    ensure()
+    val planted = new java.io.File(loc, "planted.txt")
+    java.nio.file.Files.writeString(planted.toPath, "stale")
+    writeSource("b.parquet", "v2") // a new source generation
+    ensure()
+    assert(builds == 2, "a changed source must run the build again")
+    assert(!planted.exists(), "the stale directory must be deleted before the build")
+    assert(Warehouse.lastProvision(spark, dirTable).contains("written"))
+  }
+
+  test("ensureDir: a build that throws leaves no fingerprint, and the next call rebuilds") {
+    import DirFixture._
+    reset()
+    writeSource("a.parquet", "v1")
+    intercept[IllegalStateException](ensure(fail = true))
+    assert(builds == 1 && !fingerprint.exists(),
+      "a failed build must not be marked as committed")
+    ensure()
+    assert(builds == 2 && fingerprint.exists())
+    assert(loc.list().filterNot(_.startsWith(".")).toSet ==
+      Set("gen2.txt", Warehouse.FingerprintFile),
+      "the rebuild must start from an empty directory")
+    reset()
+    org.apache.spark.network.util.JavaUtils.deleteRecursively(src.toFile)
+  }
 }
