@@ -41,6 +41,14 @@ object GraftSession {
       // snapshot maintenance is for long-running streams; a short
       // backlog replay (2-3 micro-batches) should never pay for it
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
+      // no process per local file: without libhadoop the stock `file:`
+      // filesystem forks `chmod` for every permission it sets, and the
+      // default FileContext checkpoint manager forks `readlink` on
+      // every rename. Checkpoint renames go through FileSystem.rename
+      // instead; checksums, .crc files and temp-then-rename stay.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
+      .config("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
       .config("spark.ui.enabled", "false")
 
   /** Local session sized from env (driver harness passes SPARK_GRAFT_CPUS). */

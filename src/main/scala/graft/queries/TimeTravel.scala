@@ -858,9 +858,7 @@ object TimeTravel {
     val loc = ensureEventGenerations(spark, dir)
     val g2v = GenLog.versionOfGen(spark, loc, "g2")
       .getOrElse(sys.error("fixture has no g2 commit"))
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-srcck").toString
-    try {
+    graft.streaming.EventStreams.withCheckpoint("genlog-src") { ckpt =>
       graft.streaming.GenLogStream.seedCursor(spark, ckpt, g2v)
       val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       graft.streaming.GenLogStream.readSource(spark, loc, ckpt) {
@@ -874,8 +872,7 @@ object TimeTravel {
           when(col("n_old").isNull, lit("insert")).otherwise(lit("update"))
             .as("change"))
         .orderBy(col("day"), col("event_type"))
-    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(ckpt))
+    }
   }
 
   /** Stream == batch: the drained source over g2..g4 nets to exactly
@@ -899,9 +896,7 @@ object TimeTravel {
   // ---------------------------------------------------------------
   def q233(spark: SparkSession, dir: String): DataFrame = {
     val loc = ensureInsertGenerations(spark, dir)
-    val ckpt = java.nio.file.Files
-      .createTempDirectory("graft-srcck").toString
-    try {
+    graft.streaming.EventStreams.withCheckpoint("genlog-src-adds") { ckpt =>
       val batches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       graft.streaming.GenLogStream.readSource(spark, loc, ckpt,
         graft.streaming.GenLogStream.SourceAdds) { (df, _) => batches += df; () }
@@ -909,8 +904,7 @@ object TimeTravel {
       batches.reduce(_.unionByName(_))
         .select(col("day"), col("event_type"), col("n_events"))
         .orderBy(col("day"), col("event_type"))
-    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(
-      new java.io.File(ckpt))
+    }
   }
 
   /** Slices ∪ = the corpus; the skipped OPTIMIZE must not re-deliver

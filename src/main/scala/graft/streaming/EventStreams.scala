@@ -426,10 +426,13 @@ object EventStreams {
   }
 
   /** Base directory of every streaming checkpoint here: tmpfs when
-    * available, because offset/commit/state files are fsync'd per
-    * micro-batch per state partition, and that I/O — not plan work —
-    * dominates a short AvailableNow run on local disk. A production
-    * run points this at durable storage instead.
+    * available. A short AvailableNow run writes offset, commit and
+    * state files per micro-batch per state partition; their measured
+    * per-file cost was a forked `chmod`/`readlink`, not the write, and
+    * [[graft.GraftSession]] now removes those forks. tmpfs stays: with
+    * the forks gone, probe runs against `java.io.tmpdir` were
+    * inconclusive either way. A production run points this at durable
+    * storage instead.
     */
   private[graft] def checkpointBase: String =
     if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft-ckpt"
@@ -439,12 +442,13 @@ object EventStreams {
     * [[checkpointBase]] and delete the directory when `body` ends,
     * however it ends. Every replay here runs to completion and starts
     * fresh (durability lives in the sink), so no checkpoint outlives
-    * its run.
+    * its run. The delete walks the tree in Java, where Spark's
+    * recursive delete would fork `rm -rf` on Unix.
     */
   private[graft] def withCheckpoint[A](tag: String)(body: String => A): A = {
     val ckpt = new java.io.File(checkpointBase, s"$tag-${java.util.UUID.randomUUID()}")
     try body(ckpt.getPath)
-    finally org.apache.spark.network.util.JavaUtils.deleteRecursively(ckpt)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(ckpt)
   }
 
   def runToMemory(df: DataFrame, name: String,

@@ -4,20 +4,23 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scans for three single-mechanism rules. Session-scoped caches
+/** Source scans for four single-mechanism rules. Session-scoped caches
   * live in [[CacheRegistry]] only: a hash-code session key or a private
   * `TrieMap` anywhere else in main code brings back an unevicted,
   * double-building cache. Each query is one `Query(name, build,
   * oracleSql)` record: a module keeping name-keyed twin maps again
   * could pair a name with no oracle. Stream checkpoints come from
   * `EventStreams.withCheckpoint` only: a hand-placed checkpoint
-  * directory, or one left to a shutdown hook, outlives its run.
+  * directory, or one left to a shutdown hook, outlives its run. Spark's
+  * `JavaUtils.deleteRecursively` forks `rm -rf` on Unix, so engine code
+  * deletes through Java; only the stress main still uses it.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
   private val Forbidden = Seq("System.identityHashCode(", "concurrent.TrieMap")
   private val Registry = Paths.get("graft", "CacheRegistry.scala")
   private val CheckpointHelper = Paths.get("graft", "streaming", "EventStreams.scala")
+  private val StressMain = Paths.get("graft", "ScaleStress.scala")
 
   /** `path:line: text` for every line of the Scala sources under
     * `root` (bar `skip`) that contains one of `needles`. */
@@ -52,5 +55,11 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(placed.isEmpty, s"checkpoint base outside the helper:\n${placed.mkString("\n")}")
     val hooks = scan(main, 50, Seq("addShutdownHook"))
     assert(hooks.isEmpty, s"shutdown hooks in main:\n${hooks.mkString("\n")}")
+  }
+
+  test("no main code but the stress main deletes through a forked rm") {
+    val hits = scan(Paths.get("src", "main", "scala"), 50, Seq("JavaUtils.deleteRecursively"),
+      _.endsWith(StressMain))
+    assert(hits.isEmpty, s"forking deletes in main:\n${hits.mkString("\n")}")
   }
 }
