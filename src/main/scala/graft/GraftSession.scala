@@ -14,6 +14,19 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** The builder of every graft session: [[local]], `JobConfig.session`
+    * and the test base.
+    *
+    * Artifact isolation is off, so every session of the context (each
+    * stream's cloned session, `newSession()`) runs its tasks under the
+    * one default executor classloader. With isolation on, each clone got
+    * a fresh `ExecutorClassLoader`; `CodeGenerator`'s cache is keyed by
+    * (classloader, source), so every stream replay recompiled its
+    * whole-stage classes and ran them interpreted until the JIT caught
+    * up. Graft adds no jar, file or archive to a session, so isolation
+    * bought it nothing. The trade-off: an artifact added to one graft
+    * session would be visible to all of them.
+    */
   def builder(appName: String, cpus: String): SparkSession.Builder =
     SparkSession.builder()
       .appName(appName)
@@ -49,6 +62,8 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl", classOf[graft.io.ForkFreeLocalFs].getName)
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager")
+      // one executor classloader for every session (see the scaladoc)
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.ui.enabled", "false")
 
   /** Local session sized from env (driver harness passes SPARK_GRAFT_CPUS). */
