@@ -6,10 +6,13 @@ import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, Expres
 import org.apache.spark.sql.types.LongType
 import graft.functions.{BinKernels, CountMinSketch, KmvSketch, MinHashMerge, TextKernels}
 
-/** SQL-surface registration for the graft native kernels: a
-  * SparkSessionExtensions hook (the public extension point — no
-  * `spark.udf` involved, the functions stay native Catalyst
-  * expressions inside whole-stage codegen) that makes every kernel
+/** The graft SparkSessionExtensions hook (the public extension point).
+  * It registers the plan extensions: the as-of join strategy, the
+  * range-join rewrite, and [[graft.plans.SingleTaskSort]], which runs a
+  * small global sort as one task both at planning and as an AQE
+  * runtime optimizer rule. It also registers the native kernels' SQL
+  * names (no `spark.udf` involved, the functions stay native Catalyst
+  * expressions inside whole-stage codegen), so every kernel is
   * callable from `spark.sql(...)`:
   *
   *   - `graft_hash60(str)`        — first 60 bits of md5 as BIGINT
@@ -48,6 +51,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rewrite: pure range-containment inner join → binned
     // equi-join (enabled by spark.graft.rangejoin.binWidth > 0)
     ext.injectOptimizerRule(_ => graft.plans.RangeJoinRewrite)
+    // small global sorts run as one task, with no range-partition
+    // sample or shuffle: at AQE re-plans over materialized stages, and
+    // at planning over driver-resident relations (memory sinks)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SingleTaskSort)
+    ext.injectOptimizerRule(_ => graft.plans.SingleTaskSort)
     // builders construct catalyst expressions DIRECTLY (the Column
     // API would leave unresolved column nodes behind the analyzer)
     ext.injectFunction(unary("graft_hash60",

@@ -1,15 +1,20 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Dumps `explain("formatted")` plans. Two modes:
   *   sbt "runMain graft.Plans"
   *     regenerates the committed PLANS.md (headline queries at sf0.01);
   *   sbt "runMain graft.Plans <sfDir> plans/r17 _before q52_ngram_jaccard,q175_hll_growth"
-  *     writes `<outDir>/<query><suffix>.txt` per named query — the
-  *     before/after plan evidence under plans/.
+  *     runs each named query to the noop sink and writes its executed
+  *     plan, whose AQE part is the final adaptive plan
+  *     (`isFinalPlan=true`: runtime re-plans such as a dropped exchange
+  *     show), to `<outDir>/<query><suffix>.txt` — the before/after plan
+  *     evidence under plans/.
   */
 object Plans {
   def main(args: Array[String]): Unit = {
@@ -31,11 +36,28 @@ object Plans {
   private def formatted(df: DataFrame): String =
     df.queryExecution.explainString(FormattedMode)
 
+  /** The query execution of `df` written to the noop sink, once it ran. */
+  private def executedToNoop(spark: SparkSession, df: DataFrame): QueryExecution = {
+    val done = new LinkedBlockingQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        done.put(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      df.write.format("noop").mode("overwrite").save()
+      Option(done.poll(60, TimeUnit.SECONDS))
+        .getOrElse(sys.error("the noop write reported no query execution"))
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   private def dump(spark: SparkSession, sfDir: String, outDir: String,
       suffix: String, names: Seq[String]): Unit = {
     Files.createDirectories(Paths.get(outDir))
     names.foreach { name =>
-      val plan = formatted(SparkEntry.queries(name)(spark, sfDir))
+      val plan = executedToNoop(spark, SparkEntry.queries(name)(spark, sfDir))
+        .explainString(FormattedMode)
       Files.writeString(Paths.get(outDir, s"$name$suffix.txt"), plan)
       println(s"[plans] wrote $outDir/$name$suffix.txt")
     }
@@ -69,7 +91,7 @@ object Plans {
       "q71_dedup_clusters_star" -> "large-star/small-star CC (loop plans not shown: LogicalRDD per round)",
       "q73_histogram_quantiles" -> "histogram sketch aggregate: O(bins) partial+final state, no per-group sort",
       "q75_pq_encode" -> "PQ encode: broadcast sub-codebooks, skinny per-block argmin, pinned-order error fold",
-      "q78_pivot" -> "explicit-values pivot: (group,value) pre-agg + pivotfirst, O(groups x values) exchanges",
+      "q78_pivot" -> "explicit-values pivot: (group,value) pre-agg + pivotfirst, O(groups x values) exchanges; the small ORDER BY sorts in one task after AQE drops its range exchange (SingleTaskSort)",
       "q80_grouping_sets" -> "Expand x 3 sets into ONE shuffle, grouping_id disambiguates levels",
       "q82_range_join_binned" -> "interval side exploded to <=2 bins, equi-join on bin + residual containment",
       "q83_topk_heap" -> "bounded-heap TypedImperativeAggregate: top-k with no Window, no per-group sort",
@@ -81,7 +103,7 @@ object Plans {
       "q92_spatial_join" -> "2-D containment via grid cells: rect side explodes <=2x2 cells, point side never replicated",
       "q93_forecast_seasonal" -> "trend + weekly seasonality: one groupByKey shuffle, closed-form fit in flatMapGroups",
       "q94_job_mortality_topk" -> "cases-time job core: window latest-snapshot, auto-named multi-sum, top-k-then-resort",
-      "q99_spatial_join_auto" -> "multi-dim RangeJoinRewrite: naive 2-D containment planned as grid-cell equi-join",
+      "q99_spatial_join_auto" -> "multi-dim RangeJoinRewrite: naive 2-D containment planned as grid-cell equi-join; the final ORDER BY runs as one task with no range exchange (SingleTaskSort)",
       "q100_decontamination" -> "broadcast n-gram index vs map-side corpus explode: one aggregate, no self-join",
       "q102_sequence_packing" -> "per-shard token cumsum into context windows: one hash exchange + one window",
       "q103_semantic_dedup" -> "k-means cell blocking + within-cell cosine pairs: per-cell bounded quadratic work",
@@ -157,7 +179,7 @@ object Plans {
       "q191_pq_store_incremental" -> "maintained PQ code store: wave encoded under frozen quantizers, only its cell dirs rewritten; probe = q187's pruned payload-free shape",
       "q192_bm25_incremental" -> "maintained tf index: wave postings bucket-appended (doc-disjoint rows, bucket spec re-applied); df/N/avgdl re-derive from the index — q122's scoring verbatim",
       "q193_week_sketch_rollup" -> "week rollup over the MAINTAINED day-partitioned register table: week bounds as literal PartitionFilters, 7 of ~30 day dirs listed, register-max over <=168 stored 256-byte rows",
-      "q194_zonemap_pruned" -> "file-level data skipping: per-file min/max stats table consulted before the scan, only envelope-intersecting files read (~2 of 32), exact predicate re-applied — lake-format skipping on plain parquet",
+      "q194_zonemap_pruned" -> "file-level data skipping: per-file min/max stats table consulted before the scan, only envelope-intersecting files read (~2 of 32) with the layout's schema (no footer-inference job), exact predicate re-applied — lake-format skipping on plain parquet; the ORDER BY sorts in one task with no range exchange (SingleTaskSort)",
       "q195_zonemap_zorder" -> "multi-column skipping over ONE z-ordered layout: 2-D box prunes on both keys' envelopes simultaneously; box bounds derived from the stats table (metadata-only), never the data",
       "q196_lsh_index_incremental" -> "maintained near-dup index: wave hashed alone, stored band index probed for candidates (base never re-hashed), partners re-read ∝ candidates, gen=wave partition overwritten idempotently — q34's answer from a maintained table",
       "q197_stream_vector_ingest" -> "streaming vector ingestion: micro-batches assigned under the FROZEN codebook and appended per-cell (zero rewrite), exactly-once via per-batch pruned data probes; the probe is q182's pruned shape over the streamed store",

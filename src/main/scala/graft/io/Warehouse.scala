@@ -141,13 +141,13 @@ object Warehouse {
   /** DDL column list of the surviving parquet files under `loc`, read
     * from their footers and partition directories, so re-registering
     * never evaluates the by-name `build` (for a trained or hashed
-    * artifact the build IS the expensive part). A layout with no data
-    * files to read falls back to the build's own schema.
+    * artifact the build IS the expensive part) and the table carries
+    * the types its files hold. A layout with no data files to read
+    * falls back to `fallback`.
     */
   private def survivingDdl(spark: SparkSession, loc: org.apache.hadoop.fs.Path,
-                           build: => DataFrame): String =
-    scala.util.Try(spark.read.parquet(loc.toString).schema)
-      .getOrElse(build.schema).toDDL
+                           fallback: => String): String =
+    scala.util.Try(spark.read.parquet(loc.toString).schema.toDDL).getOrElse(fallback)
 
   private def createPartitioned(spark: SparkSession, table: String,
       schemaDdl: String, partCol: String, loc: org.apache.hadoop.fs.Path): Unit = {
@@ -174,7 +174,7 @@ object Warehouse {
         // encoded in the file names, so bucketed-join/pruning
         // properties are fully recovered from disk + catalog metadata)
         spark.sql(
-          s"""CREATE TABLE $table (${survivingDdl(spark, loc, build)})
+          s"""CREATE TABLE $table (${survivingDdl(spark, loc, build.schema.toDDL)})
              |USING parquet
              |CLUSTERED BY ($bucketCol) SORTED BY ($bucketCol) INTO $numBuckets BUCKETS
              |LOCATION '${loc.toString}'""".stripMargin)
@@ -192,18 +192,21 @@ object Warehouse {
     * parquet artifact with the same fingerprinted cross-session
     * economics as [[ensureBucketedTable]] — the shape for SMALL
     * derived artifacts (a trained codebook, a merge table, calibrated
-    * thresholds) whose BUILD is the expensive part. `schemaDdl` is
-    * passed explicitly so the files-reuse path can re-register the
-    * table without evaluating `build` at all (a by-name
-    * `build.schema` would force the build — and for a trained
-    * artifact the build IS the training).
+    * thresholds) whose BUILD is the expensive part. The files-reuse
+    * path registers the schema the surviving files carry, like
+    * [[ensureBucketedTable]], so the table reads the same rows in the
+    * JVM that wrote it and in one that re-registers it. `schemaDdl`,
+    * the schema `build` writes, is the fallback for a location with no
+    * data files; it is passed explicitly so that path never evaluates
+    * `build` (a by-name `build.schema` would force the build — and for
+    * a trained artifact the build IS the training).
     */
   def ensureTable(spark: SparkSession, table: String, srcPath: String,
                   schemaDdl: String)(build: => DataFrame): String =
     provision(spark, table) {
       guarded(spark, table, srcPath) { loc =>
-        spark.sql(s"CREATE TABLE $table ($schemaDdl) USING parquet " +
-          s"LOCATION '${loc.toString}'")
+        spark.sql(s"CREATE TABLE $table (${survivingDdl(spark, loc, schemaDdl)}) " +
+          s"USING parquet LOCATION '${loc.toString}'")
         "files"
       } { loc =>
         build.write.option("path", loc.toString)
@@ -549,7 +552,7 @@ object Warehouse {
                             (build: => DataFrame): String =
     provision(spark, table) {
       guarded(spark, table, srcPath) { loc =>
-        createPartitioned(spark, table, survivingDdl(spark, loc, build),
+        createPartitioned(spark, table, survivingDdl(spark, loc, build.schema.toDDL),
           partCol, loc)
         // rediscover the partition directories a previous JVM wrote
         spark.sql(s"MSCK REPAIR TABLE $table")

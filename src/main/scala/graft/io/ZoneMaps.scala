@@ -266,7 +266,10 @@ object ZoneMaps {
   /** Files surviving BOTH the range envelopes and the Bloom
     * membership of at least one probe-key hash — compound skipping in
     * one stats pass. The SINGLE reader implementation: the range-only
-    * and bloom-only readers are its degenerate forms.
+    * and bloom-only readers are its degenerate forms. The surviving
+    * files are read with the layout table's schema (the one its files
+    * carry, see `Warehouse.ensureTable`), so building the frame runs no
+    * footer-inference job.
     */
   def compoundPrunedRead(spark: SparkSession, layoutTable: String,
                          statsTable: String, ranges: Seq[(String, Any, Any)],
@@ -276,8 +279,9 @@ object ZoneMaps {
       .reduceOption(_ || _).getOrElse(lit(true))
     val files = spark.table(statsTable).where(rangePred(ranges) && bloomPred)
       .select(col("file")).collect().map(_.getString(0)).toSeq
-    if (files.isEmpty) spark.table(layoutTable).where(lit(false))
-    else spark.read.parquet(files: _*)
+    val layout = spark.table(layoutTable)
+    if (files.isEmpty) layout.where(lit(false))
+    else spark.read.schema(layout.schema).parquet(files: _*)
   }
 
   /** Read only the files whose Bloom may contain the key whose hash

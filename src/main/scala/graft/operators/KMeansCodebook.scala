@@ -119,7 +119,7 @@ object KMeansCodebook {
     val table = tableName(dir, k, iters)
     graft.io.Warehouse.ensureTable(spark, table,
       s"$dir/embeddings.parquet",
-      "cid INT NOT NULL, centroid ARRAY<DOUBLE> NOT NULL") {
+      "cid INT, centroid ARRAY<DOUBLE>") {
       trained(spark, dir, k, iters).zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cid", "centroid")

@@ -92,7 +92,7 @@ object Layout {
                                          dir: String): (String, String) = {
     val t = s"graft_li_zone_${java.lang.Integer.toHexString(dir.hashCode)}"
     graft.io.Warehouse.ensureTable(spark, t, s"$dir/lineitem.parquet",
-      "l_shipdate TIMESTAMP, l_returnflag STRING, l_quantity DOUBLE, " +
+      "l_shipdate TIMESTAMP_NTZ, l_returnflag STRING, l_quantity DOUBLE, " +
         "l_extendedprice DOUBLE, l_discount DOUBLE") {
       Tables.lineitem(spark, dir)
         .select(col("l_shipdate"), col("l_returnflag"), col("l_quantity"),
@@ -233,7 +233,7 @@ object Layout {
         .repartitionByRange(files, col("l_shipdate"))
         .sortWithinPartitions(col("l_shipdate"))
     graft.io.Warehouse.ensureTable(spark, t, s"$dir/lineitem.parquet",
-      "l_orderkey BIGINT, l_shipdate TIMESTAMP, l_returnflag STRING, " +
+      "l_orderkey BIGINT, l_shipdate TIMESTAMP_NTZ, l_returnflag STRING, " +
         "l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE") {
       slice("l_orderkey % 8 != 0", ZoneFiles)
     }
@@ -284,7 +284,7 @@ object Layout {
                                       dir: String): (String, String) = {
     val t = s"graft_li_bloom_${java.lang.Integer.toHexString(dir.hashCode)}"
     graft.io.Warehouse.ensureTable(spark, t, s"$dir/lineitem.parquet",
-      "l_orderkey BIGINT, l_shipdate TIMESTAMP, l_quantity DOUBLE") {
+      "l_orderkey BIGINT, l_shipdate TIMESTAMP_NTZ, l_quantity DOUBLE") {
       val li = Tables.lineitem(spark, dir)
         .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
       // one count at build time only (ensureTable never evaluates the

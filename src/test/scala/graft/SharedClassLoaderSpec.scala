@@ -1,5 +1,6 @@
 package graft
 
+import graft.jobs.CasesTimeAnalysis
 import graft.queries.StreamingQueries
 import graft.streaming.EventStreams
 import org.apache.spark.metrics.source.CodegenMetrics
@@ -7,12 +8,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.udf
 import org.apache.spark.sql.streaming.OutputMode
 
-/** A stream replay reuses the generated code of the last one. Every
+/** A repeated run reuses the generated code of the last one. Every
   * stream runs on a clone of the session; if a clone's tasks ran under
   * a classloader of their own, `CodeGenerator`'s cache (keyed by
   * classloader and source) would miss and each replay would compile
   * its whole-stage classes again. So every session of the context must
-  * run its tasks under one classloader.
+  * run its tasks under one classloader, and the cache must hold a
+  * whole job's classes.
   */
 class SharedClassLoaderSpec extends SparkTestBase {
 
@@ -36,11 +38,13 @@ class SharedClassLoaderSpec extends SparkTestBase {
     out.distinct().collect().map(_.getString(0)).toSet
   }
 
-  private def compiled(df: => DataFrame): Long = {
+  private def compiledBy(body: => Unit): Long = {
     val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    assert(df.collect().nonEmpty)
+    body
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
   }
+
+  private def compiled(df: => DataFrame): Long = compiledBy(assert(df.collect().nonEmpty))
 
   test("a second identical q42 replay compiles no generated class") {
     compiled(StreamingQueries.q42(spark, Sf))
@@ -57,5 +61,16 @@ class SharedClassLoaderSpec extends SparkTestBase {
     assert(foreign.isEmpty,
       s"suite batch tasks ran under ${batch.head}; " +
         foreign.map { case (what, ls) => s"$what under ${ls.mkString(", ")}" }.mkString("; "))
+  }
+
+  test("a second CasesTimeAnalysis.run in one session compiles at most a handful of classes") {
+    val fixture = "src/test/resources/fixtures/cases_time.csv"
+    val out = java.nio.file.Files.createTempDirectory("codegen-cache").toString
+    try {
+      compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/first"))
+      val again = compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/second"))
+      assert(again <= 5, s"the second cases_time run compiled $again classes")
+      info(s"the second run compiled $again classes")
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
   }
 }

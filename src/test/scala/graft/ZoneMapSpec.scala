@@ -46,6 +46,21 @@ class ZoneMapSpec extends SparkTestBase {
     assert(pruned.count() == 0)
   }
 
+  test("a re-registered layout carries its files' schema; the pruned read infers none") {
+    val (t, _) = Layout.ensureShipdateZoned(spark, Sf)
+    val rows = Layout.q194(spark, Sf).collect().toSet
+    spark.sql(s"DROP TABLE $t") // external: the files survive
+    val (_, st) = Layout.ensureShipdateZoned(spark, Sf)
+    assert(graft.io.Warehouse.lastProvision(spark, t).contains("files"))
+    val files = spark.read.parquet(graft.io.Warehouse.tableLocation(spark, t)).schema
+    assert(spark.table(t).schema == files, spark.table(t).schema.toDDL)
+    val (pruned, jobs) = JobCount(spark)(ZoneMaps.prunedRead(spark, t, st,
+      Seq(("l_shipdate", s"${Layout.ShipLo} 00:00:00", s"${Layout.ShipHi} 00:00:00"))))
+    assert(jobs == 1, s"$jobs jobs: the stats collect and nothing else")
+    assert(pruned.schema == files)
+    assert(Layout.q194(spark, Sf).collect().toSet == rows)
+  }
+
   test("q195 z-order box prunes on BOTH keys; single-key envelopes could not") {
     val (t, st) = Layout.ensureZorderZoned(spark, Sf)
     val stats = spark.table(st).collect()
