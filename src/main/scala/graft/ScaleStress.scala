@@ -809,6 +809,7 @@ object ScaleStress {
     def stressStream(name: String, df: org.apache.spark.sql.DataFrame,
       mode: OutputMode): Unit = {
       val t0 = System.nanoTime()
+      // pinned: the audit loads 8 state stores whatever the fixture's split count
       val (out, prog) = EventStreams.runToMemoryTracked(df, name, mode, Some(8))
       val rows = out.count()
       val peak = prog.iterator

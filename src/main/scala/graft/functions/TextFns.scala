@@ -206,9 +206,17 @@ object TextFns {
   /** D9 clean-text chain (research_challenge_analysis.py:117-123):
     * strip non-letters, lowercase, collapse whitespace — pure
     * expressions, no UDF.
+    *
+    * After the strip only `[a-zA-Z ]` is left, so lowercasing is an
+    * ASCII `translate`, which gives what `lower` gives there. `lower`
+    * would go through Spark's ICU case mapping, whose first call in a
+    * JVM runs ICU's collation initializer (about a second on one task).
     */
   def cleanText(c: Column): Column =
-    trim(regexp_replace(lower(regexp_replace(c, "[^a-zA-Z]", " ")), " +", " "))
+    trim(regexp_replace(
+      translate(regexp_replace(c, "[^a-zA-Z]", " "),
+        "ABCDEFGHIJKLMNOPQRSTUVWXYZ", "abcdefghijklmnopqrstuvwxyz"),
+      " +", " "))
 
   /** Broadcast-lexicon polarity (D10 reimplementation,
     * research_challenge_analysis.py:126-131): summed token-match

@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions.col
   * data (file name/length/mtime here; etag/length on an object store,
   * same shape): a corpus regeneration changes the fingerprint and
   * forces the rebuild, so a stale artifact can never serve a new
-  * corpus generation.
+  * corpus generation. The artifact's own location is fingerprinted
+  * too, so a warehouse copied to another root rebuilds there.
   */
 object Warehouse {
 
@@ -98,13 +99,25 @@ object Warehouse {
   private[graft] def writeFingerprint(spark: SparkSession, table: String,
       srcPath: String): Unit = {
     val (loc, fs) = locFs(spark, table)
-    writeFingerprintRaw(fs, loc, sourceFingerprint(spark, srcPath))
+    writeFingerprintRaw(fs, loc, artifactFingerprint(spark, fs, loc, srcPath))
   }
+
+  /** The fingerprint stored under an artifact's location `loc`: that
+    * resolved location, then the source state. GenLog commits and the
+    * zone/bloom stats tables hold absolute file paths, so a warehouse
+    * copied to another root must fail its guard and rebuild there; with
+    * the source state alone it would serve the old tree's files.
+    */
+  private def artifactFingerprint(spark: SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, loc: org.apache.hadoop.fs.Path,
+      srcPath: String): String =
+    s"${fs.makeQualified(loc)}\n${sourceFingerprint(spark, srcPath)}"
 
   /** The one stale-check / delete / rebuild / mark step behind every
     * persisted artifact. When the fingerprint stored under `table`'s
-    * location matches the CURRENT state of `srcPath`, `reuse` serves
-    * the surviving files. Otherwise the directory is deleted, `build`
+    * location matches that location and the CURRENT state of
+    * `srcPath` ([[artifactFingerprint]]), `reuse` serves the
+    * surviving files. Otherwise the directory is deleted, `build`
     * runs, and only then is the fingerprint written: it doubles as the
     * COMMIT MARKER, so a build that throws leaves none and the next
     * call rebuilds from empty. Returns the mode `reuse` or `build`
@@ -114,7 +127,7 @@ object Warehouse {
       (reuse: org.apache.hadoop.fs.Path => String)
       (build: org.apache.hadoop.fs.Path => String): String = {
     val (loc, fs) = locFs(spark, table)
-    val fp = sourceFingerprint(spark, srcPath)
+    val fp = artifactFingerprint(spark, fs, loc, srcPath)
     if (survivingFingerprint(fs, loc, fp)) reuse(loc)
     else {
       if (fs.exists(loc)) fs.delete(loc, true)

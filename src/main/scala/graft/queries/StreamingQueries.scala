@@ -10,19 +10,13 @@ import graft.streaming.EventStreams
   * inventory: each runs its stream over the full backlog with
   * Trigger.AvailableNow into a memory sink and returns the final
   * table. Results are deterministic and equal to their batch twins,
-  * so they share the batch oracles (q40/q39 SQL).
+  * so they share the batch oracles (q40/q39 SQL). No replay here pins
+  * its state-partition count: `EventStreams.runToMemoryTracked` sizes
+  * it to the backlog, one state store for the one-file events replay.
   */
 object StreamingQueries {
 
   private val runId = new AtomicLong(0)
-
-  /** State partitions for the backlog-replay twins: each state store
-    * pays a fixed per-micro-batch snapshot/commit cost, so the count
-    * tracks throughput, not the session's batch-shuffle setting — 8
-    * covers a single-file backlog; a production continuous run sizes
-    * it to the cluster (see EventStreams.runToMemoryTracked).
-    */
-  private val ReplayStateParts = Some(8)
 
   // q42_stream_tumbling — watermark + tumbling window over the
   // events backlog; equals EventsOps.q40.
@@ -30,7 +24,7 @@ object StreamingQueries {
     val name = s"stream_tumbling_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.tumblingHourly(EventStreams.readEvents(spark, dir)),
-      name, OutputMode.Complete(), ReplayStateParts)
+      name, OutputMode.Complete())
       .orderBy(col("hour_start"), col("event_type"))
   }
 
@@ -40,7 +34,7 @@ object StreamingQueries {
     val name = s"stream_sessions_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.sessionize(EventStreams.readEvents(spark, dir)).toDF(),
-      name, OutputMode.Append(), ReplayStateParts)
+      name, OutputMode.Append())
       .orderBy(col("user_id"), col("session_idx"))
   }
 
@@ -54,7 +48,7 @@ object StreamingQueries {
     EventStreams.runToMemory(
       EventStreams.dedupFirstInHour(
         EventStreams.readEvents(spark, dir).filter(col("user_id") <= 300)),
-      name, OutputMode.Append(), ReplayStateParts)
+      name, OutputMode.Append())
       .orderBy(col("user_id"), col("event_type"), col("hour_start"))
   }
 
@@ -67,13 +61,14 @@ object StreamingQueries {
   // q63_stream_interval_join — stream-stream join, both sides
   // watermarked, event-time-bounded condition; equals the batch join.
   // A stream-stream join keeps FOUR state stores per partition (two
-  // maps per side), so its per-partition commit overhead is 4x a
-  // dedup/agg's — the replay uses fewer, bigger state partitions.
+  // maps per side), so each partition costs 4x a dedup/agg's commits;
+  // both sides read the one events file, so the replay sizes its state
+  // to that file's single split (EventStreams.backlogStateParts).
   def q63(spark: SparkSession, dir: String): DataFrame = {
     val name = s"stream_ssjoin_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.purchaseClickJoin(spark, dir),
-      name, OutputMode.Append(), Some(2))
+      name, OutputMode.Append())
       .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
   }
 
@@ -95,7 +90,7 @@ object StreamingQueries {
     val name = s"stream_enrich_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.enrichBySegment(spark, dir),
-      name, OutputMode.Complete(), ReplayStateParts)
+      name, OutputMode.Complete())
       .orderBy(col("hour_start"), col("c_mktsegment"))
   }
 
@@ -114,7 +109,7 @@ object StreamingQueries {
     val name = s"stream_kmv_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.hourlyDistinctUsers(EventStreams.readEvents(spark, dir)),
-      name, OutputMode.Complete(), ReplayStateParts)
+      name, OutputMode.Complete())
       .orderBy(col("hour_start"))
   }
 
@@ -136,7 +131,7 @@ object StreamingQueries {
     val name = s"stream_ssouter_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.purchaseClickLeftJoin(spark, dir),
-      name, OutputMode.Append(), Some(2))
+      name, OutputMode.Append())
       .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
   }
 
@@ -177,7 +172,7 @@ object StreamingQueries {
     val agg = stream.join(CurationOps.persistedHistoryIndex(spark, dir), "h")
       .groupBy(col("doc_id"), col("n_tok"))
       .agg(collect_list(col("pos")).as("ps"))
-    EventStreams.runToMemory(agg, name, OutputMode.Complete(), ReplayStateParts)
+    EventStreams.runToMemory(agg, name, OutputMode.Complete())
       .select(col("doc_id"), col("n_tok"),
         size(col("ps")).cast("long").as("n_hit_windows"),
         graft.functions.TextKernels.coverSizeCol(col("ps"), k)
@@ -220,7 +215,7 @@ object StreamingQueries {
     val name = s"stream_attr_${runId.incrementAndGet()}"
     EventStreams.runToMemory(
       EventStreams.attributeLastTouch(EventStreams.readEvents(spark, dir)).toDF(),
-      name, OutputMode.Append(), ReplayStateParts)
+      name, OutputMode.Append())
       .orderBy(col("user_id"), col("purchase_id"))
   }
 
@@ -256,7 +251,7 @@ object StreamingQueries {
     val name = s"stream_anomaly_${runId.incrementAndGet()}"
     val hourly = EventStreams.runToMemory(
       EventStreams.tumblingHourly(EventStreams.readEvents(spark, dir)),
-      name, OutputMode.Complete(), ReplayStateParts)
+      name, OutputMode.Complete())
       .select(col("hour_start"), col("event_type"), col("n").as("c"))
     val stats = EventsOps.hourlyStats(spark, dir)
     hourly.join(broadcast(stats), "event_type")
@@ -283,7 +278,7 @@ object StreamingQueries {
       EventStreams.runToMemory(
         graft.streaming.StateV2.sessionize(
           EventStreams.readEvents(spark, dir)).toDF(),
-        name, OutputMode.Append(), ReplayStateParts)
+        name, OutputMode.Append())
         .orderBy(col("user_id"), col("session_idx"))
     } finally prev match {
       case Some(p) => spark.conf.set(key, p)
@@ -307,7 +302,7 @@ object StreamingQueries {
       EventStreams.runToMemory(
         graft.streaming.StateV2.multiTouch(
           EventStreams.readEvents(spark, dir)).toDF(),
-        name, OutputMode.Append(), ReplayStateParts)
+        name, OutputMode.Append())
         .orderBy(col("user_id"), col("purchase_id"), col("channel"))
     } finally prev match {
       case Some(p) => spark.conf.set(key, p)
@@ -331,7 +326,7 @@ object StreamingQueries {
       EventStreams.runToMemory(
         graft.streaming.StateV2.lastTouch(
           EventStreams.readEvents(spark, dir)).toDF(),
-        name, OutputMode.Append(), ReplayStateParts)
+        name, OutputMode.Append())
         .orderBy(col("user_id"), col("purchase_id"))
     } finally prev match {
       case Some(p) => spark.conf.set(key, p)
@@ -397,7 +392,7 @@ object StreamingQueries {
       val cands = EventStreams.runToMemory(
         graft.streaming.StateV2.trendingUsers(
           EventStreams.readEvents(spark, dir)).toDF(),
-        name, OutputMode.Append(), ReplayStateParts)
+        name, OutputMode.Append())
       val ev = graft.sources.Tables.events(spark, dir)
         .select(expr("unix_micros(ts) DIV 3600000000 * 3600000000").as("win_us"),
           col("user_id"))
@@ -485,7 +480,7 @@ object StreamingQueries {
     import org.apache.spark.sql.expressions.Window
     val name = s"stream_drift_${runId.incrementAndGet()}"
     val counts = EventStreams.runToMemory(
-      driftBinned(spark, dir), name, OutputMode.Complete(), ReplayStateParts)
+      driftBinned(spark, dir), name, OutputMode.Complete())
     val wTyp = Window.partitionBy(col("event_type"))
     counts
       .withColumn("n_ref", sum(col("ref_cnt")).over(wTyp))
@@ -580,7 +575,7 @@ object StreamingQueries {
       val emitted = EventStreams.runToMemory(
         graft.streaming.StateV2.windowDistinct(
           EventStreams.readEvents(spark, dir)).toDF(),
-        name, OutputMode.Append(), ReplayStateParts)
+        name, OutputMode.Append())
       // The boundedBacklog processor emits a CUMULATIVE summary per
       // micro-batch that touched the window; registers only grow, so
       // S (and the zero-register count) is monotone non-increasing

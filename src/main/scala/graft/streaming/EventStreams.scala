@@ -1,6 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.PartitionedFileUtil
+import org.apache.spark.sql.execution.datasources.{DataSource, FileFormat, FilePartition, HadoopFsRelation}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 import org.apache.spark.sql.types._
@@ -460,12 +463,11 @@ object EventStreams {
     * the spec uses StateOperatorProgress to pin state-size bounds.
     *
     * `stateParts` pins the number of state-store partitions for THIS
-    * query (it is frozen into the checkpoint at first start). Sizing
-    * rule: one state store per partition pays fixed snapshot/commit
-    * cost per micro-batch, so the count should track key cardinality ×
-    * cluster size — hundreds on a real cluster, but single digits for
-    * a small backlog replay where per-store overhead would dominate.
-    * None inherits the session's spark.sql.shuffle.partitions.
+    * query (it is frozen into the checkpoint at first start). None
+    * sizes them to the backlog with [[backlogStateParts]]: each state
+    * store pays a fixed provider load, delta write and rename, and
+    * coordinator round-trips per micro-batch, so a replay runs no more
+    * stores than its source scan has tasks.
     */
   def runToMemoryTracked(df: DataFrame, name: String,
     mode: OutputMode = OutputMode.Complete(),
@@ -473,7 +475,8 @@ object EventStreams {
     : (DataFrame, Array[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
     val spark = df.sparkSession
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    stateParts.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
+    spark.conf.set("spark.sql.shuffle.partitions",
+      stateParts.getOrElse(backlogStateParts(df)))
     try withCheckpoint(name) { ckpt =>
       val q = df.writeStream
         .option("checkpointLocation", ckpt)
@@ -492,5 +495,49 @@ object EventStreams {
     } finally {
       spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
+  }
+
+  /** State partitions for a replay of `df`:
+    * `min(spark.sql.shuffle.partitions, max over its streaming file
+    * sources of the input splits Spark's file scan gives that source's
+    * backlog)`. A replay whose sources are all one small file runs one
+    * state store. The maximum, not the sum, is taken, so a self-join of
+    * one file stays at one. Results do not depend on the count: each
+    * key lands in exactly one partition either way. A replay with a
+    * non-file streaming source (its backlog size unknown) keeps the
+    * session's setting.
+    */
+  private[graft] def backlogStateParts(df: DataFrame): Int = {
+    val shuffleParts = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
+    val splits = df.queryExecution.analyzed.collectLeaves().filter(_.isStreaming).map {
+      case StreamingRelation(ds, _, _)
+          if classOf[FileFormat].isAssignableFrom(ds.providingClass) =>
+        Some(backlogSplits(ds))
+      case _ => None
+    }
+    if (splits.isEmpty || splits.contains(None)) shuffleParts
+    else math.min(shuffleParts, math.max(1, splits.flatten.max))
+  }
+
+  /** Input splits Spark's batch file scan gives the streaming file
+    * source `ds`'s backlog: its files as the same format, paths, options
+    * and schema resolve them, cut at `FilePartition.maxSplitBytes` and
+    * packed by `FilePartition.getFilePartitions`, as a non-bucketed
+    * `FileSourceScanExec` does. Nothing is planned or run: listing a
+    * directory of a few files starts no job, and a given schema reads
+    * no footer.
+    */
+  private def backlogSplits(ds: DataSource): Int = {
+    val spark = ds.sparkSession
+    val rel = ds.resolveRelation().asInstanceOf[HadoopFsRelation]
+    val dirs = rel.location.listFiles(Nil, Nil)
+    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
+    val splits = for {
+      dir <- dirs
+      file <- dir.files
+      split <- PartitionedFileUtil.splitFiles(file, file.getPath,
+        rel.fileFormat.isSplitable(spark, rel.options, file.getPath), maxSplit, dir.values)
+    } yield split
+    FilePartition.getFilePartitions(spark, splits.sortBy(-_.length), maxSplit).size
   }
 }

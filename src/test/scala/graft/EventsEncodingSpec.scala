@@ -80,6 +80,7 @@ class EventsEncodingSpec extends SparkTestBase {
       // regression check (Complete mode: emission is
       // watermark-independent, the q42 replay contract)
       val counted = graft.streaming.EventStreams.tumblingHourly(stream)
+      // pinned at 2: each encoding's rows cross a shuffle into two state stores
       val out = graft.streaming.EventStreams.runToMemory(
         counted, s"enc_${mode.replace('-', '_')}",
         org.apache.spark.sql.streaming.OutputMode.Complete(), stateParts = Some(2))

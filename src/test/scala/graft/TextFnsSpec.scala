@@ -87,4 +87,17 @@ class TextFnsSpec extends SparkTestBase {
       }
     }
   }
+
+  test("cleanText's ASCII lowercasing equals the lower form on Unicode input") {
+    val old = (c: org.apache.spark.sql.Column) =>
+      trim(regexp_replace(lower(regexp_replace(c, "[^a-zA-Z]", " ")), " +", " "))
+    val in = Seq(
+      "\u0130stanbul STRASSE Stra\u00dfe 300\u212a Caf\u00e9 NA\u00cfVE \u00c5ngstr\u00f6m",
+      "  COVID-19 mRNA: \u0130\u0131 \u00df\u1e9e \u212aelvin \u00e9\u00c9 ",
+      "ALL CAPS", "", null).toDF("t")
+    val got = in.select(cleanText(col("t")).as("a"), old(col("t")).as("b")).collect()
+    assert(got.forall(r => r.get(0) == r.get(1)),
+      got.map(r => s"${r.get(0)} | ${r.get(1)}").mkString("\n"))
+    assert(got.head.getString(0) == "stanbul strasse stra e caf na ve ngstr m")
+  }
 }
