@@ -172,10 +172,10 @@ object Bench {
       // (q228's full-rewrite log vs q229's partial-rewrite log) are
       // one step EACH and the pool overlaps their builds
       "zoned2_full" -> (() => {
-        queries.Layout.ensureZoned2(spark, sfDir); ()
+        queries.Layout.ensureMaintained(spark, sfDir, queries.Layout.Zoned2); ()
       }),
       "zoned2_partial" -> (() => {
-        queries.Layout.ensureZoned2Partial(spark, sfDir); ()
+        queries.Layout.ensureMaintained(spark, sfDir, queries.Layout.Zoned2Partial); ()
       }),
       // the round-16 log fixtures: the (day,type)-tuple table, the
       // commit-Bloom lineitem layout, and the renamed-column table —

@@ -1195,14 +1195,9 @@ object GenLog {
     * written files, cost ∝ restated data.
     */
   private[graft] def stageAppend(spark: SparkSession, loc: String, gen: String,
-                                 df: DataFrame, partCol: String,
-                                 evolve: Boolean = false,
-                                 cdf: Boolean = false): Staged =
-    stageAppend(spark, loc, gen, df, Seq(partCol), evolve, cdf)
-
-  private[graft] def stageAppend(spark: SparkSession, loc: String, gen: String,
                                  df: DataFrame, partCols: Seq[String],
-                                 evolve: Boolean, cdf: Boolean): Staged = {
+                                 evolve: Boolean = false,
+                                 cdf: Boolean = false): Staged = {
     validateGen(gen)
     val (root, _) = fsOf(spark, loc)
     val (snapVer, prev) = latestFull(spark, loc)
@@ -1288,22 +1283,17 @@ object GenLog {
     * (`evolve` gates widening); `cdf = true` persists the commit's
     * change rows for [[readChangeFeed]]. Concurrent-writer semantics
     * are the object scaladoc's.
-    */
-  def appendBatch(spark: SparkSession, loc: String, gen: String,
-                  df: DataFrame, partCol: String,
-                  evolve: Boolean = false, cdf: Boolean = false): Unit =
-    appendBatch(spark, loc, gen, df, Seq(partCol), evolve, cdf)
-
-  /** [[appendBatch]] under a MULTI-COLUMN partition key: the batch
-    * restates every `(c1, c2, …)` TUPLE it contains — partition
-    * directories nest (`c1=…/c2=…/`), conflict tokens are the full
-    * tuple paths, and a one-tuple restatement leaves every other
-    * tuple's files untouched (the real 100 TB shape: tables partition
-    * by (date, region), not one column).
+    *
+    * Under a MULTI-COLUMN partition key the batch restates every
+    * `(c1, c2, …)` TUPLE it contains — partition directories nest
+    * (`c1=…/c2=…/`), conflict tokens are the full tuple paths, and a
+    * one-tuple restatement leaves every other tuple's files untouched
+    * (the real 100 TB shape: tables partition by (date, region), not
+    * one column).
     */
   def appendBatch(spark: SparkSession, loc: String, gen: String,
                   df: DataFrame, partCols: Seq[String],
-                  evolve: Boolean, cdf: Boolean): Unit = {
+                  evolve: Boolean = false, cdf: Boolean = false): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     commitStaged(spark, loc,
@@ -1322,7 +1312,7 @@ object GenLog {
     * sums coalesce to zero) and commits an empty delta.
     */
   def appendBatchChecked(spark: SparkSession, loc: String, gen: String,
-                         df: DataFrame, partCol: String,
+                         df: DataFrame, partCols: Seq[String],
                          checks: Seq[(String, Column)],
                          evolve: Boolean = false,
                          cdf: Boolean = false): Unit = {
@@ -1338,7 +1328,7 @@ object GenLog {
       throw new IllegalArgumentException(
         s"constraint violation in batch '$gen': ${bad.mkString(", ")} — " +
           "nothing was written")
-    appendBatch(spark, loc, gen, df, partCol, evolve, cdf)
+    appendBatch(spark, loc, gen, df, partCols, evolve, cdf)
   }
 
   /** Commit `df` as a FULL RESTATEMENT under a (possibly new)
@@ -1351,15 +1341,9 @@ object GenLog {
     * the wildcard partition, so it conflicts with every concurrent
     * RESTATER (an insert still lands — its rows add on top). The
     * rewrite REPLACES the table schema (Delta's overwriteSchema):
-    * a whole-table rewrite defines the table.
-    */
-  def recluster(spark: SparkSession, loc: String, gen: String,
-                df: DataFrame, partCol: String): Unit =
-    recluster(spark, loc, gen, df, Seq(partCol))
-
-  /** [[recluster]] under a multi-column partition key — partition
-    * EVOLUTION between depths goes through here (the one verb allowed
-    * to change the table's partition scheme, because a full rewrite
+    * a whole-table rewrite defines the table. Partition EVOLUTION
+    * between depths goes through here too (the one verb allowed to
+    * change the table's partition scheme, because a full rewrite
     * defines the table).
     */
   def recluster(spark: SparkSession, loc: String, gen: String,
@@ -1382,7 +1366,7 @@ object GenLog {
     ()
   }
 
-  /** Commit `df` as PURE INSERTS under `partCol`: the files ADD to
+  /** Commit `df` as PURE INSERTS under `partCols`: the files ADD to
     * their partitions without restating them — previous files stay
     * live, partitions accumulate one file per insert generation (the
     * append-only ingest mode; [[compactPartitionThroughLog]] is the
@@ -1400,20 +1384,13 @@ object GenLog {
     * contract — Delta's ConcurrentAppendException). That asymmetry —
     * inserts commute with everything, restatements conflict with
     * anything that touched their partitions — is the protocol
-    * expressing real semantics instead of a global lock.
-    */
-  def appendInsert(spark: SparkSession, loc: String, gen: String,
-                   df: DataFrame, partCol: String,
-                   cdf: Boolean = false): Unit =
-    appendInsert(spark, loc, gen, df, Seq(partCol), cdf)
-
-  /** [[appendInsert]] under a multi-column partition key (tuple
-    * directories + tuple conflict tokens — see the multi-column
-    * [[appendBatch]]).
+    * expressing real semantics instead of a global lock. A
+    * multi-column key gets tuple directories + tuple conflict tokens
+    * (see [[appendBatch]]).
     */
   def appendInsert(spark: SparkSession, loc: String, gen: String,
                    df: DataFrame, partCols: Seq[String],
-                   cdf: Boolean): Unit = {
+                   cdf: Boolean = false): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
@@ -1453,13 +1430,7 @@ object GenLog {
     */
   def mergeByKey(spark: SparkSession, loc: String, gen: String,
                  updates: DataFrame, keyCols: Seq[String],
-                 partCol: String, cdf: Boolean = false): Unit =
-    mergeByKey(spark, loc, gen, updates, keyCols, Seq(partCol), cdf)
-
-  /** [[mergeByKey]] under a multi-column partition key. */
-  def mergeByKey(spark: SparkSession, loc: String, gen: String,
-                 updates: DataFrame, keyCols: Seq[String],
-                 partCols: Seq[String], cdf: Boolean): Unit = {
+                 partCols: Seq[String], cdf: Boolean = false): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
@@ -1555,8 +1526,8 @@ object GenLog {
 
   /** Generic LAYOUT-REWRITE commit: replace exactly the `target` live
     * files with `transform` applied to their rows, re-partitioned by
-    * `partCol` — the building block behind partial re-clustering
-    * (GenZoned.maybeReclusterPartial) and any file-scoped OPTIMIZE.
+    * `partCols` — the building block behind partial re-clustering
+    * ([[GenZoned.maybeReclusterPartial]]) and any file-scoped OPTIMIZE.
     * `transform` must be row-preserving (re-keying, re-sorting,
     * coalescing — never filtering), which is why the commit carries
     * dataChange=false: incremental consumers already have these rows.
@@ -1565,12 +1536,6 @@ object GenLog {
     * restatement of either side would invalidate the rewrite).
     * Cost ∝ target files, never the table.
     */
-  def replaceFiles(spark: SparkSession, loc: String, gen: String,
-                   target: Seq[String], partCol: String)
-                  (transform: DataFrame => DataFrame): Unit =
-    replaceFiles(spark, loc, gen, target, Seq(partCol))(transform)
-
-  /** [[replaceFiles]] under a multi-column partition key. */
   def replaceFiles(spark: SparkSession, loc: String, gen: String,
                    target: Seq[String], partCols: Seq[String])
                   (transform: DataFrame => DataFrame): Unit = {
@@ -1744,14 +1709,8 @@ object GenLog {
     * files' partitions for conflict detection.
     */
   def deleteWhere(spark: SparkSession, loc: String, gen: String,
-                  pred: Column, partCol: String,
-                  cdf: Boolean = false): Unit =
-    deleteWhere(spark, loc, gen, pred, Seq(partCol), cdf)
-
-  /** [[deleteWhere]] under a multi-column partition key. */
-  def deleteWhere(spark: SparkSession, loc: String, gen: String,
                   pred: Column, partCols: Seq[String],
-                  cdf: Boolean): Unit = {
+                  cdf: Boolean = false): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
@@ -1809,12 +1768,7 @@ object GenLog {
     * affected files' partitions for conflict detection.
     */
   def deleteWhereMoR(spark: SparkSession, loc: String, gen: String,
-                     pred: Column, partCol: String,
-                     cdf: Boolean = false): Unit = {
-    // partCol is unused since conflict tokens became structural
-    // (partTokenOf reads the file's own directory chain); kept for
-    // signature symmetry with deleteWhere
-    val _ = partCol
+                     pred: Column, cdf: Boolean = false): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
@@ -1871,11 +1825,6 @@ object GenLog {
     * exactly the rewrite the MoR delete deferred.
     */
   def materializeDeletes(spark: SparkSession, loc: String, gen: String,
-                         partCol: String): Unit =
-    materializeDeletes(spark, loc, gen, Seq(partCol))
-
-  /** [[materializeDeletes]] under a multi-column partition key. */
-  def materializeDeletes(spark: SparkSession, loc: String, gen: String,
                          partCols: Seq[String]): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
@@ -1930,10 +1879,10 @@ object GenLog {
     * idempotent through the gen-id guard.
     */
   def maybeMaterialize(spark: SparkSession, loc: String, gen: String,
-                       partCol: String, bound: Double): Boolean = {
+                       partCols: Seq[String], bound: Double): Boolean = {
     if (contains(spark, loc, gen)) return true
     if (dvDebt(spark, loc) <= bound) false
-    else { materializeDeletes(spark, loc, gen, partCol); true }
+    else { materializeDeletes(spark, loc, gen, partCols); true }
   }
 
   /** Merge the live deletion-vector sidecars into ONE (the
@@ -2025,7 +1974,7 @@ object GenLog {
 
   /** The LATEST snapshot's per-file statistics, from the log alone —
     * a checkpoint+tail metadata resolve, never a data read. This is
-    * the skipping surface (GenZoned/GenZoned2 price and prune from
+    * the skipping surface (GenZoned prices and prunes from
     * it): stats travel IN commit objects, so they are transactional
     * with the files — a crash can never leave a snapshot whose stats
     * lag its live set, and there is no absorption step to forget.

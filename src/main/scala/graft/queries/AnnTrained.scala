@@ -421,9 +421,9 @@ object AnnTrained {
     graft.io.Warehouse.ensureDir(spark, evolvedStoreTable(dir),
         s"$dir/embeddings.parquet") { loc =>
       graft.io.GenLog.appendBatch(spark, loc, s"cb_i$Iters",
-        genStoreRows(spark, dir, Iters), "cell_k")
+        genStoreRows(spark, dir, Iters), Seq("cell_k"))
       graft.io.GenLog.recluster(spark, loc, s"cb_i$ItersEvolved",
-        genStoreRows(spark, dir, ItersEvolved), "cell_k")
+        genStoreRows(spark, dir, ItersEvolved), Seq("cell_k"))
     }
   }
 

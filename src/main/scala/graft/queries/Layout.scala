@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ZOrderLong
-import graft.io.ZoneMaps
+import graft.io.{GenLog, GenZoned, ZoneMaps}
 import graft.sources.Tables
 
 /** Data-layout queries: the write-side organization that makes the
@@ -485,116 +485,41 @@ object Layout {
   // (io/GenZoned.scala over io/GenLog.scala): the base commits
   // month-clustered files (tight envelopes), append waves land as
   // unsorted wave files (full-domain envelopes — ingestion never
-  // re-sorts, q199's economics), and every commit absorbs per-file
-  // stats incrementally. The persisted clustering metric — the
+  // re-sorts, q199's economics), and every commit records its files'
+  // envelopes in the commit itself. The clustering metric — the
   // row-weighted mean envelope width over live files / domain —
   // tolerates the first wave (~0.08) and crosses WidthBound=0.1 at
   // the second, which triggers GenLog.recluster (q209's
   // partition-evolution mechanism pointed at q199's layout): one new
-  // month-clustered generation, history keeps its files, the next
-  // stats absorption restores tight envelopes, and the 3-month
-  // window's matched fraction recovers to ~4%. Base + waves = the
-  // full corpus, so q214 shares q194's oracle verbatim — re-layout
-  // timing can change COST only, never answers (GenZonedSpec pins
-  // the full degrade → tolerate → trigger → recover cycle with the
-  // answer asserted at every stage). This is Delta OPTIMIZE /
-  // Iceberg rewrite_data_files driven by the table's own statistics
-  // instead of a cron — at 100 TB the difference between rewriting
-  // on schedule and rewriting when the numbers pay for it.
-  // ---------------------------------------------------------------
-  private[graft] def monthKey: Column =
-    date_format(date_trunc("month", col("l_shipdate")), "yyyy-MM")
-
-  private[graft] def adaptiveSlice(spark: SparkSession, dir: String,
-                                   filter: String): DataFrame =
-    Tables.lineitem(spark, dir).where(expr(filter))
-      .select(col("l_orderkey"), col("l_shipdate"), col("l_returnflag"),
-        col("l_quantity"), col("l_extendedprice"), col("l_discount"))
-
-  /** v2: per-file stats moved INTO the log's commit objects
-    * (GenLog.configureStats — no sibling `_zstats` table, no separate
-    * absorption step); the old-format table and its stats sibling are
-    * in Warehouse.SupersededFixtures.
-    */
-  private[graft] def ensureAdaptiveZoned(spark: SparkSession, dir: String): String = {
-    import graft.io.{GenLog, GenZoned}
-    val tbl = s"graft_li_genzone_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
-      GenLog.configureStats(spark, loc, Seq("l_shipdate"))
-      GenLog.appendBatch(spark, loc, "base",
-        adaptiveSlice(spark, dir, "l_orderkey % 8 != 0")
-          .withColumn(GenZoned.PartCol, monthKey), GenZoned.PartCol)
-      Seq(1 -> "l_orderkey % 16 = 0", 2 -> "l_orderkey % 16 = 8")
-        .foreach { case (w, f) =>
-          GenLog.appendBatch(spark, loc, s"wave$w",
-            adaptiveSlice(spark, dir, f)
-              .withColumn(GenZoned.PartCol, lit(s"wave$w")), GenZoned.PartCol)
-          GenZoned.maybeRecluster(spark, loc, s"relayout$w", monthKey,
-            "l_shipdate")
-          ()
-        }
-    }
-  }
-
-  private[graft] def micros(day: String): Long =
-    java.time.Instant.parse(s"${day}T00:00:00Z").toEpochMilli * 1000L
-
-  // ---------------------------------------------------------------
+  // month-clustered generation, history keeps its files, the rewrite
+  // commit carries tight envelopes, and the 3-month window's matched
+  // fraction recovers to ~4%. Base + waves = the full corpus, so q214
+  // shares q194's oracle verbatim — re-layout timing can change COST
+  // only, never answers (GenZonedSpec pins the full degrade →
+  // tolerate → trigger → recover cycle with the answer asserted at
+  // every stage). This is Delta OPTIMIZE / Iceberg rewrite_data_files
+  // driven by the table's own statistics instead of a cron — at
+  // 100 TB the difference between rewriting on schedule and
+  // rewriting when the numbers pay for it.
+  //
   // q223_partial_relayout — q214's trigger with LIQUID-CLUSTERING
   // economics: when the metric crosses the bound, only the DECAYED
   // files rewrite (the wave files, whose own envelopes exceed the
   // bound) through GenLog.replaceFiles — the month-clustered base is
-  // untouched byte-identically (GenZonedSpec pins the file paths
-  // surviving the re-layout), the rewrite is a dataChange=false
-  // generation (incremental consumers already have those rows), and
-  // skipping recovers exactly as q214's full rewrite does. At 100 TB
-  // this is OPTIMIZE FULL vs incremental clustering: rewrite cost ∝
-  // decayed data, never the table. Same corpus, same window — q194's
-  // oracle verbatim.
-  // ---------------------------------------------------------------
-  private[graft] def ensurePartialZoned(spark: SparkSession, dir: String): String = {
-    import graft.io.{GenLog, GenZoned}
-    val tbl = s"graft_li_genzonep_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
-      GenLog.configureStats(spark, loc, Seq("l_shipdate"))
-      GenLog.appendBatch(spark, loc, "base",
-        adaptiveSlice(spark, dir, "l_orderkey % 8 != 0")
-          .withColumn(GenZoned.PartCol, monthKey), GenZoned.PartCol)
-      Seq(1 -> "l_orderkey % 16 = 0", 2 -> "l_orderkey % 16 = 8")
-        .foreach { case (w, f) =>
-          GenLog.appendBatch(spark, loc, s"wave$w",
-            adaptiveSlice(spark, dir, f)
-              .withColumn(GenZoned.PartCol, lit(s"wave$w")), GenZoned.PartCol)
-          GenZoned.maybeReclusterPartial(spark, loc, s"prl$w", monthKey,
-            "l_shipdate")
-          ()
-        }
-    }
-  }
-
-  /** The shared q214/q223 body: pruned read of the 3-month window
-    * over a generation-logged month-zoned layout, exact predicate
-    * re-applied, revenue rollup. ONE definition so the partial
-    * re-layout (q223) can never drift from the oracle it shares with
-    * the full rewrite (q214).
-    */
-  private def genZonedWindowAgg(spark: SparkSession, loc: String): DataFrame =
-    windowRevenue(spark, graft.io.GenZoned.prunedRead(spark, loc, "l_shipdate",
-      micros(ShipLo), micros(ShipHi)), ShipLo, ShipHi)
-
-  def q223(spark: SparkSession, dir: String): DataFrame =
-    genZonedWindowAgg(spark, ensurePartialZoned(spark, dir))
-
-  def q214(spark: SparkSession, dir: String): DataFrame =
-    genZonedWindowAgg(spark, ensureAdaptiveZoned(spark, dir))
-
-  // ---------------------------------------------------------------
+  // untouched byte-identically (GenZonedSpec and MaintainedLayoutSpec
+  // pin the file paths surviving the re-layout), the rewrite is a
+  // dataChange=false generation (incremental consumers already have
+  // those rows), and skipping recovers exactly as q214's full rewrite
+  // does. At 100 TB this is OPTIMIZE FULL vs incremental clustering:
+  // rewrite cost ∝ decayed data, never the table. Same corpus, same
+  // window — q194's oracle verbatim.
+  //
   // q228_zoned2d_relayout — q214's maintenance loop in TWO
-  // dimensions (io/GenZoned2.scala): the layout clusters
-  // (l_partkey, l_suppkey) into aligned Morton blocks (q86's curve
-  // as storage, q195's point as policy), append waves land unsorted
-  // with full-domain envelopes in BOTH keys, and the persisted 2-D
-  // quality metric — row-weighted max(width_p, width_s)/domain —
+  // dimensions (io/GenZoned.scala over two tracked columns): the
+  // layout clusters (l_partkey, l_suppkey) into aligned Morton blocks
+  // (q86's curve as storage, q195's point as policy), append waves
+  // land unsorted with full-domain envelopes in BOTH keys, and the
+  // 2-D quality metric — row-weighted max(width_p, width_s)/domain —
   // tolerates one wave and crosses WidthBound2 at the second, firing
   // a Z-ORDER recluster through the log. The reader prunes the
   // 2-D box on BOTH columns' envelopes simultaneously — what no
@@ -605,39 +530,7 @@ object Layout {
   // degrade → tolerate → trigger → recover cycle). At 100 TB this is
   // liquid clustering on two dimensions: the table measures its own
   // 2-D skipping decay and rewrites when the numbers pay for it.
-  // ---------------------------------------------------------------
-  private[graft] def zoned2Slice(spark: SparkSession, dir: String,
-                                 filter: String): DataFrame =
-    Tables.lineitem(spark, dir).where(expr(filter))
-      .select(col("l_partkey"), col("l_suppkey"), col("l_returnflag"),
-        col("l_quantity"))
-
-  private[graft] def ensureZoned2(spark: SparkSession, dir: String): String = {
-    import graft.io.{GenLog, GenZoned2}
-    val tbl = s"graft_li_genzone2_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
-      GenLog.configureStats(spark, loc, Seq("l_partkey", "l_suppkey"))
-      val base = zoned2Slice(spark, dir, "l_orderkey % 8 != 0")
-      val m = base.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
-      GenLog.appendBatch(spark, loc, "base",
-        base.withColumn(GenZoned2.PartCol,
-          GenZoned2.blockKey(col("l_partkey"), col("l_suppkey"),
-            m.getLong(0), m.getLong(1))),
-        GenZoned2.PartCol)
-      Seq(1 -> "l_orderkey % 16 = 0", 2 -> "l_orderkey % 16 = 8")
-        .foreach { case (w, f) =>
-          GenLog.appendBatch(spark, loc, s"wave$w",
-            zoned2Slice(spark, dir, f)
-              .withColumn(GenZoned2.PartCol, lit(s"wave$w")),
-            GenZoned2.PartCol)
-          GenZoned2.maybeRecluster(spark, loc, s"zrl$w",
-            "l_partkey", "l_suppkey")
-          ()
-        }
-    }
-  }
-
-  // ---------------------------------------------------------------
+  //
   // q229_zoned2d_partial — q228's trigger with LIQUID-CLUSTERING
   // economics in two dimensions: when the 2-D metric crosses the
   // bound, ONLY the decayed files (the waves — full-domain in both
@@ -649,37 +542,112 @@ object Layout {
   // q223-vs-q214 distinction, now on the layout a single sort key
   // cannot serve. Same corpus, same box — q195's oracle verbatim.
   // ---------------------------------------------------------------
-  private[graft] def ensureZoned2Partial(spark: SparkSession, dir: String): String = {
-    import graft.io.{GenLog, GenZoned2}
-    val tbl = s"graft_li_genzone2p_v2_${java.lang.Integer.toHexString(dir.hashCode)}"
-    graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
-      GenLog.configureStats(spark, loc, Seq("l_partkey", "l_suppkey"))
-      val base = zoned2Slice(spark, dir, "l_orderkey % 8 != 0")
-      val m = base.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()
-      GenLog.appendBatch(spark, loc, "base",
-        base.withColumn(GenZoned2.PartCol,
-          GenZoned2.blockKey(col("l_partkey"), col("l_suppkey"),
-            m.getLong(0), m.getLong(1))),
-        GenZoned2.PartCol)
-      Seq(1 -> "l_orderkey % 16 = 0", 2 -> "l_orderkey % 16 = 8")
-        .foreach { case (w, f) =>
-          GenLog.appendBatch(spark, loc, s"wave$w",
-            zoned2Slice(spark, dir, f)
-              .withColumn(GenZoned2.PartCol, lit(s"wave$w")),
-            GenZoned2.PartCol)
-          GenZoned2.maybeReclusterPartial(spark, loc, s"zprl$w",
-            "l_partkey", "l_suppkey")
-          ()
-        }
-    }
+  private[graft] def monthKey: Column =
+    date_format(date_trunc("month", col("l_shipdate")), "yyyy-MM")
+
+  private[graft] def adaptiveSlice(spark: SparkSession, dir: String,
+                                   filter: String): DataFrame =
+    Tables.lineitem(spark, dir).where(expr(filter))
+      .select(col("l_orderkey"), col("l_shipdate"), col("l_returnflag"),
+        col("l_quantity"), col("l_extendedprice"), col("l_discount"))
+
+  private[graft] def zoned2Slice(spark: SparkSession, dir: String,
+                                 filter: String): DataFrame =
+    Tables.lineitem(spark, dir).where(expr(filter))
+      .select(col("l_partkey"), col("l_suppkey"), col("l_returnflag"),
+        col("l_quantity"))
+
+  /** One maintained lineitem layout: the table-name prefix, the name
+    * of its re-layout generations (`<relayout>1`, `<relayout>2`), the
+    * slice its base and waves come from, the tracked columns, and
+    * full or partial maintenance. v2 tables keep per-file stats IN the
+    * log's commit objects; the old-format tables and their stats
+    * siblings are in Warehouse.SupersededFixtures.
+    */
+  private[graft] final case class Maintained(
+      prefix: String, relayout: String,
+      slice: (SparkSession, String, String) => DataFrame,
+      tracked: Seq[String], partial: Boolean)
+
+  private[graft] val AdaptiveZoned = Maintained("graft_li_genzone_v2_",
+    "relayout", adaptiveSlice, Seq("l_shipdate"), partial = false)
+  private[graft] val PartialZoned = Maintained("graft_li_genzonep_v2_",
+    "prl", adaptiveSlice, Seq("l_shipdate"), partial = true)
+  private[graft] val Zoned2 = Maintained("graft_li_genzone2_v2_",
+    "zrl", zoned2Slice, Seq("l_partkey", "l_suppkey"), partial = false)
+  private[graft] val Zoned2Partial = Maintained("graft_li_genzone2p_v2_",
+    "zprl", zoned2Slice, Seq("l_partkey", "l_suppkey"), partial = true)
+
+  private[graft] def ensureMaintained(spark: SparkSession, dir: String,
+                                      m: Maintained): String =
+    graft.io.Warehouse.ensureDir(spark,
+      s"${m.prefix}${java.lang.Integer.toHexString(dir.hashCode)}",
+      s"$dir/lineitem.parquet")(buildMaintained(spark, dir, m, _))
+
+  /** Build `m` at `loc`: a clustered base (7/8 of the rows), then two
+    * unsorted append waves (1/16 each), each followed by the
+    * quality-triggered re-layout. One column clusters by month; two
+    * cluster into aligned z-blocks over the base's maxima (one
+    * aggregate job the month key does not need), then over the live
+    * maxima at re-layout.
+    */
+  private[graft] def buildMaintained(spark: SparkSession, dir: String,
+                                     m: Maintained, loc: String): Unit = {
+    val pc = GenZoned.partColOf(m.tracked)
+    val key: Seq[Long] => Column =
+      if (m.tracked.size == 1) _ => monthKey else GenZoned.blockKey(m.tracked, _)
+    GenLog.configureStats(spark, loc, m.tracked)
+    val base = m.slice(spark, dir, "l_orderkey % 8 != 0")
+    val baseMaxes =
+      if (m.tracked.size == 1) Nil
+      else {
+        val r = base.agg(max(col(m.tracked.head)),
+          m.tracked.tail.map(c => max(col(c))): _*).head()
+        m.tracked.indices.map(r.getLong)
+      }
+    GenLog.appendBatch(spark, loc, "base",
+      base.withColumn(pc, key(baseMaxes)), Seq(pc))
+    Seq(1 -> "l_orderkey % 16 = 0", 2 -> "l_orderkey % 16 = 8")
+      .foreach { case (w, f) =>
+        GenLog.appendBatch(spark, loc, s"wave$w",
+          m.slice(spark, dir, f).withColumn(pc, lit(s"wave$w")), Seq(pc))
+        val gen = s"${m.relayout}$w"
+        if (m.partial) GenZoned.maybeReclusterPartial(spark, loc, gen, m.tracked, key)
+        else GenZoned.maybeRecluster(spark, loc, gen, m.tracked, key)
+        ()
+      }
   }
 
+  private[graft] def micros(day: String): Long =
+    java.time.Instant.parse(s"${day}T00:00:00Z").toEpochMilli * 1000L
+
+  /** The shared q214/q223 body: pruned read of the 3-month window
+    * over a generation-logged month-zoned layout, exact predicate
+    * re-applied, revenue rollup. ONE definition so the partial
+    * re-layout (q223) can never drift from the oracle it shares with
+    * the full rewrite (q214).
+    */
+  private def genZonedWindowAgg(spark: SparkSession, loc: String): DataFrame =
+    windowRevenue(spark, GenZoned.prunedRead(spark, loc,
+      Seq(("l_shipdate", micros(ShipLo), micros(ShipHi)))), ShipLo, ShipHi)
+
+  def q214(spark: SparkSession, dir: String): DataFrame =
+    genZonedWindowAgg(spark, ensureMaintained(spark, dir, AdaptiveZoned))
+
+  def q223(spark: SparkSession, dir: String): DataFrame =
+    genZonedWindowAgg(spark, ensureMaintained(spark, dir, PartialZoned))
+
+  /** The shared q228/q229 body: box bounds derive from the layout's
+    * own stats (max of per-file maxes == the global max — O(files)
+    * metadata), the 2-D pruned read, the exact predicate re-applied.
+    * ONE definition so the partial variant can never drift from the
+    * oracle it shares with the full rewrite.
+    */
   private def zoned2BoxAgg(spark: SparkSession, loc: String): DataFrame = {
-    import graft.io.GenZoned2
-    val (pmax, smax) = GenZoned2.liveMaxes(spark, loc, "l_partkey", "l_suppkey")
+    val Seq(pmax, smax) = GenZoned.liveMaxes(spark, loc, Zoned2.tracked)
     val (pLo, pHi, sLo, sHi) = zBox(pmax, smax)
-    GenZoned2.prunedRead(spark, loc, "l_partkey", "l_suppkey",
-        pLo, pHi, sLo, sHi)
+    GenZoned.prunedRead(spark, loc,
+        Seq(("l_partkey", pLo, pHi), ("l_suppkey", sLo, sHi)))
       .where(col("l_partkey").between(lit(pLo), lit(pHi)) &&
         col("l_suppkey").between(lit(sLo), lit(sHi)))
       .groupBy(col("l_returnflag"))
@@ -688,17 +656,11 @@ object Layout {
       .orderBy(col("l_returnflag"))
   }
 
-  def q229(spark: SparkSession, dir: String): DataFrame =
-    zoned2BoxAgg(spark, ensureZoned2Partial(spark, dir))
-
-  /** The shared q228/q229 body: box bounds derive from the layout's
-    * own stats (max of per-file maxes == the global max — O(files)
-    * metadata), the 2-D pruned read, the exact predicate re-applied.
-    * ONE definition so the partial variant can never drift from the
-    * oracle it shares with the full rewrite.
-    */
   def q228(spark: SparkSession, dir: String): DataFrame =
-    zoned2BoxAgg(spark, ensureZoned2(spark, dir))
+    zoned2BoxAgg(spark, ensureMaintained(spark, dir, Zoned2))
+
+  def q229(spark: SparkSession, dir: String): DataFrame =
+    zoned2BoxAgg(spark, ensureMaintained(spark, dir, Zoned2Partial))
 
   // ---------------------------------------------------------------
   // q236_bloom_logged — q201's POINT-lookup Bloom skipping, on a
@@ -718,7 +680,6 @@ object Layout {
   // inputFiles == bloom-matched set fact.
   // ---------------------------------------------------------------
   private[graft] def ensureBloomLogged(spark: SparkSession, dir: String): String = {
-    import graft.io.GenLog
     val tbl = s"graft_li_genbloom_${java.lang.Integer.toHexString(dir.hashCode)}"
     graft.io.Warehouse.ensureDir(spark, tbl, s"$dir/lineitem.parquet") { loc =>
       GenLog.configureStats(spark, loc, Seq("l_shipdate"),
@@ -726,8 +687,8 @@ object Layout {
       GenLog.appendBatch(spark, loc, "base",
         Tables.lineitem(spark, dir)
           .select(col("l_orderkey"), col("l_shipdate"), col("l_quantity"))
-          .withColumn(graft.io.GenZoned.PartCol, monthKey),
-        graft.io.GenZoned.PartCol)
+          .withColumn(GenZoned.PartCol, monthKey),
+        Seq(GenZoned.PartCol))
     }
   }
 
@@ -740,7 +701,7 @@ object Layout {
     // the DRIVER-side twin of the build's hash60StrCol(cast string)
     val kh = graft.functions.TextKernels.hash60(
       k.toString.getBytes("UTF-8")) % graft.functions.TextFns.P
-    graft.io.GenLog.readBloomPruned(spark, loc, kh)
+    GenLog.readBloomPruned(spark, loc, kh)
       .where(col("l_orderkey") === lit(k))
       .groupBy(col("l_orderkey"))
       .agg(count(lit(1)).as("n_items"),

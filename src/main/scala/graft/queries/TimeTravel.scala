@@ -70,19 +70,19 @@ object TimeTravel {
   private[graft] def ensureEventGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, gensTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, Some(Cut1), None, Some(Day1)), "day_k", cdf = true)
+        batch(spark, dir, Some(Cut1), None, Some(Day1)), Seq("day_k"), cdf = true)
       GenLog.appendBatch(spark, loc, "g2",
-        batch(spark, dir, Some(Cut2), Some(Day1), Some(Day2)), "day_k",
+        batch(spark, dir, Some(Cut2), Some(Day1), Some(Day2)), Seq("day_k"),
         cdf = true)
       GenLog.appendBatch(spark, loc, "g3",
-        batch(spark, dir, None, Some(Day2), None), "day_k", cdf = true)
+        batch(spark, dir, None, Some(Day2), None), Seq("day_k"), cdf = true)
       // g4: the SAME day range restated under a WIDENED schema (the
       // pipeline started tracking per-day distinct users) — schema
       // evolution as a generation boundary, not a table migration.
       // evolve = true is the explicit widening request; without it
       // commit-time schema enforcement aborts the batch.
       GenLog.appendBatch(spark, loc, "g4",
-        widenedBatch(spark, dir, Some(Day2)), "day_k",
+        widenedBatch(spark, dir, Some(Day2)), Seq("day_k"),
         evolve = true, cdf = true)
     }
   }
@@ -245,13 +245,13 @@ object TimeTravel {
   private[graft] def ensureEvolvedGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, evolveTable(dir), s"$dir/events.parquet") { loc =>
       val daily = batch(spark, dir, None, None, None)
-      GenLog.appendBatch(spark, loc, "g1_daily", daily, "day_k")
+      GenLog.appendBatch(spark, loc, "g1_daily", daily, Seq("day_k"))
       // same rows, coarser clustering: week-of-year partition key
       GenLog.recluster(spark, loc, "g2_weekly",
         daily.drop("day_k")
           .withColumn("week_k",
             date_format(date_trunc("week", col("day")), "yyyy-MM-dd")),
-        "week_k")
+        Seq("week_k"))
     }
   }
 
@@ -293,8 +293,8 @@ object TimeTravel {
   private[graft] def ensureDeleteGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, delTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, None, None, None), "day_k")
-      GenLog.deleteWhere(spark, loc, "g2_del", delPred, "day_k", cdf = true)
+        batch(spark, dir, None, None, None), Seq("day_k"))
+      GenLog.deleteWhere(spark, loc, "g2_del", delPred, Seq("day_k"), cdf = true)
     }
   }
 
@@ -384,11 +384,11 @@ object TimeTravel {
   private[graft] def ensureMergeGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, mergeTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, Some(MergeCut), None, None), "day_k")
+        batch(spark, dir, Some(MergeCut), None, None), Seq("day_k"))
       GenLog.mergeByKey(spark, loc, "g2_merge",
         batch(spark, dir, None, Some(MergeLo), None)
           .where(col("event_type") === lit(MergeType)),
-        Seq("day", "event_type"), "day_k")
+        Seq("day", "event_type"), Seq("day_k"))
     }
   }
 
@@ -434,7 +434,7 @@ object TimeTravel {
       InsertSlices.foreach { case (gen, types) =>
         GenLog.appendInsert(spark, loc, gen,
           batch(spark, dir, None, None, None)
-            .where(col("event_type").isin(types: _*)), "day_k")
+            .where(col("event_type").isin(types: _*)), Seq("day_k"))
       }
       GenLog.compactPartitionThroughLog(spark, loc, "opt_hot", "day_k", HotDay)
     }
@@ -626,8 +626,8 @@ object TimeTravel {
   private[graft] def ensureRestoredGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, restoreTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, None, None, None), "day_k", cdf = true)
-      GenLog.deleteWhere(spark, loc, "g2_del", delPred, "day_k", cdf = true)
+        batch(spark, dir, None, None, None), Seq("day_k"), cdf = true)
+      GenLog.deleteWhere(spark, loc, "g2_del", delPred, Seq("day_k"), cdf = true)
       GenLog.restore(spark, loc, "g3_restore", "g1", cdf = true)
     }
   }
@@ -667,9 +667,9 @@ object TimeTravel {
   private[graft] def ensureMorGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, morTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, None, None, None), "day_k")
-      GenLog.deleteWhereMoR(spark, loc, "g2_dv", delPred, "day_k")
-      GenLog.materializeDeletes(spark, loc, "g3_mat", "day_k")
+        batch(spark, dir, None, None, None), Seq("day_k"))
+      GenLog.deleteWhereMoR(spark, loc, "g2_dv", delPred)
+      GenLog.materializeDeletes(spark, loc, "g3_mat", Seq("day_k"))
     }
   }
 
@@ -722,13 +722,12 @@ object TimeTravel {
   private[graft] def ensureDvDebtGenerations(spark: SparkSession, dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, dvDebtTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, None, None, None), "day_k")
+        batch(spark, dir, None, None, None), Seq("day_k"))
       def wave(gen: String, dayLo: String, dayHi: String): Unit = {
         GenLog.deleteWhereMoR(spark, loc, gen,
           col("event_type") === lit(DelType) &&
-            col("day").between(lit(dayLo).cast("date"), lit(dayHi).cast("date")),
-          "day_k")
-        GenLog.maybeMaterialize(spark, loc, s"${gen}_settle", "day_k",
+            col("day").between(lit(dayLo).cast("date"), lit(dayHi).cast("date")))
+        GenLog.maybeMaterialize(spark, loc, s"${gen}_settle", Seq("day_k"),
           DvDebtBound)
         ()
       }
@@ -1022,11 +1021,11 @@ object TimeTravel {
                                               dir: String): String = {
     graft.io.Warehouse.ensureDir(spark, renameTable(dir), s"$dir/events.parquet") { loc =>
       GenLog.appendBatch(spark, loc, "g1",
-        batch(spark, dir, Some(MergeCut), None, None), "day_k")
+        batch(spark, dir, Some(MergeCut), None, None), Seq("day_k"))
       GenLog.renameColumn(spark, loc, "ren_nev", "n_events", "n_ev")
       GenLog.appendBatch(spark, loc, "g2",
         batch(spark, dir, None, Some(Day2), None)
-          .withColumnRenamed("n_events", "n_ev"), "day_k")
+          .withColumnRenamed("n_events", "n_ev"), Seq("day_k"))
     }
   }
 

@@ -146,7 +146,7 @@ object GenLogStream {
               s"one window per batch expected (maxFilesPerTrigger=1), got $wLo..$wHi")
             GenLog.appendInsert(ss, loc, s"w$wLo",
               batch.drop("win").withColumn("etype_k", col("event_type")),
-              "etype_k")
+              Seq("etype_k"))
           }
         }
         .option("checkpointLocation", ckpt)
@@ -326,7 +326,7 @@ object GenLogStream {
       // so downstream CDC consumers read O(changes) per window (q231)
       GenLog.appendBatch(ss, loc, s"w$wLo",
         restated.withColumn("day_k", date_format(col("day"), "yyyy-MM-dd")),
-        "day_k", cdf = true)
+        Seq("day_k"), cdf = true)
     } finally { counts.unpersist(blocking = false); () }
   }
 }

@@ -24,13 +24,13 @@ class GenLogSourceSpec extends SparkTestBase {
     val loc = tmp("genlogsrc") + "/t"
     GenLog.appendBatch(spark, loc, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None,
-        Some(TimeTravel.Day1)), "day_k", cdf = true)
+        Some(TimeTravel.Day1)), Seq("day_k"), cdf = true)
     GenLog.appendBatch(spark, loc, "g2",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2),
-        Some(TimeTravel.Day1), Some(TimeTravel.Day2)), "day_k", cdf = true)
+        Some(TimeTravel.Day1), Some(TimeTravel.Day2)), Seq("day_k"), cdf = true)
     GenLog.appendBatch(spark, loc, "g3",
       TimeTravel.batch(spark, Sf, None, Some(TimeTravel.Day2), None),
-      "day_k", cdf = true)
+      Seq("day_k"), cdf = true)
     loc
   }
 
@@ -60,7 +60,7 @@ class GenLogSourceSpec extends SparkTestBase {
       fail("a completed drain must replay nothing") } == 0)
     // one more commit → exactly one new batch, version 4
     GenLog.appendBatch(spark, loc, "g4",
-      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), "day_k",
+      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), Seq("day_k"),
       evolve = true, cdf = true)
     val more = scala.collection.mutable.ArrayBuffer.empty[Long]
     assert(GenLogStream.readSource(spark, loc, ckpt) { (_, v) => more += v; () } == 1)
@@ -115,7 +115,7 @@ class GenLogSourceSpec extends SparkTestBase {
     GenLog.compactPartitionThroughLog(spark, loc, "opt", "day_k", "2024-01-05")
     // a no-match delete commits an empty delta
     GenLog.deleteWhere(spark, loc, "noop_del",
-      col("event_type") === lit("no_such_type"), "day_k", cdf = true)
+      col("event_type") === lit("no_such_type"), Seq("day_k"), cdf = true)
     val ckpt = tmp("srcck")
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     GenLogStream.readSource(spark, loc, ckpt, GenLogStream.SourceAdds) {
@@ -141,7 +141,7 @@ class GenLogSourceSpec extends SparkTestBase {
     val loc2 = tmp("genlogsrc") + "/t"
     GenLog.appendBatch(spark, loc2, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None,
-        Some(TimeTravel.Day1)), "day_k") // cdf = false
+        Some(TimeTravel.Day1)), Seq("day_k")) // cdf = false
     val e2 = intercept[IllegalArgumentException] {
       GenLogStream.readSource(spark, loc2, tmp("srcck")) { (_, _) => () }
     }

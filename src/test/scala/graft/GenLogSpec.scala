@@ -15,11 +15,11 @@ class GenLogSpec extends SparkTestBase {
   private def freshGens(): String = {
     val loc = java.nio.file.Files.createTempDirectory("genlog").toString + "/t"
     GenLog.appendBatch(spark, loc, "g1",
-      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), "day_k")
+      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), Seq("day_k"))
     GenLog.appendBatch(spark, loc, "g2",
-      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), "day_k")
+      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), Seq("day_k"))
     GenLog.appendBatch(spark, loc, "g3",
-      TimeTravel.batch(spark, Sf, None, Some(TimeTravel.Day2), None), "day_k")
+      TimeTravel.batch(spark, Sf, None, Some(TimeTravel.Day2), None), Seq("day_k"))
     loc
   }
 
@@ -67,7 +67,7 @@ class GenLogSpec extends SparkTestBase {
     val loc = freshGens()
     val before = GenLog.generations(spark, loc)
     GenLog.appendBatch(spark, loc, "g2",
-      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), "day_k")
+      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), Seq("day_k"))
     assert(GenLog.generations(spark, loc) == before, "gen-id guard must skip")
     // a crashed writer's file: on disk, in no generation
     val orphanDir = new java.io.File(loc, "day_k=2024-01-05")
@@ -180,13 +180,13 @@ class GenLogSpec extends SparkTestBase {
     val e = intercept[IllegalArgumentException](
       GenLog.appendBatch(spark, loc, "bad_old_name",
         TimeTravel.batch(spark, Sf, None, Some("2024-01-05"),
-          Some("2024-01-05")), "day_k"))
+          Some("2024-01-05")), Seq("day_k")))
     assert(e.getMessage.contains("renameColumn"))
     // a NEW-name batch restates a day; its file stores the PHYSICAL
     // name, so both eras merge in one scan
     GenLog.appendBatch(spark, loc, "g4",
       TimeTravel.batch(spark, Sf, None, Some("2024-01-05"),
-        Some("2024-01-05")).withColumnRenamed("n_events", "n_ev"), "day_k")
+        Some("2024-01-05")).withColumnRenamed("n_events", "n_ev"), Seq("day_k"))
     val g4Only = GenLog.generations(spark, loc).toMap
       .apply("g4").toSet -- liveBefore.toSet
     assert(g4Only.nonEmpty && g4Only.forall(f =>
@@ -255,7 +255,7 @@ class GenLogSpec extends SparkTestBase {
     val loc = freshGens()
     // widen at g4: day-20+ restated with n_users
     GenLog.appendBatch(spark, loc, "g4",
-      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), "day_k",
+      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), Seq("day_k"),
       evolve = true)
     // AS OF g3: the column does not exist — time travel sees the
     // schema of its day
@@ -295,7 +295,7 @@ class GenLogSpec extends SparkTestBase {
     val pinned = GenLog.read(spark, loc, "g3")
     val before = rows(pinned)
     GenLog.appendBatch(spark, loc, "g4",
-      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), "day_k",
+      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), Seq("day_k"),
       evolve = true)
     assert(rows(pinned) == before,
       "a snapshot pinned before the commit must be unaffected by it")
@@ -318,7 +318,7 @@ class GenLogSpec extends SparkTestBase {
     assert(tmp.exists(), "readers must never mutate the log directory")
     // the log stays writable past the dead temp
     GenLog.appendBatch(spark, loc, "g4",
-      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), "day_k",
+      TimeTravel.widenedBatch(spark, Sf, Some(TimeTravel.Day2)), Seq("day_k"),
       evolve = true)
     assert(GenLog.generations(spark, loc).map(_._1).last == "g4")
     val deleted = GenLog.vacuum(spark, loc, keepLastN = 4, minAgeMs = 0L)
@@ -335,7 +335,7 @@ class GenLogSpec extends SparkTestBase {
     // grows 52×, the per-commit delta stays one file
     (1 to 52).foreach { k =>
       GenLog.appendBatch(spark, loc, s"g$k",
-        Seq((k, k.toLong)).toDF("k", "v"), "k")
+        Seq((k, k.toLong)).toDF("k", "v"), Seq("k"))
     }
     val logDir = new java.io.File(loc, GenLog.LogDir)
     def size(name: String) = new java.io.File(logDir, name).length()
@@ -378,11 +378,11 @@ class GenLogSpec extends SparkTestBase {
     val loc = java.nio.file.Files.createTempDirectory("genlog-occ").toString + "/t"
     def frame(rows: (Int, Long)*) =
       rows.toSeq.toDF("k", "v").withColumn("p", col("k"))
-    GenLog.appendBatch(spark, loc, "g1", frame((1, 10L), (2, 20L)), "p")
+    GenLog.appendBatch(spark, loc, "g1", frame((1, 10L), (2, 20L)), Seq("p"))
     // two writers prepare against the SAME snapshot (v1), restating
     // DISJOINT partitions
-    val a = GenLog.stageAppend(spark, loc, "wA", frame((1, 11L)), "p")
-    val b = GenLog.stageAppend(spark, loc, "wB", frame((2, 21L)), "p")
+    val a = GenLog.stageAppend(spark, loc, "wA", frame((1, 11L)), Seq("p"))
+    val b = GenLog.stageAppend(spark, loc, "wB", frame((2, 21L)), Seq("p"))
     assert(a.snapshotVersion == 1L && b.snapshotVersion == 1L)
     assert(GenLog.commitStaged(spark, loc, a) == 2L)
     // B lost the race at v2 but its partitions are untouched: it must
@@ -394,9 +394,9 @@ class GenLogSpec extends SparkTestBase {
       s"both disjoint restatements must be live, got $rows")
     // three writers staged against the SAME snapshot (v3): a winner,
     // an overlapping loser, and a replay of the winner's gen id
-    val c = GenLog.stageAppend(spark, loc, "wC", frame((1, 12L)), "p")
-    val d = GenLog.stageAppend(spark, loc, "wD", frame((1, 13L)), "p")
-    val e = GenLog.stageAppend(spark, loc, "wC", frame((1, 99L)), "p")
+    val c = GenLog.stageAppend(spark, loc, "wC", frame((1, 12L)), Seq("p"))
+    val d = GenLog.stageAppend(spark, loc, "wD", frame((1, 13L)), Seq("p"))
+    val e = GenLog.stageAppend(spark, loc, "wC", frame((1, 99L)), Seq("p"))
     assert(GenLog.commitStaged(spark, loc, c) == 4L)
     // the overlapping loser must abort (its removes were computed
     // against a state that no longer holds)
@@ -570,7 +570,7 @@ class GenLogSpec extends SparkTestBase {
     val srcFilesBefore = GenLog.generations(spark, srcLoc)
     GenLog.appendBatch(spark, loc, "branch1",
       TimeTravel.batch(spark, Sf, None, Some("2024-01-05"), Some("2024-01-05"))
-        .withColumn("n_events", col("n_events") + 1000), "day_k")
+        .withColumn("n_events", col("n_events") + 1000), Seq("day_k"))
     assert(ownData(loc).nonEmpty, "the branch write lands under the clone")
     // the source never moved: same log, same files, same answers
     assert(GenLog.generations(spark, srcLoc) == srcFilesBefore)
@@ -599,14 +599,14 @@ class GenLogSpec extends SparkTestBase {
       "v_positive" -> (col("v") > 0),
       "k_not_null" -> col("k").isNotNull)
     GenLog.appendBatchChecked(spark, loc, "g1",
-      frame((1, 10L), (2, null)), "p", checks) // NULL v passes CHECK
+      frame((1, 10L), (2, null)), Seq("p"), checks) // NULL v passes CHECK
     assert(GenLog.readLatest(spark, loc).count() == 2)
     val logDir = new java.io.File(loc, GenLog.LogDir)
     val before = (logDir.list().toSet,
       GenLog.generations(spark, loc))
     val ex = intercept[IllegalArgumentException] {
       GenLog.appendBatchChecked(spark, loc, "g2",
-        frame((1, -5L), (2, -6L), (3, 7L)), "p", checks)
+        frame((1, -5L), (2, -6L), (3, 7L)), Seq("p"), checks)
     }
     assert(ex.getMessage.contains("v_positive (2 rows)"),
       s"the violation report must carry per-constraint counts: ${ex.getMessage}")
@@ -656,9 +656,9 @@ class GenLogSpec extends SparkTestBase {
     // serves missing files — exercised on a throwaway copy
     val loc2 = java.nio.file.Files.createTempDirectory("genlog-rst").toString + "/t"
     GenLog.appendBatch(spark, loc2, "g1",
-      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), "day_k")
+      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), Seq("day_k"))
     GenLog.appendBatch(spark, loc2, "g2",
-      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), "day_k")
+      TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut2), Some(TimeTravel.Day1), Some(TimeTravel.Day2)), Seq("day_k"))
     GenLog.vacuum(spark, loc2, keepLastN = 1, minAgeMs = 0L)
     intercept[IllegalArgumentException](GenLog.restore(spark, loc2, "rb", "g1"))
   }
@@ -701,9 +701,9 @@ class GenLogSpec extends SparkTestBase {
     // throwaway MoR table: g1 + a DV delete + materialization
     val loc = java.nio.file.Files.createTempDirectory("genlog-dv").toString + "/t"
     GenLog.appendBatch(spark, loc, "g1",
-      TimeTravel.batch(spark, Sf, None, None, None), "day_k")
-    GenLog.deleteWhereMoR(spark, loc, "g2", TimeTravel.delPred, "day_k")
-    GenLog.materializeDeletes(spark, loc, "g3", "day_k")
+      TimeTravel.batch(spark, Sf, None, None, None), Seq("day_k"))
+    GenLog.deleteWhereMoR(spark, loc, "g2", TimeTravel.delPred)
+    GenLog.materializeDeletes(spark, loc, "g3", Seq("day_k"))
     val dvDir = new java.io.File(loc, GenLog.DvDir)
     assert(dvParquets(dvDir).nonEmpty)
     val g3 = rows(GenLog.readLatest(spark, loc))

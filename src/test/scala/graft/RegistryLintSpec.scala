@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scans for four single-mechanism rules. Session-scoped caches
+/** Source scans for five single-mechanism rules. Session-scoped caches
   * live in [[CacheRegistry]] only: a hash-code session key or a private
   * `TrieMap` anywhere else in main code brings back an unevicted,
   * double-building cache. Each query is one `Query(name, build,
@@ -13,7 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `EventStreams.withCheckpoint` only: a hand-placed checkpoint
   * directory, or one left to a shutdown hook, outlives its run. Spark's
   * `JavaUtils.deleteRecursively` forks `rm -rf` on Unix, so engine code
-  * deletes through Java; only the stress main still uses it.
+  * deletes through Java; only the stress main still uses it. GenLog
+  * names each member `def` once (one `Seq[String]` partition-key
+  * signature per write verb, no single-column forwarders), and one
+  * `GenZoned` serves one or two tracked columns: no `GenZoned2` twin.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
@@ -21,6 +24,7 @@ class RegistryLintSpec extends AnyFunSuite {
   private val Registry = Paths.get("graft", "CacheRegistry.scala")
   private val CheckpointHelper = Paths.get("graft", "streaming", "EventStreams.scala")
   private val StressMain = Paths.get("graft", "ScaleStress.scala")
+  private val GenLogSrc = Paths.get("src", "main", "scala", "graft", "io", "GenLog.scala")
 
   /** `path:line: text` for every line of the Scala sources under
     * `root` (bar `skip`) that contains one of `needles`. */
@@ -61,5 +65,15 @@ class RegistryLintSpec extends AnyFunSuite {
     val hits = scan(Paths.get("src", "main", "scala"), 50, Seq("JavaUtils.deleteRecursively"),
       _.endsWith(StressMain))
     assert(hits.isEmpty, s"forking deletes in main:\n${hits.mkString("\n")}")
+  }
+
+  test("GenLog declares each member def once, and no GenZoned2 twin exists in main") {
+    val Member = """  (?:private\[graft\] |private )?def (\w+).*""".r
+    val names = Files.readAllLines(GenLogSrc).asScala.toList.collect { case Member(n) => n }
+    assert(names.size > 40, s"scan found only ${names.size} GenLog members")
+    val twice = names.groupBy(identity).collect { case (n, ns) if ns.size > 1 => n }
+    assert(twice.isEmpty, s"GenLog defs declared more than once: ${twice.mkString(", ")}")
+    val twins = scan(Paths.get("src", "main", "scala"), 50, Seq("GenZoned2"))
+    assert(twins.isEmpty, s"GenZoned2 in main:\n${twins.mkString("\n")}")
   }
 }
