@@ -192,11 +192,8 @@ object GenLog {
     * Bloom bits (when the table's [[configureStats]] spec asks for
     * them): per-file skipping statistics live IN the commit object —
     * transactional with the data, Delta/Iceberg-style — so a
-    * snapshot's stats can never lag its files. `ts` is the commit wall-clock
-    * timestamp (epoch millis), stamped at claim time; 0 marks a
-    * legacy (pre-timestamp) object, which timestamp resolution then
-    * serves from the commit FILE's modification time (Delta reads
-    * commit-file mtimes for exactly this).
+    * snapshot's stats can never lag its files. `ts` is the commit
+    * wall-clock timestamp (epoch millis), stamped at claim time.
     */
   private[graft] final case class Commit(version: Long, gen: String,
       parts: Seq[String], adds: Seq[String], removes: Seq[String],
@@ -213,42 +210,41 @@ object GenLog {
       blooms: Map[String, Array[Long]] = Map.empty,
       cmap: Option[Map[String, String]] = None)
 
-  /** How a snapshot resolve was served: the live sets, the checkpoint
-    * version it started from (None = replayed from empty), the number
-    * of commit files applied on top (the checkpoint+tail economics,
-    * observable), the known per-file row counts, and the table schema
-    * as of the target.
+  /** A resolved snapshot as of `version` (the commit or checkpoint
+    * that produced it, `gen` its generation): the live data and
+    * deletion-vector sets, the known per-file row counts, the table
+    * schema, per-file skipping stats and Blooms, the column map, and
+    * the gen→version index of every generation resolvable at
+    * `version` — exactly what a checkpoint persists. `checkpointUsed`
+    * and `commitsParsed` record how a resolve was served: the
+    * checkpoint it started from (None = replayed from empty) and the
+    * commit objects applied on top (the checkpoint+tail economics,
+    * observable). [[applied]] is the ONE fold step: every snapshot
+    * resolve and the full-history scan ([[genStates]]) take it.
     */
-  private[graft] final case class Resolution(live: Seq[String],
-      checkpointUsed: Option[Long], commitsParsed: Int,
-      dvLive: Seq[String] = Nil,
+  private[graft] final case class Snapshot(version: Long, gen: String,
+      live: Seq[String] = Nil, dvLive: Seq[String] = Nil,
       rows: Map[String, Long] = Map.empty,
       dvRows: Map[String, Long] = Map.empty,
       schema: Option[String] = None,
       stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
       blooms: Map[String, Array[Long]] = Map.empty,
-      colMap: Map[String, String] = Map.empty)
+      colMap: Map[String, String] = Map.empty,
+      genIndex: Seq[(Long, String)] = Vector.empty,
+      checkpointUsed: Option[Long] = None, commitsParsed: Int = 0) {
 
-  /** A parsed checkpoint: resolved state + the gen→version index of
-    * every generation resolvable at its version.
-    */
-  private final case class CkptState(gen: String, live: Seq[String],
-      dvLive: Seq[String], rows: Map[String, Long],
-      dvRows: Map[String, Long], schema: Option[String],
-      genIndex: Seq[(Long, String)],
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      blooms: Map[String, Array[Long]] = Map.empty,
-      colMap: Map[String, String] = Map.empty)
+    /** This snapshot with commit `c` applied on top. */
+    def applied(c: Commit): Snapshot = Snapshot(c.version, c.gen,
+      (live.toSet -- c.removes ++ c.adds).toSeq.sorted,
+      (dvLive.toSet -- c.dvRemoves ++ c.dvAdds).toSeq.sorted,
+      rows -- c.removes ++ c.rows, dvRows -- c.dvRemoves ++ c.dvRows,
+      c.schema.orElse(schema), stats -- c.removes ++ c.stats,
+      blooms -- c.removes ++ c.blooms, c.cmap.getOrElse(colMap),
+      genIndex :+ (c.version -> c.gen), checkpointUsed, commitsParsed + 1)
+  }
 
-  /** One resolvable generation's full state (vacuum's unit of
-    * retention).
-    */
-  private[graft] final case class GenState(version: Long, gen: String,
-      live: Seq[String], dvLive: Seq[String], rows: Map[String, Long],
-      dvRows: Map[String, Long], schema: Option[String],
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      blooms: Map[String, Array[Long]] = Map.empty,
-      colMap: Map[String, String] = Map.empty)
+  /** The snapshot of a virgin table (version 0, nothing live). */
+  private val Empty = Snapshot(0L, "")
 
   // ----------------------------------------------------------------
   // filesystem plumbing
@@ -258,8 +254,6 @@ object GenLog {
     val p = new Path(loc)
     (p, p.getFileSystem(spark.sparkContext.hadoopConfiguration))
   }
-
-  private def logDirOf(loc: Path) = new Path(loc, LogDir)
 
   private def commitPath(dir: Path, v: Long) =
     new Path(dir, f"$v%020d.commit")
@@ -442,8 +436,7 @@ object GenLog {
 
   private def commitBody(c: Commit): String =
     sentinelBody(s"gen:${c.gen}" +:
-      (Seq(s"op:${c.op}") ++
-        (if (c.ts > 0) Seq(s"ts:${c.ts}") else Nil) ++
+      (Seq(s"op:${c.op}", s"ts:${c.ts}") ++
         (if (c.dataChange) Nil else Seq("nodata:1")) ++
         (if (c.insert) Seq("ins:1") else Nil) ++
         c.schema.map("schema:" + _).toSeq ++
@@ -460,26 +453,32 @@ object GenLog {
         c.cmap.toSeq.flatMap(_.toSeq.sortBy(_._1).map {
           case (l, p) => s"cmap:$l:$p" })))
 
+  /** Every `tag`-prefixed line's rest, in order. */
+  private def fields(lines: Seq[String], tag: String): Seq[String] =
+    lines.collect { case l if l.startsWith(tag) => l.drop(tag.length) }
+
+  /** The first `tag`-prefixed line's rest, if any. */
+  private def field(lines: Seq[String], tag: String): Option[String] =
+    fields(lines, tag).headOption
+
+  /** A line every well-formed object carries: without it the object
+    * is malformed and the read fails loudly.
+    */
+  private def required(lines: Seq[String], tag: String, what: String): String =
+    field(lines, tag).getOrElse(sys.error(s"$what has no ${tag.init} line"))
+
   private def parseCommit(v: Long, content: String): Option[Commit] =
     parseLines(content).map { lines =>
-      Commit(v,
-        lines.collectFirst { case l if l.startsWith("gen:") => l.drop(4) }
-          .getOrElse(sys.error(s"commit $v has no gen line")),
-        lines.collect { case l if l.startsWith("part:") => l.drop(5) },
-        lines.collect { case l if l.startsWith("add:") => l.drop(4) },
-        lines.collect { case l if l.startsWith("rm:") => l.drop(3) },
+      Commit(v, required(lines, "gen:", s"commit $v"), fields(lines, "part:"),
+        fields(lines, "add:"), fields(lines, "rm:"),
         dataChange = !lines.contains("nodata:1"),
-        dvAdds = lines.collect { case l if l.startsWith("dvadd:") => l.drop(6) },
-        dvRemoves = lines.collect { case l if l.startsWith("dvrm:") => l.drop(5) },
+        dvAdds = fields(lines, "dvadd:"), dvRemoves = fields(lines, "dvrm:"),
         insert = lines.contains("ins:1"),
         rows = parseCounted(lines, "rows"),
         dvRows = parseCounted(lines, "dvrows"),
-        schema = lines.collectFirst { case l if l.startsWith("schema:") => l.drop(7) },
-        cdf = lines.collectFirst { case l if l.startsWith("cdf:") => l.drop(4) },
-        op = lines.collectFirst { case l if l.startsWith("op:") => l.drop(3) }
-          .getOrElse("write"),
-        ts = lines.collectFirst { case l if l.startsWith("ts:") => l.drop(3).toLong }
-          .getOrElse(0L),
+        schema = field(lines, "schema:"), cdf = field(lines, "cdf:"),
+        op = field(lines, "op:").getOrElse("write"),
+        ts = required(lines, "ts:", s"commit $v").toLong,
         stats = parseStats(lines),
         blooms = parseBlooms(lines),
         cmap =
@@ -488,74 +487,91 @@ object GenLog {
     }
 
   private def parseCmap(lines: Seq[String]): Map[String, String] =
-    lines.collect { case l if l.startsWith("cmap:") =>
-      val rest = l.drop(5)
+    fields(lines, "cmap:").map { rest =>
       val i = rest.indexOf(':')
       rest.take(i) -> rest.drop(i + 1)
     }.toMap
 
-  private def checkpointBody(gen: String, live: Seq[String],
-      dvLive: Seq[String], rows: Map[String, Long],
-      dvRows: Map[String, Long], schema: Option[String],
-      genIndex: Seq[(Long, String)],
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      blooms: Map[String, Array[Long]] = Map.empty,
-      colMap: Map[String, String] = Map.empty): String = {
-    val (liveSet, dvSet) = (live.toSet, dvLive.toSet)
-    sentinelBody(s"gen:$gen" +:
-      (schema.map("schema:" + _).toSeq ++
-        colMap.toSeq.sortBy(_._1).map { case (l, pn) => s"cmap:$l:$pn" } ++
-        genIndex.sortBy(_._1).map { case (v, g) => s"genver:$v:$g" } ++
-        live.map("live:" + _) ++ dvLive.map("dvlive:" + _) ++
-        countedLines("rows", rows.view.filterKeys(liveSet).toMap) ++
-        countedLines("dvrows", dvRows.view.filterKeys(dvSet).toMap) ++
-        statLines(stats.view.filterKeys(liveSet).toMap) ++
-        bloomLines(blooms.view.filterKeys(liveSet).toMap)))
+  private def checkpointBody(s: Snapshot): String = {
+    val (liveSet, dvSet) = (s.live.toSet, s.dvLive.toSet)
+    sentinelBody(s"gen:${s.gen}" +:
+      (s.schema.map("schema:" + _).toSeq ++
+        s.colMap.toSeq.sortBy(_._1).map { case (l, pn) => s"cmap:$l:$pn" } ++
+        s.genIndex.sortBy(_._1).map { case (v, g) => s"genver:$v:$g" } ++
+        s.live.map("live:" + _) ++ s.dvLive.map("dvlive:" + _) ++
+        countedLines("rows", s.rows.view.filterKeys(liveSet).toMap) ++
+        countedLines("dvrows", s.dvRows.view.filterKeys(dvSet).toMap) ++
+        statLines(s.stats.view.filterKeys(liveSet).toMap) ++
+        bloomLines(s.blooms.view.filterKeys(liveSet).toMap)))
   }
 
-  private def parseCheckpoint(content: String): Option[CkptState] =
+  private def parseCheckpoint(v: Long, content: String): Option[Snapshot] =
     parseLines(content).map { lines =>
-      CkptState(
-        lines.collectFirst { case l if l.startsWith("gen:") => l.drop(4) }
-          .getOrElse(sys.error("checkpoint has no gen line")),
-        lines.collect { case l if l.startsWith("live:") => l.drop(5) },
-        lines.collect { case l if l.startsWith("dvlive:") => l.drop(7) },
-        parseCounted(lines, "rows"),
-        parseCounted(lines, "dvrows"),
-        lines.collectFirst { case l if l.startsWith("schema:") => l.drop(7) },
-        lines.collect { case l if l.startsWith("genver:") =>
-          val rest = l.drop(7)
+      val gen = required(lines, "gen:", s"checkpoint $v")
+      required(lines, "genver:", s"checkpoint $v")
+      Snapshot(v, gen, fields(lines, "live:").sorted,
+        fields(lines, "dvlive:").sorted,
+        parseCounted(lines, "rows"), parseCounted(lines, "dvrows"),
+        field(lines, "schema:"), parseStats(lines), parseBlooms(lines),
+        parseCmap(lines),
+        fields(lines, "genver:").map { rest =>
           val i = rest.indexOf(':')
           (rest.take(i).toLong, rest.drop(i + 1))
-        },
-        parseStats(lines),
-        parseBlooms(lines),
-        parseCmap(lines))
+        }.toVector,
+        checkpointUsed = Some(v))
     }
 
   // ----------------------------------------------------------------
   // log state
   // ----------------------------------------------------------------
 
-  /** One listing of the log directory: commit versions and checkpoint
-    * versions present. Temps (crashed writers pre-claim) are ignored
-    * — readers never mutate the log.
+  /** One listing of a table's log directory: the commit and
+    * checkpoint versions present. Temps (crashed writers pre-claim)
+    * are ignored — readers never mutate the log.
     */
-  private def listLog(fs: FileSystem, dir: Path): (Seq[Long], Seq[Long]) = {
-    if (!fs.exists(dir)) return (Nil, Nil)
-    val names = fs.listStatus(dir).toSeq.map(_.getPath.getName)
-    def versionsOf(suffix: String) = names
-      .filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong).sorted
-    (versionsOf(".commit"), versionsOf(".checkpoint"))
+  private final case class Log(loc: String, fs: FileSystem, dir: Path,
+                               commits: Seq[Long], checkpoints: Seq[Long]) {
+
+    def latest: Long = (commits ++ checkpoints).maxOption.getOrElse(0L)
+
+    def commit(v: Long): Commit =
+      parseCommit(v, readText(fs, commitPath(dir, v)))
+        .getOrElse(sys.error(s"torn commit object at version $v in $dir"))
+
+    def checkpoint(v: Long): Snapshot =
+      parseCheckpoint(v, readText(fs, checkpointPath(dir, v)))
+        .getOrElse(sys.error(s"torn checkpoint at version $v in $dir"))
+
+    /** The committed version of `gen`, O(tail): the commit tail after
+      * the latest checkpoint, then that checkpoint's gen→version
+      * index. None if absent or vacuumed past the index's memory.
+      */
+    def versionOf(gen: String): Option[Long] = {
+      val ck = checkpoints.lastOption
+      commits.filter(_ > ck.getOrElse(0L)).reverse
+        .collectFirst { case v if commit(v).gen == gen => v }
+        .orElse(ck.flatMap(checkpoint(_).genIndex
+          .collectFirst { case (v, g) if g == gen => v }))
+    }
+
+    def versionOrThrow(gen: String): Long = versionOf(gen).getOrElse(
+      throw new IllegalArgumentException(
+        s"generation '$gen' not in $loc/$LogDir (vacuumed or never committed)"))
   }
 
-  private def readCommit(fs: FileSystem, dir: Path, v: Long): Commit =
-    parseCommit(v, readText(fs, commitPath(dir, v)))
-      .getOrElse(sys.error(s"torn commit object at version $v in $dir"))
+  private def listLog(loc: String, fs: FileSystem, dir: Path): Log = {
+    val names =
+      if (!fs.exists(dir)) Nil else fs.listStatus(dir).toSeq.map(_.getPath.getName)
+    def versionsOf(suffix: String) = names
+      .filter(_.endsWith(suffix)).map(_.stripSuffix(suffix).toLong).sorted
+    Log(loc, fs, dir, versionsOf(".commit"), versionsOf(".checkpoint"))
+  }
 
-  private def readCheckpointState(fs: FileSystem, dir: Path, v: Long): CkptState =
-    parseCheckpoint(readText(fs, checkpointPath(dir, v)))
-      .getOrElse(sys.error(s"torn checkpoint at version $v in $dir"))
+  /** THE way to the log: one fresh listing of `loc`'s log directory. */
+  private def logOf(spark: SparkSession, loc: String): Log = {
+    val (p, fs) = fsOf(spark, loc)
+    listLog(loc, fs, new Path(p, LogDir))
+  }
 
   /** Ordered full state for every RESOLVABLE generation: a single
     * forward pass from the earliest resolvable point (commit 1, or
@@ -564,55 +580,19 @@ object GenLog {
     * listing; [[resolveGen]] is the O(interval) path a single
     * snapshot read takes.
     */
-  private[graft] def genStates(spark: SparkSession, loc: String): Seq[GenState] = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    if (commits.isEmpty && checkpoints.isEmpty) return Nil
-    val out = Seq.newBuilder[GenState]
-    var live = Set.empty[String]
-    var dvLive = Set.empty[String]
-    var rows = Map.empty[String, Long]
-    var dvRows = Map.empty[String, Long]
-    var schema: Option[String] = None
-    var stats = Map.empty[String, Map[String, (Long, Long)]]
-    var blooms = Map.empty[String, Array[Long]]
-    var colMap = Map.empty[String, String]
-    var from = 0L // replay commits > from
-    if (!commits.headOption.contains(1L)) {
-      // history was truncated (vacuum): start at the earliest
-      // surviving checkpoint — the retention cut's resolved state
-      val start = checkpoints.headOption.getOrElse(return Nil)
-      val ck = readCheckpointState(fs, dir, start)
-      live = ck.live.toSet
-      dvLive = ck.dvLive.toSet
-      rows = ck.rows
-      dvRows = ck.dvRows
-      schema = ck.schema
-      stats = ck.stats
-      blooms = ck.blooms
-      colMap = ck.colMap
-      from = start
-      out += GenState(start, ck.gen, ck.live.sorted, ck.dvLive.sorted,
-        rows, dvRows, schema, stats, blooms, colMap)
-    }
-    val tail = commits.filter(_ > from)
+  private[graft] def genStates(spark: SparkSession, loc: String): Seq[Snapshot] = {
+    val log = logOf(spark, loc)
+    // history truncated by a vacuum: start at the earliest surviving
+    // checkpoint — the retention cut's resolved state
+    val start =
+      if (log.commits.headOption.contains(1L)) None
+      else Some(log.checkpoint(log.checkpoints.headOption.getOrElse(return Nil)))
+    val from = start.fold(0L)(_.version)
+    val tail = log.commits.filter(_ > from)
     require(tail == ((from + 1) to tail.lastOption.getOrElse(from)),
-      s"broken commit chain in $dir: have $tail after version $from")
-    tail.foreach { v =>
-      val c = readCommit(fs, dir, v)
-      live = live -- c.removes ++ c.adds
-      dvLive = dvLive -- c.dvRemoves ++ c.dvAdds
-      rows = rows -- c.removes ++ c.rows
-      dvRows = dvRows -- c.dvRemoves ++ c.dvRows
-      schema = c.schema.orElse(schema)
-      stats = stats -- c.removes ++ c.stats
-      blooms = blooms -- c.removes ++ c.blooms
-      colMap = c.cmap.getOrElse(colMap)
-      out += GenState(v, c.gen, live.toSeq.sorted, dvLive.toSeq.sorted,
-        rows, dvRows, schema, stats, blooms, colMap)
-    }
-    out.result()
+      s"broken commit chain in ${log.dir}: have $tail after version $from")
+    start.toSeq ++
+      tail.scanLeft(start.getOrElse(Empty))((s, v) => s.applied(log.commit(v))).tail
   }
 
   /** All resolvable generations, oldest first: (gen id, live files).
@@ -622,37 +602,8 @@ object GenLog {
   def generations(spark: SparkSession, loc: String): Seq[(String, Seq[String])] =
     genStates(spark, loc).map(s => (s.gen, s.live))
 
-  /** The committed version of `gen`, O(tail): the latest checkpoint's
-    * gen→version index plus the commit tail after it. Falls back to
-    * the full-log scan for pre-index (legacy) checkpoints. None if
-    * absent or vacuumed past the index's memory.
-    */
-  private def versionOf(fs: FileSystem, dir: Path, commits: Seq[Long],
-                        checkpoints: Seq[Long], gen: String): Option[Long] = {
-    def tailScan(after: Long): Option[Long] =
-      commits.filter(_ > after).reverse.collectFirst {
-        case v if readCommit(fs, dir, v).gen == gen => v
-      }
-    checkpoints.lastOption match {
-      case Some(cv) =>
-        val ck = readCheckpointState(fs, dir, cv)
-        if (ck.genIndex.nonEmpty)
-          tailScan(cv).orElse(
-            ck.genIndex.collectFirst { case (v, g) if g == gen => v })
-        else // legacy checkpoint: scan checkpoints then all commits
-          checkpoints.reverse.collectFirst {
-            case v if readCheckpointState(fs, dir, v).gen == gen => v
-          }.orElse(tailScan(0L))
-      case None => tailScan(0L)
-    }
-  }
-
-  def contains(spark: SparkSession, loc: String, gen: String): Boolean = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    versionOf(fs, dir, commits, checkpoints, gen).isDefined
-  }
+  def contains(spark: SparkSession, loc: String, gen: String): Boolean =
+    versionOfGen(spark, loc, gen).isDefined
 
   /** Resolve ONE generation checkpoint+tail: locate its version via
     * the gen index (O(tail)), start from the nearest checkpoint at or
@@ -663,59 +614,29 @@ object GenLog {
     * Throws for a gen id that is absent or vacuumed.
     */
   private[graft] def resolveGen(spark: SparkSession, loc: String,
-                                gen: String): Resolution = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    val target = versionOf(fs, dir, commits, checkpoints, gen)
-      .getOrElse(throw new IllegalArgumentException(
-        s"generation '$gen' not in $loc/$LogDir (vacuumed or never committed)"))
+                                gen: String): Snapshot = {
+    val log = logOf(spark, loc)
+    val target = log.versionOrThrow(gen)
     val earliest =
-      if (commits.headOption.contains(1L)) 1L
-      else checkpoints.headOption.getOrElse(Long.MaxValue)
+      if (log.commits.headOption.contains(1L)) 1L
+      else log.checkpoints.headOption.getOrElse(Long.MaxValue)
     if (target < earliest)
       throw new IllegalArgumentException(
         s"generation '$gen' (v$target) predates the log's surviving " +
           s"history in $loc/$LogDir — vacuumed")
-    resolveVersion(fs, dir, commits, checkpoints, target)
+    resolveVersion(log, target)
   }
 
-  private def resolveVersion(fs: FileSystem, dir: Path, commits: Seq[Long],
-                             checkpoints: Seq[Long], target: Long): Resolution = {
-    val ck = checkpoints.filter(_ <= target).lastOption
-    val tail = commits.filter(v => v > ck.getOrElse(0L) && v <= target)
+  private def resolveVersion(log: Log, target: Long): Snapshot = {
+    val ck = log.checkpoints.filter(_ <= target).lastOption
+    val tail = log.commits.filter(v => v > ck.getOrElse(0L) && v <= target)
     val expected = (ck.getOrElse(0L) + 1) to target
-    require(ck.nonEmpty || commits.headOption.contains(1L),
-      s"version $target predates the log's surviving history in $dir")
+    require(ck.nonEmpty || log.commits.headOption.contains(1L),
+      s"version $target predates the log's surviving history in ${log.dir}")
     require(tail == expected,
-      s"broken commit chain resolving version $target in $dir: " +
+      s"broken commit chain resolving version $target in ${log.dir}: " +
         s"have $tail, need $expected")
-    var (live, dvLive, rows, dvRows, schema, stats, blooms, colMap) = ck match {
-      case Some(cv) =>
-        val c = readCheckpointState(fs, dir, cv)
-        (c.live.toSet, c.dvLive.toSet, c.rows, c.dvRows, c.schema,
-          c.stats, c.blooms, c.colMap)
-      case None =>
-        (Set.empty[String], Set.empty[String],
-          Map.empty[String, Long], Map.empty[String, Long],
-          Option.empty[String],
-          Map.empty[String, Map[String, (Long, Long)]],
-          Map.empty[String, Array[Long]],
-          Map.empty[String, String])
-    }
-    tail.foreach { v =>
-      val c = readCommit(fs, dir, v)
-      live = live -- c.removes ++ c.adds
-      dvLive = dvLive -- c.dvRemoves ++ c.dvAdds
-      rows = rows -- c.removes ++ c.rows
-      dvRows = dvRows -- c.dvRemoves ++ c.dvRows
-      schema = c.schema.orElse(schema)
-      stats = stats -- c.removes ++ c.stats
-      blooms = blooms -- c.removes ++ c.blooms
-      colMap = c.cmap.getOrElse(colMap)
-    }
-    Resolution(live.toSeq.sorted, ck, tail.size, dvLive.toSeq.sorted,
-      rows, dvRows, schema, stats, blooms, colMap)
+    tail.foldLeft(ck.fold(Empty)(log.checkpoint))((s, v) => s.applied(log.commit(v)))
   }
 
   // ----------------------------------------------------------------
@@ -742,30 +663,27 @@ object GenLog {
     */
   private def commitDelta(spark: SparkSession, loc: String, c: Commit,
                           snapshotVersion: Long): Long = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
     var attempt = snapshotVersion + 1
     while (true) {
-      val (commits, checkpoints) = listLog(fs, dir)
-      val latest = (commits ++ checkpoints).maxOption.getOrElse(0L)
+      val log = logOf(spark, loc)
+      val latest = log.latest
       if (latest >= attempt) {
         // commits landed since the snapshot (or the last loop):
         // examine every version in [attempt, latest]
         val range = attempt to latest
-        val missing = range.filterNot(commits.contains)
+        val missing = range.filterNot(log.commits.contains)
         if (missing.nonEmpty) {
           // vacuum truncated part of the race window — disjointness
           // is unprovable against vanished deltas. Skip if our own
           // gen survives in the index; abort otherwise, never guess.
-          versionOf(fs, dir, commits, checkpoints, c.gen)
-            .foreach(v => return v)
+          log.versionOf(c.gen).foreach(v => return v)
           throw new java.util.ConcurrentModificationException(
             s"generation '${c.gen}' was staged against v$snapshotVersion " +
               s"but the log's history was vacuumed past it (versions " +
               s"${missing.mkString(",")} gone) — recompute against the " +
               "current snapshot and retry")
         }
-        val landed = range.map(readCommit(fs, dir, _))
+        val landed = range.map(log.commit)
         landed.find(_.gen == c.gen) match {
           case Some(winner) => return winner.version // replayed batch
           case None =>
@@ -781,11 +699,11 @@ object GenLog {
         }
         attempt = latest + 1 // delta still valid: retry at the head
       }
-      if (installIfAbsent(fs, dir,
+      if (installIfAbsent(log.fs, log.dir,
           commitBody(c.copy(version = attempt,
             ts = System.currentTimeMillis())),
-          commitPath(dir, attempt))) {
-        maybeCheckpoint(fs, dir, attempt, c.gen)
+          commitPath(log.dir, attempt))) {
+        maybeCheckpoint(spark, loc, attempt)
         return attempt
       }
       // lost the claim race: loop re-lists and re-examines
@@ -793,64 +711,25 @@ object GenLog {
     sys.error("unreachable")
   }
 
-  /** The gen→version index of every resolvable generation at or below
-    * `v`: the prior checkpoint's index plus the commit tail. A legacy
-    * (pre-index) prior checkpoint triggers one full scan; every
-    * checkpoint after that carries the index forward incrementally.
-    */
-  private def genIndexUpTo(fs: FileSystem, dir: Path, commits: Seq[Long],
-                           checkpoints: Seq[Long], v: Long): Seq[(Long, String)] = {
-    val prior = checkpoints.filter(_ < v).lastOption
-    val base: Seq[(Long, String)] = prior match {
-      case Some(cv) =>
-        val ck = readCheckpointState(fs, dir, cv)
-        if (ck.genIndex.nonEmpty) ck.genIndex
-        else { // legacy: reconstruct from surviving objects once
-          val ckGens = checkpoints.filter(_ <= cv)
-            .map(x => (x, readCheckpointState(fs, dir, x).gen))
-          val cGens = commits.filter(_ <= cv)
-            .map(x => (x, readCommit(fs, dir, x).gen))
-          (ckGens ++ cGens).distinct.sortBy(_._1)
-        }
-      case None => Nil
-    }
-    base ++ commits.filter(x => x > prior.getOrElse(0L) && x <= v)
-      .map(x => (x, readCommit(fs, dir, x).gen))
-  }
-
   /** Write a checkpoint at `v` when the interval says so. Resolved
     * from disk (checkpoint+tail), NOT from the writer's in-memory
     * state — a disjoint concurrent commit may have landed between the
-    * writer's snapshot and its claim. Claim-if-absent: a racing
-    * checkpointer's duplicate is dropped.
+    * writer's snapshot and its claim. The resolve carries the prior
+    * checkpoint's gen→version index forward through the tail.
+    * Claim-if-absent: a racing checkpointer's duplicate is dropped.
     */
-  private def maybeCheckpoint(fs: FileSystem, dir: Path, v: Long,
-                              gen: String): Unit =
+  private def maybeCheckpoint(spark: SparkSession, loc: String, v: Long): Unit =
     if (v % CheckpointInterval == 0) {
-      val (commits, checkpoints) = listLog(fs, dir)
-      val r = resolveVersion(fs, dir, commits, checkpoints, v)
-      val idx = genIndexUpTo(fs, dir, commits, checkpoints, v)
-      installIfAbsent(fs, dir,
-        checkpointBody(gen, r.live, r.dvLive, r.rows, r.dvRows, r.schema, idx,
-          r.stats, r.blooms, r.colMap),
-        checkpointPath(dir, v))
+      val log = logOf(spark, loc)
+      installIfAbsent(log.fs, log.dir, checkpointBody(resolveVersion(log, v)),
+        checkpointPath(log.dir, v))
       ()
     }
 
-  /** Latest (version, resolution), or (0, empty) for a virgin table. */
-  private def latestFull(spark: SparkSession, loc: String): (Long, Resolution) = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    val latest = (commits ++ checkpoints).maxOption.getOrElse(0L)
-    if (latest == 0L) (0L, Resolution(Nil, None, 0))
-    else (latest, resolveVersion(fs, dir, commits, checkpoints, latest))
-  }
-
-  /** Latest (version, live set), or (0, empty) for a virgin table. */
-  private def latestState(spark: SparkSession, loc: String): (Long, Seq[String]) = {
-    val (v, r) = latestFull(spark, loc)
-    (v, r.live)
+  /** The latest snapshot, or [[Empty]] (version 0) for a virgin table. */
+  private def latestFull(spark: SparkSession, loc: String): Snapshot = {
+    val log = logOf(spark, loc)
+    if (log.latest == 0L) Empty else resolveVersion(log, log.latest)
   }
 
   // ----------------------------------------------------------------
@@ -976,7 +855,7 @@ object GenLog {
     (cols ++ bloomCol).foreach(c => require(!c.contains(":") && !c.contains("\n"),
       s"stats column name must be colon- and newline-free: '$c'"))
     val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
+    val dir = new Path(p, LogDir)
     fs.mkdirs(dir)
     val out = fs.create(new Path(dir, StatsSpecFile), true)
     try out.write((s"cols:${cols.mkString(",")}\n" +
@@ -986,7 +865,7 @@ object GenLog {
 
   private def statsSpecOf(spark: SparkSession, loc: String): Option[StatsSpec] = {
     val (p, fs) = fsOf(spark, loc)
-    val f = new Path(logDirOf(p), StatsSpecFile)
+    val f = new Path(p, s"$LogDir/$StatsSpecFile")
     if (!fs.exists(f)) return None
     val lines = readText(fs, f).split("\n").filter(_.nonEmpty)
     Some(StatsSpec(
@@ -1011,8 +890,7 @@ object GenLog {
       Map.empty[String, Array[Long]])
     if (added.isEmpty) return empty
     val spec = statsSpecOf(spark, loc).getOrElse(return empty)
-    val df = spark.read.option("basePath", loc)
-      .option("mergeSchema", "true").parquet(added: _*)
+    val df = morScan(spark, added, Nil, Map.empty, Some(loc))
     (spec.cols ++ spec.bloomCol).foreach(c =>
       require(df.columns.contains(c),
         s"stats column '$c' is not in the batch schema at $loc"))
@@ -1032,7 +910,7 @@ object GenLog {
     val rows = df.groupBy(input_file_name().as("__f"))
       .agg(aggs.head, aggs.tail: _*).collect()
     val stats = rows.map { r =>
-      val f = new Path(new java.net.URI(r.getString(0))).toUri.getPath
+      val f = plainPath(r.getString(0))
       f -> spec.cols.zipWithIndex.map { case (c, i) =>
         require(!r.isNullAt(1 + 2 * i) && !r.isNullAt(2 + 2 * i),
           s"file $f has an all-null (or non-integral) stats column '$c' — " +
@@ -1043,10 +921,19 @@ object GenLog {
     val blooms =
       if (spec.bloomCol.isEmpty) Map.empty[String, Array[Long]]
       else rows.map { r =>
-        val f = new Path(new java.net.URI(r.getString(0))).toUri.getPath
+        val f = plainPath(r.getString(0))
         f -> r.getSeq[Long](1 + 2 * spec.cols.size).toArray
       }.toMap
     (stats, blooms)
+  }
+
+  /** The tail every file-writing verb ends with: `c` with its added
+    * files' footer row counts and the table's configured skipping
+    * statistics filled in, ready for [[commitDelta]].
+    */
+  private def withAddStats(spark: SparkSession, loc: String, c: Commit): Commit = {
+    val (st, bl) = computeFileStats(spark, loc, c.adds)
+    c.copy(rows = footerRows(spark, c.adds), stats = st, blooms = bl)
   }
 
   /** Persist a commit's change rows (CDF) under `_changes/<token>/`
@@ -1094,33 +981,55 @@ object GenLog {
     */
   private[graft] def latestColMap(spark: SparkSession,
                                   loc: String): Map[String, String] =
-    latestFull(spark, loc)._2.colMap
+    latestFull(spark, loc).colMap
 
-  private[graft] def renameToLogical(df: DataFrame,
-                                     colMap: Map[String, String]): DataFrame =
-    toLogical(df, colMap)
-
-  /** Read `files` through the `dvLive` deletion vectors: the
-    * MERGE-ON-READ view every row-level operation must run on — a
-    * copy-on-write rewrite computed from the RAW files would carry
-    * MoR-deleted rows into the new files and resurrect them (the old
-    * file leaves the live set, so its vectors go inert). The metadata
-    * join columns stay as __graft_dv_f/__graft_dv_i (callers drop
-    * them); basePath recovers the partition column.
+  /** The row-position columns [[morScan]] keeps on request: each
+    * row's data file and its row index inside that file — exactly
+    * what a deletion-vector sidecar stores.
     */
-  private def morView(spark: SparkSession, loc: String, files: Seq[String],
-                      dvLive: Seq[String],
-                      colMap: Map[String, String] = Map.empty): DataFrame = {
-    val data = toLogical(spark.read.option("basePath", loc)
-        .option("mergeSchema", "true").parquet(files: _*), colMap)
-      .withColumn("__graft_dv_f", col("_metadata.file_path"))
-      .withColumn("__graft_dv_i", col("_metadata.row_index"))
-    if (dvLive.isEmpty) data
-    else data.join(spark.read.parquet(dvLive: _*)
-      .select(col("file_path").as("__graft_dv_f"),
-        col("row_index").as("__graft_dv_i")),
-      Seq("__graft_dv_f", "__graft_dv_i"), "left_anti")
+  private final val PosFile = "__graft_dv_f"
+  private final val PosRow = "__graft_dv_i"
+
+  /** THE merge-on-read reader: `files` merged across evolving schemas
+    * (q206 — widened columns read as NULL where history predates
+    * them), renamed physical→logical through `colMap`, and
+    * anti-joined against the `dvLive` deletion vectors' (file, row)
+    * positions — deleted rows vanish at read time, no data file is
+    * touched, and a vector row whose file left the live set matches
+    * nothing (inert until vacuum). Every read of table rows goes
+    * through here: the snapshot reads, the append feeds, and every
+    * rewrite — a copy-on-write rewrite computed from the RAW files
+    * would carry MoR-deleted rows into the new files and resurrect
+    * them (the old file leaves the live set, so its vectors go
+    * inert). `basePath` (the table root) recovers the partition
+    * columns from the directories: rewrites pass it, the public reads
+    * do not. With `positions = true` the frame keeps each row's
+    * [[PosFile]]/[[PosRow]] columns.
+    */
+  private[graft] def morScan(spark: SparkSession, files: Seq[String],
+                             dvLive: Seq[String], colMap: Map[String, String],
+                             basePath: Option[String] = None,
+                             positions: Boolean = false): DataFrame = {
+    val data = toLogical(basePath.fold(spark.read)(spark.read.option("basePath", _))
+      .option("mergeSchema", "true").parquet(files: _*), colMap)
+    if (dvLive.isEmpty && !positions) return data
+    val withPos = data.withColumn(PosFile, col("_metadata.file_path"))
+      .withColumn(PosRow, col("_metadata.row_index"))
+    val live =
+      if (dvLive.isEmpty) withPos
+      else withPos.join(spark.read.parquet(dvLive: _*)
+        .select(col("file_path").as(PosFile), col("row_index").as(PosRow)),
+        Seq(PosFile, PosRow), "left_anti")
+    if (positions) live else live.drop(PosFile, PosRow)
   }
+
+  /** A scan's file URI in the log's plain-path form (URI-decoded). */
+  private def plainPath(uri: String): String =
+    new Path(new java.net.URI(uri)).toUri.getPath
+
+  /** The distinct files named by `df`'s one path column, sorted. */
+  private def distinctFiles(df: DataFrame): Seq[String] =
+    df.distinct().collect().map(r => plainPath(r.getString(0))).toSeq.sorted
 
   /** Validate a batch schema against the table's recorded one BEFORE
     * anything lands. Name+type map comparison (order- and
@@ -1176,12 +1085,9 @@ object GenLog {
     * the O(batch)-sized commit contends. File attribution is exact
     * ([[writeAttributed]]), so stagings may physically interleave.
     */
-  private[graft] final case class Staged(gen: String, parts: Seq[String],
-      adds: Seq[String], removes: Seq[String], snapshotVersion: Long,
-      rows: Map[String, Long] = Map.empty,
-      schema: Option[String] = None, cdf: Option[String] = None,
-      stats: Map[String, Map[String, (Long, Long)]] = Map.empty,
-      blooms: Map[String, Array[Long]] = Map.empty)
+  private[graft] final case class Staged(commit: Commit, snapshotVersion: Long) {
+    def adds: Seq[String] = commit.adds
+  }
 
   /** Phase one of [[appendBatch]]: validate the batch schema, write
     * the batch's data files (staged + renamed — exact attribution),
@@ -1200,7 +1106,7 @@ object GenLog {
                                  cdf: Boolean = false): Staged = {
     validateGen(gen)
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, prev) = latestFull(spark, loc)
+    val prev = latestFull(spark, loc)
     val schemaLine = enforceSchema(prev.schema, df.schema, evolve, gen)
     // the batch arrives in LOGICAL names; files store PHYSICAL ones
     // (the column map's contract — renames never rewrite data)
@@ -1222,7 +1128,6 @@ object GenLog {
         "a partition-scheme change must go through recluster; nothing of " +
         "this batch is visible (its staged files await vacuum)")
     val removed = liveTokens.collect { case (f, t) if parts.contains(t) => f }
-    val rows = footerRows(spark, added)
     val cdfTok =
       if (!cdf) None
       else writeChanges(spark, loc,
@@ -1231,15 +1136,12 @@ object GenLog {
           // preimages through the vectors: an MoR-deleted row of a
           // restated file was not logically in the table and must not
           // appear as a delete event
-          else Some(morView(spark, loc, removed, prev.dvLive, prev.colMap)
-            .drop("__graft_dv_f", "__graft_dv_i")),
+          else Some(morScan(spark, removed, prev.dvLive, prev.colMap, Some(loc))),
         inserts =
           if (added.isEmpty) None
-          else Some(toLogical(spark.read.option("basePath", loc)
-            .option("mergeSchema", "true").parquet(added: _*), prev.colMap)))
-    val (st, bl) = computeFileStats(spark, loc, added)
-    Staged(gen, parts, added, removed, snapVer, rows, schemaLine, cdfTok,
-      st, bl)
+          else Some(morScan(spark, added, Nil, prev.colMap, Some(loc))))
+    Staged(withAddStats(spark, loc, Commit(0L, gen, parts, added, removed,
+      schema = schemaLine, cdf = cdfTok, op = "append")), prev.version)
   }
 
   /** Phase two: install a staged generation's commit, with the object
@@ -1249,11 +1151,7 @@ object GenLog {
     */
   private[graft] def commitStaged(spark: SparkSession, loc: String,
                                   s: Staged): Long =
-    commitDelta(spark, loc,
-      Commit(0L, s.gen, s.parts, s.adds, s.removes,
-        rows = s.rows, schema = s.schema, cdf = s.cdf,
-        op = "append", stats = s.stats, blooms = s.blooms),
-      s.snapshotVersion)
+    commitDelta(spark, loc, s.commit, s.snapshotVersion)
 
   /** Phase two for an INSERT-kind staged delta (the [[appendInsert]]
     * semantics: declares its partitions so restaters conflict, but
@@ -1268,11 +1166,8 @@ object GenLog {
     */
   private[graft] def commitStagedInsert(spark: SparkSession, loc: String,
                                         s: Staged): Long =
-    commitDelta(spark, loc,
-      Commit(0L, s.gen, s.parts, s.adds, Nil, insert = true,
-        rows = s.rows, schema = s.schema, cdf = None,
-        op = "insert", stats = s.stats, blooms = s.blooms),
-      s.snapshotVersion)
+    commitDelta(spark, loc, s.commit.copy(removes = Nil, insert = true,
+      cdf = None, op = "insert"), s.snapshotVersion)
 
   /** Commit `df` as generation `gen`: append its files, mark the
     * previous generation's files for the RESTATED partitions removed,
@@ -1350,19 +1245,17 @@ object GenLog {
                 df: DataFrame, partCols: Seq[String]): Unit = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
-    val (snapVer, prev) = latestFull(spark, loc)
+    val prev = latestFull(spark, loc)
     val added = writeAttributed(spark, loc, df, partCols)
     val schemaLine =
       if (prev.schema.contains(df.schema.json)) None else Some(df.schema.json)
-    val (st, bl) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
+    commitDelta(spark, loc, withAddStats(spark, loc,
       Commit(0L, gen, Seq(AllParts), added, prev.live, dataChange = false,
-        rows = footerRows(spark, added), schema = schemaLine,
-        op = "recluster", stats = st, blooms = bl,
+        schema = schemaLine, op = "recluster",
         // the rewrite's files store the frame's own names: the map
         // resets to identity (a full rewrite defines the table)
-        cmap = if (prev.colMap.isEmpty) None else Some(Map.empty)),
-      snapVer)
+        cmap = if (prev.colMap.isEmpty) None else Some(Map.empty))),
+      prev.version)
     ()
   }
 
@@ -1394,7 +1287,7 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, prev) = latestFull(spark, loc)
+    val prev = latestFull(spark, loc)
     val schemaLine = enforceSchema(prev.schema, df.schema, evolve = false, gen)
     val added = writeAttributed(spark, loc, toPhysical(df, prev.colMap),
       partCols.map(physicalName(_, prev.colMap)))
@@ -1402,13 +1295,10 @@ object GenLog {
     val cdfTok =
       if (!cdf || added.isEmpty) None
       else writeChanges(spark, loc, deletes = None,
-        inserts = Some(toLogical(spark.read.option("basePath", loc)
-          .option("mergeSchema", "true").parquet(added: _*), prev.colMap)))
-    val (st, bl) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
-      Commit(0L, gen, parts, added, Nil, insert = true,
-        rows = footerRows(spark, added), schema = schemaLine, cdf = cdfTok,
-        op = "insert", stats = st, blooms = bl), snapVer)
+        inserts = Some(morScan(spark, added, Nil, prev.colMap, Some(loc))))
+    commitDelta(spark, loc, withAddStats(spark, loc,
+      Commit(0L, gen, parts, added, Nil, insert = true, schema = schemaLine,
+        cdf = cdfTok, op = "insert")), prev.version)
     ()
   }
 
@@ -1434,20 +1324,16 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     require(st.live.nonEmpty, s"mergeByKey on an empty table at $loc — use appendBatch")
     val keys = updates.select(keyCols.map(col): _*).distinct()
     // everything runs on the MoR VIEW: a raw-file read would count
     // MoR-deleted rows as matches, carry them into the rewrite, and
     // resurrect them when the old file (and with it the vectors'
     // reach) leaves the live set
-    val view = morView(spark, loc, st.live, st.dvLive, st.colMap)
-    val affected = view.join(keys, keyCols, "left_semi")
-      .select(col("__graft_dv_f")).distinct()
-      .collect().map(r => new Path(new java.net.URI(r.getString(0)))
-        .toUri.getPath).toSeq.sorted
-    def affectedView() = morView(spark, loc, affected, st.dvLive, st.colMap)
-      .drop("__graft_dv_f", "__graft_dv_i")
+    val affected = distinctFiles(morScan(spark, st.live, st.dvLive, st.colMap,
+      Some(loc), positions = true).join(keys, keyCols, "left_semi").select(col(PosFile)))
+    def affectedView() = morScan(spark, affected, st.dvLive, st.colMap, Some(loc))
     // surviving rows of the affected files (cast-aligned: the
     // basePath read infers the partition column's type from the
     // directory names, the updates frame carries the writer's)
@@ -1478,11 +1364,9 @@ object GenLog {
       partCols.map(physicalName(_, st.colMap)))
     val parts = (added.map(partTokenOf(root, _)) ++
       affected.map(partTokenOf(root, _))).distinct.sorted
-    val (stM, blM) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
-      Commit(0L, gen, parts, added, affected,
-        rows = footerRows(spark, added), cdf = cdfTok,
-        op = "merge", stats = stM, blooms = blM), snapVer)
+    commitDelta(spark, loc, withAddStats(spark, loc,
+      Commit(0L, gen, parts, added, affected, cdf = cdfTok, op = "merge")),
+      st.version)
     ()
   }
 
@@ -1501,14 +1385,16 @@ object GenLog {
     validateGen(gen)
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     if (contains(spark, loc, gen)) return
-    val (snapVer, live) = latestState(spark, loc)
+    val st = latestFull(spark, loc)
     val escaped = org.apache.spark.sql.catalyst.catalog
       .ExternalCatalogUtils.escapePathName(partValue)
-    val target = live.filter(_.contains(s"/$partCol=$escaped/"))
+    val target = st.live.filter(_.contains(s"/$partCol=$escaped/"))
     require(target.nonEmpty, s"no live files under $partCol=$escaped at $loc")
+    // the MoR view under PHYSICAL names (the partition column is a
+    // physical directory name): the rewrite must not resurrect rows
+    // the live deletion vectors hide
     val added = writeAttributed(spark, loc,
-      spark.read.option("basePath", loc).option("mergeSchema", "true")
-        .parquet(target: _*),
+      morScan(spark, target, st.dvLive, Map.empty, Some(loc)),
       Seq(partCol), numFiles = Some(numFiles))
     // declare the STRUCTURAL tuple tokens of the touched files (on a
     // multi-level table, `day_k=X` alone would not string-match a
@@ -1516,11 +1402,9 @@ object GenLog {
     // rule in tokensOverlap needs the real tokens on both sides)
     val (root, _) = fsOf(spark, loc)
     val parts = (target ++ added).map(partTokenOf(root, _)).distinct.sorted
-    val (st, bl) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
-      Commit(0L, gen, parts, added, target,
-        dataChange = false, rows = footerRows(spark, added),
-        op = "optimize", stats = st, blooms = bl), snapVer)
+    commitDelta(spark, loc, withAddStats(spark, loc,
+      Commit(0L, gen, parts, added, target, dataChange = false,
+        op = "optimize")), st.version)
     ()
   }
 
@@ -1542,20 +1426,18 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, live) = latestState(spark, loc)
+    val st = latestFull(spark, loc)
     require(target.nonEmpty, "replaceFiles needs at least one target file")
-    require(target.forall(live.contains),
+    require(target.forall(st.live.contains),
       s"replaceFiles targets must be live files of the latest generation")
-    val out = transform(spark.read.option("basePath", loc)
-      .option("mergeSchema", "true").parquet(target: _*))
+    // the MoR view under PHYSICAL names (the transform's contract)
+    val out = transform(morScan(spark, target, st.dvLive, Map.empty, Some(loc)))
     val added = writeAttributed(spark, loc, out, partCols)
     val parts = (target.map(partTokenOf(root, _)) ++
       added.map(partTokenOf(root, _))).distinct.sorted
-    val (st, bl) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
+    commitDelta(spark, loc, withAddStats(spark, loc,
       Commit(0L, gen, parts, added, target.sorted, dataChange = false,
-        rows = footerRows(spark, added), op = "replaceFiles",
-        stats = st, blooms = bl), snapVer)
+        op = "replaceFiles")), st.version)
     ()
   }
 
@@ -1577,7 +1459,7 @@ object GenLog {
     * tokens and OCC are rename-stable by construction. Limits, by
     * design: [[configureStats]] column names and [[replaceFiles]]/
     * [[compactPartitionThroughLog]] transforms address PHYSICAL
-    * names (they operate on raw files below the mapping).
+    * names (they read the merge-on-read view below the mapping).
     */
   def renameColumn(spark: SparkSession, loc: String, gen: String,
                    from: String, to: String): Unit = {
@@ -1585,7 +1467,7 @@ object GenLog {
     require(!to.contains(":") && !to.contains("\n") && to.nonEmpty,
       s"column name must be non-empty, colon- and newline-free: '$to'")
     if (contains(spark, loc, gen)) return
-    val (snapVer, cur) = latestFull(spark, loc)
+    val cur = latestFull(spark, loc)
     val js = cur.schema.getOrElse(throw new IllegalArgumentException(
       s"renameColumn on a table with no recorded schema at $loc — " +
         "commit a batch first"))
@@ -1602,7 +1484,7 @@ object GenLog {
     commitDelta(spark, loc,
       Commit(0L, gen, Seq(AllParts), Nil, Nil, dataChange = false,
         schema = Some(renamed.json), cmap = Some(newMap),
-        op = "renameColumn"), snapVer)
+        op = "renameColumn"), cur.version)
     ()
   }
 
@@ -1641,38 +1523,22 @@ object GenLog {
       require(fs.exists(new Path(f)),
         s"restore target file vacuumed: $f — '$toGen' is outside the retention window")
     }
-    val (snapVer, cur) = latestFull(spark, loc)
+    val cur = latestFull(spark, loc)
     val schemaLine = if (target.schema == cur.schema) None else target.schema
     val cdfTok =
       if (!cdf) None
       else {
-        def side(files: Seq[String], dvLive: Seq[String],
-                 colMap: Map[String, String]): Option[DataFrame] =
+        def side(files: Seq[String], s: Snapshot): Option[DataFrame] =
           if (files.isEmpty) None
-          else {
-            val data = toLogical(spark.read.option("basePath", loc)
-              .option("mergeSchema", "true").parquet(files: _*), colMap)
-            if (dvLive.isEmpty) Some(data)
-            else {
-              val dv = spark.read.parquet(dvLive: _*)
-                .select(col("file_path").as("__graft_dv_f"),
-                  col("row_index").as("__graft_dv_i"))
-              val cols = data.columns.toSeq
-              Some(data
-                .withColumn("__graft_dv_f", col("_metadata.file_path"))
-                .withColumn("__graft_dv_i", col("_metadata.row_index"))
-                .join(dv, Seq("__graft_dv_f", "__graft_dv_i"), "left_anti")
-                .select(cols.map(col): _*))
-            }
-          }
+          else Some(morScan(spark, files, s.dvLive, s.colMap, Some(loc)))
         val curOnly = cur.live.filterNot(target.live.toSet)
         val tgtOnly = target.live.filterNot(cur.live.toSet)
         // each side speaks ITS state's logical names (the deletes are
         // rows leaving the current state, the inserts rows of the
         // restored one)
         writeChanges(spark, loc,
-          deletes = side(curOnly, cur.dvLive, cur.colMap),
-          inserts = side(tgtOnly, target.dvLive, target.colMap))
+          deletes = side(curOnly, cur),
+          inserts = side(tgtOnly, target))
       }
     commitDelta(spark, loc,
       Commit(0L, newGen, Seq(AllParts), target.live, cur.live,
@@ -1683,7 +1549,7 @@ object GenLog {
         // the target resolution still carries them — no rescan
         stats = target.stats, blooms = target.blooms,
         cmap = if (target.colMap == cur.colMap) None
-               else Some(target.colMap)), snapVer)
+               else Some(target.colMap)), cur.version)
     ()
   }
 
@@ -1714,27 +1580,24 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     require(st.live.nonEmpty, s"deleteWhere on an empty table at $loc")
     val hit = coalesce(pred, lit(false))
     // matching and the rewrite both run on the MoR VIEW: a raw-file
     // read would keep MoR-deleted rows in the rewrite (resurrecting
     // them once the old file's vectors go inert) and mark files
     // affected on dead rows alone
-    val affected = morView(spark, loc, st.live, st.dvLive, st.colMap)
-      .where(hit).select(col("__graft_dv_f")).distinct()
-      .collect().map(r => new Path(new java.net.URI(r.getString(0)))
-        .toUri.getPath).toSeq.sorted
+    val affected = distinctFiles(morScan(spark, st.live, st.dvLive, st.colMap,
+      Some(loc), positions = true).where(hit).select(col(PosFile)))
     if (affected.isEmpty) {
       // nothing matches: commit an empty delta so the generation
       // exists (the snapshot is the previous one's live set)
       commitDelta(spark, loc, Commit(0L, gen, Nil, Nil, Nil, op = "delete"),
-        snapVer)
+        st.version)
       return
     }
     val parts = affected.map(partTokenOf(root, _)).distinct.sorted
-    def affectedView() = morView(spark, loc, affected, st.dvLive, st.colMap)
-      .drop("__graft_dv_f", "__graft_dv_i")
+    def affectedView() = morScan(spark, affected, st.dvLive, st.colMap, Some(loc))
     val cdfTok =
       if (!cdf) None
       else writeChanges(spark, loc,
@@ -1743,11 +1606,9 @@ object GenLog {
     val added = writeAttributed(spark, loc,
       toPhysical(affectedView().where(!hit), st.colMap),
       partCols.map(physicalName(_, st.colMap)))
-    val (stM, blM) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
-      Commit(0L, gen, parts, added, affected,
-        rows = footerRows(spark, added), cdf = cdfTok, op = "delete",
-        stats = stM, blooms = blM), snapVer)
+    commitDelta(spark, loc, withAddStats(spark, loc,
+      Commit(0L, gen, parts, added, affected, cdf = cdfTok, op = "delete")),
+      st.version)
     ()
   }
 
@@ -1772,46 +1633,33 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     require(st.live.nonEmpty, s"deleteWhereMoR on an empty table at $loc")
     val hit = coalesce(pred, lit(false))
-    val data = toLogical(spark.read.option("basePath", loc)
-        .option("mergeSchema", "true").parquet(st.live: _*), st.colMap)
-      .withColumn("__graft_dv_f", col("_metadata.file_path"))
-      .withColumn("__graft_dv_i", col("_metadata.row_index"))
-    val view =
-      if (st.dvLive.isEmpty) data
-      else data.join(spark.read.parquet(st.dvLive: _*)
-        .select(col("file_path").as("__graft_dv_f"),
-          col("row_index").as("__graft_dv_i")),
-        Seq("__graft_dv_f", "__graft_dv_i"), "left_anti")
-    val matched = view.where(hit)
+    val matched = morScan(spark, st.live, st.dvLive, st.colMap, Some(loc),
+        positions = true).where(hit)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val affected = matched.select(col("__graft_dv_f")).distinct()
-        .collect().map(r => new Path(new java.net.URI(r.getString(0)))
-          .toUri.getPath).toSeq.sorted
+      val affected = distinctFiles(matched.select(col(PosFile)))
       if (affected.isEmpty) {
         commitDelta(spark, loc,
-          Commit(0L, gen, Nil, Nil, Nil, op = "deleteMoR"), snapVer)
+          Commit(0L, gen, Nil, Nil, Nil, op = "deleteMoR"), st.version)
         return
       }
       val parts = affected.map(partTokenOf(root, _)).distinct.sorted
       val cdfTok =
         if (!cdf) None
         else writeChanges(spark, loc,
-          deletes = Some(matched.drop("__graft_dv_f", "__graft_dv_i")),
-          inserts = None)
+          deletes = Some(matched.drop(PosFile, PosRow)), inserts = None)
       val token = s"d-${UUID.randomUUID()}"
-      matched.select(col("__graft_dv_f").as("file_path"),
-          col("__graft_dv_i").as("row_index"))
+      matched.select(col(PosFile).as("file_path"), col(PosRow).as("row_index"))
         .coalesce(1).write.parquet(s"$loc/$DvDir/$token")
       val dvAdds = listDvFiles(spark, loc)
         .filter(_.contains(s"/$DvDir/$token/")).toSeq.sorted
       commitDelta(spark, loc,
         Commit(0L, gen, parts, Nil, Nil, dvAdds = dvAdds,
           dvRows = footerRows(spark, dvAdds), cdf = cdfTok,
-          op = "deleteMoR"), snapVer)
+          op = "deleteMoR"), st.version)
       ()
     } finally { matched.unpersist(blocking = false); () }
   }
@@ -1829,30 +1677,18 @@ object GenLog {
     validateGen(gen)
     if (contains(spark, loc, gen)) return
     val (root, _) = fsOf(spark, loc)
-    val (snapVer, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     require(st.dvLive.nonEmpty, s"no deletion vectors to materialize at $loc")
-    val dv = spark.read.parquet(st.dvLive: _*)
-      .select(col("file_path").as("__graft_dv_f"),
-        col("row_index").as("__graft_dv_i"))
-    val affected = dv.select(col("__graft_dv_f")).distinct()
-      .collect().map(r => new Path(new java.net.URI(r.getString(0)))
-        .toUri.getPath).filter(st.live.contains).toSeq.sorted
+    val affected = distinctFiles(spark.read.parquet(st.dvLive: _*)
+      .select(col("file_path"))).filter(st.live.contains)
     val parts = affected.map(partTokenOf(root, _)).distinct.sorted
     val added =
       if (affected.isEmpty) Nil
       else writeAttributed(spark, loc,
-        spark.read.option("basePath", loc)
-          .option("mergeSchema", "true").parquet(affected: _*)
-          .withColumn("__graft_dv_f", col("_metadata.file_path"))
-          .withColumn("__graft_dv_i", col("_metadata.row_index"))
-          .join(dv, Seq("__graft_dv_f", "__graft_dv_i"), "left_anti")
-          .drop("__graft_dv_f", "__graft_dv_i"),
-        partCols)
-    val (sts, bls) = computeFileStats(spark, loc, added)
-    commitDelta(spark, loc,
+        morScan(spark, affected, st.dvLive, Map.empty, Some(loc)), partCols)
+    commitDelta(spark, loc, withAddStats(spark, loc,
       Commit(0L, gen, parts :+ DvParts, added, affected, dataChange = false,
-        dvRemoves = st.dvLive, rows = footerRows(spark, added),
-        op = "materializeDeletes", stats = sts, blooms = bls), snapVer)
+        dvRemoves = st.dvLive, op = "materializeDeletes")), st.version)
     ()
   }
 
@@ -1860,12 +1696,11 @@ object GenLog {
     * the read-amplification metric every MoR table needs (each
     * scan anti-joins the vectors, so debt IS the extra work). Row
     * counts come from the log's commit metadata (footer counts
-    * recorded at write time); files a legacy commit recorded without
-    * counts are footer-read on demand — still metadata-only, never a
-    * data scan.
+    * recorded at write time); a file with no recorded count is
+    * footer-read on demand — still metadata-only, never a data scan.
     */
   def dvDebt(spark: SparkSession, loc: String): Double = {
-    val (_, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     if (st.dvLive.isEmpty) return 0.0
     def total(files: Seq[String], known: Map[String, Long]): Double =
       files.map(f => known.getOrElse(f, footerRowCount(spark, f)).toDouble).sum
@@ -1901,7 +1736,7 @@ object GenLog {
                              gen: String): Boolean = {
     validateGen(gen)
     if (contains(spark, loc, gen)) return true
-    val (snapVer, st) = latestFull(spark, loc)
+    val st = latestFull(spark, loc)
     if (st.dvLive.size <= 1) return false
     val token = s"d-${UUID.randomUUID()}"
     spark.read.parquet(st.dvLive: _*)
@@ -1912,7 +1747,7 @@ object GenLog {
       Commit(0L, gen, Seq(DvParts), Nil, Nil, dataChange = false,
         dvAdds = dvAdds, dvRemoves = st.dvLive,
         dvRows = footerRows(spark, dvAdds), op = "compactDeletionVectors"),
-      snapVer)
+      st.version)
     true
   }
 
@@ -1925,44 +1760,22 @@ object GenLog {
     * The partition column comes back as a DATA column because the
     * writer stores it in-file too (callers include it in `df`).
     */
-  def read(spark: SparkSession, loc: String, gen: String): DataFrame = {
-    val r = resolveGen(spark, loc, gen)
-    if (r.live.isEmpty)
-      throw new IllegalArgumentException(s"generation '$gen' is empty")
-    frameOf(spark, r)
-  }
+  def read(spark: SparkSession, loc: String, gen: String): DataFrame =
+    frameOf(spark, resolveGen(spark, loc, gen), s"generation '$gen'")
 
-  /** The snapshot frame of a resolution: the live files merged across
-    * evolving schemas (q206 — widened columns read as NULL where
-    * history predates them), anti-joined against the live deletion
-    * vectors (merge-on-read). The ONE reader implementation behind
-    * [[read]] and [[readAsOfTimestamp]].
+  /** A snapshot's rows through [[morScan]] (no partition column —
+    * the public reads never recover it); an empty snapshot aborts,
+    * naming `what`.
     */
-  private def frameOf(spark: SparkSession, r: Resolution): DataFrame = {
-    val data = toLogical(
-      spark.read.option("mergeSchema", "true").parquet(r.live: _*), r.colMap)
-    if (r.dvLive.isEmpty) data
-    else {
-      // merge-on-read: anti-join the deletion vectors' (file, row)
-      // positions against the scan's metadata columns — deleted rows
-      // vanish at read time, no data file is touched. DV rows whose
-      // file left the live set match nothing (inert until vacuum).
-      val dv = spark.read.parquet(r.dvLive: _*)
-        .select(col("file_path").as("__graft_dv_f"),
-          col("row_index").as("__graft_dv_i"))
-      val cols = data.columns.toSeq
-      data
-        .withColumn("__graft_dv_f", col("_metadata.file_path"))
-        .withColumn("__graft_dv_i", col("_metadata.row_index"))
-        .join(dv, Seq("__graft_dv_f", "__graft_dv_i"), "left_anti")
-        .select(cols.map(col): _*)
-    }
+  private def frameOf(spark: SparkSession, r: Snapshot, what: String): DataFrame = {
+    if (r.live.isEmpty) throw new IllegalArgumentException(s"$what is empty")
+    morScan(spark, r.live, r.dvLive, r.colMap)
   }
 
   def readLatest(spark: SparkSession, loc: String): DataFrame = {
-    val gens = generations(spark, loc)
-    require(gens.nonEmpty, s"no generations committed at $loc")
-    read(spark, loc, gens.last._1)
+    val r = latestFull(spark, loc)
+    require(r.version > 0, s"no generations committed at $loc")
+    frameOf(spark, r, s"generation '${r.gen}'")
   }
 
   /** One live file's commit-recorded statistics: row count plus each
@@ -1980,18 +1793,10 @@ object GenLog {
     * lag its live set, and there is no absorption step to forget.
     */
   def snapshotStats(spark: SparkSession, loc: String): Seq[FileStat] = {
-    val (_, r) = latestFull(spark, loc)
+    val r = latestFull(spark, loc)
     r.live.map(f => FileStat(f,
       r.rows.getOrElse(f, footerRowCount(spark, f)),
       r.stats.getOrElse(f, Map.empty)))
-  }
-
-  /** The latest snapshot's per-file Bloom bit words for the table's
-    * configured Bloom column (empty for files committed without one).
-    */
-  def snapshotBlooms(spark: SparkSession, loc: String): Map[String, Array[Long]] = {
-    val (_, r) = latestFull(spark, loc)
-    r.blooms.view.filterKeys(r.live.toSet).toMap
   }
 
   /** The live files whose commit-recorded Bloom MAY contain the key
@@ -2001,8 +1806,10 @@ object GenLog {
     * proven clean). Driver-side O(live files × NumHashes) bit probes.
     */
   def bloomMatchedFiles(spark: SparkSession, loc: String,
-                        keyHash: Long): Seq[String] = {
-    val (_, r) = latestFull(spark, loc)
+                        keyHash: Long): Seq[String] =
+    bloomMatched(latestFull(spark, loc), keyHash)
+
+  private def bloomMatched(r: Snapshot, keyHash: Long): Seq[String] =
     r.live.filter { f =>
       r.blooms.get(f).forall { words =>
         (0 until graft.functions.BloomSketch.NumHashes).forall { i =>
@@ -2011,26 +1818,27 @@ object GenLog {
         }
       }
     }
-  }
 
   /** Read only the live files whose commit-recorded Bloom may contain
     * the probe key — point-lookup file skipping on a LOGGED table
-    * (q201's treatment, now transactional with the data). Callers
+    * (q201's treatment, now transactional with the data), read
+    * exactly as [[readLatest]] reads those files: through the live
+    * deletion vectors and under the current logical names. Callers
     * re-apply the exact equality; an empty candidate set
     * short-circuits against the latest snapshot's schema.
     */
   def readBloomPruned(spark: SparkSession, loc: String,
                       keyHash: Long): DataFrame = {
-    val files = bloomMatchedFiles(spark, loc, keyHash)
+    val r = latestFull(spark, loc)
+    val files = bloomMatched(r, keyHash)
     if (files.isEmpty) readLatest(spark, loc).where(lit(false))
-    else spark.read.option("mergeSchema", "true").parquet(files: _*)
+    else morScan(spark, files, r.dvLive, r.colMap)
   }
 
   /** The surviving commits' (version, gen, timestamp-millis) triples,
     * oldest first, with MONOTONIC ADJUSTMENT: raw stamps come from
-    * the commit object's `ts` line (legacy objects fall back to the
-    * commit FILE's modification time — exactly what Delta reads), and
-    * each commit's served timestamp is forced to at least its
+    * the commit object's `ts` line, and each commit's served
+    * timestamp is forced to at least its
     * predecessor's + 1 ms, so version order and timestamp order can
     * never disagree even across writer clock skew (Delta's
     * monotonization, same rule). Driver-side O(surviving commits) —
@@ -2038,20 +1846,16 @@ object GenLog {
     * an audit/AS-OF surface, not a hot path.
     */
   def commitTimestamps(spark: SparkSession, loc: String): Seq[(Long, String, Long)] = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, _) = listLog(fs, dir)
-    var prev = Long.MinValue
-    commits.map { v =>
-      val c = readCommit(fs, dir, v)
-      val raw =
-        if (c.ts > 0) c.ts
-        else fs.getFileStatus(commitPath(dir, v)).getModificationTime
-      val adj = math.max(raw, if (prev == Long.MinValue) raw else prev + 1)
-      prev = adj
-      (v, c.gen, adj)
-    }
+    val log = logOf(spark, loc)
+    stamped(log.commits.map(log.commit))
   }
+
+  private def stamped(cs: Seq[Commit]): Seq[(Long, String, Long)] =
+    cs.headOption.toSeq.flatMap { first =>
+      cs.tail.scanLeft((first.version, first.gen, first.ts)) {
+        case ((_, _, prev), c) => (c.version, c.gen, math.max(c.ts, prev + 1))
+      }
+    }
 
   /** TIMESTAMP AS OF: read the table as of wall-clock `tsMillis` —
     * the snapshot of the LATEST commit whose (monotonically adjusted)
@@ -2076,14 +1880,8 @@ object GenLog {
           s"$loc (earliest surviving commit is v${tss.head._1} at " +
           s"${tss.head._3}) — vacuumed, or before the table existed")
     val target = tss.takeWhile(_._3 <= tsMillis).last._1
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    val r = resolveVersion(fs, dir, commits, checkpoints, target)
-    if (r.live.isEmpty)
-      throw new IllegalArgumentException(
-        s"the snapshot at timestamp $tsMillis (v$target) is empty")
-    frameOf(spark, r)
+    frameOf(spark, resolveVersion(logOf(spark, loc), target),
+      s"the snapshot at timestamp $tsMillis (v$target)")
   }
 
   /** INCREMENTAL CONSUMPTION: the rows APPENDED after `sinceGen`, as
@@ -2103,25 +1901,19 @@ object GenLog {
     */
   def readAppendedSince(spark: SparkSession, loc: String,
                         sinceGen: String): DataFrame = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    val sinceVer = versionOf(fs, dir, commits, checkpoints, sinceGen)
-      .getOrElse(throw new IllegalArgumentException(
-        s"generation '$sinceGen' not in $loc/$LogDir (vacuumed or never committed)"))
-    val range = (sinceVer + 1) to commits.lastOption.getOrElse(sinceVer)
-    require(range.forall(commits.contains),
+    val log = logOf(spark, loc)
+    val sinceVer = log.versionOrThrow(sinceGen)
+    val range = (sinceVer + 1) to log.commits.lastOption.getOrElse(sinceVer)
+    require(range.forall(log.commits.contains),
       s"cursor '$sinceGen' (v$sinceVer) predates the log's surviving " +
         s"history at $loc — vacuum truncated the feed; re-seed the consumer")
-    val files = range.map(readCommit(fs, dir, _))
+    val files = range.map(log.commit)
       .filter(_.dataChange).flatMap(_.adds).distinct
     if (files.isEmpty) readLatest(spark, loc).where(lit(false))
     // the feed serves the table's CURRENT logical names (files store
     // physical ones; a renamed table's consumers see the new name —
     // Delta's streaming-schema rule)
-    else toLogical(
-      spark.read.option("mergeSchema", "true").parquet(files.toSeq: _*),
-      latestColMap(spark, loc))
+    else morScan(spark, files, Nil, latestColMap(spark, loc))
   }
 
   /** The committed version of `gen`, O(tail) through the checkpoint
@@ -2129,12 +1921,8 @@ object GenLog {
     * starting "after generation g") and the stream-source specs.
     */
   private[graft] def versionOfGen(spark: SparkSession, loc: String,
-                                  gen: String): Option[Long] = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    versionOf(fs, dir, commits, checkpoints, gen)
-  }
+                                  gen: String): Option[Long] =
+    logOf(spark, loc).versionOf(gen)
 
   /** The parsed commits with version > `afterVersion`, oldest first —
     * the micro-batch DISCOVERY read of a streaming source over the
@@ -2146,20 +1934,17 @@ object GenLog {
     */
   private[graft] def commitsAfter(spark: SparkSession, loc: String,
                                   afterVersion: Long): Seq[Commit] = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
+    val log = logOf(spark, loc)
     // checkpoints bound the range too: a vacuum that truncated EVERY
     // commit past the cursor leaves only the retention-cut checkpoint,
     // and "no new commits" would then be a silent lie
-    val latest = (commits ++ checkpoints).maxOption.getOrElse(afterVersion)
-    val range = (afterVersion + 1) to latest
-    val missing = range.filterNot(commits.contains)
+    val range = (afterVersion + 1) to math.max(log.latest, afterVersion)
+    val missing = range.filterNot(log.commits.contains)
     require(missing.isEmpty,
       s"stream cursor v$afterVersion predates the log's surviving history " +
         s"at $loc (versions ${missing.mkString(",")} vacuumed) — re-seed " +
         "the consumer")
-    range.map(readCommit(fs, dir, _))
+    range.map(log.commit)
   }
 
   /** The COMMIT-TIME change feed between two generations: the union
@@ -2177,21 +1962,16 @@ object GenLog {
     */
   def readChangeFeed(spark: SparkSession, loc: String,
                      fromGen: String, toGen: String): DataFrame = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
-    def verOf(g: String): Long = versionOf(fs, dir, commits, checkpoints, g)
-      .getOrElse(throw new IllegalArgumentException(
-        s"generation '$g' not in $loc/$LogDir (vacuumed or never committed)"))
-    val (lo, hi) = (verOf(fromGen), verOf(toGen))
+    val log = logOf(spark, loc)
+    val (lo, hi) = (log.versionOrThrow(fromGen), log.versionOrThrow(toGen))
     require(lo <= hi, s"change feed range is backwards: " +
       s"'$fromGen' (v$lo) after '$toGen' (v$hi)")
     val range = (lo + 1) to hi
-    val missing = range.filterNot(commits.contains)
+    val missing = range.filterNot(log.commits.contains)
     require(missing.isEmpty,
       s"change feed v${lo + 1}..v$hi at $loc has vacuumed commits " +
         s"(${missing.mkString(",")}) — re-seed the consumer")
-    val cs = range.map(readCommit(fs, dir, _))
+    val cs = range.map(log.commit)
     val silent = cs.filter(c => c.dataChange && c.cdf.isEmpty &&
       (c.adds.nonEmpty || c.removes.nonEmpty || c.dvAdds.nonEmpty ||
         c.dvRemoves.nonEmpty))
@@ -2247,25 +2027,22 @@ object GenLog {
     * files. Driver-side O(surviving log objects) — metadata only.
     */
   def history(spark: SparkSession, loc: String): DataFrame = {
-    val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
-    val (commits, checkpoints) = listLog(fs, dir)
+    val log = logOf(spark, loc)
     val cutRows: Seq[(Long, String, String, Boolean, Boolean, Int, Int, Long,
       Int, Int, Boolean, Boolean, Option[Long])] =
-      if (commits.headOption.contains(1L)) Nil
-      else checkpoints.headOption.map { cv =>
-        val ck = readCheckpointState(fs, dir, cv)
+      if (log.commits.headOption.contains(1L)) Nil
+      else log.checkpoints.headOption.map { cv =>
+        val ck = log.checkpoint(cv)
         // the cut's own commit time went with its vacuumed log object
         (cv, ck.gen, "checkpoint", true, false, ck.live.size, 0,
           ck.rows.values.sum, ck.dvLive.size, 0, false, ck.schema.isDefined,
           Option.empty[Long])
       }.toSeq
-    val tsOf = commitTimestamps(spark, loc).map(t => t._1 -> t._3).toMap
-    val commitRows = commits.map { v =>
-      val c = readCommit(fs, dir, v)
+    val cs = log.commits.map(log.commit)
+    val commitRows = cs.zip(stamped(cs)).map { case (c, (v, _, ts)) =>
       (v, c.gen, c.op, c.dataChange, c.insert, c.adds.size, c.removes.size,
         c.rows.values.sum, c.dvAdds.size, c.dvRemoves.size, c.cdf.isDefined,
-        c.schema.isDefined, tsOf.get(v))
+        c.schema.isDefined, Option(ts))
     }
     import spark.implicits._
     (cutRows ++ commitRows).sortBy(-_._1)
@@ -2294,14 +2071,14 @@ object GenLog {
     val gname = s"clone_$gen"
     if (contains(spark, destLoc, gname)) return
     val src = resolveGen(spark, srcLoc, gen)
-    val (snapVer, prev) = latestFull(spark, destLoc)
+    val prev = latestFull(spark, destLoc)
     commitDelta(spark, destLoc,
       Commit(0L, gname, Seq(AllParts), src.live, prev.live,
         dvAdds = src.dvLive, dvRemoves = prev.dvLive,
         rows = src.rows, dvRows = src.dvRows, schema = src.schema,
         op = "clone", stats = src.stats, blooms = src.blooms,
         cmap = if (src.colMap.isEmpty) None else Some(src.colMap)),
-      snapVer)
+      prev.version)
     ()
   }
 
@@ -2344,10 +2121,9 @@ object GenLog {
              minAgeMs: Long = DefaultRetentionMs): Seq[String] = {
     require(keepLastN >= 1,
       s"vacuum must retain at least one generation, got keepLastN=$keepLastN")
-    val states = genStates(spark, loc)
-    val kept = states.takeRight(keepLastN)
+    val kept = genStates(spark, loc).takeRight(keepLastN)
     val (p, fs) = fsOf(spark, loc)
-    val dir = logDirOf(p)
+    val dir = new Path(p, LogDir)
     val now = System.currentTimeMillis()
     def oldEnough(path: Path): Boolean =
       try now - fs.getFileStatus(path).getModificationTime >= minAgeMs
@@ -2358,16 +2134,14 @@ object GenLog {
       // later retained generation stays indexed via the surviving
       // commit tail.
       installIfAbsent(fs, dir,
-        checkpointBody(cut.gen, cut.live, cut.dvLive, cut.rows, cut.dvRows,
-          cut.schema, Seq((cut.version, cut.gen)), cut.stats, cut.blooms,
-          cut.colMap),
+        checkpointBody(cut.copy(genIndex = Seq(cut.version -> cut.gen))),
         checkpointPath(dir, cut.version))
       // 2. drop pre-cut log objects + the cut's now-redundant commit
-      val (commits, checkpoints) = listLog(fs, dir)
-      commits.filter(_ <= cut.version).foreach { v =>
+      val log = logOf(spark, loc)
+      log.commits.filter(_ <= cut.version).foreach { v =>
         fs.delete(commitPath(dir, v), false); ()
       }
-      checkpoints.filter(_ < cut.version).foreach { v =>
+      log.checkpoints.filter(_ < cut.version).foreach { v =>
         fs.delete(checkpointPath(dir, v), false); ()
       }
       // crashed writers' pre-claim temps — past the horizon only (a
@@ -2393,9 +2167,8 @@ object GenLog {
     //    horizon (a vacuumed commit's feed went with its log object)
     val changes = new Path(p, ChangesDir)
     if (fs.exists(changes)) {
-      val (commits, _) = listLog(fs, dir)
-      val liveTokens = commits.map(readCommit(fs, dir, _))
-        .flatMap(_.cdf).toSet
+      val log = logOf(spark, loc)
+      val liveTokens = log.commits.map(log.commit).flatMap(_.cdf).toSet
       fs.listStatus(changes).toSeq.map(_.getPath)
         .filter(d => !liveTokens.contains(d.getName) && oldEnough(d))
         .foreach { d => fs.delete(d, true); () }

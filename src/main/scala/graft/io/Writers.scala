@@ -86,12 +86,6 @@ object Writers {
   def parquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  /** Partitioned JSON — the scale-path variant of K1 for large
-    * results: same format, no single-task funnel.
-    */
-  def partitionedJson(df: DataFrame, dir: String): Unit =
-    df.write.mode("overwrite").json(dir)
-
   /** Sharded JSONL — the training-corpus exchange format (one JSON
     * object per line, up to N shard files). Shard routing hashes
     * `by`, so re-runs produce identical doc→shard placement; within a

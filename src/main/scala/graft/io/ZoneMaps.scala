@@ -116,7 +116,7 @@ object ZoneMaps {
     fresh.size
   }
 
-  /** Per-file BLOOM stats: one 8192-bit Bloom filter of `keyCol`'s
+  /** Per-file BLOOM stats: one 8192-bit Bloom filter of `bloomKey`'s
     * hashes per data file. The complement of min/max envelopes:
     * envelopes prune RANGE predicates on the clustered column; a
     * per-file Bloom prunes POINT lookups on a key the layout is NOT
@@ -127,12 +127,8 @@ object ZoneMaps {
     * Delta's bloom-filter indexes are this exact structure; here it
     * is an explicit, spec-testable stats table. The hash is the q77
     * build/probe idiom (hash60 % P) so both sides always agree.
-    */
-  def ensureFileBloomStats(spark: SparkSession, statsTable: String,
-                           layoutTable: String, keyCol: String): String =
-    ensureFileSkipStats(spark, statsTable, layoutTable, Nil, keyCol)
-
-  /** The full skipping-stats row: min/max envelopes for `tracked`
+    *
+    * This builds the full skipping-stats row: min/max envelopes for `tracked`
     * columns AND a Bloom of `bloomKey` — one stats table serving BOTH
     * pruning dimensions, so a compound predicate (range on the
     * clustered column, point set on a scattered key) intersects them

@@ -264,9 +264,7 @@ object GenLogStream {
         if (!c.dataChange) None // layout-only: rows already delivered
         else if (mode == SourceAdds) {
           if (c.adds.isEmpty) None // e.g. a delete that rewrote to nothing
-          else Some(GenLog.renameToLogical(
-            spark.read.option("mergeSchema", "true").parquet(c.adds: _*),
-            cmap))
+          else Some(GenLog.morScan(spark, c.adds, Nil, cmap))
         } else c.cdf match {
           case Some(tok) =>
             Some(spark.read.parquet(s"$loc/${GenLog.ChangesDir}/$tok")

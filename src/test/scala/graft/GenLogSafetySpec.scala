@@ -14,7 +14,7 @@ import graft.io.GenLog
 class GenLogSafetySpec extends SparkTestBase {
 
   private def tmpLoc(tag: String): String =
-    java.nio.file.Files.createTempDirectory(tag).toString + "/t"
+    tempDir(tag) + "/t"
 
   /** A tiny keyed frame: rows (k, v) under partition p. */
   private def frame(p: String, kvs: (Int, Long)*) = {
@@ -440,6 +440,21 @@ class GenLogSafetySpec extends SparkTestBase {
     assert(rows(loc) == Set(4 -> 40L, 5 -> 5L, 6 -> 6L, 7 -> 7L, 8 -> 8L,
       9 -> 9L, 10 -> 10L, 11 -> 110L),
       "the merge rewrite must not resurrect the MoR-deleted rows either")
+    // the layout rewrites on the same shape: fresh MoR deletes in
+    // both partitions, so OPTIMIZE (partition a) and the generic file
+    // rewrite (partition b) each rewrite a file that live vectors reach
+    GenLog.deleteWhereMoR(spark, loc, "d3", col("k").isin(5, 6))
+    val afterD3 = Set(4 -> 40L, 7 -> 7L, 8 -> 8L, 9 -> 9L, 10 -> 10L,
+      11 -> 110L)
+    assert(rows(loc) == afterD3)
+    GenLog.compactPartitionThroughLog(spark, loc, "o1", "p", "a")
+    assert(rows(loc) == afterD3,
+      "the compaction must not resurrect the MoR-deleted rows")
+    val bFiles = GenLog.generations(spark, loc).last._2
+      .filter(_.contains("/p=b/"))
+    GenLog.replaceFiles(spark, loc, "x1", bFiles, Seq("p"))(identity)
+    assert(rows(loc) == afterD3,
+      "the file rewrite must not resurrect the MoR-deleted rows")
     // AS-OF the MoR generation still hides them too
     assert(GenLog.read(spark, loc, "d1").select(col("k"))
       .collect().map(_.getInt(0)).toSet == (3 to 10).toSet)

@@ -14,14 +14,11 @@ import graft.streaming.GenLogStream
   */
 class GenLogSourceSpec extends SparkTestBase {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Three cdf-committing generations (the q205 fixture shape, on a
     * throwaway location).
     */
   private def freshCdcGens(): String = {
-    val loc = tmp("genlogsrc") + "/t"
+    val loc = tempDir("genlogsrc") + "/t"
     GenLog.appendBatch(spark, loc, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None,
         Some(TimeTravel.Day1)), Seq("day_k"), cdf = true)
@@ -44,7 +41,7 @@ class GenLogSourceSpec extends SparkTestBase {
 
   test("the source drains the backlog once; a restart replays nothing; a new commit is one new batch") {
     val loc = freshCdcGens()
-    val ckpt = tmp("srcck")
+    val ckpt = tempDir("srcck")
     val got = scala.collection.mutable.ArrayBuffer.empty[(Long, org.apache.spark.sql.DataFrame)]
     val n = GenLogStream.readSource(spark, loc, ckpt) { (df, v) => got += ((v, df)); () }
     assert(n == 3 && got.map(_._1) == Seq(1L, 2L, 3L),
@@ -69,7 +66,7 @@ class GenLogSourceSpec extends SparkTestBase {
 
   test("a crashed drain resumes exactly after its last completed batch (at-least-once, never skipped)") {
     val loc = freshCdcGens()
-    val ckpt = tmp("srcck")
+    val ckpt = tempDir("srcck")
     val seen = scala.collection.mutable.ArrayBuffer.empty[Long]
     intercept[RuntimeException] {
       GenLogStream.readSource(spark, loc, ckpt) { (_, v) =>
@@ -89,7 +86,7 @@ class GenLogSourceSpec extends SparkTestBase {
 
   test("cdf batches read only _changes files; adds batches read exactly their commit's added files") {
     val loc = freshCdcGens()
-    val cdfCk = tmp("srcck")
+    val cdfCk = tempDir("srcck")
     GenLogStream.readSource(spark, loc, cdfCk) { (df, v) =>
       val ins = df.inputFiles
       assert(ins.nonEmpty && ins.forall(_.contains(s"/${GenLog.ChangesDir}/")),
@@ -98,7 +95,7 @@ class GenLogSourceSpec extends SparkTestBase {
     }
     val byVersion = GenLog.commitsAfter(spark, loc, 0L)
       .map(c => c.version -> c.adds.toSet).toMap
-    val addsCk = tmp("srcck")
+    val addsCk = tempDir("srcck")
     GenLogStream.readSource(spark, loc, addsCk, GenLogStream.SourceAdds) {
       (df, v) =>
         val ins = df.inputFiles.map(f => new org.apache.hadoop.fs.Path(
@@ -116,7 +113,7 @@ class GenLogSourceSpec extends SparkTestBase {
     // a no-match delete commits an empty delta
     GenLog.deleteWhere(spark, loc, "noop_del",
       col("event_type") === lit("no_such_type"), Seq("day_k"), cdf = true)
-    val ckpt = tmp("srcck")
+    val ckpt = tempDir("srcck")
     val got = scala.collection.mutable.ArrayBuffer.empty[Long]
     GenLogStream.readSource(spark, loc, ckpt, GenLogStream.SourceAdds) {
       (_, v) => got += v; ()
@@ -129,7 +126,7 @@ class GenLogSourceSpec extends SparkTestBase {
 
   test("a vacuumed cursor fails loudly instead of silently skipping; a cdf stream over a cdf-less commit fails loudly") {
     val loc = freshCdcGens()
-    val ckpt = tmp("srcck")
+    val ckpt = tempDir("srcck")
     GenLogStream.seedCursor(spark, ckpt, 1L)
     GenLog.vacuum(spark, loc, keepLastN = 1, minAgeMs = 0L)
     val e = intercept[IllegalArgumentException] {
@@ -138,16 +135,16 @@ class GenLogSourceSpec extends SparkTestBase {
     assert(e.getMessage.contains("re-seed"))
     // a table with a data-changing commit that wrote no change files
     // cannot serve a CDC stream past it
-    val loc2 = tmp("genlogsrc") + "/t"
+    val loc2 = tempDir("genlogsrc") + "/t"
     GenLog.appendBatch(spark, loc2, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None,
         Some(TimeTravel.Day1)), Seq("day_k")) // cdf = false
     val e2 = intercept[IllegalArgumentException] {
-      GenLogStream.readSource(spark, loc2, tmp("srcck")) { (_, _) => () }
+      GenLogStream.readSource(spark, loc2, tempDir("srcck")) { (_, _) => () }
     }
     assert(e2.getMessage.contains("change files"))
     // ...but the ADDS stream serves it fine (append feed needs no cdf)
-    assert(GenLogStream.readSource(spark, loc2, tmp("srcck"),
+    assert(GenLogStream.readSource(spark, loc2, tempDir("srcck"),
       GenLogStream.SourceAdds) { (_, _) => () } == 1)
   }
 }

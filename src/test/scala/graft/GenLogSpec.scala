@@ -13,7 +13,7 @@ import graft.queries.TimeTravel
 class GenLogSpec extends SparkTestBase {
 
   private def freshGens(): String = {
-    val loc = java.nio.file.Files.createTempDirectory("genlog").toString + "/t"
+    val loc = tempDir("genlog") + "/t"
     GenLog.appendBatch(spark, loc, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), Seq("day_k"))
     GenLog.appendBatch(spark, loc, "g2",
@@ -96,7 +96,7 @@ class GenLogSpec extends SparkTestBase {
   }
 
   test("multi-column partitioning: one-tuple restatement replaces exactly its file; OCC conflicts on tuples, not days; depth mismatch aborts") {
-    val loc = java.nio.file.Files.createTempDirectory("genlogmp").toString + "/t"
+    val loc = tempDir("genlogmp") + "/t"
     def tb(lo: String, hi: String) =
       TimeTravel.tupleBatch(spark, Sf, None, Some(lo), Some(hi))
     GenLog.appendBatch(spark, loc, "g1",
@@ -330,7 +330,7 @@ class GenLogSpec extends SparkTestBase {
   test("commit cost is O(batch) and a snapshot resolve is checkpoint + tail, never a full-log replay") {
     val spark2 = spark
     import spark2.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("genlog-long").toString + "/t"
+    val loc = tempDir("genlog-long") + "/t"
     // 52 generations, each adding ONE new partition: the live set
     // grows 52×, the per-commit delta stays one file
     (1 to 52).foreach { k =>
@@ -375,7 +375,7 @@ class GenLogSpec extends SparkTestBase {
   test("optimistic concurrency: disjoint writers both commit; overlapping writers abort; replayed gen skips") {
     val spark2 = spark
     import spark2.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("genlog-occ").toString + "/t"
+    val loc = tempDir("genlog-occ") + "/t"
     def frame(rows: (Int, Long)*) =
       rows.toSeq.toDF("k", "v").withColumn("p", col("k"))
     GenLog.appendBatch(spark, loc, "g1", frame((1, 10L), (2, 20L)), Seq("p"))
@@ -554,7 +554,7 @@ class GenLogSpec extends SparkTestBase {
 
   test("a shallow clone copies no data, serves the snapshot, and diverges without touching the source") {
     val srcLoc = TimeTravel.ensureEventGenerations(spark, Sf)
-    val loc = java.nio.file.Files.createTempDirectory("genclone").toString + "/t"
+    val loc = tempDir("genclone") + "/t"
     GenLog.cloneSnapshot(spark, srcLoc, "g2", loc)
     // zero-copy: the clone directory holds a log and nothing else
     def ownData(dir: String) = {
@@ -592,7 +592,7 @@ class GenLogSpec extends SparkTestBase {
   test("commit-time constraints: a violating batch aborts before anything lands; NULL passes (SQL CHECK)") {
     val spark2 = spark
     import spark2.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("genlog-check").toString + "/t"
+    val loc = tempDir("genlog-check") + "/t"
     def frame(rows: (Int, java.lang.Long)*) =
       rows.toSeq.toDF("k", "v").withColumn("p", col("k"))
     val checks = Seq(
@@ -617,7 +617,7 @@ class GenLogSpec extends SparkTestBase {
   }
 
   test("streamed inserts: a full backlog replay with a fresh checkpoint appends nothing (gen-id exactly-once)") {
-    val loc = java.nio.file.Files.createTempDirectory("genlog-ins").toString + "/t"
+    val loc = tempDir("genlog-ins") + "/t"
     graft.streaming.GenLogStream.streamInsertsInto(spark, Sf, loc)
     val first = GenLog.generations(spark, loc)
     assert(first.map(_._1) == Seq("w1", "w2", "w3"),
@@ -654,7 +654,7 @@ class GenLogSpec extends SparkTestBase {
     assert(restored > 0, "the restore must bring the rows back")
     // restoring to a vacuumed generation fails loudly, never silently
     // serves missing files — exercised on a throwaway copy
-    val loc2 = java.nio.file.Files.createTempDirectory("genlog-rst").toString + "/t"
+    val loc2 = tempDir("genlog-rst") + "/t"
     GenLog.appendBatch(spark, loc2, "g1",
       TimeTravel.batch(spark, Sf, Some(TimeTravel.Cut1), None, Some(TimeTravel.Day1)), Seq("day_k"))
     GenLog.appendBatch(spark, loc2, "g2",
@@ -699,7 +699,7 @@ class GenLogSpec extends SparkTestBase {
 
   test("vacuum collects deletion vectors no retained generation references") {
     // throwaway MoR table: g1 + a DV delete + materialization
-    val loc = java.nio.file.Files.createTempDirectory("genlog-dv").toString + "/t"
+    val loc = tempDir("genlog-dv") + "/t"
     GenLog.appendBatch(spark, loc, "g1",
       TimeTravel.batch(spark, Sf, None, None, None), Seq("day_k"))
     GenLog.deleteWhereMoR(spark, loc, "g2", TimeTravel.delPred)

@@ -39,7 +39,7 @@ class GenZonedSpec extends SparkTestBase {
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet
 
   test("wide waves degrade the metric, the bound triggers re-layout through the log, skipping recovers; the answer never moves") {
-    val loc = java.nio.file.Files.createTempDirectory("genzoned").toString + "/t"
+    val loc = tempDir("genzoned") + "/t"
     val (lo, hi) = win
     GenLog.configureStats(spark, loc, Seq(Track))
     // base: month-clustered — tight envelopes, sharp pruning. Stats
@@ -109,7 +109,7 @@ class GenZonedSpec extends SparkTestBase {
   }
 
   test("stats are transactional with commits: pruned reads touch only live data files, and no stats sibling ever exists") {
-    val loc = java.nio.file.Files.createTempDirectory("genzonedt").toString + "/t"
+    val loc = tempDir("genzonedt") + "/t"
     val (lo, hi) = win
     GenLog.configureStats(spark, loc, Seq(Track))
     GenLog.appendBatch(spark, loc, "base",
@@ -135,7 +135,7 @@ class GenZonedSpec extends SparkTestBase {
 
   test("commit-time Blooms prune a point lookup on a logged table to a strict minority; inputFiles == the bloom-matched set") {
     import graft.sources.Tables
-    val loc = java.nio.file.Files.createTempDirectory("genbloom").toString + "/t"
+    val loc = tempDir("genbloom") + "/t"
     GenLog.configureStats(spark, loc, Seq(Track), bloomCol = Some("l_orderkey"))
     GenLog.appendBatch(spark, loc, "base",
       Tables.lineitem(spark, Sf)
@@ -159,10 +159,25 @@ class GenZonedSpec extends SparkTestBase {
     val exact = pruned.where(col("l_orderkey") === lit(k)).count()
     assert(exact == GenLog.readLatest(spark, loc)
       .where(col("l_orderkey") === lit(k)).count() && exact > 0)
+    // the pruned read serves readLatest's rows and columns: a
+    // merge-on-read delete of the probe key hides it from both, and
+    // a column rename shows up under the new name in both
+    def probe(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("l_orderkey") === lit(k)).count()
+    GenLog.deleteWhereMoR(spark, loc, "del_k", col("l_orderkey") === lit(k))
+    assert(probe(GenLog.readLatest(spark, loc)) == 0 &&
+      probe(GenLog.readBloomPruned(spark, loc, kh)) == 0,
+      "a MoR-deleted row must not come back through the Bloom-pruned read")
+    GenLog.renameColumn(spark, loc, "ren_q", "l_quantity", "quantity")
+    val latest = GenLog.readLatest(spark, loc)
+    val prunedNow = GenLog.readBloomPruned(spark, loc, kh)
+    assert(prunedNow.columns.toSeq == latest.columns.toSeq,
+      s"pruned columns ${prunedNow.columns.mkString(",")} must be " +
+        s"readLatest's ${latest.columns.mkString(",")}")
   }
 
   test("partial re-layout rewrites only the decayed files; the clustered base survives byte-identically") {
-    val loc = java.nio.file.Files.createTempDirectory("genzonedp").toString + "/t"
+    val loc = tempDir("genzonedp") + "/t"
     val (lo, hi) = win
     GenLog.configureStats(spark, loc, Seq(Track))
     GenLog.appendBatch(spark, loc, "base",
@@ -195,7 +210,7 @@ class GenZonedSpec extends SparkTestBase {
   }
 
   test("2-D: wide waves degrade the worst-dimension metric, the bound fires a z-order re-layout, BOTH envelopes recover; the box answer never moves") {
-    val loc = java.nio.file.Files.createTempDirectory("genzoned2").toString + "/t"
+    val loc = tempDir("genzoned2") + "/t"
     def box(): (Long, Long, Long, Long) = {
       val Seq(pm, sm) = GenZoned.liveMaxes(spark, loc, Z2)
       Layout.zBox(pm, sm)
@@ -274,7 +289,7 @@ class GenZonedSpec extends SparkTestBase {
     // partkey-SORTED layout scores ~1 on the 2-D metric (tight in
     // partkey, full supplier domain per file) — exactly the decay a
     // 1-D metric cannot see
-    val loc1 = java.nio.file.Files.createTempDirectory("genzoned2s").toString + "/t"
+    val loc1 = tempDir("genzoned2s") + "/t"
     GenLog.configureStats(spark, loc1, Seq("l_partkey", "l_suppkey"))
     GenLog.appendBatch(spark, loc1, "sorted",
       base.withColumn(GenZoned.PartCol2,
@@ -286,7 +301,7 @@ class GenZonedSpec extends SparkTestBase {
   }
 
   test("2-D partial re-layout rewrites only the decayed files into z-blocks; the blocked base survives byte-identically") {
-    val loc = java.nio.file.Files.createTempDirectory("genzoned2p").toString + "/t"
+    val loc = tempDir("genzoned2p") + "/t"
     GenLog.configureStats(spark, loc, Seq("l_partkey", "l_suppkey"))
     val base = Layout.zoned2Slice(spark, Sf, "l_orderkey % 8 != 0")
     val m = base.agg(max(col("l_partkey")), max(col("l_suppkey"))).head()

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source scans for five single-mechanism rules. Session-scoped caches
+/** Source scans for six single-mechanism rules. Session-scoped caches
   * live in [[CacheRegistry]] only: a hash-code session key or a private
   * `TrieMap` anywhere else in main code brings back an unevicted,
   * double-building cache. Each query is one `Query(name, build,
@@ -17,6 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * names each member `def` once (one `Seq[String]` partition-key
   * signature per write verb, no single-column forwarders), and one
   * `GenZoned` serves one or two tracked columns: no `GenZoned2` twin.
+  * GenLog also reads, lists and resolves one way: one merge-on-read
+  * reader applies deletion vectors (a hand-written copy drifts and
+  * serves deleted rows), one helper lists the log, and one snapshot
+  * type holds a resolved state.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
@@ -75,5 +79,22 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(twice.isEmpty, s"GenLog defs declared more than once: ${twice.mkString(", ")}")
     val twins = scan(Paths.get("src", "main", "scala"), 50, Seq("GenZoned2"))
     assert(twins.isEmpty, s"GenZoned2 in main:\n${twins.mkString("\n")}")
+  }
+
+  test("GenLog has one deletion-vector reader, one log listing and one snapshot type") {
+    val lines = Files.readAllLines(GenLogSrc).asScala.toList
+    val rowIndex = lines.count(_.contains("_metadata.row_index"))
+    assert(rowIndex == 1,
+      s"_metadata.row_index appears $rowIndex times in GenLog, want 1 (the merge-on-read reader)")
+    val main = Paths.get("src", "main", "scala")
+    val calls = scan(main, 50, Seq("listLog(")).filterNot(_.contains("def listLog("))
+    val helper = lines.indexWhere(_.contains("def logOf("))
+    val inHelper = calls.size == 1 && calls.head.startsWith(s"$GenLogSrc:") && {
+      val at = calls.head.split(":")(1).toInt - 1
+      helper >= 0 && at > helper && !lines.slice(helper + 1, at).exists(_.startsWith("  }"))
+    }
+    assert(inHelper, s"listLog( called outside logOf:\n${calls.mkString("\n")}")
+    val states = scan(main, 50, Seq("class CkptState", "class GenState"))
+    assert(states.isEmpty, s"second snapshot state type in main:\n${states.mkString("\n")}")
   }
 }

@@ -100,7 +100,7 @@ class StreamingSpec extends SparkTestBase {
     // rows exactly once (offsets recovered), file 2's present
     // (backlog resumed). This is the crash-recovery contract every
     // production stream rides on.
-    val work = java.nio.file.Files.createTempDirectory("ckpt-recovery").toString
+    val work = tempDir("ckpt-recovery")
     val src = s"$work/src"; val out = s"$work/out"; val ck = s"$work/ck"
     val ev = graft.sources.Tables.events(spark, Sf)
     val half1 = ev.where(col("event_id") % 2 === 0)
@@ -185,7 +185,7 @@ class StreamingSpec extends SparkTestBase {
     // replay the same backlog as 3 time-sliced files, one per
     // micro-batch: a purchase in slice 3 must still credit a click
     // from slice 1 — only the carried LastTouch state can know it
-    val mdir = java.nio.file.Files.createTempDirectory("attr-multi").toString
+    val mdir = tempDir("attr-multi")
     val ev = graft.sources.Tables.events(spark, Sf)
     val sliced = ev.withColumn("slice",
       ntile(3).over(org.apache.spark.sql.expressions.Window
@@ -252,7 +252,7 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val work = java.nio.file.Files.createTempDirectory("stateful-recovery").toString
+      val work = tempDir("stateful-recovery")
       val ev = graft.sources.Tables.events(spark, Sf)
       val Array(minUs, maxUs) = ev
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
@@ -321,7 +321,7 @@ class StreamingSpec extends SparkTestBase {
     */
   private def craftTtlBacklog(): (String, Long, Long) = {
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("ttl-backlog").toString
+    val work = tempDir("ttl-backlog")
     val src = s"$work/src"
     val t0 = 1704067200000000L // 2024-01-01T00:00:00Z, micros
     val hourUs = 3600L * 1000000
@@ -429,7 +429,7 @@ class StreamingSpec extends SparkTestBase {
     */
   private def craftAttrBacklog(): (String, Long, Long) = {
     import org.apache.spark.sql.functions._
-    val work = java.nio.file.Files.createTempDirectory("ttl-attr").toString
+    val work = tempDir("ttl-attr")
     val src = s"$work/src"
     val t0 = 1704067200000000L // 2024-01-01T00:00:00Z, micros
     val hourUs = 3600L * 1000000
@@ -576,7 +576,7 @@ class StreamingSpec extends SparkTestBase {
       val Array(minUs, maxUs) = ev
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
         .head().toSeq.map(_.asInstanceOf[Long]).toArray
-      val work = java.nio.file.Files.createTempDirectory("mt-sliced").toString
+      val work = tempDir("mt-sliced")
       val src = s"$work/src"
       val cut = (k: Int) => minUs + (maxUs - minUs + 1) * k / 6
       (0 until 6).foreach { k =>
@@ -747,7 +747,7 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val work = java.nio.file.Files.createTempDirectory("attr-recovery").toString
+      val work = tempDir("attr-recovery")
       val ev = graft.sources.Tables.events(spark, Sf)
       val Array(minUs, maxUs) = ev
         .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts"))))
@@ -821,7 +821,7 @@ class StreamingSpec extends SparkTestBase {
       // 3 time-ordered slices + a far-future sentinel event that
       // pushes the watermark past every real window, so each real
       // window's timer fires during the replay
-      val mdir = java.nio.file.Files.createTempDirectory("trend-multi").toString
+      val mdir = tempDir("trend-multi")
       val ev = graft.sources.Tables.events(spark, Sf)
       val sliced = ev.withColumn("slice",
         ntile(3).over(org.apache.spark.sql.expressions.Window
@@ -875,7 +875,7 @@ class StreamingSpec extends SparkTestBase {
       // 3 time-ordered slices + a far-future sentinel event that
       // pushes the watermark past every real window, so each real
       // window's timer fires during the replay
-      val mdir = java.nio.file.Files.createTempDirectory("hll-multi").toString
+      val mdir = tempDir("hll-multi")
       val ev = graft.sources.Tables.events(spark, Sf)
       val sliced = ev.withColumn("slice",
         ntile(3).over(org.apache.spark.sql.expressions.Window
@@ -934,7 +934,7 @@ class StreamingSpec extends SparkTestBase {
     spark.conf.set(key,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val mdir = java.nio.file.Files.createTempDirectory("hll-split").toString
+      val mdir = tempDir("hll-split")
       val ev = graft.sources.Tables.events(spark, Sf)
       // round-robin split: every window's rows scatter across all four
       // files, so under 1-file triggers EVERY window is a split window
@@ -992,7 +992,7 @@ class StreamingSpec extends SparkTestBase {
           expr("timestamp_micros(us)").as("ts"),
           lit("view").as("event_type"), lit(1.0).as("value"),
           lit("{}").as("props"))
-      val tdir = java.nio.file.Files.createTempDirectory("trend-mg").toString
+      val tdir = tempDir("trend-mg")
       df.coalesce(1).write.mode("overwrite").parquet(tdir)
       val stream = spark.readStream
         .schema(spark.read.parquet(tdir).schema).parquet(tdir)
