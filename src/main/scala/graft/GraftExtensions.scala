@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Conv, Expression, ExpressionInfo, Literal, Md5, Substring}
 import org.apache.spark.sql.types.LongType
-import graft.functions.{BinKernels, CountMinSketch, KmvSketch, MinHashMerge, TextKernels}
+import graft.functions.{BinKernels, CountMinSketch, HllSketch, KmvSketch, MinHashMerge, TextKernels}
 
 /** The graft SparkSessionExtensions hook (the public extension point).
   * It registers the plan extensions: the as-of join strategy, the
@@ -25,6 +25,8 @@ import graft.functions.{BinKernels, CountMinSketch, KmvSketch, MinHashMerge, Tex
   *   - `graft_minhash_merge(sig)` — aggregate: elementwise-min sketch merge
   *   - `graft_misra_gries(item, m)` — aggregate: MG heavy-hitter summary
   *   - `graft_hll(hash)`          — aggregate: HyperLogLog [S, zero_regs]
+  *   - `graft_hll_regs(hash)`     — aggregate: HyperLogLog 256-byte register array
+  *   - `graft_hll_merge(regs)`    — aggregate: register-max union to [S, zero_regs]
   *   - `graft_histogram(x, lo, hi, bins)` — aggregate: fixed-grid counters
   *   - `graft_topk(score, id, k)` — aggregate: bounded-heap exact top-k
   *   - `graft_bpe_encode(word, merges)` — one-pass greedy BPE segmentation
@@ -44,6 +46,22 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       require(args.length == 1, s"$name expects exactly 1 argument")
       build(args.head)
     })
+
+  /** A sketch-size argument (`m`, `bins`, `k`): an integer literal in
+    * [1, Int.MaxValue]. A BIGINT literal out of INT range is rejected,
+    * not truncated (4294967297 must not run as 1).
+    */
+  private def sizeArg(fn: String, name: String, e: Expression): Int = {
+    val v = e match {
+      case Literal(v: Int, _)  => v.toLong
+      case Literal(v: Long, _) => v
+      case _ => throw new IllegalArgumentException(
+        s"$fn: $name must be an integer literal")
+    }
+    if (v < 1 || v > Int.MaxValue) throw new IllegalArgumentException(
+      s"$fn: $name must be between 1 and ${Int.MaxValue}, got $v")
+    v.toInt
+  }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     // whole-operator extension: AsOfJoinPlan → AsOfJoinExec
@@ -106,15 +124,15 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       "_FUNC_(hash) - HyperLogLog m=256 summary as [S, zero_registers]: " +
         "S = sum 2^(53 - M_j) exact; raw estimate = " +
         "0.7213/(1+1.079/256) * 65536 * 2^53 / S",
-      e => graft.functions.HllSketch(e)))
+      e => HllSketch(e)))
     ext.injectFunction(unary("graft_hll_regs",
       "_FUNC_(hash) - HyperLogLog raw 256-byte register array (binary): " +
         "the persistable form; rolls up further via graft_hll_merge",
-      e => graft.functions.HllRegisters(e)))
+      e => HllSketch(e, regsOut = true)))
     ext.injectFunction(unary("graft_hll_merge",
       "_FUNC_(regs) - elementwise-max merge of stored graft_hll_regs " +
         "arrays to [S, zero_registers] (HLL union algebra)",
-      e => graft.functions.HllMerge(e)))
+      e => HllSketch(e, regsIn = true)))
     // binary aggregate: (item, m-literal) — mergeable MG heavy-hitter
     // summary (q161's kernel), completing the sketch family in SQL
     ext.injectFunction((FunctionIdentifier("graft_misra_gries"),
@@ -124,13 +142,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "> 1/(m+1) is guaranteed present"),
       { args: Seq[Expression] =>
         require(args.length == 2, "graft_misra_gries expects exactly 2 arguments")
-        val m = args(1) match {
-          case Literal(v: Int, _) => v
-          case Literal(v: Long, _) => v.toInt
-          case _ => throw new IllegalArgumentException(
-            "graft_misra_gries: m must be an integer literal")
-        }
-        graft.functions.MisraGriesAgg(args(0), m)
+        graft.functions.MisraGriesAgg(args(0), sizeArg("graft_misra_gries", "m", args(1)))
       }))
     // 4-ary aggregate: (x, lo, hi, bins — bounds/bins literal) — the
     // mergeable fixed-grid histogram (q73/q165's pass-1 state) in SQL
@@ -150,14 +162,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           case _ => throw new IllegalArgumentException(
             s"graft_histogram: $n must be a numeric literal")
         }
-        val bins = args(3) match {
-          case Literal(v: Int, _)  => v
-          case Literal(v: Long, _) => v.toInt
-          case _ => throw new IllegalArgumentException(
-            "graft_histogram: bins must be an integer literal")
-        }
-        graft.functions.HistogramSketch(
-          args(0), dbl(args(1), "lo"), dbl(args(2), "hi"), bins)
+        graft.functions.HistogramSketch(args(0), dbl(args(1), "lo"),
+          dbl(args(2), "hi"), sizeArg("graft_histogram", "bins", args(3)))
       }))
     // ternary aggregate: (score, id, k-literal) — the bounded-heap
     // exact top-k (q83/q122/q163's ranking kernel) in SQL
@@ -167,13 +173,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           "array<struct<score,id1,id2>>; O(k) state, mergeable"),
       { args: Seq[Expression] =>
         require(args.length == 3, "graft_topk expects exactly 3 arguments")
-        val k = args(2) match {
-          case Literal(v: Int, _)  => v
-          case Literal(v: Long, _) => v.toInt
-          case _ => throw new IllegalArgumentException(
-            "graft_topk: k must be an integer literal")
-        }
-        graft.functions.TopKAgg(args(0), args(1), Literal(0L), k)
+        graft.functions.TopKAgg(args(0), args(1), Literal(0L),
+          sizeArg("graft_topk", "k", args(2)))
       }))
     // binary: fully codegen'd (doGenCode) Morton interleave
     ext.injectFunction((FunctionIdentifier("graft_zorder"),

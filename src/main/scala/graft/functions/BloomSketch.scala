@@ -1,14 +1,10 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** Bloom filter as a custom Catalyst aggregate + a pure-Column
   * membership test — the semi-join reduction pattern: build the
@@ -30,7 +26,7 @@ case class BloomSketch(
   child: Expression,
   override val mutableAggBufferOffset: Int = 0,
   override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySketch {
 
   import BloomSketch._
 
@@ -56,22 +52,6 @@ case class BloomSketch(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(NumWords * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(NumWords)(bb.getLong)
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(child = c.head)
   override def withNewMutableAggBufferOffset(o: Int): BloomSketch =

@@ -1,13 +1,9 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** Count-Min sketch (Cormode & Muthukrishnan, J. Algorithms 2005) as
   * a custom Catalyst aggregate: d hash rows × w buckets of counters;
@@ -29,7 +25,7 @@ case class CountMinSketch(
   child: Expression,
   override val mutableAggBufferOffset: Int = 0,
   override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySketch {
 
   import CountMinSketch.{D, W, as, bs}
 
@@ -54,22 +50,6 @@ case class CountMinSketch(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(D * W)(bb.getLong)
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(child = c.head)
   override def withNewMutableAggBufferOffset(o: Int): CountMinSketch =

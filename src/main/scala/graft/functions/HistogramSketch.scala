@@ -1,13 +1,9 @@
 package graft.functions
 
-import java.nio.ByteBuffer
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.graftbridge.ColumnBridge
-import org.apache.spark.sql.types._
 
 /** Fixed-grid histogram sketch as a custom Catalyst aggregate — the
   * mergeable scale path for quantiles over a column with a known
@@ -35,7 +31,9 @@ case class HistogramSketch(
   bins: Int,
   override val mutableAggBufferOffset: Int = 0,
   override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySketch {
+
+  require(bins >= 1, s"HistogramSketch requires bins >= 1, got $bins")
 
   override def createAggregationBuffer(): Array[Long] = new Array[Long](bins + 2)
 
@@ -58,22 +56,6 @@ case class HistogramSketch(
     a
   }
 
-  override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bb = ByteBuffer.allocate(buf.length * 8)
-    buf.foreach(bb.putLong)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val bb = ByteBuffer.wrap(bytes)
-    Array.fill(bytes.length / 8)(bb.getLong)
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(child = c.head)
   override def withNewMutableAggBufferOffset(o: Int): HistogramSketch =

@@ -6,12 +6,11 @@ import org.apache.spark.sql.types.{BinaryType, LongType}
 
 /** Scalar (non-aggregate) HLL register algebra as codegen'd
   * StaticInvoke kernels — the projection-side complement to the
-  * [[HllSketch]]/[[HllRegisters]]/[[HllMerge]] aggregates: once
-  * register arrays are MATERIALIZED rows (a persisted per-source /
-  * per-snapshot sketch table), pairwise set algebra over them —
-  * union, cardinality — is a plain column expression, no aggregation
-  * or rescan anywhere. q180 uses these for the pairwise source-
-  * overlap matrix via inclusion–exclusion.
+  * [[HllSketch]] aggregate: once register arrays are MATERIALIZED rows
+  * (a persisted per-source / per-snapshot sketch table), pairwise set
+  * algebra over them — union, cardinality — is a plain column
+  * expression, no aggregation or rescan anywhere. q180 uses these for
+  * the pairwise source-overlap matrix via inclusion–exclusion.
   */
 object HllKernels {
 
@@ -20,10 +19,7 @@ object HllKernels {
     val m = HllSketch.M
     require(a.length == m && b.length == m,
       s"graft register arrays must be $m bytes (got ${a.length}/${b.length})")
-    val out = new Array[Byte](m)
-    var j = 0
-    while (j < m) { out(j) = if (a(j) >= b(j)) a(j) else b(j); j += 1 }
-    out
+    HllSketch.registerMax(a.clone(), b)
   }
 
   /** Exact harmonic-sum integer S = Σ 2^(53 - M_j) of a register

@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
@@ -37,255 +38,116 @@ import org.apache.spark.sql.types._
   * estimator is emitted by design: the small-range linear-counting
   * correction needs ln(), whose last-ulp behavior is libm-dependent.
   *
-  * eval returns array<bigint> [S, zero_registers]: S feeds
-  * [[HllSketch.estimate]]; zero_registers is the standard "are we in
-  * the biased small-range regime" diagnostic a profiling job reports
-  * alongside the estimate.
+  * One aggregate serves all four HLL forms. The buffer is always the
+  * M-byte register array and partial buffers always merge by register
+  * max; two fields pick what is folded in and what comes out:
+  *
+  *   - `regsIn`: the input is a stored BINARY register array (a
+  *     `graft_hll_regs` output), folded in by register max, instead
+  *     of a BIGINT hash60 column folded in by [[HllSketch.updateRegisters]].
+  *     Union of HLL sketches IS elementwise register max (associative,
+  *     commutative, idempotent), so a rollup over stored arrays equals
+  *     the sketch computed directly from the union of the underlying
+  *     data — day = merge of 24 hourly 256-byte rows, corpus = merge
+  *     of per-source rows, no re-scan anywhere. Null inputs are
+  *     skipped (an absent snapshot contributes the empty sketch).
+  *   - `regsOut`: eval returns the raw register array (BINARY) — the
+  *     PERSISTABLE form a profiling pipeline stores, because stored
+  *     registers keep merging upward (hour→day→week, per-source→corpus)
+  *     — instead of array<bigint> [S, zero_registers]. S feeds
+  *     [[HllSketch.estimate]]; zero_registers is the standard "are we
+  *     in the biased small-range regime" diagnostic a profiling job
+  *     reports alongside the estimate.
+  *
+  * {{{
+  *   regsIn  regsOut  Column API       SQL name         prettyName
+  *   false   false    hllSummary       graft_hll        hll_summary
+  *   false   true     hllRegisters     graft_hll_regs   hll_registers
+  *   true    false    hllMergeSummary  graft_hll_merge  hll_merge
+  *   true    true     hllMergeRegs     —                hll_merge_regs
+  * }}}
+  *
+  * `hllMergeRegs` is what a sketch-table MAINTENANCE job runs: merging
+  * an append batch's register rows into the stored rows produces rows
+  * of the same persistable type (q183's stream→warehouse seam and
+  * q185's incremental source maintenance write through it); q178
+  * executes the hour→day rollup against the direct-computation oracle.
   */
 case class HllSketch(
   child: Expression,
+  regsIn: Boolean = false,
+  regsOut: Boolean = false,
   override val mutableAggBufferOffset: Int = 0,
   override val inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[Array[Byte]] {
 
-  import HllSketch.{M, RhoMax}
+  import HllSketch.M
 
-  // graft_hll is user-facing on the SQL surface: declare the input
-  // type so a non-long column fails analysis (clear error) instead of
-  // a runtime ClassCastException inside the aggregate
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hll expects a BIGINT hash column (hash60 domain), " +
-        s"got ${child.dataType.catalogString}")
+  /** (SQL name, prettyName) of this form, per the table above. */
+  private def names: (String, String) = (regsIn, regsOut) match {
+    case (false, false) => ("graft_hll", "hll_summary")
+    case (false, true)  => ("graft_hll_regs", "hll_registers")
+    case (true, false)  => ("graft_hll_merge", "hll_merge")
+    case (true, true)   => ("graft_hll_merge_regs", "hll_merge_regs")
+  }
+
+  // every form is user-facing on the SQL surface: declare the input
+  // type so a wrong column fails analysis (clear error) instead of a
+  // runtime ClassCastException inside the aggregate
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val (sqlName, got) = (names._1, child.dataType.catalogString)
+    if (regsIn) {
+      if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$sqlName expects a BINARY register array " +
+          s"(graft_hll_regs output), got $got")
+    } else {
+      if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
+      else TypeCheckResult.TypeCheckFailure(
+        s"$sqlName expects a BIGINT hash column (hash60 domain), got $got")
+    }
   }
 
   override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
 
   override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
     val v = child.eval(input)
-    if (v != null) HllSketch.updateRegisters(buf, v.asInstanceOf[Long])
+    if (v != null) {
+      if (regsIn) HllSketch.absorb(buf, v.asInstanceOf[Array[Byte]], prettyName)
+      else HllSketch.updateRegisters(buf, v.asInstanceOf[Long])
+    }
     buf
   }
 
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var j = 0
-    while (j < M) { if (b(j) > a(j)) a(j) = b(j); j += 1 }
-    a
-  }
+  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
+    HllSketch.registerMax(a, b)
 
-  /** [S = Σ 2^(53 - M_j) (exact long), zero-register count]. */
-  override def eval(buf: Array[Byte]): Any = {
-    val (s, zeros) = HllSketch.summarize(buf)
-    new GenericArrayData(Array(s, zeros))
-  }
+  /** The register array, or [S = Σ 2^(53 - M_j) (exact long), zero-register count]. */
+  override def eval(buf: Array[Byte]): Any =
+    if (regsOut) buf.clone()
+    else {
+      val (s, zeros) = HllSketch.summarize(buf)
+      new GenericArrayData(Array(s, zeros))
+    }
 
   override def serialize(buf: Array[Byte]): Array[Byte] = buf
   override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def dataType: DataType =
+    if (regsOut) BinaryType else ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
   override def children: Seq[Expression] = Seq(child)
+  // prettyName already names the form: plan strings list the child
+  // and the offsets only
+  override protected def stringArgs: Iterator[Any] =
+    Iterator(child, mutableAggBufferOffset, inputAggBufferOffset)
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
     copy(child = c.head)
   override def withNewMutableAggBufferOffset(o: Int): HllSketch =
     copy(mutableAggBufferOffset = o)
   override def withNewInputAggBufferOffset(o: Int): HllSketch =
     copy(inputAggBufferOffset = o)
-  override def prettyName: String = "hll_summary"
-}
-
-/** [[HllSketch]]'s register-filling aggregate emitting the raw
-  * M-byte register ARRAY (binary) instead of the [S, zeros] summary —
-  * the PERSISTABLE form: per-window/per-snapshot register arrays are
-  * what a production profiling pipeline stores, because stored
-  * registers keep merging upward (hour→day→week, per-source→corpus)
-  * by elementwise max without re-reading any data. [[HllMerge]] is
-  * that upward merge; q178 executes the hour→day rollup against the
-  * direct-computation oracle.
-  */
-case class HllRegisters(
-  child: Expression,
-  override val mutableAggBufferOffset: Int = 0,
-  override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
-
-  import HllSketch.M
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hll_regs expects a BIGINT hash column (hash60 domain), " +
-        s"got ${child.dataType.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] = {
-    val v = child.eval(input)
-    if (v != null) HllSketch.updateRegisters(buf, v.asInstanceOf[Long])
-    buf
-  }
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    RegMerge.max(a, b)
-
-  override def eval(buf: Array[Byte]): Any = buf.clone()
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(o: Int): HllRegisters =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllRegisters =
-    copy(inputAggBufferOffset = o)
-  override def prettyName: String = "hll_registers"
-}
-
-/** The ONE register-max body behind every merging aggregate
-  * ([[HllRegisters]]'s partial merge, [[HllMerge]], [[HllMergeRegs]]):
-  * the loop and the M-byte input contract live here so the register
-  * protocol cannot drift between aggregate variants.
-  */
-private[functions] object RegMerge {
-  def max(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
-    var j = 0
-    while (j < HllSketch.M) { if (b(j) > a(j)) a(j) = b(j); j += 1 }
-    a
-  }
-
-  /** Fold one BINARY input into the buffer, validating the register
-    * width at execution time (any BINARY type-checks; width is the
-    * only execution-time evidence the input is a graft_hll_regs
-    * output). Nulls are skipped — an absent sketch contributes the
-    * empty one.
-    */
-  def absorb(buf: Array[Byte], v: Any, pretty: String): Array[Byte] = {
-    if (v != null) {
-      val regs = v.asInstanceOf[Array[Byte]]
-      require(regs.length == HllSketch.M,
-        s"$pretty: register array must be ${HllSketch.M} bytes (a " +
-          s"graft_hll_regs output), got ${regs.length} — the input " +
-          "column is not a graft register sketch")
-      max(buf, regs)
-    }
-    buf
-  }
-}
-
-/** Register-max merge over PERSISTED [[HllRegisters]] arrays → the
-  * [S, zero_registers] summary. Union of HLL sketches IS elementwise
-  * register max (associative, commutative, idempotent), so a rollup
-  * over stored summaries is exact-equal to the sketch computed
-  * directly from the union of the underlying data — the algebra that
-  * makes 100 TB distinct-count reporting a metadata operation: day =
-  * merge of 24 hourly 256-byte rows, corpus = merge of per-source
-  * rows, no re-scan anywhere. Null inputs are skipped (an absent
-  * snapshot contributes the empty sketch).
-  */
-case class HllMerge(
-  child: Expression,
-  override val mutableAggBufferOffset: Int = 0,
-  override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
-
-  import HllSketch.M
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hll_merge expects a BINARY register array " +
-        s"(graft_hll_regs output), got ${child.dataType.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] =
-    RegMerge.absorb(buf, child.eval(input), prettyName)
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    RegMerge.max(a, b)
-
-  override def eval(buf: Array[Byte]): Any = {
-    val (s, zeros) = HllSketch.summarize(buf)
-    new GenericArrayData(Array(s, zeros))
-  }
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(o: Int): HllMerge =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMerge =
-    copy(inputAggBufferOffset = o)
-  override def prettyName: String = "hll_merge"
-}
-
-/** Register-max merge over PERSISTED [[HllRegisters]] arrays that
-  * emits the MERGED REGISTER ARRAY itself (binary), not the summary —
-  * the aggregate a sketch-table MAINTENANCE job runs: merging an
-  * append batch's register rows into the stored rows produces rows
-  * of the same persistable type, so the table stays further-mergeable
-  * forever (q183's stream→warehouse seam and q185's incremental
-  * source maintenance both write through this). [[HllMerge]] is the
-  * read-side twin that closes a rollup into [S, zeros].
-  */
-case class HllMergeRegs(
-  child: Expression,
-  override val mutableAggBufferOffset: Int = 0,
-  override val inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Byte]] {
-
-  import HllSketch.M
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    if (child.dataType == BinaryType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_hll_merge_regs expects a BINARY register array " +
-        s"(graft_hll_regs output), got ${child.dataType.catalogString}")
-  }
-
-  override def createAggregationBuffer(): Array[Byte] = new Array[Byte](M)
-
-  override def update(buf: Array[Byte], input: InternalRow): Array[Byte] =
-    RegMerge.absorb(buf, child.eval(input), prettyName)
-
-  override def merge(a: Array[Byte], b: Array[Byte]): Array[Byte] =
-    RegMerge.max(a, b)
-
-  override def eval(buf: Array[Byte]): Any = buf.clone()
-
-  override def serialize(buf: Array[Byte]): Array[Byte] = buf
-  override def deserialize(bytes: Array[Byte]): Array[Byte] = bytes
-
-  override def dataType: DataType = BinaryType
-  override def nullable: Boolean = false
-  override def children: Seq[Expression] = Seq(child)
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) =
-    copy(child = c.head)
-  override def withNewMutableAggBufferOffset(o: Int): HllMergeRegs =
-    copy(mutableAggBufferOffset = o)
-  override def withNewInputAggBufferOffset(o: Int): HllMergeRegs =
-    copy(inputAggBufferOffset = o)
-  override def prettyName: String = "hll_merge_regs"
+  override def prettyName: String = names._2
 }
 
 object HllSketch {
@@ -310,6 +172,30 @@ object HllSketch {
     if (rho > buf(j)) buf(j) = rho.toByte
   }
 
+  /** THE register-max body: folds `b` into `a` elementwise and returns
+    * `a`. The aggregate's partial merge, its register-array input and
+    * [[HllKernels.unionK]] all run this loop, so the union algebra
+    * cannot drift between them.
+    */
+  def registerMax(a: Array[Byte], b: Array[Byte]): Array[Byte] = {
+    var j = 0
+    while (j < M) { if (b(j) > a(j)) a(j) = b(j); j += 1 }
+    a
+  }
+
+  /** Fold one stored register array into the buffer, validating the
+    * register width at execution time (any BINARY type-checks; width
+    * is the only execution-time evidence the input is a
+    * graft_hll_regs output).
+    */
+  private def absorb(buf: Array[Byte], regs: Array[Byte], pretty: => String): Array[Byte] = {
+    require(regs.length == M,
+      s"$pretty: register array must be $M bytes (a " +
+        s"graft_hll_regs output), got ${regs.length} — the input " +
+        "column is not a graft register sketch")
+    registerMax(buf, regs)
+  }
+
   /** (S = Σ 2^(53 - M_j) as the exact long, zero-register count). */
   def summarize(buf: Array[Byte]): (Long, Long) = {
     var s = 0L
@@ -323,30 +209,26 @@ object HllSketch {
     (s, zeros)
   }
 
+  private def agg(in: Column, regsIn: Boolean, regsOut: Boolean): Column =
+    ColumnBridge.column(HllSketch(ColumnBridge.expression(in), regsIn, regsOut)
+      .toAggregateExpression())
+
   /** Aggregate a hash60 column into [S, zero_registers]. */
-  def hllSummary(hash: Column): Column =
-    ColumnBridge.column(
-      HllSketch(ColumnBridge.expression(hash)).toAggregateExpression())
+  def hllSummary(hash: Column): Column = agg(hash, regsIn = false, regsOut = false)
 
   /** Aggregate a hash60 column into the raw M-byte register array
     * (the persistable, further-mergeable form).
     */
-  def hllRegisters(hash: Column): Column =
-    ColumnBridge.column(
-      HllRegisters(ColumnBridge.expression(hash)).toAggregateExpression())
+  def hllRegisters(hash: Column): Column = agg(hash, regsIn = false, regsOut = true)
 
   /** Merge persisted register arrays into [S, zero_registers]. */
-  def hllMergeSummary(regs: Column): Column =
-    ColumnBridge.column(
-      HllMerge(ColumnBridge.expression(regs)).toAggregateExpression())
+  def hllMergeSummary(regs: Column): Column = agg(regs, regsIn = true, regsOut = false)
 
   /** Merge persisted register arrays into the MERGED register array
     * (binary) — the maintenance-write form that keeps a sketch table
     * further-mergeable.
     */
-  def hllMergeRegs(regs: Column): Column =
-    ColumnBridge.column(
-      HllMergeRegs(ColumnBridge.expression(regs)).toAggregateExpression())
+  def hllMergeRegs(regs: Column): Column = agg(regs, regsIn = true, regsOut = true)
 
   /** Raw HLL estimate alpha_256 · 256² · 2^53 / S from the exact
     * integer S. The constant tree (not a pre-folded Scala double) is
@@ -362,12 +244,36 @@ object HllSketch {
     s"0.7213 / (1.0 + 1.079 / 256.0) * 65536.0 * 9007199254740992.0 / ($s)::DOUBLE"
 
   /** DuckDB twin of the register computation over a hash column `h`
-    * (uniform on [0, 2^60)): groupable (j, rho) pairs; the caller
-    * aggregates MAX(rho) per (group, j) and folds absent registers
-    * as 2^53 each. `bin(w)` has no leading zeros, so its length IS
-    * bitLength(w), matching 64 - numberOfLeadingZeros(w) exactly.
+    * (uniform on [0, 2^60)): groupable (j, rho) pairs, which
+    * [[registerMaxSql]] and [[summarizeSql]] fold. `bin(w)` has no
+    * leading zeros, so its length IS bitLength(w), matching
+    * 64 - numberOfLeadingZeros(w) exactly.
     */
   def registerSql(h: String): String =
     s"($h) % $M AS j, CASE WHEN ($h) // $M = 0 THEN $RhoMax " +
       s"ELSE $RhoMax - length(bin(($h) // $M)) END AS rho"
+
+  /** DuckDB twin of the per-group register array over a relation of
+    * (`keys`…, j, rho) rows: one (`keys`…, j, mj) row per non-empty
+    * register, mj its max rho. `keys` is a comma list, or "" for one
+    * group.
+    */
+  def registerMaxSql(keys: String, rhoRel: String): String = {
+    val k = if (keys.isEmpty) "j" else s"$keys, j"
+    s"SELECT $k, MAX(rho) AS mj FROM $rhoRel GROUP BY $k"
+  }
+
+  /** DuckDB twin of [[summarize]] over a relation of (`keys`…, j, rho)
+    * rows: per group the exact S as `s_fp` (each register absent from
+    * the group counts as empty, 2^53), plus `zero_regs` if `zeros`.
+    */
+  def summarizeSql(keys: String, rhoRel: String, zeros: Boolean = false): String = {
+    val k = if (keys.isEmpty) "" else s"$keys, "
+    val empty = s"($M - COUNT(*))"
+    val zeroCol = if (zeros) s",\n    $empty::BIGINT AS zero_regs" else ""
+    s"""SELECT $k(SUM(1::BIGINT << ($RhoMax - mj))
+       |      + $empty * (1::BIGINT << $RhoMax))::BIGINT AS s_fp$zeroCol
+       |  FROM (${registerMaxSql(keys, rhoRel)})""".stripMargin +
+      (if (keys.isEmpty) "" else s" GROUP BY $keys")
+  }
 }

@@ -420,18 +420,16 @@ object GenLog {
     */
   private def bloomLines(m: Map[String, Array[Long]]): Seq[String] =
     m.toSeq.sortBy(_._1).map { case (p, words) =>
-      val bb = java.nio.ByteBuffer.allocate(words.length * 8)
-      words.foreach(bb.putLong)
-      s"bl:${java.util.Base64.getEncoder.encodeToString(bb.array())}:$p"
+      val bytes = graft.functions.LongArraySketch.encode(words)
+      s"bl:${java.util.Base64.getEncoder.encodeToString(bytes)}:$p"
     }
 
   private def parseBlooms(lines: Seq[String]): Map[String, Array[Long]] =
     lines.collect { case l if l.startsWith("bl:") =>
       val a = l.drop(3)
       val i = a.indexOf(':')
-      val bytes = java.util.Base64.getDecoder.decode(a.take(i))
-      val bb = java.nio.ByteBuffer.wrap(bytes)
-      a.drop(i + 1) -> Array.fill(bytes.length / 8)(bb.getLong)
+      a.drop(i + 1) -> graft.functions.LongArraySketch.decode(
+        java.util.Base64.getDecoder.decode(a.take(i)))
     }.toMap
 
   private def commitBody(c: Commit): String =

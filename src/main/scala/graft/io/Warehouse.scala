@@ -282,8 +282,8 @@ object Warehouse {
     * re-absorbs into the rebuilt base. Single-writer, like every
     * maintenance write here.
     */
-  private[graft] def ingestLogContains(spark: SparkSession, table: String,
-                                       batchId: String): Boolean = {
+  private def ingestLogContains(spark: SparkSession, table: String,
+                                batchId: String): Boolean = {
     val (loc, fs) = locFs(spark, table)
     val p = new org.apache.hadoop.fs.Path(loc, IngestLogFile)
     scala.util.Try {
@@ -307,8 +307,8 @@ object Warehouse {
     * (rename is atomic on HDFS/local; the delete+rename hole only
     * loses the log, which re-absorption then repairs).
     */
-  private[graft] def ingestLogAdd(spark: SparkSession, table: String,
-                                  batchId: String): Unit = {
+  private def ingestLogAdd(spark: SparkSession, table: String,
+                           batchId: String): Unit = {
     val (loc, fs) = locFs(spark, table)
     val p = new org.apache.hadoop.fs.Path(loc, IngestLogFile)
     val tmp = new org.apache.hadoop.fs.Path(loc, IngestLogFile + ".tmp")
@@ -324,6 +324,17 @@ object Warehouse {
     if (fs.exists(p)) fs.delete(p, false)
     fs.rename(tmp, p)
   }
+
+  /** Run `body` once per (`table`, `batchId`) across sessions: it is
+    * skipped when the ingest log already holds `batchId`, which is
+    * recorded only after `body` returns — a body that throws leaves
+    * the id unrecorded, and the next call runs it again.
+    */
+  def absorbOnce(spark: SparkSession, table: String, batchId: String)(body: => Unit): Unit =
+    if (!ingestLogContains(spark, table, batchId)) {
+      body
+      ingestLogAdd(spark, table, batchId)
+    }
 
   /** Append `batch` to `table` EXACTLY once, keyed by a PRESENCE
     * predicate that is true of every batch row and of NO pre-existing

@@ -218,10 +218,9 @@ object AnnTrained {
       s"$dir/embeddings.parquet", "cell") {
       cellRows(spark, dir, "vec_id % 8 != 0").repartition(col("cell"))
     }
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "append_mod8")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "append_mod8") {
       graft.io.Warehouse.upsertMergeByKey(spark, t,
         cellRows(spark, dir, "vec_id % 8 = 0"), "cell", "vec_id")
-      graft.io.Warehouse.ingestLogAdd(spark, t, "append_mod8")
     }
     t
   }
@@ -356,14 +355,13 @@ object AnnTrained {
       s"$dir/embeddings.parquet", "cell") {
       cellRows(spark, dir, "true").repartition(col("cell"))
     }
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "tomb_mod10_3")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "tomb_mod10_3") {
       // tombstones carry (key, partition): the store's own assignment
       // of each doomed key — a partition-pruned anti-join rewrite,
       // never a store scan
       val tombs = spark.table(t).where(expr(TombFilter))
         .select(col("vec_id"), col("cell"))
       graft.io.Warehouse.deleteMergeByKey(spark, t, tombs, "cell", "vec_id")
-      graft.io.Warehouse.ingestLogAdd(spark, t, "tomb_mod10_3")
     }
     t
   }

@@ -929,7 +929,7 @@ object Dedup {
     // generations through the same upsert seam as the sketch tables
     graft.io.Warehouse.ensureMaintainedPartitionedTable(spark, prs, src,
       "id_a BIGINT, id_b BIGINT, jaccard DOUBLE, gen STRING", "gen")
-    if (!graft.io.Warehouse.ingestLogContains(spark, prs, "base")) {
+    graft.io.Warehouse.absorbOnce(spark, prs, "base") {
       // candidates from the STORED index (base bands only here — the
       // wave block runs strictly after this log records), shingles
       // recomputed for candidate ENDPOINTS only: the base corpus is
@@ -950,9 +950,8 @@ object Dedup {
       graft.io.Warehouse.upsertPartitions(spark, prs,
         scorePairs(pairs, endpointSh).withColumn("gen", lit("base"))
           .repartition(col("gen")))
-      graft.io.Warehouse.ingestLogAdd(spark, prs, "base")
     }
-    if (!graft.io.Warehouse.ingestLogContains(spark, prs, "append_mod8")) {
+    graft.io.Warehouse.absorbOnce(spark, prs, "append_mod8") {
       val wave = lshRows(spark, dir, "doc_id % 8 = 0").localCheckpoint()
       try {
         val waveBands = bandRows(wave)
@@ -988,7 +987,6 @@ object Dedup {
         // multi-file job commit — skips, appends, or repairs
         graft.io.Warehouse.appendExactlyOnce(spark, idx, waveBands,
           expr("doc_id % 8 = 0"), waveBands.count())
-        graft.io.Warehouse.ingestLogAdd(spark, prs, "append_mod8")
       } finally
         // Dataset.unpersist is a no-op on a checkpoint — free the
         // pinned RDD deterministically (the CorpusOps discipline)

@@ -238,7 +238,7 @@ object Layout {
       slice("l_orderkey % 8 != 0", ZoneFiles)
     }
     val st = ZoneMaps.ensureFileStats(spark, t + "_stats", t, Seq("l_shipdate"))
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "append_mod8")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "append_mod8") {
       // exactly-once wave append: wave rows live only in wave files
       // (the base filter excludes them), so every crash timing —
       // including a partial multi-file job commit — skips, appends,
@@ -246,7 +246,6 @@ object Layout {
       graft.io.Warehouse.appendExactlyOnce(spark, t,
         slice("l_orderkey % 8 = 0", 4), expr("l_orderkey % 8 = 0"),
         Tables.lineitem(spark, dir).where(expr("l_orderkey % 8 = 0")).count())
-      graft.io.Warehouse.ingestLogAdd(spark, t, "append_mod8")
     }
     // always converges: anti-join on file name finds nothing once
     // absorbed (and repairs a crash between append and absorb)

@@ -633,10 +633,9 @@ object PqQueries {
       s"$dir/embeddings.parquet", "cell") {
       codeRows(spark, dir, "vec_id % 8 != 0").repartition(col("cell"))
     }
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "append_mod8")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "append_mod8") {
       graft.io.Warehouse.upsertMergeByKey(spark, t,
         codeRows(spark, dir, "vec_id % 8 = 0"), "cell", "vec_id")
-      graft.io.Warehouse.ingestLogAdd(spark, t, "append_mod8")
     }
     t
   }

@@ -141,7 +141,7 @@ object Retrieval {
     graft.io.Warehouse.ensureBucketedTable(spark, table,
       s"$dir/documents.parquet", "t", indexBuckets(spark))(
       postings(docs.where(pmod(col("doc_id"), lit(8)) =!= 0)))
-    if (!graft.io.Warehouse.ingestLogContains(spark, table, "append_mod8")) {
+    graft.io.Warehouse.absorbOnce(spark, table, "append_mod8") {
       // This append is NON-idempotent (it adds rows), so the log alone
       // is not enough: a crash between insert and log-add — or a log
       // read error reported as "absent" — must not duplicate the
@@ -156,7 +156,6 @@ object Retrieval {
           .write.mode("append").insertInto(table)
         spark.catalog.refreshTable(table)
       }
-      graft.io.Warehouse.ingestLogAdd(spark, table, "append_mod8")
     }
     spark.table(table)
   }

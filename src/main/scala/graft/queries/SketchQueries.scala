@@ -557,13 +557,7 @@ object SketchQueries {
        |  ${TextFns.hash60Sql("floor(v::DOUBLE * 100 + 0.5)::BIGINT::VARCHAR")} AS h
        |  FROM p),
        |r AS (SELECT cn, ${HllSketch.registerSql("h")} FROM h),
-       |regs AS (SELECT cn, j, MAX(rho) AS mj FROM r GROUP BY cn, j),
-       |agg AS (
-       |  SELECT cn,
-       |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-       |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp,
-       |    (${HllSketch.M} - COUNT(*))::BIGINT AS zero_regs
-       |  FROM regs GROUP BY cn),
+       |agg AS (${HllSketch.summarizeSql("cn", "r", zeros = true)}),
        |st AS (SELECT cn, COUNT(*)::BIGINT AS n, MIN(v) AS min_v, MAX(v) AS max_v,
        |  SUM(v::DECIMAL(18,6))::DOUBLE AS sum_v FROM p GROUP BY cn)
        |SELECT cols.cn AS col_name, COALESCE(n, 0::BIGINT) AS n, zero_regs,
@@ -747,13 +741,7 @@ object SketchQueries {
        |          unnest(${TextFns.shinglesSql("string_split(text, ' ')", 3)}) AS g
        |        FROM documents)),
        |r AS (SELECT source, ${HllSketch.registerSql("h")} FROM h),
-       |regs AS (SELECT source, j, MAX(rho) AS mj FROM r GROUP BY source, j),
-       |agg AS (
-       |  SELECT source,
-       |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-       |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp,
-       |    (${HllSketch.M} - COUNT(*))::BIGINT AS zero_regs
-       |  FROM regs GROUP BY source),
+       |agg AS (${HllSketch.summarizeSql("source", "r", zeros = true)}),
        |ex AS (SELECT source, COUNT(DISTINCT h)::BIGINT AS exact_distinct
        |       FROM h GROUP BY source)
        |SELECT source, exact_distinct, zero_regs,
@@ -821,13 +809,6 @@ object SketchQueries {
     // construction (ADVICE r10).
     val refS =
       s"COALESCE(sRef.s_fp, (${HllSketch.M}::BIGINT * (1::BIGINT << ${HllSketch.RhoMax})))"
-    def sAgg(src: String, alias: String): String =
-      s"""$alias AS (
-         |  SELECT source,
-         |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-         |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp
-         |  FROM (SELECT source, j, MAX(rho) AS mj FROM $src GROUP BY source, j)
-         |  GROUP BY source)""".stripMargin
     s"""WITH h AS (
        |  SELECT source, (doc_id // 20) % 2 = 0 AS is_ref,
        |    ${TextFns.hash60Sql("g")} AS h
@@ -836,8 +817,8 @@ object SketchQueries {
        |        FROM documents)),
        |rAll AS (SELECT source, ${HllSketch.registerSql("h")} FROM h),
        |rRef AS (SELECT source, ${HllSketch.registerSql("h")} FROM h WHERE is_ref),
-       |${sAgg("rAll", "sAll")},
-       |${sAgg("rRef", "sRef")},
+       |sAll AS (${HllSketch.summarizeSql("source", "rAll")}),
+       |sRef AS (${HllSketch.summarizeSql("source", "rRef")}),
        |ex AS (
        |  SELECT source,
        |    COUNT(DISTINCT h) FILTER (WHERE is_ref)::BIGINT AS exact_ref,
@@ -910,13 +891,7 @@ object SketchQueries {
        |    user_id, ${TextFns.hash60Sql("user_id::VARCHAR")} AS h
        |  FROM events),
        |r AS (SELECT day_start, ${HllSketch.registerSql("h")} FROM h),
-       |regs AS (SELECT day_start, j, MAX(rho) AS mj FROM r GROUP BY day_start, j),
-       |agg AS (
-       |  SELECT day_start,
-       |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-       |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp,
-       |    (${HllSketch.M} - COUNT(*))::BIGINT AS zero_regs
-       |  FROM regs GROUP BY day_start),
+       |agg AS (${HllSketch.summarizeSql("day_start", "r", zeros = true)}),
        |ex AS (SELECT day_start, COUNT(DISTINCT hr)::BIGINT AS n_hours,
        |  COUNT(DISTINCT user_id)::BIGINT AS exact_users FROM h GROUP BY 1)
        |SELECT agg.day_start, n_hours, exact_users, zero_regs,
@@ -1024,13 +999,7 @@ object SketchQueries {
        |b AS (SELECT MIN(day) + 7 AS ws, MIN(day) + 14 AS we FROM h),
        |wk AS (SELECT h.* FROM h, b WHERE day >= ws AND day < we),
        |r AS (SELECT ${HllSketch.registerSql("h")} FROM wk),
-       |regs AS (SELECT j, MAX(rho) AS mj FROM r GROUP BY j),
-       |agg AS (
-       |  SELECT
-       |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-       |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp,
-       |    (${HllSketch.M} - COUNT(*))::BIGINT AS zero_regs
-       |  FROM regs),
+       |agg AS (${HllSketch.summarizeSql("", "r", zeros = true)}),
        |ex AS (SELECT COUNT(DISTINCT day)::BIGINT AS n_days,
        |  COUNT(DISTINCT hr)::BIGINT AS n_hours,
        |  COUNT(DISTINCT user_id)::BIGINT AS exact_users FROM wk)
@@ -1166,11 +1135,6 @@ object SketchQueries {
 
   val q180Sql: String = {
     import graft.functions.HllSketch
-    def sAgg(gb: String, src: String): String =
-      s"""SELECT $gb,
-         |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-         |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp
-         |  FROM $src GROUP BY $gb""".stripMargin
     val estA = HllSketch.estimateSql("sa.s_fp")
     val estB = HllSketch.estimateSql("sb.s_fp")
     val estU = HllSketch.estimateSql("su.s_fp")
@@ -1180,18 +1144,17 @@ object SketchQueries {
        |          unnest(${TextFns.shinglesSql("string_split(text, ' ')", 3)}) AS g
        |        FROM documents)),
        |r AS (SELECT source, ${HllSketch.registerSql("h")} FROM h),
-       |regs AS (SELECT source, j, MAX(rho) AS mj FROM r GROUP BY source, j),
-       |s AS (${sAgg("source", "regs")}),
+       |regs AS (${HllSketch.registerMaxSql("source", "r")}),
+       |s AS (${HllSketch.summarizeSql("source", "r")}),
        |pairs AS (
        |  SELECT a.source AS source_a, b.source AS source_b
        |  FROM (SELECT DISTINCT source FROM h) a
        |  JOIN (SELECT DISTINCT source FROM h) b ON a.source < b.source),
        |ur AS (
-       |  SELECT p.source_a, p.source_b, rg.j, MAX(rg.mj) AS mj
+       |  SELECT p.source_a, p.source_b, rg.j, rg.mj AS rho
        |  FROM pairs p JOIN regs rg
-       |    ON rg.source = p.source_a OR rg.source = p.source_b
-       |  GROUP BY 1, 2, 3),
-       |su AS (${sAgg("source_a, source_b", "ur")})
+       |    ON rg.source = p.source_a OR rg.source = p.source_b),
+       |su AS (${HllSketch.summarizeSql("source_a, source_b", "ur")})
        |SELECT p.source_a, p.source_b,
        |  ${TextFns.rndSql(estA, 4)} AS est_a,
        |  ${TextFns.rndSql(estB, 4)} AS est_b,
@@ -1373,12 +1336,7 @@ object SketchQueries {
     import graft.functions.HllSketch
     def leg(name: String, where: String): String =
       s"""r$name AS (SELECT source, ${HllSketch.registerSql("h")} FROM h $where),
-         |g$name AS (SELECT source, j, MAX(rho) AS mj FROM r$name GROUP BY source, j),
-         |s$name AS (
-         |  SELECT source,
-         |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-         |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp
-         |  FROM g$name GROUP BY source)""".stripMargin
+         |s$name AS (${HllSketch.summarizeSql("source", s"r$name")})""".stripMargin
     s"""WITH h AS (
        |  SELECT source, is_batch, ${TextFns.hash60Sql("g")} AS h
        |  FROM (SELECT source, doc_id % 8 = 0 AS is_batch,

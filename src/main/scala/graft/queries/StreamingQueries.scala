@@ -611,13 +611,7 @@ object StreamingQueries {
        |    user_id, ${TextFns.hash60Sql("user_id::VARCHAR")} AS h
        |  FROM events),
        |r AS (SELECT win_start, ${HllSketch.registerSql("h")} FROM h),
-       |regs AS (SELECT win_start, j, MAX(rho) AS mj FROM r GROUP BY win_start, j),
-       |agg AS (
-       |  SELECT win_start,
-       |    (SUM(1::BIGINT << (${HllSketch.RhoMax} - mj))
-       |      + (${HllSketch.M} - COUNT(*)) * (1::BIGINT << ${HllSketch.RhoMax}))::BIGINT AS s_fp,
-       |    (${HllSketch.M} - COUNT(*))::BIGINT AS zero_regs
-       |  FROM regs GROUP BY win_start),
+       |agg AS (${HllSketch.summarizeSql("win_start", "r", zeros = true)}),
        |ex AS (SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS win_start,
        |  COUNT(DISTINCT user_id)::BIGINT AS exact_users FROM events GROUP BY 1)
        |SELECT agg.win_start, exact_users, zero_regs,

@@ -553,7 +553,7 @@ object TimeTravel {
       s"$dir/events.parquet", "event_type") {
       keyed(GenLog.read(spark, loc, "g1")).repartition(col("event_type"))
     }
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "feed_g2_del")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "feed_g2_del") {
       val feed = q211(spark, dir)
       val dels = keyed(feed.where(col("change") === "delete")
         .select(col("day"), col("event_type"), col("n_old").as("n_events")))
@@ -563,7 +563,6 @@ object TimeTravel {
         .select(col("day"), col("event_type"), col("n_new").as("n_events")))
       if (!ups.isEmpty)
         graft.io.Warehouse.upsertMergeByKey(spark, t, ups, "event_type", "k")
-      graft.io.Warehouse.ingestLogAdd(spark, t, "feed_g2_del")
     }
     t
   }

@@ -63,7 +63,8 @@ object SketchWarehouse {
 
   /** Merge a batch of (win_us, regs) rows into the stored table:
     * union with the stored rows of the batch's days, register-max per
-    * window ([[graft.functions.HllSketch.hllMergeRegs]]), dynamic
+    * window ([[graft.functions.HllSketch.hllMergeRegs]], the one HLL
+    * aggregate's register-array-in, register-array-out form), dynamic
     * partition overwrite of exactly those days (one file per day —
     * the q146 small-files rule). Idempotent by construction.
     *

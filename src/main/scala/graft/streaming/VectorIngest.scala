@@ -72,9 +72,8 @@ object VectorIngest {
     graft.io.Warehouse.ensureMaintainedPartitionedTable(spark, t,
       s"$dir/embeddings.parquet",
       "vec_id BIGINT, embedding ARRAY<FLOAT>, nrm DOUBLE, cell INT", "cell")
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, "stream_complete")) {
+    graft.io.Warehouse.absorbOnce(spark, t, "stream_complete") {
       streamIngest(spark, dir, t)
-      graft.io.Warehouse.ingestLogAdd(spark, t, "stream_complete")
     }
     t
   }
@@ -122,9 +121,8 @@ object VectorIngest {
   def ensureCompactedHotCell(spark: SparkSession, dir: String): String = {
     val t = ensureStreamedCellStore(spark, dir)
     val marker = s"compact_cell$HotCell"
-    if (!graft.io.Warehouse.ingestLogContains(spark, t, marker)) {
+    graft.io.Warehouse.absorbOnce(spark, t, marker) {
       graft.io.Warehouse.compactPartition(spark, t, "cell", HotCell.toString)
-      graft.io.Warehouse.ingestLogAdd(spark, t, marker)
     }
     t
   }

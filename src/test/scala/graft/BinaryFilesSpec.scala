@@ -40,7 +40,7 @@ class BinaryFilesSpec extends SparkTestBase {
     * would hide a BGR/RGB channel-order divergence between readers.
     */
   private lazy val gradientDir: String = {
-    val base = java.nio.file.Files.createTempDirectory("imgparity").toFile
+    val base = new File(tempDir("imgparity"))
     val img = new BufferedImage(32, 24, BufferedImage.TYPE_3BYTE_BGR)
     for (x <- 0 until 32; y <- 0 until 24)
       img.setRGB(x, y, ((x * 8) << 16) | ((y * 10) << 8) | ((x + y) * 4))

@@ -84,7 +84,7 @@ class CasesTimeJobSpec extends SparkTestBase {
   }
 
   test("run writes single-file JSON outputs") {
-    val out = java.nio.file.Files.createTempDirectory("cases_time_out").toString
+    val out = tempDir("cases_time_out")
     CasesTimeAnalysis.run(spark, fixture, out)
     val dir = new java.io.File(s"$out/confirmed_cases_and_deaths_globally")
     val parts = dir.listFiles().filter(_.getName.endsWith(".json"))

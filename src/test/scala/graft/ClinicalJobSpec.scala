@@ -60,7 +60,7 @@ class ClinicalJobSpec extends SparkTestBase {
   }
 
   test("careRelations round-trips through parquet (K2/S4)") {
-    val out = java.nio.file.Files.createTempDirectory("clinical_tmp").toString
+    val out = tempDir("clinical_tmp")
     val c = careRelations(df, s"$out/temporary.parquet")
     assert(c.count() == 6) // positive rows
     assert(!c.columns.contains(admissionCols.head))
@@ -86,7 +86,7 @@ class ClinicalJobSpec extends SparkTestBase {
     val outputs = Set("hemoglobin_values", "red_blood_cells_values", "aggregate_age_result",
       "age_relations", "care_relations", "predictions_missing_values",
       "predictions_value_distribution", "predictions_test_result_distribution", "predictions")
-    val (a, b) = JobFixtures.runTwice("clinical")(ClinicalAnalysis.run(spark, fixture, _))
+    val (a, b) = JobFixtures.runTwice(tempDir("clinical"))(ClinicalAnalysis.run(spark, fixture, _))
     // temporary.parquet is careRelations' K2 round-trip, not a JSON output
     assert(JobFixtures.outputDirs(a) == outputs + "temporary.parquet")
     val parts = JobFixtures.jsonParts(a)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.concurrent.{Await, Future}
 import scala.concurrent.ExecutionContext.Implicits.global
@@ -19,7 +18,7 @@ class ConcurrentWritesSpec extends SparkTestBase {
   private def poolThreads: Int = Thread.getAllStackTraces.keySet.asScala
     .count(t => t.isAlive && t.getName.startsWith(Writers.PoolThreadPrefix))
 
-  private def tmp(): String = Files.createTempDirectory("concurrent_writes").toString
+  private def tmp(): String = tempDir("concurrent_writes")
 
   private def written(dir: String): Boolean = new File(dir, "_SUCCESS").exists()
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.functions.TextFns
 import graft.queries.{CorpusOps, PipelineOps}
@@ -21,7 +20,7 @@ class EdgeDocsSpec extends SparkTestBase {
     * dir the curation queries can read like any scale factor.
     */
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("graft_edge_docs").toString
+    val d = tempDir("graft_edge_docs")
     val pathological = Seq(
       (9001L, "", "en", "src0", 0L),
       (9002L, "solo", "en", "src0", 4L),

@@ -24,8 +24,7 @@ class EventsEncodingSpec extends SparkTestBase {
     */
   private def writeFixture(mode: String): String = {
     import spark.implicits._
-    val dir = Files.createTempDirectory(s"graft-events-$mode").toFile
-    dir.deleteOnExit()
+    val dir = new java.io.File(tempDir(s"graft-events-$mode"))
     // the third event sits 4h past the first two so the 2h watermark
     // finalizes (and Append-mode emits) their windows in the replay
     val base = Seq(

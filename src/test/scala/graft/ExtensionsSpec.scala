@@ -203,4 +203,74 @@ class ExtensionsSpec extends SparkTestBase {
       spark.sql("SELECT graft_hll(CAST(h AS STRING)) FROM ext_hll_m").collect())
     assert(err.getMessage.contains("BIGINT"), err.getMessage)
   }
+
+  /** Every message down a throwable's cause chain, joined. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+
+  test("sketch-size literals outside [1, Int.MaxValue] fail at analysis, not truncated") {
+    import spark.implicits._
+    Seq((3.0, 30L, "a"), (1.0, 10L, "b")).toDF("s", "id", "t")
+      .createOrReplaceTempView("ext_size")
+    // 4294967297 = 2^32 + 1: an Int truncation would run it as 1
+    for ((call, name) <- Seq(
+        "graft_topk(s, id, 4294967297)" -> "k",
+        "graft_misra_gries(t, 4294967297)" -> "m",
+        "graft_histogram(s, 0.0, 10.0, 4294967297)" -> "bins",
+        "graft_histogram(s, 0.0, 10.0, 0)" -> "bins",
+        "graft_histogram(s, 0.0, 10.0, -3)" -> "bins",
+        "graft_topk(s, id, 0)" -> "k")) {
+      // spark.sql analyzes eagerly: the failure must come before any job
+      val err = intercept[Exception](spark.sql(s"SELECT $call AS x FROM ext_size"))
+      assert(messages(err).contains(s"$name must be between 1 and ${Int.MaxValue}"),
+        s"$call: ${messages(err)}")
+    }
+    // the column API keeps the same floor on the histogram grid
+    val err = intercept[IllegalArgumentException](
+      graft.functions.HistogramSketch.histogram(col("s"), 0.0, 10.0, 0))
+    assert(err.getMessage.contains("bins >= 1"), err.getMessage)
+  }
+
+  test("graft_hll_regs / graft_hll_merge reject the other form's input type at analysis") {
+    import spark.implicits._
+    Seq(5L, 256L).toDF("h").createOrReplaceTempView("ext_hll_t")
+    val regs = intercept[Exception](
+      spark.sql("SELECT graft_hll_regs(CAST(h AS STRING)) FROM ext_hll_t"))
+    assert(messages(regs).contains(
+      "graft_hll_regs expects a BIGINT hash column (hash60 domain), got string"),
+      messages(regs))
+    val merge = intercept[Exception](
+      spark.sql("SELECT graft_hll_merge(h) FROM ext_hll_t"))
+    assert(messages(merge).contains(
+      "graft_hll_merge expects a BINARY register array (graft_hll_regs output), got bigint"),
+      messages(merge))
+  }
+
+  test("graft_hll_merge over a 255-byte BINARY fails at execution with the register width") {
+    import spark.implicits._
+    Seq(Array.fill[Byte](255)(1)).toDF("r").createOrReplaceTempView("ext_hll_w")
+    // any BINARY type-checks, so analysis succeeds...
+    val df = spark.sql("SELECT graft_hll_merge(r) AS s FROM ext_hll_w")
+    // ...and the width check stops the job
+    val err = intercept[Exception](df.collect())
+    assert(messages(err).contains(
+      "hll_merge: register array must be 256 bytes (a graft_hll_regs output), got 255"),
+      messages(err))
+  }
+
+  test("hllMergeRegs over per-group hllRegisters is byte-equal to hllRegisters over the union") {
+    import graft.functions.HllSketch
+    import spark.implicits._
+    val rows = (1 to 500).map(i => (i % 7, (i * 0x9E3779B97F4A7C15L) & ((1L << 60) - 1)))
+    val df = rows.toDF("g", "h")
+    val merged = df.groupBy("g").agg(HllSketch.hllRegisters(col("h")).as("r"))
+      .agg(HllSketch.hllMergeRegs(col("r")).as("r"))
+      .head().getAs[Array[Byte]](0)
+    val direct = df.agg(HllSketch.hllRegisters(col("h")).as("r"))
+      .head().getAs[Array[Byte]](0)
+    assert(merged.length == HllSketch.M)
+    assert(merged.sameElements(direct))
+    assert(direct.count(_ != 0) > 200, "the union must fill most registers")
+  }
 }

@@ -89,21 +89,28 @@ class IncrementalStoreSpec extends SparkTestBase {
       "cell")(graft.sources.Tables.embeddings(spark, Sf)
         .select(col("vec_id"), pmod(col("vec_id"), lit(4)).cast("int").as("cell"))
         .repartition(col("cell")))
-    assert(!Warehouse.ingestLogContains(spark, t, "b1"))
-    Warehouse.ingestLogAdd(spark, t, "b1")
-    assert(Warehouse.ingestLogContains(spark, t, "b1"))
-    assert(!Warehouse.ingestLogContains(spark, t, "b2"))
-    Warehouse.ingestLogAdd(spark, t, "b2")
-    assert(Warehouse.ingestLogContains(spark, t, "b1") &&
-      Warehouse.ingestLogContains(spark, t, "b2"))
+    var runs = Vector.empty[String]
+    def absorb(id: String): Unit = Warehouse.absorbOnce(spark, t, id) { runs :+= id }
+    absorb("b1"); absorb("b1")
+    assert(runs == Vector("b1"))
+    absorb("b2"); absorb("b1"); absorb("b2")
+    assert(runs == Vector("b1", "b2"))
+    // the id is recorded only after the body returns: a body that
+    // throws leaves it unrecorded, so the next call runs it again
+    intercept[IllegalStateException](
+      Warehouse.absorbOnce(spark, t, "b3")(throw new IllegalStateException("crash")))
+    absorb("b3"); absorb("b3")
+    assert(runs == Vector("b1", "b2", "b3"))
     // the log survives dynamic-partition maintenance (it lives at the
     // table root; waves rewrite only partition dirs)...
     Warehouse.upsertPartitions(spark, t,
       spark.table(t).where(col("cell") === 0).repartition(1))
-    assert(Warehouse.ingestLogContains(spark, t, "b1"))
+    absorb("b1")
+    assert(runs == Vector("b1", "b2", "b3"))
     // ...and re-registration from surviving files (new catalog entry)
     spark.sql(s"DROP TABLE $t")
-    assert(Warehouse.ingestLogContains(spark, t, "b1"),
+    absorb("b1")
+    assert(runs == Vector("b1", "b2", "b3"),
       "the log must outlive the catalog entry, like the data files")
     dropScratch(t)
   }

@@ -10,7 +10,7 @@ import graft.sources.Tables
 class IoRoundTripSpec extends SparkTestBase {
 
   test("sharded JSONL round-trips documents; shard count and routing are deterministic") {
-    val dir = java.nio.file.Files.createTempDirectory("jsonl").toString
+    val dir = tempDir("jsonl")
     val docs = Tables.documents(spark, Sf)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
     Writers.shardedJsonl(docs, dir, 4, col("doc_id"))
@@ -31,7 +31,7 @@ class IoRoundTripSpec extends SparkTestBase {
     assert(back.except(docs).count() == 0 && docs.except(back).count() == 0,
       "JSONL round-trip must preserve every row exactly")
     // deterministic routing: writing again yields identical shard memberships
-    val dir2 = java.nio.file.Files.createTempDirectory("jsonl2").toString
+    val dir2 = tempDir("jsonl2")
     Writers.shardedJsonl(docs, dir2, 4, col("doc_id"))
     def shardSets(d: String): Set[Set[Long]] =
       new java.io.File(d).listFiles()
@@ -46,7 +46,7 @@ class IoRoundTripSpec extends SparkTestBase {
   }
 
   test("ORC round-trips with pushdown-friendly scans") {
-    val dir = java.nio.file.Files.createTempDirectory("orc").toString
+    val dir = tempDir("orc")
     val li = Tables.lineitem(spark, Sf)
       .select(col("l_orderkey"), col("l_partkey"), col("l_quantity"))
     Writers.orc(li, dir)
@@ -62,7 +62,7 @@ class IoRoundTripSpec extends SparkTestBase {
   }
 
   test("mergeSchema read surfaces a column added mid-history, null before it") {
-    val dir = java.nio.file.Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve")
     val docs = Tables.documents(spark, Sf)
     // generation 1: no quality column; generation 2 adds one
     docs.where(col("doc_id") % 2 === 0)

@@ -1,7 +1,6 @@
 package graft
 
 import java.io.File
-import java.nio.file.Files
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.functions.sum
 import org.apache.spark.sql.execution.CacheManager
@@ -26,7 +25,7 @@ class JobCachesSpec extends SparkTestBase {
 
   private def assertReleases(run: String => Unit): Unit = {
     val (entries, rdds) = (cacheEntries, spark.sparkContext.getPersistentRDDs.keySet)
-    run(Files.createTempDirectory("job_caches").toString)
+    run(tempDir("job_caches"))
     assert(cacheEntries.count(e => !entries.contains(e)) == 0, "cached plans outlived run")
     val stored = spark.sparkContext.getRDDStorageInfo.filterNot(i => rdds.contains(i.id))
     assert(stored.isEmpty, s"cached RDDs outlived run: ${stored.map(_.name).toSeq}")
@@ -50,9 +49,9 @@ class JobCachesSpec extends SparkTestBase {
   }
 
   test("RadiographyAnalysis.run leaves no cache behind; a rerun sees an added image") {
-    val images = JobFixtures.radiographyImages()
+    val images = JobFixtures.radiographyImages(tempDir("radiography"))
     def imageCount(): Long = {
-      val out = Files.createTempDirectory("radiography_rerun").toString
+      val out = tempDir("radiography_rerun")
       assertReleases(_ => RadiographyAnalysis.run(spark, images, out))
       spark.read.json(s"$out/percentage_of_samples").agg(sum("count")).head().getLong(0)
     }

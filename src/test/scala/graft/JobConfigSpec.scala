@@ -22,7 +22,7 @@ class JobConfigSpec extends SparkTestBase {
   }
 
   test("cases_time runs end-to-end from its config file") {
-    val out = java.nio.file.Files.createTempDirectory("jobcfg").toString
+    val out = tempDir("jobcfg")
     val cfg = JobConfig.fromJson(fixture).copy(output = Some(out))
     val before = spark.conf.get("spark.sql.shuffle.partitions")
     try {

@@ -17,12 +17,13 @@ object JobFixtures {
     ImageIO.write(img, "png", f)
   }
 
-  /** Deterministic radiography input in a new temp dir: 12 constant
-    * PNGs per class, plus one off-size image (must be filtered) and
-    * one corrupt file (must be dropped by dropInvalid).
+  /** Deterministic radiography input written into the empty directory
+    * `dir`, which is returned: 12 constant PNGs per class, plus one
+    * off-size image (must be filtered) and one corrupt file (must be
+    * dropped by dropInvalid).
     */
-  def radiographyImages(): String = {
-    val base = Files.createTempDirectory("radiography").toFile
+  def radiographyImages(dir: String): String = {
+    val base = new File(dir)
     classNames.zipWithIndex.foreach { case (name, k) =>
       val dir = new File(base, name); dir.mkdirs()
       (0 until 12).foreach(i => writePng(new File(dir, s"img_$i.png"), k * 60 + i))
@@ -32,10 +33,12 @@ object JobFixtures {
     base.toString
   }
 
-  /** Runs a job twice, each time into a new temp dir; returns both. */
-  def runTwice(name: String)(run: String => Unit): (String, String) = {
+  /** Runs a job twice, each time into a new directory from `freshDir`
+    * (evaluated once per run); returns both.
+    */
+  def runTwice(freshDir: => String)(run: String => Unit): (String, String) = {
     def once(): String = {
-      val out = Files.createTempDirectory(name).toString
+      val out = freshDir
       run(out)
       out
     }

@@ -2,7 +2,6 @@ package graft
 
 import java.net.URI
 import java.nio.file.{Files, Path => JPath}
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -28,10 +27,8 @@ class LocalFsParitySpec extends SparkTestBase {
     fs
   }
 
-  private def withDir[A](body: JPath => A): A = {
-    val dir = Files.createTempDirectory("local-fs-parity")
-    try body(dir) finally FileUtils.deleteDirectory(dir.toFile)
-  }
+  private def withDir[A](body: JPath => A): A =
+    body(java.nio.file.Paths.get(tempDir("local-fs-parity")))
 
   /** The forked `chmod`s among `starts` (Hadoop's first shell command
     * also forks a `setsid` probe, and other threads may fork too). */

@@ -20,23 +20,16 @@ class MaintainedLayoutSpec extends SparkTestBase {
 
   for ((m, relayout) <- declared)
     test(s"${m.prefix}: base, two waves, then the bound fires once at wave 2") {
-      val root = Files.createTempDirectory("maintained")
-      try {
-        val loc = root.toString + "/t"
-        Layout.buildMaintained(spark, Sf, m, loc)
-        val gens = GenLog.generations(spark, loc)
-        assert(gens.map(_._1) == Seq("base", "wave1", "wave2", relayout),
-          "the first wave is tolerated, the second crosses the bound")
-        val base = gens.head._2.toSet
-        val live = gens.last._2.toSet
-        if (m.partial)
-          assert(base.subsetOf(live), "a partial re-layout keeps every base file live")
-        else
-          assert(base.intersect(live).isEmpty, "a full re-layout rewrites every file")
-      } finally {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
-        finally walk.close()
-      }
+      val loc = tempDir("maintained") + "/t"
+      Layout.buildMaintained(spark, Sf, m, loc)
+      val gens = GenLog.generations(spark, loc)
+      assert(gens.map(_._1) == Seq("base", "wave1", "wave2", relayout),
+        "the first wave is tolerated, the second crosses the bound")
+      val base = gens.head._2.toSet
+      val live = gens.last._2.toSet
+      if (m.partial)
+        assert(base.subsetOf(live), "a partial re-layout keeps every base file live")
+      else
+        assert(base.intersect(live).isEmpty, "a full re-layout rewrites every file")
     }
 }

@@ -6,7 +6,7 @@ import graft.jobs.RadiographyAnalysis._
 
 class RadiographyJobSpec extends SparkTestBase {
 
-  private lazy val imgDir: String = JobFixtures.radiographyImages()
+  private lazy val imgDir: String = JobFixtures.radiographyImages(tempDir("radiography"))
 
   private lazy val df = RadiographyAnalysis.transform(RadiographyAnalysis.extract(spark, imgDir)).cache()
 
@@ -63,7 +63,7 @@ class RadiographyJobSpec extends SparkTestBase {
   }
 
   test("transferLearning: fit -> save -> load -> broadcast score, pinned metrics (M8/K4)") {
-    val modelPath = java.nio.file.Files.createTempDirectory("head").toString + "/head.txt"
+    val modelPath = tempDir("head") + "/head.txt"
     val scored = transferLearning(df, modelPath).cache()
     try {
       val rows = scored.collect()
@@ -100,7 +100,7 @@ class RadiographyJobSpec extends SparkTestBase {
   // last: run releases its cache of the input, which has the same plan
   // as this suite's cached `df`
   test("run: exact output set, one JSON part per output, byte-identical reruns") {
-    val (a, b) = JobFixtures.runTwice("radiography")(RadiographyAnalysis.run(spark, imgDir, _))
+    val (a, b) = JobFixtures.runTwice(tempDir("radiography"))(RadiographyAnalysis.run(spark, imgDir, _))
     val outputs = Set("percentage_of_samples", "take_samples", "colour_distribution",
       "ml_classification", "dl_inference")
     assert(JobFixtures.outputDirs(a) == outputs)

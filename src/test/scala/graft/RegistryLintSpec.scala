@@ -20,7 +20,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * GenLog also reads, lists and resolves one way: one merge-on-read
   * reader applies deletion vectors (a hand-written copy drifts and
   * serves deleted rows), one helper lists the log, and one snapshot
-  * type holds a resolved state.
+  * type holds a resolved state. HyperLogLog is one aggregate,
+  * `HllSketch`, whose two fields pick the four input/output forms, and
+  * the DuckDB register fold is written once, next to it: a second
+  * aggregate class or a hand-copied fold is a twin that can drift.
   */
 class RegistryLintSpec extends AnyFunSuite {
 
@@ -29,6 +32,7 @@ class RegistryLintSpec extends AnyFunSuite {
   private val CheckpointHelper = Paths.get("graft", "streaming", "EventStreams.scala")
   private val StressMain = Paths.get("graft", "ScaleStress.scala")
   private val GenLogSrc = Paths.get("src", "main", "scala", "graft", "io", "GenLog.scala")
+  private val HllSrc = Paths.get("graft", "functions", "HllSketch.scala")
 
   /** `path:line: text` for every line of the Scala sources under
     * `root` (bar `skip`) that contains one of `needles`. */
@@ -96,5 +100,17 @@ class RegistryLintSpec extends AnyFunSuite {
     assert(inHelper, s"listLog( called outside logOf:\n${calls.mkString("\n")}")
     val states = scan(main, 50, Seq("class CkptState", "class GenState"))
     assert(states.isEmpty, s"second snapshot state type in main:\n${states.mkString("\n")}")
+  }
+
+  test("HyperLogLog is one aggregate class, and its DuckDB register fold is written once") {
+    val main = Paths.get("src", "main", "scala")
+    val aggs = scan(main, 50, Seq("TypedImperativeAggregate[Array[Byte]]", "case class Hll"))
+    // one `case class HllSketch(` line and its one `extends` line
+    assert(aggs.size == 2 && aggs.forall(_.contains(s"$HllSrc:")),
+      s"HLL aggregate classes in main, want only HllSketch:\n${aggs.mkString("\n")}")
+    val Fold = "SUM(1::BIGINT << ("
+    val folds = scan(main, 50, Seq(Fold))
+    assert(folds.size == 1 && folds.head.contains(s"$HllSrc:"),
+      s"register-fold SQL outside HllSketch.scala:\n${folds.mkString("\n")}")
   }
 }

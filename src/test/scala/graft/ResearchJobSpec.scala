@@ -48,7 +48,7 @@ class ResearchJobSpec extends SparkTestBase {
   }
 
   test("run: exact output set, one JSON part per output, byte-identical reruns") {
-    val (a, b) = JobFixtures.runTwice("research")(ResearchChallengeAnalysis.run(spark, fixture, _))
+    val (a, b) = JobFixtures.runTwice(tempDir("research"))(ResearchChallengeAnalysis.run(spark, fixture, _))
     val outputs = Set("paper_authors", "paper_abstracts")
     assert(JobFixtures.outputDirs(a) == outputs)
     val parts = JobFixtures.jsonParts(a)

@@ -65,12 +65,10 @@ class SharedClassLoaderSpec extends SparkTestBase {
 
   test("a second CasesTimeAnalysis.run in one session compiles at most a handful of classes") {
     val fixture = "src/test/resources/fixtures/cases_time.csv"
-    val out = java.nio.file.Files.createTempDirectory("codegen-cache").toString
-    try {
-      compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/first"))
-      val again = compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/second"))
-      assert(again <= 5, s"the second cases_time run compiled $again classes")
-      info(s"the second run compiled $again classes")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
+    val out = tempDir("codegen-cache")
+    compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/first"))
+    val again = compiledBy(CasesTimeAnalysis.run(spark, fixture, s"$out/second"))
+    assert(again <= 5, s"the second cases_time run compiled $again classes")
+    info(s"the second run compiled $again classes")
   }
 }

@@ -96,7 +96,7 @@ class SsJoinSpec extends SparkTestBase {
       }
     val seeds = Seq.fill(24)(word(4 + rnd.nextInt(8)))
     val vocab = (seeds ++ seeds.flatMap(s => Seq.fill(3)(mutate(s)))).distinct
-    val dir = java.nio.file.Files.createTempDirectory("passjoin").toString
+    val dir = tempDir("passjoin")
     import spark.implicits._
     vocab.zipWithIndex.map { case (n, i) => (i.toLong, n) }
       .toDF("p_partkey", "p_name")

@@ -200,7 +200,7 @@ class WarehouseMaintSpec extends SparkTestBase {
     val tblLoc = new java.io.File(Warehouse.tableLocation(spark, tbl))
     if (tblLoc.exists())
       org.apache.spark.network.util.JavaUtils.deleteRecursively(tblLoc)
-    val work = java.nio.file.Files.createTempDirectory("stream-sink").toString
+    val work = tempDir("stream-sink")
     val src = s"$work/src"
     val ev = graft.sources.Tables.events(spark, Sf)
       .withColumn("day", to_date(col("ts")))
@@ -307,7 +307,7 @@ class WarehouseMaintSpec extends SparkTestBase {
   /** A scratch source directory with one data file, and a counting
     * `ensureDir` over a spec-local artifact keyed to it. */
   private object DirFixture {
-    val src: java.nio.file.Path = java.nio.file.Files.createTempDirectory("graft-ensuredir-src")
+    val src: java.nio.file.Path = java.nio.file.Paths.get(tempDir("graft-ensuredir-src"))
     val dirTable = "graft_maint_spec_dir"
     var builds = 0
     def loc: java.io.File = new java.io.File(Warehouse.tableLocation(spark, dirTable))

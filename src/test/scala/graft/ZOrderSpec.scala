@@ -105,7 +105,7 @@ class ZOrderSpec extends SparkTestBase {
       (col("id") * 2654435761L % 512).as("x"),
       (col("id") * 40503L % 512).as("y"),
       col("id"))
-    val dir = java.nio.file.Files.createTempDirectory("zorder").toString
+    val dir = tempDir("zorder")
     base.withColumn("z", ZOrderLong.zorder2(col("x"), col("y")))
       .repartition(1).sortWithinPartitions(col("z")).drop("z")
       .write.option("parquet.block.size", 16 * 1024)
@@ -139,7 +139,7 @@ class ZOrderSpec extends SparkTestBase {
     val base = spark.range(50000).select(
       (col("id") * 2654435761L % 512).as("x"),
       (col("id") * 40503L % 512).as("y"))
-    val dir = java.nio.file.Files.createTempDirectory("zwriter").toString
+    val dir = tempDir("zwriter")
     graft.io.Writers.zOrderedParquet(base, s"$dir/out", col("x"), col("y"),
       numFiles = Some(64))
     val perFile = spark.read.parquet(s"$dir/out")
